@@ -262,9 +262,9 @@ def q_dedup_admit(spark, sf_dir):
                 "doc_id", "dup_of", "keep"))
         return out[0].unionByName(out[1])
     finally:
-        # verdicts are localCheckpoint-pinned inside dedup_admit_batch,
-        # so the per-call store is never read again — drop it (also on
-        # failure) instead of leaving tempdirs behind
+        # the verdicts read only dedup_admit_batch's own pins and local
+        # tables, so the per-call store is never read again — drop it
+        # (also on failure) instead of leaving tempdirs behind
         shutil.rmtree(store, ignore_errors=True)
 
 

@@ -151,14 +151,14 @@ def connected_components_auto(
                 return connected_components(pinned, src, dst, max_iters)
         finally:
             pinned.unpersist()
-    return _union_find_df(edges, src, rows)
+    return _union_find_df(edges.sparkSession, rows,
+                          edges.schema[src].dataType.simpleString())
 
 
-def _union_find_df(edges: DataFrame, src: str, rows) -> DataFrame:
-    """Driver path-compressed union-find over a collected edge list →
-    (node, component) DataFrame with component = min member. Shared by
-    the size-adaptive CC entry points; callers are responsible for
-    bounding ``rows`` (limit(threshold+1) probes)."""
+def union_find(pairs) -> dict:
+    """Driver path-compressed union-find over a collected edge list of
+    (a, b) pairs → {node: min member of its component}. Callers are
+    responsible for bounding ``pairs`` (limit(threshold+1) probes)."""
     parent: dict = {}
 
     def find(x):
@@ -169,16 +169,22 @@ def _union_find_df(edges: DataFrame, src: str, rows) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        ra, rb = find(r.a), find(r.b)
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    nodes = {v for r in rows for v in (r.a, r.b)}
-    labels = [(n, find(n)) for n in sorted(nodes)]
-    spark = edges.sparkSession
-    node_type = edges.schema[src].dataType.simpleString()
-    return spark.createDataFrame(
-        labels, f"node {node_type}, component {node_type}"
+    return {n: find(n) for pair in pairs for n in pair}
+
+
+def _union_find_df(spark, pairs, node_type: str) -> DataFrame:
+    """``union_find`` as a (node, component) ``local_table``
+    (LocalTableScan, never a Python RDD), sorted by node. Shared by
+    the size-adaptive CC entry points."""
+    from .util import local_table
+
+    return local_table(
+        spark, sorted(union_find(pairs).items()),
+        f"node {node_type}, component {node_type}",
     )
 
 
@@ -311,7 +317,9 @@ def connected_components_star(
         ).limit(driver_threshold + 1).collect()
         if len(probe) <= driver_threshold:
             try:
-                return _union_find_df(pinned, src, probe)
+                return _union_find_df(
+                    pinned.sparkSession, probe,
+                    pinned.schema[src].dataType.simpleString())
             finally:
                 pinned.unpersist()
         edges = pinned  # entry localCheckpoint below reads the cache

@@ -26,8 +26,14 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .util import local_table, read_parquet_or_empty
+
 PART_COL = "part_key"
 DONE = "done"
+MANIFEST_DDL = (
+    "stage string, part_key string, status string, n_rows long, "
+    "lineage string, ts timestamp"
+)
 
 
 def with_part_key(
@@ -84,13 +90,7 @@ def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
             # compaction, so there is nothing to heal there
             fs, r = fs_for(spark, root, "hadoop")
             _recover_manifest_fs(fs, _manifest_path(r))
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return spark.createDataFrame(
-            [], "stage string, part_key string, status string, n_rows long, "
-                "lineage string, ts timestamp"
-        )
+    m = read_parquet_or_empty(spark, path, MANIFEST_DDL)
     return m.where(F.col("stage") == stage)
 
 
@@ -145,8 +145,8 @@ def checkpoint_write(
                     .alias(PART_COL)
                 ).distinct()
             else:
-                exp = spark.createDataFrame(
-                    [(str(k),) for k in expected_part_keys],
+                exp = local_table(
+                    spark, [(str(k),) for k in expected_part_keys],
                     f"{PART_COL} string",
                 ).distinct()
             empty = (
@@ -264,10 +264,9 @@ def compact_manifest(spark: SparkSession, root: str,
 
     fs, path = _maintenance_fs(spark, root, "compact_manifest", backend)
     _recover_manifest_fs(fs, path)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
+    if not fs.exists(path):  # nothing written yet; unreadable raises
         return 0
+    m = spark.read.parquet(path)
     w = (
         Window.partitionBy("stage", PART_COL, "status")
         .orderBy(F.col("ts").desc())
@@ -305,11 +304,6 @@ def manifest_file_count(root: str) -> int:
 
 
 def stage_metrics(spark: SparkSession, root: str) -> DataFrame:
-    """All manifest rows — per-stage, per-partition counts and lineage."""
-    try:
-        return spark.read.parquet(_manifest_path(root))
-    except Exception:
-        return spark.createDataFrame(
-            [], "stage string, part_key string, status string, n_rows long, "
-                "lineage string, ts timestamp"
-        )
+    """All manifest rows — per-stage, per-partition counts and lineage.
+    Empty when no manifest was written yet; an unreadable one raises."""
+    return read_parquet_or_empty(spark, _manifest_path(root), MANIFEST_DDL)

@@ -78,25 +78,23 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id",
 
 
 def word_shingles(text_col, k: int = 3):
-    """Distinct word k-grams (JVM-side). Short docs yield their full
-    text as the single shingle."""
-    w = F.split(text_col, " ")
-    n = F.size(w)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(w, i, k)),
+    """Distinct word k-grams (JVM-side), in first-occurrence order.
+    Short docs yield their full text as the single shingle.
+
+    The split runs ONCE per row: it is bound as the variable of an
+    outer one-element ``transform``. Written inline, ``split(text)``
+    sits inside the per-shingle lambda and re-splits the whole text
+    for every shingle — quadratic in the word count."""
+    def grams(w):
+        n = F.size(w)
+        return F.array_distinct(F.transform(
+            F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(w, i, k)),
+        ))
+
+    return F.element_at(
+        F.transform(F.array(F.split(text_col, " ")), grams), 1
     )
-    return F.array_distinct(grams)
-
-
-def _doc_shingle_exploded(docs: DataFrame, id_col: str, text_col: str,
-                          k: int) -> DataFrame:
-    docs = ensure_parallelism(docs)
-    sh = docs.select(
-        F.col(id_col).cast("long").alias("sid"),
-        word_shingles(F.col(text_col), k).alias("sh"),
-    ).select("sid", F.lit("doc").alias("label"), "sh", F.size("sh").alias("n_sh"))
-    return sh.select("sid", "label", "n_sh", F.explode("sh").alias("shingle"))
 
 
 def _prefix_index(
@@ -342,12 +340,13 @@ def paragraph_dedup(
     partition instead of one task's full sort buffer (r5 ADVICE). The
     join back to flag keepers is probe-heavy on the same hot keys, but
     the build side is one row per paragraph and AQE's skew-join split
-    can divide the probe side — measured (tools/paragraph_probe.py,
-    r7): the split fires only past BOTH gates (partition > 256 MB AND
-    > 5× median), so a 10^7-repetition hot key still runs whole
+    can divide the probe side. Measured (tools/paragraph_probe.py, r7):
+    the split did not fire below the combined gate (partition > 256 MB
+    AND > 5× median), so a 10^7-repetition hot key still runs whole
     (skew 1.7, outputs identical to the window plan, groupby ≤ window
-    on wall at every probed scale); past the gates the split is
-    available to this join while NO skew optimization ever applies to
+    on wall at every probed scale). Past both gates the split is
+    available to this join (observed firing on a sort-merge join in
+    tools/salt_probe.py), while NO skew optimization ever applies to
     a window sort. Then one groupBy(doc_id) reassembly shuffle."""
     words = F.split(F.col(text_col), " ")
     if window_words is not None:

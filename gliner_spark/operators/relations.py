@@ -23,6 +23,8 @@ from typing import List, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import local_table
+
 # (subj_label, obj_label, pred) — deterministic predicate lexicon; the
 # pattern-based stand-in for dependency-path relation classification.
 DEFAULT_RULES: List[Tuple[str, str, str]] = [
@@ -51,8 +53,9 @@ def extract_relations(
     """
     spark = mentions.sparkSession
     rules_df = F.broadcast(
-        spark.createDataFrame(
-            list(rules), "subj_label string, obj_label string, pred string"
+        local_table(
+            spark, list(rules),
+            "subj_label string, obj_label string, pred string",
         )
     )
     # band the proximity window into the JOIN KEY (guide §3.3: the

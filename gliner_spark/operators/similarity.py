@@ -25,6 +25,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_table
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -309,8 +311,9 @@ def ivf_topk(
         for c in np.argsort(-sims)[:n_probe]:
             probe_pairs.append((int(r.neighbor_id), list(r.v), int(c)))
     probes = F.broadcast(
-        embeddings.sparkSession.createDataFrame(
-            probe_pairs, "query_id long, q array<double>, cell int"
+        local_table(
+            embeddings.sparkSession, probe_pairs,
+            "query_id long, q array<double>, cell int",
         )
     )
     cand = (

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Iterable
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -17,3 +20,41 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def local_table(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """Driver-side rows (tuples in ``ddl`` column order) as a DataFrame
+    that plans as ``LocalTableScan``.
+
+    ``createDataFrame(<python list>)`` plans as ``Scan ExistingRDD``: a
+    Python RDD whose every evaluation starts Python workers (~1 CPU-s
+    each on 4 cores). Going through a ``pyarrow.Table`` ships the rows
+    to the JVM once, whether or not Arrow is enabled on the session."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def read_parquet_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
+    """The parquet table at ``path`` read with schema ``ddl``, or an
+    empty table of that schema when ``path`` does not exist.
+
+    Only a missing path reads as empty: any other failure (permissions,
+    a truncated or corrupt file) raises, at once or when the rows are
+    read. Reading an unreadable table as empty would pass for "nothing
+    stored yet". The explicit schema also spares the footer-reading
+    job that schema inference costs."""
+    try:
+        return spark.read.schema(ddl).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+    return local_table(spark, [], ddl)

@@ -204,15 +204,101 @@ def batch_minhash_signatures(
     return minhash_signature_map(hashed, n_perms, seed, id_col="doc_id")
 
 
+STORE_DDL = "doc_id long, sig array<bigint>"
+# verified pairs an admission resolves on the driver; the same bound as
+# connected_components_auto's driver union-find
+DRIVER_ROWS = 1_000_000
+
+
 def _band_keys(sig_df: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(doc_id, new, band_idx, band_hash) of tagged signature rows."""
     return sig_df.select(
         "doc_id",
+        "new",
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
                 lambda i: F.hash(F.slice(F.col("sig"), i * rows + 1, rows)),
             )
         ).alias("band_idx", "band_hash"),
+    )
+
+
+def _verified_pairs(
+    sig_new: DataFrame,
+    sig_old: DataFrame,
+    bands: int,
+    n_perms: int,
+    threshold: float,
+    max_bucket: int,
+) -> DataFrame:
+    """(src, dst, dst_new): steps 2-3 of ``dedup_admit_batch`` — the
+    batch docs ``src`` whose signature Ĵ-matches a stored doc or a
+    larger batch doc ``dst`` (``dst_new`` tags which), from ONE band
+    self-join over the tagged store ∪ batch band keys and one verify.
+    New-vs-old rows are reduced to each ``src``'s smallest match."""
+    from pyspark.sql import Window
+
+    rows = n_perms // bands
+    assert bands * rows == n_perms
+
+    tagged = sig_new.withColumn("new", F.lit(True)).unionByName(
+        sig_old.withColumn("new", F.lit(False))
+    )
+
+    # skew guard as a window count: the band-key exchange it needs is
+    # the one the self-join below needs too, so guard + join cost one
+    # shuffle of (id, band, tag) ints
+    guarded = (
+        _band_keys(tagged, bands, rows)
+        .withColumn("bn", F.count(F.lit(1)).over(
+            Window.partitionBy("band_idx", "band_hash")))
+        .where(F.col("bn") <= max_bucket)
+    )
+    # merge hint: both sides already sit in the window's band-key
+    # partitions and sort order, so the sort-merge join needs no new
+    # exchange; an adaptive switch to a broadcast join would add one
+    a, b = guarded.alias("a").hint("merge"), guarded.alias("b")
+    # a.doc_id != b.doc_id keeps a RETRIED batch sane: a doc already
+    # admitted under its own id must not read as "duplicate of itself"
+    cand = a.join(
+        b,
+        (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.band_hash") == F.col("b.band_hash"))
+        & F.col("a.new")
+        & (F.col("a.doc_id") != F.col("b.doc_id"))
+        & (~F.col("b.new") | (F.col("a.doc_id") < F.col("b.doc_id"))),
+    ).select(
+        F.col("a.doc_id").alias("src"),
+        F.col("b.doc_id").alias("dst"),
+        F.col("b.new").alias("dst_new"),
+    )
+    # the dst side's signature is looked up by (id, tag): on a retry
+    # the same id can be both a batch doc and a stored one
+    sig_src = sig_new.select(F.col("doc_id").alias("src"),
+                             F.col("sig").alias("sig_src"))
+    sig_dst = tagged.select(F.col("doc_id").alias("dst"),
+                            F.col("new").alias("dst_new"),
+                            F.col("sig").alias("sig_dst"))
+    jhat = F.round(
+        F.size(F.filter(F.zip_with("sig_src", "sig_dst",
+                                   lambda x, y: x == y),
+                        lambda m: m))
+        / F.lit(float(n_perms)), 6,
+    )
+    # a pair sharing several bands is verified once per shared band;
+    # the aggregation after the verify collapses the repeats (cheaper
+    # than a dedup shuffle before it) and already reduces new-vs-old
+    # to each doc's smallest admitted match. One row per store-
+    # suppressed doc plus one per new-vs-new duplicate pair: output-
+    # sized, so it normally goes to the driver whole.
+    return (
+        cand.join(sig_src, "src").join(sig_dst, ["dst", "dst_new"])
+        .where(jhat >= threshold)
+        .groupBy("src", "dst_new",
+                 F.when(F.col("dst_new"), F.col("dst")).alias("_d"))
+        .agg(F.min("dst").alias("dst"))
+        .select("src", "dst", "dst_new")
     )
 
 
@@ -248,171 +334,117 @@ def dedup_admit_batch(
     admitting a batch is then:
 
     1. signature the new batch (the only pass over its text);
-    2. band-join new-batch band keys against the STORE's (new-vs-old)
-       and against themselves (new-vs-new) — both shuffles move
-       (id, band) ints, never documents;
-    3. verify candidates with the signature-overlap estimator
-       Ĵ = |matching positions| / n_perms. The corpus text is
+    2. tag the band keys of store ∪ batch as old/new and run ONE
+       guarded band self-join over them: a pair (a, b) is a candidate
+       when a is new, a ≠ b, and b is old or a < b — new-vs-old and
+       new-vs-new in the same join, whose shuffle moves (id, band,
+       tag) ints, never documents. The skew guard drops band buckets
+       holding more than ``max_bucket`` rows of store and batch
+       together;
+    3. verify every candidate ONCE with the signature-overlap
+       estimator Ĵ = |matching positions| / n_perms, looking the
+       b side's signature up by (tag, id). The corpus text is
        unreachable by design, so verification is estimator-based, NOT
        exact like the batch operator's shingle re-join: E[Ĵ] = J with
        σ = sqrt(J(1-J)/n_perms) ≈ 0.035 at J = t = 0.8, n_perms = 128
        — set ``threshold`` with that margin in mind (exact-duplicate
-       detection, Ĵ = 1, is unaffected);
+       detection, Ĵ = 1, is unaffected). The verified pairs split by
+       tag: new-vs-old gives each doc's smallest admitted match,
+       new-vs-new gives the edges of the batch's duplicate graph;
     4. keep = not Ĵ-matched to any admitted doc, and the minimum
        doc_id of its new-vs-new duplicate component (transitive, via
-       the size-adaptive connected components);
+       the size-adaptive connected components: up to ``DRIVER_ROWS``
+       verified pairs the components and verdicts are resolved on the
+       driver, past it with the distributed hash-min iteration);
     5. append the KEPT docs' signatures to the store.
 
     Returns (doc_id, dup_of, keep) for the new batch: ``dup_of`` is
     the admitted doc (or kept smaller new doc) that suppressed it,
-    NULL for keepers. The store write is plain parquet append — wrap
-    calls in the checkpoint manifest (``checkpoint_write``) when
-    retries must be idempotent, exactly like merge_batch above."""
-    from ..operators.canonicalize import connected_components_auto
+    NULL for keepers. A store that exists but cannot be read raises;
+    only a missing ``store_dir`` reads as empty. The store write is a
+    plain parquet append and NOT atomic: a crash inside it can leave
+    part of the batch's keepers stored. Wrap calls in the checkpoint
+    manifest (``checkpoint_write``) when retries must be idempotent,
+    exactly like merge_batch above."""
+    from ..operators.canonicalize import connected_components, union_find
+    from ..operators.util import local_table, read_parquet_or_empty
 
-    spark = new_docs.sparkSession
-    rows = n_perms // bands
-    assert bands * rows == n_perms
-
-    # referenced by band join, both verify sides and the store append —
-    # materialized once. A caller-provided ``sig`` slice is re-pinned
-    # too: skipping its checkpoint was measured ~1 s SLOWER per
-    # admission (six filter-rescans of the full-corpus signature
-    # checkpoint beat one slice materialization).
+    # referenced by the band keys, both verify sides, the verdict and
+    # the store append — materialized once. A caller-provided ``sig``
+    # slice is re-pinned too: skipping its checkpoint was measured
+    # ~1 s SLOWER per admission (filter-rescans of the full-corpus
+    # signature checkpoint beat one slice materialization).
     sig_new = (
         sig if sig is not None
         else batch_minhash_signatures(
             new_docs, k, n_perms, seed, id_col, text_col
         )
     ).localCheckpoint()
-    try:
-        sig_old = spark.read.parquet(store_dir).select("doc_id", "sig")
-    except Exception:  # first batch: empty store
-        sig_old = spark.createDataFrame(
-            [], "doc_id long, sig array<bigint>"
+    spark = new_docs.sparkSession
+    sig_old = read_parquet_or_empty(spark, store_dir, STORE_DDL)
+    # pinned: the driver collect below, the distributed fallback and
+    # its verdict all read the verified pairs
+    verified = _verified_pairs(
+        sig_new, sig_old, bands, n_perms, threshold, max_bucket
+    ).localCheckpoint()
+
+    # dup0 lookup table (m_doc, m_dup): a batch doc → the doc that
+    # suppresses it at first sight — its smallest admitted match, else
+    # its new-vs-new component minimum when that is another doc. The
+    # same bounded driver path as connected_components_auto: normally
+    # built on the driver (union-find + dict) and shipped back as ONE
+    # local table; past the bound it stays distributed (hash-min
+    # components over the pinned pairs).
+    pairs = verified.limit(DRIVER_ROWS + 1).collect()
+    if len(pairs) <= DRIVER_ROWS:
+        first = {n: c for n, c in union_find(
+            [(p.src, p.dst) for p in pairs if p.dst_new]).items() if c != n}
+        first.update((p.src, p.dst) for p in pairs if not p.dst_new)
+        lookup = local_table(spark, list(first.items()),
+                             "m_doc long, m_dup long")
+    else:
+        comp = connected_components(verified.where("dst_new"), "src", "dst")
+        lookup = (
+            verified.where(~F.col("dst_new")).select(
+                F.col("src").alias("m_doc"), F.col("dst").alias("m_old"),
+                F.lit(None).cast("long").alias("m_new"))
+            .unionByName(comp.where(F.col("component") != F.col("node"))
+                         .select(F.col("node").alias("m_doc"),
+                                 F.lit(None).cast("long").alias("m_old"),
+                                 F.col("component").alias("m_new")))
+            .groupBy("m_doc")
+            .agg(F.coalesce(F.min("m_old"), F.min("m_new")).alias("m_dup"))
         )
 
-    bn = _band_keys(sig_new, bands, rows)
-    bo = _band_keys(sig_old, bands, rows)
-
-    jhat = F.round(
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda b: b))
-        / F.lit(float(n_perms)), 6,
-    )
-
-    def verify(cand: DataFrame, left_sig: DataFrame,
-               right_sig: DataFrame) -> DataFrame:
-        a = left_sig.select(F.col("doc_id").alias("src"),
-                            F.col("sig").alias("sig_a"))
-        b = right_sig.select(F.col("doc_id").alias("dst"),
-                             F.col("sig").alias("sig_b"))
+    def dup0(df: DataFrame, key: str, out: str) -> DataFrame:
         return (
-            cand.join(a, "src").join(b, "dst")
-            .select("src", "dst", jhat.alias("jhat"))
-            .where(F.col("jhat") >= threshold)
+            df.join(lookup, F.col(key) == F.col("m_doc"), "left")
+            .drop("m_doc").withColumnRenamed("m_dup", out)
         )
 
-    guard = lambda df: (  # noqa: E731 — shared mega-bucket skew guard
-        df.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .where(F.col("bn") <= max_bucket)
-        .select("band_idx", "band_hash")
-    )
-
-    # the skew guard sees combined bucket populations (a band bucket
-    # hot across store+batch is hot, whichever side the rows are on).
-    # bnp is materialized ONCE (guide §2.4): it feeds the new-vs-old
-    # join and BOTH sides of the new-vs-new self-join, and every
-    # reference otherwise re-runs the guard aggregation over the
-    # combined store+batch band keys. (id, band) ints only.
-    g = guard(bn.unionByName(bo))
-    bnp = bn.join(g, ["band_idx", "band_hash"]).localCheckpoint()
-
-    # new-vs-old: every band collision against the store. src != dst
-    # keeps a RETRIED batch sane: a doc already admitted under its own
-    # id must not read as "duplicate of itself" on re-admission
-    no_cand = (
-        bnp.join(bo.select("band_idx", "band_hash",
-                           F.col("doc_id").alias("old_id")),
-                 ["band_idx", "band_hash"])
-        .where(F.col("doc_id") != F.col("old_id"))
-        .select(F.col("doc_id").alias("src"), F.col("old_id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    vs_old = verify(no_cand, sig_new, sig_old) \
-        .groupBy("src").agg(F.min("dst").alias("old_dup_of"))
-
-    # new-vs-new: self-join within the batch (same pruned band keys)
-    a, b = bnp.alias("a"), bnp.alias("b")
-    nn_cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    vs_new = verify(nn_cand, sig_new, sig_new)
-    # size_hint=0: the new-vs-new duplicate pair set is output-sized
-    # (≪ batch), so hint the driver union-find path — this skips the
-    # probe's persist/unpersist round trip (one less barrier per
-    # admission). The hint is safe by construction: the collect keeps
-    # its limit(threshold+1) guard, and the distributed fallback only
-    # re-executes a pipeline that reads from this batch's checkpoints.
-    comp = connected_components_auto(vs_new, "src", "dst",
-                                     size_hint=0).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("new_group")
-    )
-
-    verdict0 = (
-        sig_new.select("doc_id")
-        .join(vs_old, sig_new.doc_id == vs_old.src, "left").drop("src")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(
-                "old_dup_of",
-                F.when(F.col("new_group") != F.col("doc_id"),
-                       F.col("new_group")),
-            ).alias("dup_of"),
-        )
-        # materialized ONCE (guide §2.4): verdict0 is both the probe
-        # side and the keeper-resolution target of the one-hop rewrite
-        # below — without pinning, the whole new-vs-old verify pipeline
-        # runs twice. One row per batch doc.
-        .localCheckpoint()
-    )
     # dup_of must point at a KEEPER in one hop (docstring contract).
-    # The one way it wouldn't: a new-vs-new component whose minimum doc
-    # is itself store-suppressed — members got dup_of = component min,
-    # which has keep=false. One self-join rewrites those to the min's
-    # own old_dup_of (an admitted store doc). A single hop suffices:
-    # the component min can only be suppressed by the STORE — any new
-    # doc that suppressed it would be a smaller member of the same
+    # The one way dup0 doesn't: a new-vs-new component whose minimum
+    # doc is itself store-suppressed — members got dup0 = component
+    # min, which has keep=false. A second dup0 lookup rewrites those
+    # to the min's own admitted match. A single hop suffices: the
+    # component min can only be suppressed by the STORE — any new doc
+    # that suppressed it would be a smaller member of the same
     # component, contradicting minimality (r5 ADVICE).
-    target = verdict0.select(
-        F.col("doc_id").alias("dup_of"),
-        F.col("dup_of").alias("target_dup_of"),
+    judged = dup0(dup0(sig_new, "doc_id", "d0"), "d0", "d1").select(
+        "doc_id", "sig", F.coalesce("d1", "d0").alias("dup_of")
     )
-    verdict = (
-        verdict0.join(target, "dup_of", "left")
-        .select(
-            "doc_id",
-            F.coalesce("target_dup_of", "dup_of").alias("dup_of"),
-        )
-        .withColumn("keep", F.col("dup_of").isNull())
-    ).localCheckpoint()  # pin BEFORE the store append below reads it
 
     # append keepers NOT already present — the left-anti makes a
     # retried admission a no-op on the store (same verdicts, no
     # duplicate signature rows), the idempotence rule every other
     # incremental op here follows via the checkpoint manifests
     (
-        sig_new.join(verdict.where("keep").select("doc_id"), "doc_id")
+        judged.where(F.col("dup_of").isNull()).select("doc_id", "sig")
         .join(sig_old.select("doc_id"), "doc_id", "left_anti")
         .write.mode("append").parquet(store_dir)
     )
-    return verdict
+    # the verdict reads only this call's pins and local tables, never
+    # the store, so evaluating it after the append gives the same rows
+    return judged.select(
+        "doc_id", "dup_of", F.col("dup_of").isNull().alias("keep")
+    )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.util import local_table
+
 HTML_PREFIX = "<html><body><p>"
 HTML_SUFFIX = "</p></body></html>"
 
@@ -145,7 +147,8 @@ def synthesize_pages(
         ).alias("lang"),
     )
 
-    golden = spark.createDataFrame(
+    golden = local_table(
+        spark,
         [
             (
                 f"https://golden.example/{i}",

@@ -16,8 +16,8 @@ mechanisms compose into effectively-once admission:
   instead of double-appending.
 
 Scale shape is the batch operator's (docs/SCALE.md): per micro-batch
-one signature pass over the NEW documents only, band-key joins that
-move (id, band) ints, and a store append of keepers. The store is the
+one signature pass over the NEW documents only, one band-key self-join
+that moves (id, band, tag) ints, and a store append of keepers. The store is the
 only cross-batch state and grows by keepers only.
 """
 

@@ -315,3 +315,62 @@ def test_minhash_signature_map_equals_agg(spark):
         ).collect()
     }
     assert got == want and len(got) == docs.count()
+
+
+def _py_word_shingles(text, k):
+    """Reference: distinct word k-grams in first-occurrence order; a
+    doc shorter than k is its own single shingle, NULL text reads as
+    the empty string."""
+    w = ("" if text is None else text).split(" ")
+    out = []
+    for i in range(max(len(w) - (k - 1), 1)):
+        g = " ".join(w[i:i + k])
+        if g not in out:
+            out.append(g)
+    return out
+
+
+def test_word_shingles_matches_python_reference(spark):
+    """The split-once form of word_shingles against a Python reference
+    at the edges of the k-gram window (0, 1, k-1, k words), on a
+    2000-word doc with repeated k-grams, and on NULL text."""
+    from gliner_spark.operators.dedup import word_shingles
+
+    k = 3
+    vocab = [f"v{i % 50}" for i in range(2000)]  # period 50: repeats
+    texts = {1: "", 2: "one", 3: "one two", 4: "one two three",
+             5: " ".join(vocab), 6: None, 7: "a  b c"}
+    docs = spark.createDataFrame(list(texts.items()),
+                                 "doc_id long, text string")
+    got = {r.doc_id: r.sh for r in docs.select(
+        "doc_id", word_shingles(F.col("text"), k).alias("sh")).collect()}
+    assert got == {i: _py_word_shingles(t, k) for i, t in texts.items()}
+    assert len(got[5]) == 50 and got[6] == [""]
+
+
+def test_minhash_signature_map_chunk_boundary_and_empty_rows(spark):
+    """minhash_signature_map equals the explode + min-aggregation form
+    when one Arrow batch spans several workspace chunks (> 65,536
+    shingles in total, and one doc larger than a chunk on its own),
+    and drops NULL and empty hash arrays exactly as explode does."""
+    import numpy as np
+
+    from gliner_spark.operators.linking import (
+        MERSENNE,
+        minhash_signature_agg,
+        minhash_signature_map,
+    )
+    from gliner_spark.operators.util import local_table
+
+    rng = np.random.default_rng(3)
+    sizes = {1: 30_000, 2: 30_000, 3: 10, 4: 70_000, 5: 1, 6: 20_000}
+    rows = [(i, rng.integers(0, MERSENNE, n).tolist())
+            for i, n in sizes.items()]
+    rows += [(7, None), (8, [])]
+    hx = local_table(spark, rows, "sid long, hx array<bigint>").coalesce(1)
+    got = {r.sid: list(r.sig)
+           for r in minhash_signature_map(hx, 64, 5).collect()}
+    want = {r.sid: list(r.sig) for r in minhash_signature_agg(
+        hx.select("sid", F.explode("hx").alias("h")), ["sid"], 64, 5
+    ).collect()}
+    assert got == want and set(got) == set(sizes)

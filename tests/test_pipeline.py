@@ -697,6 +697,110 @@ def test_admit_batch_signature_estimator_quality(spark):
     assert abs(jhat_12 - j) <= 3 * (j * (1 - j) / 128) ** 0.5  # 3σ
 
 
+def _admit_batches():
+    """Three crawl batches with every admission case: exact and near
+    copies of stored docs (new-vs-old), copies inside a batch
+    (new-vs-new), a new-vs-new component whose minimum is itself
+    suppressed by the store (106 ≈ stored 5, 107 ≈ 106 but ≉ 5), and
+    NULL/empty texts."""
+    def doc(tag):
+        return " ".join(f"{tag}{j}" for j in range(40))
+
+    def near(tag):  # one word edited: J = 35/41
+        w = doc(tag).split()
+        w[20] = "edited"
+        return " ".join(w)
+
+    chain_a = " ".join(f"c{j}" for j in range(20))
+    chain_b = chain_a + " x1 x2 x3"          # J(a, b) = 18/21
+    chain_c = " ".join(chain_b.split()[3:])  # J(b, c) = 18/21, J(a, c) = 15/21
+    return [
+        [(1, doc("a")), (2, doc("b")), (3, doc("c")), (4, doc("d")),
+         (5, chain_a), (6, doc("e")), (7, doc("b")), (8, near("c"))],
+        [(101, doc("a")), (102, near("d")), (103, doc("f")),
+         (104, doc("g")), (105, doc("f")), (106, chain_b), (107, chain_c),
+         (108, None), (109, "")],
+        [(201, doc("g")), (202, doc("b")), (203, doc("h")),
+         (204, doc("h")), (205, chain_c), (206, near("h"))],
+    ]
+
+
+# verdicts (doc_id -> dup_of; keep = dup_of is None) of the three
+# batches, as the two-pipeline admission before the single band
+# self-join produced them
+_ADMIT_VERDICTS = [
+    {1: None, 2: None, 3: None, 4: None, 5: None, 6: None, 7: 2, 8: 3},
+    {101: 1, 102: 4, 103: None, 104: None, 105: 103, 106: 5, 107: 5,
+     108: None, 109: 108},
+    {201: 104, 202: 2, 203: None, 204: 203, 205: None, 206: 203},
+]
+
+
+@pytest.mark.parametrize("driver_rows", [1_000_000, 0])
+def test_admit_three_batches_pinned_verdicts_and_store(spark, tmp_path,
+                                                       monkeypatch,
+                                                       driver_rows):
+    """One band self-join + one verify admits three batches exactly as
+    the two-pipeline form did, on the driver path and on the
+    distributed one (DRIVER_ROWS=0); re-admitting the last batch
+    changes neither its verdicts nor the store, and the store holds
+    each keeper's own signature."""
+    from gliner_spark.plans import incremental
+    from gliner_spark.plans.incremental import (
+        batch_minhash_signatures,
+        dedup_admit_batch,
+    )
+
+    monkeypatch.setattr(incremental, "DRIVER_ROWS", driver_rows)
+    store = str(tmp_path / "sig_store")
+    batches = _admit_batches()
+    texts = {}
+    for rows, want in zip(batches + batches[-1:],
+                          _ADMIT_VERDICTS + _ADMIT_VERDICTS[-1:]):
+        texts.update(rows)
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {r.doc_id: (r.dup_of, r.keep) for r in dedup_admit_batch(
+            df, store, threshold=0.78).collect()}
+        assert got == {d: (o, o is None) for d, o in want.items()}
+    keepers = sorted(d for v in _ADMIT_VERDICTS for d, o in v.items()
+                     if o is None)
+    stored = {r.doc_id: list(r.sig)
+              for r in spark.read.parquet(store).collect()}
+    assert sorted(stored) == keepers  # no duplicate rows after the retry
+    kept = spark.createDataFrame([(d, texts[d]) for d in keepers],
+                                 "doc_id long, text string")
+    assert stored == {r.doc_id: list(r.sig) for r in
+                      batch_minhash_signatures(kept).collect()}
+
+
+def test_admit_unreadable_store_raises_and_keeps_store(spark, tmp_path):
+    """A store that exists but cannot be read must fail the admission,
+    not read as empty (which would re-admit every duplicate), and the
+    failed admission must leave the store files as they were."""
+    import os
+
+    from gliner_spark.plans.incremental import dedup_admit_batch
+
+    store = str(tmp_path / "sig_store")
+    first, second = _admit_batches()[:2]
+    dedup_admit_batch(
+        spark.createDataFrame(first, "doc_id long, text string"), store)
+    f = sorted(n for n in os.listdir(store) if n.endswith(".parquet"))[0]
+    with open(os.path.join(store, f), "r+b") as fh:
+        fh.truncate(os.path.getsize(os.path.join(store, f)) // 2)
+
+    def snapshot():
+        return {n: open(os.path.join(store, n), "rb").read()
+                for n in sorted(os.listdir(store))}
+
+    before = snapshot()
+    with pytest.raises(Exception):
+        dedup_admit_batch(
+            spark.createDataFrame(second, "doc_id long, text string"),
+            store).collect()
+    assert snapshot() == before
+
+
 def test_admit_dup_of_always_points_at_a_keeper(spark, tmp_path):
     """Docstring contract: ``dup_of`` resolves to a keeper in ONE hop.
     The hard case (r5 ADVICE): a new-vs-new component whose minimum doc

@@ -117,3 +117,55 @@ def test_textstats_single_word_and_empty(spark):
     assert ts[1].n_tokens == 1 and ts[1].avg_token_len == 1.0
     q = {r.doc_id: r for r in quality_score(docs).collect()}
     assert q[2].stopword_ratio == 1.0
+
+
+def _truncate_one_parquet(root):
+    import os
+
+    f = sorted(os.path.join(d, n) for d, _, fs in os.walk(root)
+               for n in fs if n.endswith(".parquet"))[0]
+    with open(f, "r+b") as fh:
+        fh.truncate(os.path.getsize(f) // 2)
+
+
+def test_local_table_plans_as_local_table_scan_without_arrow(spark):
+    """local_table never becomes a Python RDD: empty and non-empty
+    tables plan as LocalTableScan even with Arrow off on the session."""
+    from gliner_spark.operators.util import local_table
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for rows in ([], [(1, [2, 3], "x"), (4, None, None)]):
+            df = local_table(spark, rows, "a long, b array<bigint>, c string")
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+            assert [tuple(r) for r in df.collect()] == rows
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_manifest_missing_reads_empty_unreadable_raises(spark, tmp_path):
+    """Only a root with no manifest yet reads as an empty manifest; a
+    manifest that exists but cannot be read raises instead of passing
+    for 'nothing done yet' (which would silently recompute)."""
+    from gliner_spark.operators.checkpoint import (
+        checkpoint_write,
+        read_manifest,
+        stage_metrics,
+        with_part_key,
+    )
+
+    root = str(tmp_path / "ck")
+    assert stage_metrics(spark, root).count() == 0
+    assert read_manifest(spark, root, "s").count() == 0
+    df = spark.createDataFrame([(i, f"t{i}") for i in range(20)],
+                               "doc_id long, text string")
+    checkpoint_write(with_part_key(df, "doc_id", 4), root, "s")
+    assert stage_metrics(spark, root).count() > 0
+    _truncate_one_parquet(f"{root}/_checkpoints")
+    with pytest.raises(Exception):
+        stage_metrics(spark, root).count()
+    with pytest.raises(Exception):
+        read_manifest(spark, root, "s").count()

@@ -190,13 +190,36 @@ def main() -> int:
     )
     import shutil
 
-    adm_store = tempfile.mkdtemp(prefix="gs_plan_admit_")
+    from gliner_spark.operators.util import read_parquet_or_empty
+    from gliner_spark.plans.incremental import STORE_DDL, _verified_pairs
+
+    # (c) steps 2-3 of admission are ONE band self-join over the tagged
+    # store ∪ batch band keys plus one verify, on the first batch (no
+    # store yet: an empty local table) and on a later one (parquet
+    # store), and no admission plan scans an RDD — a Python-built table
+    # would plan as `Scan ExistingRDD` and start Python workers
+    adm_root = tempfile.mkdtemp(prefix="gs_plan_admit_")
+    adm_store = f"{adm_root}/store"
     try:
-        dedup_admit_batch(docs.where(_F.col("doc_id") % 2 == 0),
-                          adm_store)
+        for when, parity in (("first batch", 0), ("later batch", 1)):
+            batch = docs.where(_F.col("doc_id") % 2 == parity)
+            p = executed_plan_of(_verified_pairs(
+                batch_minhash_signatures(batch),
+                read_parquet_or_empty(spark, adm_store, STORE_DDL),
+                32, 128, 0.8, 2000,
+            )).split("== Initial Plan ==")[0]
+            n_band_joins = p.count("Join [band_idx")
+            ok = n_band_joins == 1 and "ExistingRDD" not in p
+            print(f"  [{'OK ' if ok else 'BAD'}] admission pairs, {when}: "
+                  f"{n_band_joins} band join(s), ExistingRDD scan "
+                  f"{'ExistingRDD' in p}")
+            if not ok:
+                print(p)
+            bad += not ok
+            dedup_admit_batch(batch, adm_store)
         store_cols = spark.read.parquet(adm_store).columns
     finally:
-        shutil.rmtree(adm_store, ignore_errors=True)
+        shutil.rmtree(adm_root, ignore_errors=True)
     store_ok = store_cols == ["doc_id", "sig"]
     print(f"  [{'OK ' if store_ok else 'BAD'}] admission store schema "
           f"== [doc_id, sig] -> {store_cols}")
