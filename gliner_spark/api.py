@@ -25,11 +25,7 @@ from pyspark.sql import DataFrame
 from .config import SPAN_LEVEL, TOKEN_LEVEL, GlinerConfig
 from .kernels.decode import Span
 from .kernels.pipeline import ner_documents
-from .kernels.scorer import (
-    SurrogateScorer,
-    TokenSurrogateScorer,
-    make_scorer,
-)
+from .kernels.scorer import make_scorer
 from .kernels.tokenize import tokenize_text
 from .operators.ner import extract_mentions
 
@@ -53,12 +49,10 @@ class GlinerModel:
         self.config = GlinerConfig(
             max_width=max_width, max_length=max_length, model_type=model_type
         )
-        if model_type == TOKEN_LEVEL and model_path is None:
-            self._scorer = TokenSurrogateScorer()
-        else:
-            self._scorer = make_scorer(
-                max_width, model_path, tokenizer_path, device_id=device_id
-            )
+        self._scorer = make_scorer(
+            max_width, model_path, tokenizer_path, device_id=device_id,
+            model_type=model_type,
+        )
         self._model_path = model_path
         self._tokenizer_path = tokenizer_path
         self._device_id = device_id
@@ -151,15 +145,11 @@ class GlinerModel:
             threshold=threshold,
             multi_label=multi_label,
         )
-        mp, tp, mw = self._model_path, self._tokenizer_path, cfg.max_width
-        mt, dev = cfg.model_type, self._device_id
+        mp, tp, dev = self._model_path, self._tokenizer_path, self._device_id
 
         def factory():
-            if mt == TOKEN_LEVEL and mp is None:
-                return TokenSurrogateScorer()
-            if mp:
-                return make_scorer(mw, mp, tp, device_id=dev)
-            return SurrogateScorer(mw)
+            return make_scorer(cfg.max_width, mp, tp, device_id=dev,
+                               model_type=cfg.model_type)
 
         return extract_mentions(
             pages, entities, id_col=id_col, text_col=text_col, config=cfg,

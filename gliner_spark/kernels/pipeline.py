@@ -1,5 +1,5 @@
-"""Single-document NER composition — the shared kernel between the Spark
-operator and the single-process parity oracle.
+"""Batch NER composition — the shared kernel between the Spark operator
+and the single-process parity oracle.
 
 Mirrors Model::inference (/root/reference/src/model.cpp:101-124):
 validate → tokenize → score → decode → greedy, with the Model-level
@@ -7,16 +7,25 @@ defaults flat_ner=True, threshold=0.5, multi_label=False
 (/root/reference/include/GLiNER/model.hpp:44-47). Empty texts or empty
 label sets short-circuit to no spans (model.cpp:50-52, 104-107).
 
+There is one path for every configuration: tokenize each text, cut each
+document into windows, score ALL windows of the batch with one scorer
+call, decode each window, then run greedy once per document. Only the
+scorer method and the decoder change with the model type, as in the
+reference's processor/decoder pair.
+
 Two extensions beyond the reference, both opt-in:
 - token-level decode (TokenProcessor/TokenDecoder path,
   /root/reference/src/processor.cpp:167-181, decoder.cpp:123-181) via
   ``model_type=TOKEN_LEVEL`` and a scorer exposing ``score_tokens``;
 - chunking for oversized pages (``config.chunk_words > 0``): the
   reference never truncates (``maxLength`` is dead config, SURVEY.md
-  §1.4), which is unbounded on 100 KB pages — chunk at word boundaries
-  with overlap, decode per chunk (byte offsets stay global because
-  tokens carry original-offset spans), dedupe seam duplicates keeping
-  max prob, re-sort to generation order, then greedy once.
+  §1.4), which is unbounded on 100 KB pages — a document longer than
+  ``chunk_words`` becomes several overlapping windows cut at word
+  boundaries. The windows are scored in the same batched call as every
+  other window (byte offsets stay global because tokens carry
+  original-offset spans); a multi-window document's seam duplicates are
+  merged keeping max prob and re-sorted to generation order before
+  greedy. A single-window document keeps its decoder's order untouched.
 
 Because the Spark ``mapInPandas`` stage calls exactly this function, the
 cluster output and the straight-line single-process output are the same
@@ -38,49 +47,28 @@ from .decode import (
 from .tokenize import tokenize_text
 
 
-def _chunks(n_tokens: int, size: int, overlap: int):
-    step = max(1, size - overlap)
-    starts = range(0, max(1, n_tokens - overlap), step)
+def _windows(n_tokens: int, config: GlinerConfig) -> List[Tuple[int, int]]:
+    """Token ranges scored for one document: the whole document, or
+    overlapping ``chunk_words`` chunks when it is longer than that."""
+    size = config.chunk_words
+    if not size or n_tokens <= size:
+        return [(0, n_tokens)]
+    step = max(1, size - config.chunk_overlap)
+    starts = range(0, max(1, n_tokens - config.chunk_overlap), step)
     return [(s, min(n_tokens, s + size)) for s in starts]
 
 
-def _decode_one(
-    text: str,
-    tokens,
-    labels: Sequence[str],
-    scorer,
-    config: GlinerConfig,
-) -> List[Span]:
-    decode = (
-        decode_token_logits
-        if config.model_type == TOKEN_LEVEL
-        else decode_span_logits
-    )
-    score = (
-        scorer.score_tokens
-        if config.model_type == TOKEN_LEVEL
-        else scorer.score_spans
-    )
-
-    if config.chunk_words and len(tokens) > config.chunk_words:
-        lab_pos = {l: i for i, l in enumerate(labels)}
-        merged: Dict[Tuple[int, int, str], Span] = {}
-        for lo, hi in _chunks(len(tokens), config.chunk_words,
-                              config.chunk_overlap):
-            sub = tokens[lo:hi]
-            (lg,) = score([sub], labels)
-            for sp in decode(lg, sub, text, labels, config.threshold):
-                key = (sp[0], sp[1], sp[3])
-                prev = merged.get(key)
-                if prev is None or sp[4] > prev[4]:
-                    merged[key] = sp
-        spans = sorted(
-            merged.values(), key=lambda s: (s[0], s[1], lab_pos[s[3]])
-        )
-    else:
-        (lg,) = score([tokens], labels)
-        spans = decode(lg, tokens, text, labels, config.threshold)
-    return greedy_search(spans, config.flat_ner, config.multi_label)
+def _merge_seams(decoded: List[List[Span]], lab_pos: Dict[str, int]):
+    """One document's per-window spans → deduplicated by (start, end,
+    label) keeping max prob, in generation order (start, end, label)."""
+    merged: Dict[Tuple[int, int, str], Span] = {}
+    for spans in decoded:
+        for sp in spans:
+            key = (sp[0], sp[1], sp[3])
+            prev = merged.get(key)
+            if prev is None or sp[4] > prev[4]:
+                merged[key] = sp
+    return sorted(merged.values(), key=lambda s: (s[0], s[1], lab_pos[s[3]]))
 
 
 def ner_documents(
@@ -92,21 +80,34 @@ def ner_documents(
     """Batch NER: texts × labels → per-document selected spans."""
     if not texts or not labels:
         return [[] for _ in texts]
-    batch_tokens = [tokenize_text(t) if t else [] for t in texts]
-    if config.chunk_words or config.model_type == TOKEN_LEVEL:
-        return [
-            _decode_one(text, toks, labels, scorer, config) if toks else []
-            for text, toks in zip(texts, batch_tokens)
-        ]
-    # fast path: one scorer call for the whole batch
-    logits = scorer.score_spans(batch_tokens, labels)
-    out: List[List[Span]] = []
-    for text, tokens, lg in zip(texts, batch_tokens, logits):
-        spans = decode_span_logits(
-            lg, tokens, text, labels, threshold=config.threshold
+    if config.model_type == TOKEN_LEVEL:
+        score, decode = scorer.score_tokens, decode_token_logits
+    else:
+        score, decode = scorer.score_spans, decode_span_logits
+
+    owners: List[int] = []
+    windows = []
+    for d, text in enumerate(texts):
+        tokens = tokenize_text(text) if text else []
+        if tokens:
+            for lo, hi in _windows(len(tokens), config):
+                owners.append(d)
+                windows.append(tokens[lo:hi])
+
+    decoded: List[List[List[Span]]] = [[] for _ in texts]
+    if windows:
+        logits = score(windows, labels)  # one call for the whole batch
+        for d, tokens, lg in zip(owners, windows, logits):
+            decoded[d].append(
+                decode(lg, tokens, texts[d], labels, config.threshold)
+            )
+
+    lab_pos = {l: i for i, l in enumerate(labels)}
+    return [
+        greedy_search(
+            doc[0] if len(doc) == 1 else _merge_seams(doc, lab_pos),
+            config.flat_ner,
+            config.multi_label,
         )
-        out.append(
-            greedy_search(spans, flat_ner=config.flat_ner,
-                          multi_label=config.multi_label)
-        )
-    return out
+        for doc in decoded
+    ]

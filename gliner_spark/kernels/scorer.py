@@ -32,6 +32,8 @@ from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
 
+from ..config import SPAN_LEVEL, TOKEN_LEVEL
+
 NEG_LOGIT = -12.0  # sigmoid ≈ 6e-6: never crosses any sane threshold
 
 Token = Tuple[int, int, str]
@@ -278,8 +280,11 @@ def make_scorer(
     model_path: str | None = None,
     tokenizer_path: str | None = None,
     device_id: int = -1,
+    model_type: str = SPAN_LEVEL,
 ):
-    """ONNX when a model is configured, surrogate otherwise.
+    """ONNX when a model is configured, otherwise the surrogate that
+    matches ``model_type`` (``TokenSurrogateScorer`` for token-level
+    decode). The one place that picks a scorer for a config.
     ``device_id >= 0`` routes to the CUDA EP (model.cpp:71-77).
 
     A configured model is honored even without the onnxruntime wheel:
@@ -290,6 +295,8 @@ def make_scorer(
     if model_path and tokenizer_path:
         return OnnxScorer(model_path, tokenizer_path, max_width,
                           device_id=device_id)
+    if model_type == TOKEN_LEVEL:
+        return TokenSurrogateScorer()
     return SurrogateScorer(max_width)
 
 

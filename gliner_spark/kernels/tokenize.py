@@ -17,7 +17,7 @@ Two deltas vs a naive Python ``re`` port, both load-bearing:
 2. Offsets must be byte offsets. We track a running (char, byte) cursor
    across matches so conversion is O(len(text)) total, not O(n·matches).
 
-The kernel is a pure function over a pandas Series so the same code path
+The kernel is a pure function over one string so the same code path
 runs in pytest (no Spark) and inside ``mapInPandas`` on the cluster.
 """
 
@@ -25,9 +25,6 @@ from __future__ import annotations
 
 import re
 from typing import List, Tuple
-
-import numpy as np
-import pandas as pd
 
 from ._mark_ranges import MARK_RANGES
 
@@ -81,22 +78,3 @@ def tokenize_text(text: str) -> List[Token]:
         out.append((bs, be, m.group()))
         prev_c, prev_b = ce, be
     return out
-
-
-def tokenize_series(texts: pd.Series) -> pd.Series:
-    """Vectorized batch form (reference batchTokenizeText,
-    /root/reference/src/processor.cpp:17-26): Series[str] →
-    Series[list[(start, end, text)]]."""
-    return texts.map(lambda t: tokenize_text(t) if isinstance(t, str) else [])
-
-
-def token_count(text: str) -> int:
-    return sum(1 for _ in WORD_PATTERN.finditer(text)) if text else 0
-
-
-def word_starts_ends(tokens: List[Token]) -> Tuple[np.ndarray, np.ndarray]:
-    """Byte start/end arrays for decode-time offset gathers."""
-    if not tokens:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    arr = np.asarray([(t[0], t[1]) for t in tokens], dtype=np.int64)
-    return arr[:, 0], arr[:, 1]

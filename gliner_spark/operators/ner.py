@@ -6,6 +6,10 @@ stage, because the greedy group is a single document — i.e. a single
 input row — so **no shuffle is needed for NER**. The first shuffle in the
 whole pipeline is the relation/linking join downstream.
 
+``_ner_stage`` is the one Spark NER stage; ``extract_mentions`` and the
+fused ``extract_triples_fused`` (operators/ner_fused.py) differ only in
+the emitter that turns a batch's spans into output rows, and its schema.
+
 Scale notes (100 TB / 1000 executors):
 - the stage is embarrassingly parallel over input splits; throughput
   scales with cores as long as the scorer is the bottleneck (it is);
@@ -20,17 +24,81 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence
+from typing import Callable, Iterator, List, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..config import TOKEN_LEVEL, GlinerConfig
+from ..config import GlinerConfig
+from ..kernels.decode import Span
 from ..kernels.pipeline import ner_documents
-from ..kernels.scorer import SurrogateScorer, TokenSurrogateScorer
+from ..kernels.scorer import make_scorer
 from ..schemas import MENTIONS
 from .util import ensure_parallelism
+
+# (doc_ids, per-document selected spans) → one Arrow batch's output rows
+Emitter = Callable[[List[str], List[List[Span]]], List[tuple]]
+
+
+def _frame(rows: List[tuple], schema: T.StructType) -> pd.DataFrame:
+    """Rows → a pandas batch whose integer/double columns keep their
+    dtype even when ``rows`` is empty."""
+    out = pd.DataFrame(rows, columns=schema.fieldNames())
+    for f in schema.fields:
+        if isinstance(f.dataType, T.LongType):
+            out[f.name] = out[f.name].astype("int64")
+        elif isinstance(f.dataType, T.DoubleType):
+            out[f.name] = out[f.name].astype("float64")
+    return out
+
+
+def _ner_stage(
+    pages: DataFrame,
+    labels: Sequence[str],
+    id_col: str,
+    text_col: str,
+    config: GlinerConfig,
+    scorer_factory,
+    emit: Emitter,
+    schema: T.StructType,
+    length_sort: bool = False,
+) -> DataFrame:
+    """The one Spark NER stage: project (doc_id, text), guard input
+    parallelism, then per Arrow batch run ``ner_documents`` with a
+    per-task scorer and yield the rows of ``emit(doc_ids, spans_batch)``
+    as a ``schema`` batch."""
+    labels = list(labels)
+    factory = scorer_factory or (
+        lambda: make_scorer(config.max_width, model_type=config.model_type)
+    )
+    src = ensure_parallelism(
+        pages.select(
+            F.col(id_col).cast("string").alias("doc_id"),
+            F.col(text_col).alias("text"),
+        )
+    )
+    if length_sort:
+        src = src.sortWithinPartitions(F.length("text"))
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        scorer = factory()  # once per task; sessions cache per process
+        for pdf in batches:
+            spans_batch = ner_documents(
+                pdf["text"].tolist(), labels, scorer, config
+            )
+            yield _frame(emit(pdf["doc_id"].tolist(), spans_batch), schema)
+
+    return src.mapInPandas(run, schema=schema)
+
+
+def _mention_rows(doc_ids: List[str], spans_batch: List[List[Span]]):
+    return [
+        (doc_id, s, e, txt, lab, round(float(p), 4))
+        for doc_id, spans in zip(doc_ids, spans_batch)
+        for s, e, txt, lab, p in spans
+    ]
 
 
 def extract_mentions(
@@ -46,53 +114,7 @@ def extract_mentions(
     label, prob). Labels are a broadcast-sized query constant folded into
     the scorer (the reference folds them into the prompt,
     /root/reference/src/processor.cpp:33-49)."""
-    labels = list(labels)
-    cfg = config
-    if scorer_factory is None:
-        if cfg.model_type == TOKEN_LEVEL:
-            scorer_factory = TokenSurrogateScorer
-        else:
-            scorer_factory = lambda mw=cfg.max_width: SurrogateScorer(mw)  # noqa: E731
-    factory = scorer_factory
-
-    src = ensure_parallelism(
-        pages.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
+    return _ner_stage(
+        pages, labels, id_col, text_col, config, scorer_factory,
+        _mention_rows, MENTIONS, length_sort,
     )
-    if length_sort:
-        src = src.sortWithinPartitions(F.length("text"))
-
-    def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = factory()  # once per task; sessions cache per process
-        for pdf in batches:
-            ids: List[str] = []
-            starts: List[int] = []
-            ends: List[int] = []
-            texts_out: List[str] = []
-            labs: List[str] = []
-            probs: List[float] = []
-            spans_batch = ner_documents(
-                pdf["text"].tolist(), labels, scorer, cfg
-            )
-            for doc_id, spans in zip(pdf["doc_id"], spans_batch):
-                for s, e, txt, lab, p in spans:
-                    ids.append(doc_id)
-                    starts.append(s)
-                    ends.append(e)
-                    texts_out.append(txt)
-                    labs.append(lab)
-                    probs.append(round(float(p), 4))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="object"),
-                    "m_start": pd.Series(starts, dtype="int64"),
-                    "m_end": pd.Series(ends, dtype="int64"),
-                    "m_text": pd.Series(texts_out, dtype="object"),
-                    "label": pd.Series(labs, dtype="object"),
-                    "prob": pd.Series(probs, dtype="float64"),
-                }
-            )
-
-    return src.mapInPandas(score_partition, schema=MENTIONS)

@@ -1,37 +1,40 @@
 """Fused NER + relation extraction: pages → triples in ONE pass.
 
 The relation window is intra-document (operators/relations.py), and every
-document's mentions are produced together inside the NER ``mapInPandas``
-batch — so the (subj, obj) pairing can run right there, per document,
-over ~tens of mentions: a nested loop that is O(mentions²) per doc but
-costs nothing next to scoring. This removes BOTH problems the
-join-formulation has at scale:
+document's mentions are produced together inside one NER Arrow batch —
+so the (subj, obj) pairing can run right there, per document, over ~tens
+of mentions: a nested loop that is O(mentions²) per doc but costs
+nothing next to scoring. This removes BOTH problems the join formulation
+has at scale:
 
 - no second computation of the NER stage (the self-join's two branches
   each re-run ``mapInPandas`` unless the mentions table is persisted);
 - no mentions shuffle at all — the flagship pages→triples job becomes
   scan → one Python stage → sink, embarrassingly parallel.
 
+The Python stage is the same one ``extract_mentions`` runs
+(``operators/ner._ner_stage``: projection, parallelism guard, per-task
+scorer chosen by ``make_scorer``, ``ner_documents`` per batch); only the
+emitter differs — it turns each document's spans into triples with
+``relations_for_doc`` instead of into mention rows.
+
 Semantics are identical to ``extract_relations`` over
-``extract_mentions`` (asserted by tests/test_fused.py); the modular
-operators remain the right choice when the mentions table itself is a
-materialized product (linking, dedup, checkpointing consume it).
+``extract_mentions`` for span- and token-level configs (asserted by
+tests/test_fused.py); the modular operators remain the right choice when
+the mentions table itself is a materialized product (linking, dedup,
+checkpointing consume it).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence, Tuple
+from typing import List, Sequence, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import GlinerConfig
-from ..kernels.pipeline import ner_documents
-from ..kernels.scorer import SurrogateScorer
 from ..schemas import TRIPLES
+from .ner import _ner_stage
 from .relations import DEFAULT_RULES, DEFAULT_WINDOW_BYTES
-from .util import ensure_parallelism
 
 
 def relations_for_doc(
@@ -68,35 +71,16 @@ def extract_triples_fused(
     scorer_factory=None,
 ) -> DataFrame:
     """pages → triples, single mapInPandas stage (no shuffle)."""
-    labels = list(labels)
     rule_map = {(s, o): p for s, o, p in rules}
-    factory = scorer_factory or (lambda: SurrogateScorer(config.max_width))
 
-    src = ensure_parallelism(
-        pages.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = factory()
-        cols = [
-            "doc_id", "subj", "subj_label", "subj_start", "pred",
-            "obj", "obj_label", "obj_start", "prob",
+    def triple_rows(doc_ids, spans_batch):
+        return [
+            (doc_id, *rel)
+            for doc_id, spans in zip(doc_ids, spans_batch)
+            for rel in relations_for_doc(spans, rule_map, window_bytes)
         ]
-        for pdf in batches:
-            rows: List[tuple] = []
-            spans_batch = ner_documents(
-                pdf["text"].tolist(), labels, scorer, config
-            )
-            for doc_id, spans in zip(pdf["doc_id"], spans_batch):
-                for rel in relations_for_doc(spans, rule_map, window_bytes):
-                    rows.append((doc_id, *rel))
-            out = pd.DataFrame(rows, columns=cols)
-            out["subj_start"] = out["subj_start"].astype("int64")
-            out["obj_start"] = out["obj_start"].astype("int64")
-            out["prob"] = out["prob"].astype("float64")
-            yield out
 
-    return src.mapInPandas(run, schema=TRIPLES)
+    return _ner_stage(
+        pages, labels, id_col, text_col, config, scorer_factory,
+        triple_rows, TRIPLES,
+    )

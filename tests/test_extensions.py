@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from gliner_spark.config import TOKEN_LEVEL, GlinerConfig
+from gliner_spark.config import SPAN_LEVEL, TOKEN_LEVEL, GlinerConfig
 from gliner_spark.kernels.pipeline import ner_documents
 from gliner_spark.kernels.scorer import (
     ALL_LABELS,
@@ -210,6 +210,64 @@ def test_chunking_overlap_contract_pinned():
         if chunked != plain:
             lost += 1
     assert lost > 0
+
+
+def _tiny_onnx_scorer(tmp_path, token_level):
+    """OnnxScorer over a real tiny GLiNER graph (kernels/onnx_rt.py) with
+    single-word Kyiv→city / Ukraine→country semantics; ids are those of
+    tests/fixtures/wordpiece_tokenizer.json."""
+    import os
+
+    from gliner_spark.kernels.onnx_rt import build_tiny_gliner_model
+    from gliner_spark.kernels.scorer import OnnxScorer
+
+    path = build_tiny_gliner_model(
+        str(tmp_path / f"tiny_{token_level}.onnx"),
+        word_entries={9: (0, 0.9), 17: (1, 0.9)},  # kyiv, ukraine
+        label_ids={22: 0, 23: 1},  # city, country
+        ent_token_id=30,
+        vocab_size=32,
+        token_level=token_level,
+    )
+    wp = os.path.join(os.path.dirname(__file__), "fixtures",
+                      "wordpiece_tokenizer.json")
+    return OnnxScorer(path, wp, max_width=12)
+
+
+@pytest.mark.parametrize("chunk_words", [0, 8])
+@pytest.mark.parametrize(
+    "scorer_kind", ["span", "token", "onnx_span", "onnx_token"]
+)
+def test_ner_documents_batch_invariant(tmp_path, scorer_kind, chunk_words):
+    """One scorer call scores every window of a ragged batch (padded to
+    the longest window for ONNX): each document's spans must equal those
+    of scoring it alone, for span and token models, chunked or not, with
+    empty, null and longer-than-``chunk_words`` documents in the batch."""
+    token = scorer_kind.endswith("token")
+    cfg = GlinerConfig(
+        model_type=TOKEN_LEVEL if token else SPAN_LEVEL,
+        chunk_words=chunk_words,
+        chunk_overlap=4,
+    )
+    if scorer_kind.startswith("onnx"):
+        scorer = _tiny_onnx_scorer(tmp_path, token)
+        labels = ["city", "country"]
+    else:
+        scorer = TokenSurrogateScorer() if token else SurrogateScorer(12)
+        labels = ALL_LABELS
+    texts = [
+        "Kyiv is the capital of Ukraine.",
+        "",
+        "Kyiv is the capital of Ukraine, New York City of Elon Musk. " * 5,
+        None,
+        "hello world",
+        "spark join table big data stream the scan merge row " * 3,
+    ]
+    batched = ner_documents(texts, labels, scorer, cfg)
+    alone = [ner_documents([t], labels, scorer, cfg)[0] for t in texts]
+    assert batched == alone
+    assert batched[1] == batched[3] == []
+    assert len(batched[2]) >= 10  # the long document found every entity
 
 
 # --- skew salting ---

@@ -2,6 +2,7 @@
 
 import pytest
 
+from gliner_spark.config import TOKEN_LEVEL, GlinerConfig
 from gliner_spark.kernels.scorer import ALL_LABELS
 from gliner_spark.operators.ner import extract_mentions
 from gliner_spark.operators.ner_fused import extract_triples_fused
@@ -25,19 +26,32 @@ def _key(r):
     )
 
 
-def test_fused_equals_modular(spark):
+def _assert_fused_equals_modular(spark, config):
     pages = synthesize_pages(spark, 250).persist()
     modular = sorted(
         _key(r)
         for r in extract_relations(
-            extract_mentions(pages, ALL_LABELS).persist()
+            extract_mentions(pages, ALL_LABELS, config=config).persist()
         ).collect()
     )
     fused = sorted(
-        _key(r) for r in extract_triples_fused(pages, ALL_LABELS).collect()
+        _key(r)
+        for r in extract_triples_fused(
+            pages, ALL_LABELS, config=config
+        ).collect()
     )
     assert len(fused) == len(modular) > 0
     assert fused == modular
+
+
+def test_fused_equals_modular(spark):
+    _assert_fused_equals_modular(spark, GlinerConfig())
+
+
+def test_fused_token_level_equals_modular(spark):
+    """A token-level config gets a token-level scorer on the fused path
+    too (one scorer choice, ``make_scorer``)."""
+    _assert_fused_equals_modular(spark, GlinerConfig(model_type=TOKEN_LEVEL))
 
 
 def test_persisted_mentions_score_each_doc_once(spark, tmp_path):
@@ -87,8 +101,6 @@ def test_persisted_mentions_score_each_doc_once(spark, tmp_path):
 
 def test_fused_no_shuffle_plan(spark):
     pages = synthesize_pages(spark, 50)
-    plan = extract_triples_fused(pages, ALL_LABELS)._jdf.queryExecution(
-    ).executedPlan().toString() if False else ""
     # pre-execution formatted plan: a single Python stage, no Exchange
     # above the mapInPandas (the synthesis union below it is irrelevant)
     import io
