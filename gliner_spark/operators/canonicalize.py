@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import DRIVER_ROWS, local_table
+
 
 def connected_components(
     edges: DataFrame,
@@ -102,7 +104,7 @@ def connected_components_auto(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 20,
-    driver_threshold: int = 1_000_000,
+    driver_threshold: int = DRIVER_ROWS,
     size_hint: int | None = None,
 ) -> DataFrame:
     """Size-adaptive connected components.
@@ -180,8 +182,6 @@ def _union_find_df(spark, pairs, node_type: str) -> DataFrame:
     """``union_find`` as a (node, component) ``local_table``
     (LocalTableScan, never a Python RDD), sorted by node. Shared by
     the size-adaptive CC entry points."""
-    from .util import local_table
-
     return local_table(
         spark, sorted(union_find(pairs).items()),
         f"node {node_type}, component {node_type}",
@@ -228,8 +228,14 @@ def canonical_entities(
     return mapped.join(canon, mapped.entity_id == canon.ce_id).drop("ce_id")
 
 
+# FIXTURES.md §4 nodes schema: ``nodes_table``'s output, and the
+# schema of the nodes ``build_kg``'s driver linking tail builds
+NODES_DDL = ("entity_id string, canonical string, label string, "
+             "n_mentions bigint, n_surfaces bigint")
+
+
 def nodes_table(entities: DataFrame) -> DataFrame:
-    """Aggregate per-entity node rows (FIXTURES.md §4 nodes schema)."""
+    """Aggregate per-entity node rows (``NODES_DDL``)."""
     return entities.groupBy("entity_id", "canonical", "label").agg(
         F.sum("n_mentions").alias("n_mentions"),
         F.count(F.lit(1)).alias("n_surfaces"),

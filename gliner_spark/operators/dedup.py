@@ -14,8 +14,10 @@ Scale notes: exact/fingerprint are one shuffle on a 16-byte key. The
 shingle join's bucket-size guard bounds quadratic blowup; at 100 TB the
 minhash path replaces the exact ngram join (signatures are fixed-width
 regardless of doc length, candidates ≈ true pairs for b/r tuned to the
-threshold). SimHash banding is 4 exact-match joins on 16-bit slices —
-cheapest of all at scale, catches Hamming ≤ 3×16-bit-band collisions.
+threshold). SimHash banding is an exact-match join on 8 byte-bands of
+the 64-bit signature (default ``band_bits=8``): by pigeonhole, a pair
+at Hamming ≤ 6 leaves at least 2 of the 8 bands identical, so the
+default ``max_hamming=6`` misses no pair the bucket guard keeps.
 """
 
 from __future__ import annotations
@@ -348,14 +350,21 @@ def paragraph_dedup(
     available to this join (observed firing on a sort-merge join in
     tools/salt_probe.py), while NO skew optimization ever applies to
     a window sort. Then one groupBy(doc_id) reassembly shuffle."""
-    words = F.split(F.col(text_col), " ")
     if window_words is not None:
-        n_seg = F.ceil(F.size(words) / F.lit(window_words)).cast("int")
-        segs = F.transform(
-            F.sequence(F.lit(0), n_seg - 1),
-            lambda i: F.array_join(
-                F.slice(words, i * window_words + 1, window_words), " "
-            ),
+        def windows(words):
+            n_seg = F.ceil(F.size(words) / F.lit(window_words)).cast("int")
+            return F.transform(
+                F.sequence(F.lit(0), n_seg - 1),
+                lambda i: F.array_join(
+                    F.slice(words, i * window_words + 1, window_words), " "
+                ),
+            )
+
+        # split once per row, bound as the variable of an outer
+        # one-element transform (as in word_shingles): inline, the split
+        # sits inside the per-segment lambda and re-runs per segment
+        segs = F.element_at(
+            F.transform(F.array(F.split(F.col(text_col), " ")), windows), 1
         )
         joiner = " "
     else:
@@ -507,9 +516,7 @@ def minhash_dups(
     # row-local numpy signature stage (guide §4.2) — same values as the
     # old explode + 128-min aggregation (shared perm_params), no
     # explode and no aggregation shuffle
-    sig = minhash_signature_map(
-        hashed, n_perms, seed, id_col="sid"
-    ).localCheckpoint()
+    sig = minhash_signature_map(hashed, n_perms, seed).localCheckpoint()
     # band keys only — the candidate join must not drag the shingle
     # arrays through its shuffle (they rejoin below, candidate set ≪ docs)
     banded = sig.select(
@@ -697,9 +704,12 @@ def simhash_dups(
     text_col: str = "text",
     hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """(src, dst, hamming): pairs within Hamming distance via 16-bit band
-    blocking (any pair with distance ≤ 6 shares ≥ 1 of 4 exact bands
-    unless all differing bits spread 3+ bands; recall measured in tests).
+    """(src, dst, hamming): pairs within Hamming distance via exact band
+    blocking on 64 / ``band_bits`` bands (default 8 byte-bands). The
+    differing bits of a pair at Hamming ≤ 6 fall in at most 6 bands, so
+    at least 2 of the 8 stay identical (pigeonhole): every such pair
+    meets in a band bucket, and only the ``max_bucket`` guard can lose
+    one.
 
     r7 note (measured and kept AS the join): a per-bucket vectorized
     applyInPandas Hamming (the rework pattern that won for the
@@ -724,10 +734,10 @@ def simhash_dups(
     sig = simhash_signatures(
         docs, id_col, text_col, hash_family
     ).localCheckpoint()
-    # band_bits=8 → 8 bands: a pair with Hamming ≤ 6 almost always leaves
-    # ≥1 of 8 bytes identical; at web scale prefer band_bits=16 (4 bands,
-    # max_hamming≈3) — byte-bands collide too often on 10^12 docs. The
-    # bucket guard bounds quadratic blowup either way.
+    # band_bits=8 → 8 bands: a pair with Hamming ≤ 6 always leaves ≥ 2
+    # of 8 bytes identical; at web scale prefer band_bits=16 (4 bands,
+    # exact up to max_hamming=3) — byte-bands collide too often on
+    # 10^12 docs. The bucket guard bounds quadratic blowup either way.
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
     bands = sig.select(

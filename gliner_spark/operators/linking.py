@@ -10,10 +10,14 @@ cosine scoring over span embeddings"). Two interchangeable paths:
    shingle, count per pair, filter. Quadratic only within a shingle
    bucket, never globally.
 2. ``lsh_links`` — MinHash signatures + banded LSH blocking, then exact
-   Jaccard verification on candidates only. The 100 TB path: candidate
-   generation is a single equi-join on (band_idx, band_hash); everything
-   stays JVM-side (``xxhash64``/``transform``/``array_min`` — zero
-   Python), so whole-stage codegen covers the hot path end-to-end.
+   Jaccard verification on candidates only. The 100 TB path: shingles
+   and their hashes stay JVM-side (``xxhash64``, codegen'd), the
+   permutation mins run in one row-local numpy Arrow stage
+   (``minhash_signature_map``), and candidate generation is a single
+   equi-join on (label, band_idx, band_key). ``lsh_links_local`` is the
+   same computation on the driver over a collected surface table —
+   ``build_kg`` runs it below ``util.DRIVER_ROWS`` surfaces and
+   candidate pairs.
 
 Skew: surfaces are distinct strings, so the shingle join's hot keys are
 common shingles (e.g. "the"). ``max_bucket`` drops shingle buckets larger
@@ -25,13 +29,21 @@ bucket). LSH band buckets are bounded the same way.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # deterministic MinHash permutation modulus: Mersenne prime 2^31-1, small
 # enough that (a*x + b) stays under 2^62 — Spark 4 runs ANSI mode, where
 # silent 64-bit overflow is an error, so operands must be bounded.
 MERSENNE = (1 << 31) - 1
+# the LSH linking defaults, shared by ``lsh_links`` and its driver form
+# ``lsh_links_local`` so the two paths cannot drift apart: the exact
+# Jaccard a candidate pair must reach, the largest band bucket that
+# still joins (skew guard), and the permutation seed
+LSH_THRESHOLD = 0.30
+LSH_MAX_BUCKET = 2000
+MINHASH_SEED = 7
 
 
 def surface_key():
@@ -156,7 +168,7 @@ def hash_shingles(shingle_col):
     )
 
 
-def perm_params(n_perms: int, seed: int = 7):
+def perm_params(n_perms: int, seed: int = MINHASH_SEED):
     """Deterministic (a_i, b_i) affine-permutation parameters."""
     import random
 
@@ -168,7 +180,7 @@ def perm_params(n_perms: int, seed: int = 7):
 
 
 def minhash_signature_agg(hashed_exploded: DataFrame, id_cols, n_perms: int,
-                          seed: int = 7):
+                          seed: int = MINHASH_SEED):
     """Signature via explode + map-side-combined min aggregation —
     ~2× faster than nested array transforms at 128 perms (the partial
     agg computes the mins before the shuffle; only id→128 mins move).
@@ -186,29 +198,26 @@ def minhash_signature_agg(hashed_exploded: DataFrame, id_cols, n_perms: int,
     )
 
 
-def minhash_signature_map(hashed: DataFrame, n_perms: int, seed: int = 7,
-                          id_col: str = "sid") -> DataFrame:
-    """(id, sig array<long>) from rows ``(id, hx array<long>)`` of
-    pre-hashed shingles (``hash_shingles``) — the row-local numpy form
-    of ``minhash_signature_agg`` (guide §4.2): one Arrow stage computes
-    every permutation of a whole batch with one (n_perms × N) int64
-    broadcast-multiply + ``minimum.reduceat`` along the contiguous
-    shingle axis, replacing the explode + n_perms-min aggregation
-    (measured ~4× on the 50k-doc signature pass; zero shuffle instead
-    of one). The (n_perms × N) layout makes each per-doc min a
-    contiguous run: the reduction over an (N × n_perms) array along
-    axis 0 walks memory with an n_perms stride and took ~16× longer
-    (0.08 vs 0.005 s per 51k shingles; ~2× on the whole kernel).
+def minhash_kernel(flat: np.ndarray, lens: np.ndarray, n_perms: int,
+                   seed: int = MINHASH_SEED) -> np.ndarray:
+    """(len(lens), n_perms) int64 MinHash signatures of ``len(lens)``
+    non-empty runs of pre-hashed shingles (``hash_shingles`` values)
+    laid end to end in ``flat``: the numpy kernel of
+    ``minhash_signature_map``, also run on the driver by ``build_kg``'s
+    linking tail.
 
-    Value-identical to the agg form by construction: shared
-    ``perm_params``; h ∈ [0, M) and a, b < M = 2³¹−1 keep
+    One (n_perms × N) int64 broadcast-multiply + ``minimum.reduceat``
+    along the contiguous shingle axis per workspace chunk. The
+    (n_perms × N) layout makes each per-run min a contiguous run: the
+    reduction over an (N × n_perms) array along axis 0 walks memory
+    with an n_perms stride and took ~16× longer (0.08 vs 0.005 s per
+    51k shingles; ~2× on the whole kernel). Chunks are run-aligned, so
+    peak memory is ~CHUNK × n_perms × 8 B whatever the input size.
+
+    Value-identical to ``minhash_signature_agg`` by construction:
+    shared ``perm_params``; h ∈ [0, M) and a, b < M = 2³¹−1 keep
     a·h + b < 2⁶² + 2³¹ inside int64, and numpy ``%`` on non-negatives
-    equals Spark ``pmod`` (pinned in tests). Rows with NULL or empty
-    hash arrays are dropped — exactly what ``explode`` did in the agg
-    form. The flat workspace is chunked (doc-aligned) so peak memory is
-    ~CHUNK × n_perms × 8 B regardless of batch size."""
-    import pandas as pd
-
+    equals Spark ``pmod`` (pinned in tests)."""
     perms = perm_params(n_perms, seed)
     pa = np.array([p[0] for p in perms], dtype=np.int64)[:, None]
     pb = np.array([p[1] for p in perms], dtype=np.int64)[:, None]
@@ -217,84 +226,88 @@ def minhash_signature_map(hashed: DataFrame, n_perms: int, seed: int = 7,
     # cores-per-executor concurrent tasks inside a few-GB Python
     # overhead budget (guide §5), not for this sandbox's headroom
     CHUNK = 65_536
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    sig = np.empty((len(lens), n_perms), dtype=np.int64)
+    i = 0
+    while i < len(lens):
+        # runs i..j-1 fit one chunk; a run longer than CHUNK goes alone
+        j = max(i + 1, int(np.searchsorted(ends, starts[i] + CHUNK, "right")))
+        vals = (pa * flat[starts[i]:ends[j - 1]] + pb) % MERSENNE
+        sig[i:j] = np.minimum.reduceat(vals, starts[i:j] - starts[i], axis=1).T
+        i = j
+    return sig
+
+
+def minhash_signature_map(hashed: DataFrame, n_perms: int,
+                          seed: int = MINHASH_SEED) -> DataFrame:
+    """``hashed`` with its ``hx array<long>`` column of pre-hashed
+    shingles (``hash_shingles``) replaced by ``sig array<long>``, the
+    MinHash signature: one row-local Arrow stage running
+    ``minhash_kernel`` over each batch (guide §4.2), in place of the
+    explode + n_perms-min aggregation of ``minhash_signature_agg``
+    (measured ~4× on the 50k-doc signature pass; zero shuffle instead
+    of one). Every other input column is carried through, so ``(id,
+    hx)`` rows give ``(id, sig)``. Rows with NULL or empty hash arrays
+    are dropped — exactly what ``explode`` did in the agg form."""
+    out = T.StructType(
+        [f for f in hashed.schema.fields if f.name != "hx"]
+        + [T.StructField("sig", T.ArrayType(T.LongType()))]
+    )
 
     def run(batches):
         for pdf in batches:
-            keep = [
-                (i, np.asarray(x, dtype=np.int64))
-                for i, x in enumerate(pdf["hx"])
-                if x is not None and len(x)
-            ]
-            if not keep:
-                yield pd.DataFrame({id_col: pdf[id_col][:0], "sig": []})
-                continue
-            ids = pdf[id_col].iloc[[i for i, _ in keep]]
-            arrs = [x for _, x in keep]
-            lens = np.fromiter((len(x) for x in arrs), dtype=np.int64,
-                               count=len(arrs))
-            sig = np.empty((len(arrs), n_perms), dtype=np.int64)
-            i = 0
-            while i < len(arrs):
-                j, tot = i, 0
-                while j < len(arrs) and (j == i or tot + lens[j] <= CHUNK):
-                    tot += lens[j]
-                    j += 1
-                flat = np.concatenate(arrs[i:j])
-                vals = (pa * flat + pb) % MERSENNE  # (n_perms, shingles)
-                starts = np.zeros(j - i, dtype=np.int64)
-                np.cumsum(lens[i:j][:-1], out=starts[1:])
-                sig[i:j] = np.minimum.reduceat(vals, starts, axis=1).T
-                i = j
-            yield pd.DataFrame({id_col: ids, "sig": list(sig)})
+            keep = np.fromiter((x is not None and len(x) > 0
+                                for x in pdf["hx"]), bool, len(pdf))
+            arrs = [np.asarray(x, dtype=np.int64) for x in pdf["hx"][keep]]
+            lens = np.fromiter(map(len, arrs), np.int64, len(arrs))
+            flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
+            sig = minhash_kernel(flat, lens, n_perms, seed)
+            yield pdf[keep].drop(columns="hx").assign(sig=list(sig))
 
-    return hashed.mapInPandas(run, f"{id_col} {hashed.schema[id_col].dataType.simpleString()}, sig array<long>")
+    return hashed.mapInPandas(run, out)
 
 
-def minhash_signature(hashed_col, n_perms: int, seed: int = 7):
-    """Array of n_perms MinHash values over pre-hashed shingle ints
-    (``hash_shingles``) — pure SQL expressions, no Python.
+def surface_shingles(surfaces: DataFrame, k: int) -> DataFrame:
+    """(sid, label, surface, n_mentions, sh, hx): each surface's
+    distinct char k-gram shingles and their base hashes, both computed
+    in the JVM — the one source of the shingle sets the distributed
+    and the driver linking paths work on."""
+    sh = char_shingles(F.col("surface"), k)
+    return surfaces.select(
+        "sid", "label", "surface", "n_mentions", sh.alias("sh")
+    ).withColumn("hx", hash_shingles(F.col("sh")))
 
-    Permutation i: h_i(x) = (a_i * x + b_i) mod M31, (a_i, b_i) derived
-    deterministically from the seed. Same values as
-    ``minhash_signature_agg`` (shared ``perm_params``); this expression
-    form suits small inputs (no shuffle), the agg form big ones.
-    """
 
-    def perm(a: int, b: int):
-        # factory (not default-arg lambda): F.transform inspects arity
-        def h(x):
-            return F.pmod(F.lit(a) * x + F.lit(b), F.lit(MERSENNE))
-
-        return h
-
-    mins = [
-        F.array_min(F.transform(hashed_col, perm(a, b)))
-        for a, b in perm_params(n_perms, seed)
-    ]
-    return F.array(*mins)
+def _surface_signatures(surfaces: DataFrame, k: int, n_perms: int,
+                        seed: int) -> DataFrame:
+    """(sid, label, sh, n_sh, sig) of every surface, not yet pinned."""
+    return minhash_signature_map(
+        surface_shingles(surfaces, k).select(
+            "sid", "label", "sh", F.size("sh").alias("n_sh"), "hx"),
+        n_perms, seed,
+    )
 
 
 def _banded_signatures(
     surfaces: DataFrame, k: int, n_perms: int, bands: int, seed: int
 ) -> DataFrame:
-    """(sid, label, n_sh, sh, band_idx, band_hash): the banded MinHash
+    """(sid, label, n_sh, sh, band_idx, band_key): the banded MinHash
     signature table ``lsh_links`` joins on — shared with
     ``lsh_dropped_buckets`` so the recall audit sees the exact same
-    band keys."""
+    band keys. A band key is the signature slice itself
+    (``array<bigint>``), not a hash of it: no hash collision makes a
+    false candidate, and the driver tail (``lsh_links_local``) keys on
+    the same slices."""
     assert n_perms % bands == 0
     rows = n_perms // bands
-    sh = surfaces.withColumn("sh", char_shingles(F.col("surface"), k)).select(
-        "sid", "label", "surface", "sh", F.size("sh").alias("n_sh")
-    )
     # materialized ONCE (guide §2.4): the signature table is consumed by
     # the bucket-guard aggregation and the pruned join side in lsh_links
     # (and once in lsh_dropped_buckets) — each reference otherwise
     # re-runs the surfaces aggregation over the full mentions table plus
-    # the shingle + 64-permutation MinHash expressions. The table is
+    # the shingles and the MinHash stage. The table is
     # surface-universe-sized (vocabulary-bounded).
-    sig = sh.withColumn("hx", hash_shingles(F.col("sh"))).withColumn(
-        "sig", minhash_signature(F.col("hx"), n_perms, seed)
-    ).drop("hx").localCheckpoint()
+    sig = _surface_signatures(surfaces, k, n_perms, seed).localCheckpoint()
     return sig.select(
         "sid",
         "label",
@@ -303,9 +316,9 @@ def _banded_signatures(
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(F.slice(F.col("sig"), i * rows + 1, rows)),
+                lambda i: F.slice(F.col("sig"), i * rows + 1, rows),
             )
-        ).alias("band_idx", "band_hash"),
+        ).alias("band_idx", "band_key"),
     )
 
 
@@ -314,8 +327,8 @@ def lsh_dropped_buckets(
     k: int = 3,
     n_perms: int = 64,
     bands: int = 32,
-    max_bucket: int = 2000,
-    seed: int = 7,
+    max_bucket: int = LSH_MAX_BUCKET,
+    seed: int = MINHASH_SEED,
 ) -> int:
     """Number of band buckets ``lsh_links`` (same parameters) would DROP
     under its skew guard. The banding miss-probability argument
@@ -328,7 +341,7 @@ def lsh_dropped_buckets(
     trusting banding math alone."""
     banded = _banded_signatures(surfaces, k, n_perms, bands, seed)
     return (
-        banded.groupBy("label", "band_idx", "band_hash")
+        banded.groupBy("label", "band_idx", "band_key")
         .agg(F.count(F.lit(1)).alias("bn"))
         .where(F.col("bn") > max_bucket)
         .count()
@@ -340,9 +353,9 @@ def lsh_links(
     k: int = 3,
     n_perms: int = 64,
     bands: int = 32,
-    threshold: float = 0.30,
-    max_bucket: int = 2000,
-    seed: int = 7,
+    threshold: float = LSH_THRESHOLD,
+    max_bucket: int = LSH_MAX_BUCKET,
+    seed: int = MINHASH_SEED,
 ) -> DataFrame:
     """MinHash-LSH candidate generation + exact-Jaccard verification.
 
@@ -354,12 +367,12 @@ def lsh_links(
     banded = _banded_signatures(surfaces, k, n_perms, bands, seed)
     # bound pathological band buckets (skew guard)
     bucket = (
-        banded.groupBy("label", "band_idx", "band_hash")
+        banded.groupBy("label", "band_idx", "band_key")
         .agg(F.count(F.lit(1)).alias("bn"))
         .where((F.col("bn") > 1) & (F.col("bn") <= max_bucket))
-        .select("label", "band_idx", "band_hash")
+        .select("label", "band_idx", "band_key")
     )
-    pruned = banded.join(bucket, ["label", "band_idx", "band_hash"])
+    pruned = banded.join(bucket, ["label", "band_idx", "band_key"])
     a = pruned.alias("a")
     b = pruned.alias("b")
     cand = (
@@ -367,7 +380,7 @@ def lsh_links(
             b,
             (F.col("a.label") == F.col("b.label"))
             & (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
             & (F.col("a.sid") < F.col("b.sid")),
         )
         .select(
@@ -388,3 +401,89 @@ def lsh_links(
             inter / (F.col("n_a") + F.col("n_b") - inter), 6
         ).alias("sim"),
     ).where(F.col("sim") >= threshold)
+
+
+def _spark_round(x: float, scale: int) -> float:
+    """Spark's ``round(x, scale)`` of a double: HALF_UP on its decimal
+    string (``BigDecimal.valueOf``, i.e. ``Double.toString``; ``repr``
+    is the shortest such string, equal to it on every i/j, j ≤ 300, in
+    tests), not Python's round-half-even on the binary value — e.g.
+    1/128 = 0.0078125 rounds to 0.007813 here and to 0.007812 in
+    Python."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale),
+                                           ROUND_HALF_UP))
+
+
+def _bucket_pairs(grp: np.ndarray):
+    """(i, j) position pairs, i < j, of every two entries of the
+    sorted group-id array ``grp`` that share a group."""
+    idx = np.arange(len(grp))
+    after = np.searchsorted(grp, grp, "right") - idx - 1  # later mates
+    left = np.repeat(idx, after)
+    right = left + 1 + np.arange(len(left)) - np.repeat(
+        np.cumsum(after) - after, after)
+    return left, right
+
+
+def lsh_links_local(tbl, n_perms: int, bands: int, max_pairs: int):
+    """``lsh_links`` on the driver: the (src, dst) pairs it would emit
+    with the same ``n_perms`` and ``bands`` and its default threshold,
+    bucket bound and seed, from a collected ``surface_shingles`` Arrow
+    table — or None once there are more than ``max_pairs`` candidate
+    pairs, so the driver never holds more.
+
+    The same steps on the same values: signatures from the JVM-computed
+    ``hx`` through ``minhash_kernel``; buckets keyed by (label,
+    band_idx, signature slice) joining only while
+    ``1 < size ≤ max_bucket``; pairs with a.sid < b.sid; verification by
+    exact shingle Jaccard with Spark's ``round(…, 6) >= threshold``.
+    Every surface has a non-empty shingle set (``char_shingles`` of a
+    string is never empty), so every row gets a signature."""
+    import pyarrow.compute as pc
+
+    assert n_perms % bands == 0
+    rows = n_perms // bands
+    # sid order (Arrow compares strings as UTF-8 bytes, like Spark)
+    # makes position order the a.sid < b.sid test
+    tbl = tbl.take(pc.sort_indices(tbl.column("sid")))
+    sid = tbl.column("sid").to_pylist()
+    n = len(sid)
+    hx = tbl.column("hx").combine_chunks()
+    sig = minhash_kernel(pc.list_flatten(hx).to_numpy(),
+                         pc.list_value_length(hx).to_numpy().astype(np.int64),
+                         n_perms, MINHASH_SEED)
+    label = (tbl.column("label").combine_chunks().dictionary_encode()
+             .indices.to_numpy().astype(np.int64))
+    cand = np.empty(0, np.int64)
+    for b in range(bands):
+        key = np.column_stack([label, sig[:, b * rows:(b + 1) * rows]])
+        # sorted by key, then position: a bucket's members in sid order
+        o = np.lexsort((np.arange(n), *key.T[::-1]))
+        key = key[o]
+        new = np.ones(n, bool)
+        new[1:] = (key[1:] != key[:-1]).any(axis=1)
+        grp = np.cumsum(new)
+        size = np.bincount(grp)[grp]
+        ok = (size > 1) & (size <= LSH_MAX_BUCKET)
+        # two surfaces share at most one bucket of a band: the band's
+        # pairs are distinct candidates, counted before they are built
+        if (size[ok] - 1).sum() // 2 > max_pairs:
+            return None
+        i, j = _bucket_pairs(grp[ok])
+        member = o[ok]
+        cand = np.union1d(cand, member[i] * n + member[j])
+        if len(cand) > max_pairs:
+            return None
+    src, dst = np.divmod(cand, max(n, 1))
+    need = np.unique(np.concatenate([src, dst]))
+    sets = dict(zip(need.tolist(),
+                    map(set, tbl.column("sh").take(need).to_pylist())))
+    out = []
+    for a, c in zip(src.tolist(), dst.tolist()):
+        inter = len(sets[a] & sets[c])
+        sim = inter / (len(sets[a]) + len(sets[c]) - inter)
+        if _spark_round(sim, 6) >= LSH_THRESHOLD:
+            out.append((sid[a], sid[c]))
+    return out

@@ -2,10 +2,15 @@
 
 from __future__ import annotations
 
-from typing import Iterable
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+# rows a plan may hold on the driver in place of distributed work: the
+# bound of every size-adaptive driver path (the KG linking tail's
+# surfaces and LSH candidate pairs, connected components, admission
+# verdicts). Each collect is a ``limit(DRIVER_ROWS + 1)``, so an
+# oversized input is detected without materializing it on the driver.
+DRIVER_ROWS = 1_000_000
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -22,9 +27,10 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df
 
 
-def local_table(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
-    """Driver-side rows (tuples in ``ddl`` column order) as a DataFrame
-    that plans as ``LocalTableScan``.
+def local_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-side rows — tuples in ``ddl`` column order, or a
+    ``pyarrow.Table`` holding (at least) ``ddl``'s columns — as a
+    DataFrame that plans as ``LocalTableScan``.
 
     ``createDataFrame(<python list>)`` plans as ``Scan ExistingRDD``: a
     Python RDD whose every evaluation starts Python workers (~1 CPU-s
@@ -36,10 +42,14 @@ def local_table(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFra
 
     schema = StructType.fromDDL(ddl)
     arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
+    if isinstance(rows, pa.Table):
+        table = rows.select(arrow.names).cast(arrow)
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        )
     return spark.createDataFrame(table, schema)
 
 

@@ -32,6 +32,7 @@ from ..operators.checkpoint import checkpoint_write, with_part_key
 from ..operators.linking import entity_surfaces, lsh_links
 from ..operators.ner import extract_mentions
 from ..operators.relations import extract_relations
+from ..operators.util import DRIVER_ROWS
 from .kg import KgResult
 
 
@@ -201,13 +202,10 @@ def batch_minhash_signatures(
         F.col(id_col).cast("long").alias("doc_id"),
         hash_shingles(word_shingles(F.col(text_col), k)).alias("hx"),
     )
-    return minhash_signature_map(hashed, n_perms, seed, id_col="doc_id")
+    return minhash_signature_map(hashed, n_perms, seed)
 
 
 STORE_DDL = "doc_id long, sig array<bigint>"
-# verified pairs an admission resolves on the driver; the same bound as
-# connected_components_auto's driver union-find
-DRIVER_ROWS = 1_000_000
 
 
 def _band_keys(sig_df: DataFrame, bands: int, rows: int) -> DataFrame:

@@ -3,20 +3,35 @@
 Composition of every stage (BASELINE.json:north_star), structured for
 the 100 TB plan shape:
 
-  pages ──mapInPandas(NER)──► mentions          [no shuffle]
+  pages ──mapInPandas(NER)──► mentions          [no shuffle; pinned]
         ──repartition(doc_id) once──►           [THE mentions shuffle]
-        ├─ self-join window ──► triples         [reuses doc_id partitioning]
-        └─ groupBy surface ──► surfaces         [small output]
-               ├─ LSH join ──► links            [tiny vs input]
-               └─ CC iterations ──► entities
+        ├─ self-join window ──► triples         [reuses doc_id
+        │                                         partitioning; pinned]
+        └─ groupBy surface ──► surfaces         [small output; pinned]
+               │
+               ├─ ≤ DRIVER_ROWS surfaces: ONE bounded Arrow collect
+               │  of (sid, label, surface, n_mentions, shingles, hashes)
+               │    driver: MinHash kernel → bands (≤ DRIVER_ROWS
+               │            candidate pairs) → exact Jaccard
+               │            → union-find → nodes + entity map
+               │            (two LocalTableScans)
+               │
+               └─ more: distributed tail
+                    MinHash stage → band join ──► links
+                    CC iterations ──► entities ──► nodes + entity map
   triples × entity map (broadcast) ──► edges    [broadcast join: the
                                                  entity map is ≪ triples]
 
 Only one big shuffle (mentions by doc_id) touches data proportional to
 the input; everything after ``entity_surfaces`` operates on the distinct-
-surface universe, which is bounded by vocabulary, not corpus size.
-Checkpointing wraps each materialized stage (mentions, triples, nodes,
-edges) with per-partition manifests for resume.
+surface universe, which is bounded by vocabulary, not corpus size. Up
+to ``util.DRIVER_ROWS`` distinct surfaces and as many LSH candidate
+pairs that tail is one driver pass (``lsh_links_local`` +
+``union_find``) on the same JVM-computed shingles and hashes, with the
+same output as the distributed tail; past either bound the
+distributed plan runs (measurements: docs/SCALE.md). Checkpointing
+wraps each materialized stage (mentions, triples, nodes, edges) with
+per-partition manifests for resume.
 """
 
 from __future__ import annotations
@@ -28,11 +43,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.canonicalize import canonical_entities, nodes_table
+from ..operators.canonicalize import (
+    NODES_DDL,
+    canonical_entities,
+    nodes_table,
+    union_find,
+)
 from ..operators.checkpoint import checkpoint_write, with_part_key
-from ..operators.linking import entity_surfaces, lsh_links
+from ..operators.linking import (
+    entity_surfaces,
+    lsh_links,
+    lsh_links_local,
+    surface_shingles,
+)
 from ..operators.ner import extract_mentions
 from ..operators.relations import extract_relations
+from ..operators.util import DRIVER_ROWS, local_table
+
+ENTITY_MAP_DDL = "e_label string, e_surface string, entity_id string"
 
 
 @dataclass
@@ -41,6 +69,43 @@ class KgResult:
     triples: DataFrame
     nodes: DataFrame
     edges: DataFrame
+
+
+def _linking_tail_local(surfaces: DataFrame, k: int, n_perms: int,
+                        bands: int):
+    """(nodes, entity map) of the pinned ``surfaces`` computed on the
+    driver, or None when there are more than ``DRIVER_ROWS`` of them or
+    of their LSH candidate pairs.
+
+    One bounded Arrow collect of ``surface_shingles``
+    (``limit(DRIVER_ROWS + 1)``), then the distributed tail's steps on
+    its values: ``lsh_links_local`` with ``lsh_links``' parameters,
+    ``union_find`` (entity_id = min sid of the component, whose surface
+    is the canonical one) and the ``nodes_table`` aggregation. Both
+    tables come back as ``local_table``s."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = surface_shingles(surfaces, k).limit(DRIVER_ROWS + 1).toArrow()
+    links = (lsh_links_local(tbl, n_perms, bands, DRIVER_ROWS)
+             if tbl.num_rows <= DRIVER_ROWS else None)
+    if links is None:
+        return None
+    comp = union_find(links)
+    sid = tbl.column("sid").combine_chunks()
+    eid = pa.array([comp.get(s, s) for s in sid.to_pylist()], pa.string())
+    ents = tbl.select(["sid", "label", "surface", "n_mentions"]).append_column(
+        "entity_id", eid).append_column(
+        "canonical", tbl.column("surface").take(pc.index_in(eid, sid)))
+    nodes = ents.group_by(["entity_id", "canonical", "label"]).aggregate(
+        [("n_mentions", "sum"), ("sid", "count")])
+    nodes = nodes.append_column("n_mentions", nodes["n_mentions_sum"]) \
+        .append_column("n_surfaces", nodes["sid_count"])
+    ent_map = pa.table({"e_label": ents["label"],
+                        "e_surface": ents["surface"], "entity_id": eid})
+    spark = surfaces.sparkSession
+    return (local_table(spark, nodes, NODES_DDL),
+            local_table(spark, ent_map, ENTITY_MAP_DDL))
 
 
 def build_kg(
@@ -76,6 +141,10 @@ def build_kg(
         triples = checkpoint_write(
             with_part_key(triples, "doc_id"), checkpoint_root, "triples"
         )
+    else:
+        # the triples write and the edge join both read the triples:
+        # pinned once, the relation self-join runs once
+        triples = triples.persist()
 
     # hot-key probe before the link-scoring shuffle (north rule: skewed
     # domains salted): if any surface key exceeds hot_key_threshold
@@ -97,24 +166,30 @@ def build_kg(
         )
         if probe.take(1):
             salt = cfg.salt_buckets
-    surfaces = entity_surfaces(mentions, salt_buckets=salt)
-    links = lsh_links(
-        surfaces,
-        k=cfg.shingle_k,
-        n_perms=cfg.minhash_perms,
-        bands=cfg.lsh_bands * 2,
-    )
-    entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
-    nodes = nodes_table(entities)
+    # pinned: read by the driver tail's bounded collect and, past the
+    # bound, again by the distributed tail's signature pass and entity
+    # join
+    surfaces = entity_surfaces(mentions, salt_buckets=salt).persist()
+    lsh = dict(k=cfg.shingle_k, n_perms=cfg.minhash_perms,
+               bands=cfg.lsh_bands * 2)
+    try:
+        tail = _linking_tail_local(surfaces, **lsh)
+        if tail is None:
+            links = lsh_links(surfaces, **lsh)
+            entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
+            tail = nodes_table(entities), entities.select(
+                F.col("label").alias("e_label"),
+                F.col("surface").alias("e_surface"),
+                "entity_id",
+            )
+    finally:
+        # both tails have materialized everything they read of it
+        # (localCheckpoints, local tables)
+        surfaces.unpersist()
+    nodes, ent_map = tail
 
     # entity map is distinct surfaces → broadcast against triples
-    ent_map = F.broadcast(
-        entities.select(
-            F.col("label").alias("e_label"),
-            F.col("surface").alias("e_surface"),
-            "entity_id",
-        )
-    )
+    ent_map = F.broadcast(ent_map)
     t = triples
     edges = (
         t.join(

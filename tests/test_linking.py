@@ -374,3 +374,38 @@ def test_minhash_signature_map_chunk_boundary_and_empty_rows(spark):
         hx.select("sid", F.explode("hx").alias("h")), ["sid"], 64, 5
     ).collect()}
     assert got == want and set(got) == set(sizes)
+
+
+def test_spark_round_matches_spark_round(spark):
+    """The driver tail's verify rounds like Spark's round(x, 6) —
+    HALF_UP on the shortest decimal string, so 1/128 = 0.0078125 goes
+    up where Python's round goes down — over every ratio i/j, j ≤ 300,
+    the Jaccard values the verify sees."""
+    from gliner_spark.operators.linking import _spark_round
+
+    ratios = sorted({i / j for j in range(1, 301) for i in range(j + 1)})
+    df = spark.createDataFrame([(x,) for x in ratios], "x double")
+    want = [r.r for r in df.select(F.round("x", 6).alias("r")).collect()]
+    assert [_spark_round(x, 6) for x in ratios] == want
+    assert _spark_round(1 / 128, 6) == 0.007813 != round(1 / 128, 6)
+
+
+def test_lsh_links_local_bounds_candidate_pairs(spark):
+    """The driver LSH gives up (None) past ``max_pairs`` candidate
+    pairs, so it never holds more: three same-label surfaces with the
+    one shingle set {"aaa"} are 3 candidates in every band — a bound of
+    3 links them all, a bound of 2 gives up."""
+    from gliner_spark.operators.linking import (
+        lsh_links_local,
+        surface_shingles,
+    )
+
+    surfaces = spark.createDataFrame(
+        [(f"car:{s}", "car", s, 1) for s in ("aaa", "aaaa", "aaaaa", "bmw")],
+        "sid string, label string, surface string, n_mentions bigint",
+    )
+    tbl = surface_shingles(surfaces, 3).toArrow()
+    assert sorted(lsh_links_local(tbl, 64, 32, 3)) == [
+        ("car:aaa", "car:aaaa"), ("car:aaa", "car:aaaaa"),
+        ("car:aaaa", "car:aaaaa")]
+    assert lsh_links_local(tbl, 64, 32, 2) is None

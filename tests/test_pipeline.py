@@ -916,3 +916,118 @@ def test_publish_atomic_hadoop_backend_parity(spark, tmp_path):
     # snapshot context manager on the hadoop route
     with published_snapshot(spark, had_root, backend="hadoop") as df:
         assert df.count() == 10
+
+
+def _shingles(s, k=3):
+    return {s[i:i + k] for i in range(max(len(s) - (k - 1), 1))}
+
+
+def _jaccard(a, b):
+    sa, sb = _shingles(a), _shingles(b)
+    return len(sa & sb) / len(sa | sb)
+
+
+# transitive chain: each neighbour pair is linked (J ≥ 0.3), the ends
+# are not — only the components step joins them
+_CHAIN = ["kyivstar", "kyivstat", "kyivsxat", "kyiwsxat"]
+# J = 3/10 exactly: 6 and 7 shingles, 3 shared
+_J30 = ("abcdefgh", "abcdexyzw")
+
+
+def _tail_surfaces(case, rng):
+    """(label, surface) rows of one parity case; the random vocabulary
+    mutates a few stems so that some surfaces link and some do not."""
+    if case == "chain":
+        return [("city", s) for s in _CHAIN] + [("country", "ukraine")]
+    if case == "shared_surface":
+        return [("city", "paris"), ("person", "paris"),
+                ("person", "parish"), ("country", "france")]
+    if case == "j_exactly_0.3":
+        return [("person", _J30[0]), ("person", _J30[1]),
+                ("city", "lviv")]
+    if case == "oversized_bucket":
+        # 2,001 surfaces with the one shingle set {"aaa"}: every band
+        # bucket holds all of them, over max_bucket, so none link
+        return [("car", "a" * n) for n in range(3, 2004)] + [
+            ("person", "musk"), ("person", "musky")]
+    stems = ["".join(rng.choice(list("abcdeklmno"), size=int(n)))
+             for n in rng.integers(3, 12, size=12)]
+    out = set()
+    for stem in stems:
+        lab = str(rng.choice(["person", "city", "country", "car"]))
+        for _ in range(int(rng.integers(1, 5))):
+            s = list(stem)
+            for _ in range(int(rng.integers(0, 3))):
+                s[int(rng.integers(0, len(s)))] = str(rng.choice(list("xyz")))
+            out.add((lab, "".join(s)))
+    return sorted(out)
+
+
+def _tail_mentions(case, seed):
+    """Mention rows whose surfaces are the case's vocabulary: each
+    surface is mentioned 2-4 times, in ten-byte steps inside 20-mention
+    documents, so the relation rules emit triples between them."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    surfaces = _tail_surfaces(case, rng)
+    seq = [s for s in surfaces for _ in range(int(rng.integers(2, 5)))]
+    rng.shuffle(seq)
+    return [(f"d{i // 20}", 10 * (i % 20), 10 * (i % 20) + len(text), text,
+             lab, round(float(rng.uniform(0.5, 1.0)), 4))
+            for i, (lab, text) in enumerate(seq)]
+
+
+@pytest.mark.parametrize("case,seed,salted", [
+    ("random", 1, False), ("random", 2, False), ("random", 3, False),
+    ("random", 4, True), ("chain", 0, False), ("shared_surface", 0, False),
+    ("j_exactly_0.3", 0, False), ("oversized_bucket", 0, False),
+])
+def test_build_kg_driver_tail_equals_distributed(spark, monkeypatch, case,
+                                                 seed, salted):
+    """build_kg's nodes and edges (schema and rows) are the same whether
+    its linking tail runs as one driver pass (default bound) or
+    distributed (bound 0): on random vocabularies, with the salted
+    surface aggregation, across a transitive chain, a surface shared by
+    two labels, a pair at exactly J = 3/10 and a band bucket over
+    max_bucket."""
+    from gliner_spark.config import PipelineConfig
+    from gliner_spark.plans import kg as kg_mod
+    from gliner_spark.schemas import MENTIONS
+
+    mentions = spark.createDataFrame(_tail_mentions(case, seed), MENTIONS)
+    monkeypatch.setattr(kg_mod, "extract_mentions",
+                        lambda pages, labels, **kw: mentions)
+    cfg = (PipelineConfig(salt_buckets=8, hot_key_threshold=2) if salted
+           else PipelineConfig())
+    got = {}
+    for bound in (kg_mod.DRIVER_ROWS, 0):
+        monkeypatch.setattr(kg_mod, "DRIVER_ROWS", bound)
+        kg = kg_mod.build_kg(None, ALL_LABELS, cfg=cfg)
+        local = "LocalTableScan" in kg.nodes._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert local == (bound > 0)  # each bound ran its own tail
+        got[bound] = (kg.nodes.schema.simpleString(),
+                      kg.edges.schema.simpleString(),
+                      sorted(map(tuple, kg.nodes.collect())),
+                      sorted(map(tuple, kg.edges.collect())))
+        kg.mentions.unpersist()
+        kg.triples.unpersist()
+    (*schemas, nodes, edges), (*schemas0, nodes0, edges0) = got.values()
+    assert schemas == schemas0  # one nodes schema: NODES_DDL
+    assert nodes == nodes0 and edges == edges0
+    assert edges
+    by_id = {n[0]: n for n in nodes}
+    if case == "chain":
+        assert _jaccard(_CHAIN[0], _CHAIN[-1]) < 0.3 <= min(
+            _jaccard(a, b) for a, b in zip(_CHAIN, _CHAIN[1:]))
+        assert by_id["city:kyivstar"][4] == len(_CHAIN)
+    elif case == "shared_surface":
+        assert {"city:paris", "person:paris"} <= set(by_id)
+    elif case == "j_exactly_0.3":
+        assert _jaccard(*_J30) == 0.3
+        assert by_id[f"person:{_J30[0]}"][4] == 2
+    elif case == "oversized_bucket":
+        assert sum(n[2] == "car" for n in nodes) == 2001
+    elif case == "random":
+        assert any(n[4] > 1 for n in nodes)  # some surfaces linked

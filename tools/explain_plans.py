@@ -7,6 +7,7 @@ whole-stage codegen coverage. Run:  python tools/explain_plans.py
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from gliner_spark.kernels.scorer import SOUP_LABELS  # noqa: E402
 from gliner_spark.operators.linking import (  # noqa: E402
+    _surface_signatures,
     entity_surfaces,
     lsh_links,
 )
@@ -98,14 +100,53 @@ def main() -> int:
         {"BroadcastHashJoin": True, "*(": True},
     )
 
-    # 4. linking LSH: JVM-only signature computation (no Python stage)
-    links = lsh_links(entity_surfaces(m))
-    p = executed_plan_of(links)
+    # 4. linking LSH: shingles and their hashes JVM-side, the MinHash in
+    # ONE row-local Arrow stage (mapInPandas, never a row-at-a-time
+    # Python UDF); the band join itself codegen'd. The surfaces are
+    # pinned so the NER stage's own mapInPandas is not counted.
+    surf = entity_surfaces(m).localCheckpoint()
+    p = executed_plan_of(_surface_signatures(surf, 3, 64, 7)).split(
+        "== Initial Plan ==")[0]
+    n_map = p.count("MapInPandas")
+    ok4 = n_map == 1
+    print(f"\n=== kg_links_lsh (numpy minhash stage) ===\n"
+          f"  [{'OK ' if ok4 else 'BAD'}] one MapInPandas -> {n_map}")
+    bad += not ok4
     bad += not check(
-        "kg_links_lsh (JVM-side minhash)",
+        "kg_links_lsh (no row-at-a-time Python)",
         p,
+        {"ArrowEvalPython": False, "BatchEvalPython": False},
+    )
+    bad += not check(
+        "kg_links_lsh (codegen band join)",
+        executed_plan_of(lsh_links(surf)),
         {"ArrowEvalPython": False, "BatchEvalPython": False, "*(": True},
     )
+
+    # 4b. build_kg below the driver-row bound: the linking tail is one
+    # driver pass, so the nodes are a LocalTableScan, and the edges
+    # broadcast-join the LocalTableScan entity map (once per side) with
+    # no band self-join anywhere in their plan
+    from gliner_spark.plans.kg import build_kg
+
+    kg = build_kg(docs, SOUP_LABELS, id_col="doc_id")
+    bad += not check(
+        "build_kg nodes (driver tail)",
+        plan_of(kg.nodes),
+        {"LocalTableScan": True, "Exchange": False, "MapInPandas": False},
+    )
+    p = kg.edges._jdf.queryExecution().executedPlan().toString()
+    n_map_joins = len(re.findall(
+        r"BroadcastExchange[^\n]*\n[\s:|]*\+- LocalTableScan \[e_label", p))
+    ok4b = n_map_joins == 2 and "band_" not in p
+    print(f"  [{'OK ' if ok4b else 'BAD'}] build_kg edges: {n_map_joins} "
+          f"broadcast LocalTableScan entity map(s), band join "
+          f"{'band_' in p}")
+    if not ok4b:
+        print(p)
+    bad += not ok4b
+    kg.mentions.unpersist()
+    kg.triples.unpersist()
 
     # 5. bpe token counting: pure Catalyst (regexp_extract_all inside
     # codegen — zero Python stage)
