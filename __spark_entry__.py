@@ -210,7 +210,10 @@ def q_dedup_minhash(spark, sf_dir):
     # with the same Jaccard formula, and the b=32/r=4 banding misses a
     # J=0.8 pair with prob (1-0.8^4)^32 ≈ 5e-8 (seeded dups sit at
     # J≈0.99 → ~1e-45) — equality asserted at both gate scales in
-    # tests/test_dedup_similarity.py::test_minhash_equals_exact_at_gate_scale
+    # tests/test_dedup_similarity.py::test_minhash_equals_exact_at_gate_scale;
+    # the banding argument also needs the skew guard to drop no bucket,
+    # asserted (dropped_buckets == 0) on this corpus in
+    # tests/test_dedup_similarity.py::test_dedup_band_audits_zero_at_gate_scale
     return minhash_dups(_documents(spark, sf_dir))
 
 

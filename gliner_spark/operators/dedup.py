@@ -6,18 +6,22 @@ seeds near-duplicate docs at word-shingle Jaccard ≈ 0.99):
 
 - exact:       md5 content hash groupBy (zero false positives)
 - fingerprint: bag-normalized hash (order/multiplicity-insensitive)
-- ngram:       exact word-k-gram Jaccard via shingle inverted-index join
+- ngram:       exact word-k-gram Jaccard via AllPairs prefix index
 - minhash:     MinHash-LSH blocked candidates + exact verification
 - simhash:     64-bit SimHash (pandas UDF) + banded Hamming join
 
 Scale notes: exact/fingerprint are one shuffle on a 16-byte key. The
-shingle join's bucket-size guard bounds quadratic blowup; at 100 TB the
+prefix index's bucket-size guard bounds quadratic blowup; at 100 TB the
 minhash path replaces the exact ngram join (signatures are fixed-width
 regardless of doc length, candidates ≈ true pairs for b/r tuned to the
-threshold). SimHash banding is an exact-match join on 8 byte-bands of
-the 64-bit signature (default ``band_bits=8``): by pigeonhole, a pair
-at Hamming ≤ 6 leaves at least 2 of the 8 bands identical, so the
-default ``max_hamming=6`` misses no pair the bucket guard keeps.
+threshold). minhash and simhash draw their candidates from the one
+guarded band self-join (``bands.band_pairs``: window-count skew guard,
+one shuffle of the banded rows) — MinHash bands keyed by exact
+signature slices, SimHash bands by 8-bit slices of the 64-bit signature
+(default ``band_bits=8``): by pigeonhole, a pair at Hamming ≤ 6 leaves
+at least 2 of the 8 bands identical, so the default ``max_hamming=6``
+misses no pair the bucket guard keeps. minhash and ngram share one
+exact-Jaccard verify (``_jaccard_verify``).
 """
 
 from __future__ import annotations
@@ -30,11 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .linking import (
-    _pair_counts,
-    hash_shingles,
-    minhash_signature_map,
-)
+from .bands import band_pairs, dropped_buckets, minhash_bands
+from .linking import _exact_jaccard, hash_shingles, minhash_signature_map
 from .util import ensure_parallelism
 
 
@@ -99,12 +100,36 @@ def word_shingles(text_col, k: int = 3):
     )
 
 
-def _prefix_index(
-    docs: DataFrame, k: int, threshold: float, id_col: str, text_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared by ngram_jaccard_dups and its dropped-bucket audit:
-    (shingle table with hash-ordered int arrays, exploded AllPairs
-    prefix index keyed by hashed shingle).
+def _doc_shingles(docs: DataFrame, k: int, id_col: str,
+                  text_col: str) -> DataFrame:
+    """(sid, sh, n_sh): each document's distinct word k-gram shingles —
+    the shingle table of ``ngram_jaccard_dups`` and ``minhash_dups``
+    and of their exact verify."""
+    return docs.select(
+        F.col(id_col).cast("long").alias("sid"),
+        word_shingles(F.col(text_col), k).alias("sh"),
+    ).withColumn("n_sh", F.size("sh"))
+
+
+def _jaccard_verify(cand: DataFrame, sh: DataFrame,
+                    threshold: float) -> DataFrame:
+    """(src, dst, sim): the (src, dst) candidates whose exact shingle
+    Jaccard over the ``_doc_shingles`` table ``sh`` reaches
+    ``threshold`` — each side's shingle array joined back by id."""
+    sh_a = sh.select(F.col("sid").alias("src"), F.col("sh").alias("sh_a"),
+                     F.col("n_sh").alias("n_a"))
+    sh_b = sh.select(F.col("sid").alias("dst"), F.col("sh").alias("sh_b"),
+                     F.col("n_sh").alias("n_b"))
+    return _exact_jaccard(cand.join(sh_a, "src").join(sh_b, "dst"),
+                          threshold)
+
+
+def _prefix_index(docs: DataFrame, k: int, id_col: str,
+                  text_col: str) -> DataFrame:
+    """The ``_doc_shingles`` table plus ``hx``, the shingles' xxhash64
+    values in ascending order — the AllPairs global order, shared by
+    ``ngram_jaccard_dups`` and its dropped-bucket audit together with
+    ``_prefix_rows``.
 
     The AllPairs global order is the xxhash64 VALUE order (r7): the
     filtering theorem needs any one total order on the shingle
@@ -113,16 +138,14 @@ def _prefix_index(
     order is total as long as no two distinct shingles collide under
     xxhash64 — the same corpus-wide zero-collision precondition the
     hashed-intersection prefilter already asserts at gate scale."""
-    sh = docs.select(
-        F.col(id_col).cast("long").alias("sid"),
-        word_shingles(F.col(text_col), k).alias("sh"),
-    ).select(
-        "sid", "sh",
-        F.array_sort(
-            F.transform(F.col("sh"), lambda x: F.xxhash64(x))
-        ).alias("hx"),
-        F.size("sh").alias("n_sh"),
+    return _doc_shingles(docs, k, id_col, text_col).withColumn(
+        "hx", F.array_sort(F.transform(F.col("sh"), lambda x: F.xxhash64(x)))
     )
+
+
+def _prefix_rows(sh: DataFrame, threshold: float) -> DataFrame:
+    """(sid, n_sh, hx, shingle): the exploded AllPairs prefix index of a
+    ``_prefix_index`` table, one row per (prefix shingle hash, doc)."""
     # ceil guard: 0.8*35 floats to 28.000000000000004 — the 1e-9 nudge
     # keeps integral products from ceiling one too high (which would
     # SHORTEN the prefix and break the no-miss guarantee)
@@ -131,11 +154,10 @@ def _prefix_index(
         - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
         + 1
     ).cast("int")
-    pref = sh.select(
-        "sid", "n_sh",
+    return sh.select(
+        "sid", "n_sh", "hx",
         F.explode(F.slice("hx", F.lit(1), p)).alias("shingle"),
     )
-    return sh, pref
 
 
 def ngram_prefix_dropped_buckets(
@@ -154,13 +176,8 @@ def ngram_prefix_dropped_buckets(
     co-occurring pairs are found only via their OTHER shared prefix
     shingles, if any. Monitor in production before trusting the
     prefix-filter theorem at a new scale."""
-    _, pref = _prefix_index(docs, k, threshold, id_col, text_col)
-    return (
-        pref.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .where(F.col("bn") > max_bucket)
-        .count()
-    )
+    pref = _prefix_rows(_prefix_index(docs, k, id_col, text_col), threshold)
+    return dropped_buckets(pref, ["shingle"], max_bucket)
 
 
 def _bucket_jaccard_candidates(
@@ -262,55 +279,18 @@ def ngram_jaccard_dups(
     only (≈ output-sized). Same candidate-superset + identical final
     verify expressions ⇒ identical output (asserted vs the full-index
     oracle and by the unchanged pytest equality sets)."""
-    docs = ensure_parallelism(docs)
     # materialized ONCE (localCheckpoint): the shingle arrays feed the
     # prefix/hash pass AND both sides of the final exact verify —
-    # without pinning, the scan+shingle subtree runs 3×. r7: the
-    # AllPairs global order is the xxhash64 VALUE order (sorting int64
-    # hashes instead of shingle strings — see _prefix_index; the
-    # filtering theorem holds under any one total order, and totality
-    # rests on the same corpus-wide zero-collision precondition the
-    # hashed-intersection prefilter already asserts at gate scale), so
-    # the string arrays stay UNSORTED (array_intersect in the exact
-    # verify is order-insensitive) and the prefix-index join key is an
-    # int instead of a shingle string.
-    sh = docs.select(
-        F.col(id_col).cast("long").alias("sid"),
-        word_shingles(F.col(text_col), k).alias("sh"),
-    ).select(
-        "sid", "sh",
-        F.array_sort(
-            F.transform(F.col("sh"), lambda x: F.xxhash64(x))
-        ).alias("hx"),
-        F.size("sh").alias("n_sh"),
+    # without pinning, the scan+shingle subtree runs 3×. The string
+    # arrays stay UNSORTED (array_intersect in the exact verify is
+    # order-insensitive); only the hash arrays carry the AllPairs order
+    sh = _prefix_index(
+        ensure_parallelism(docs), k, id_col, text_col
     ).localCheckpoint()
-    p = (
-        F.col("n_sh")
-        - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-        + 1
-    ).cast("int")
-    bucketed = sh.select(
-        "sid",
-        "n_sh",
-        "hx",
-        F.explode(F.slice("hx", F.lit(1), p)).alias("shingle"),
-    )
     cand = _bucket_jaccard_candidates(
-        bucketed, threshold, max_bucket
+        _prefix_rows(sh, threshold), threshold, max_bucket
     ).dropDuplicates(["src", "dst"])
-    sh_a = sh.select(F.col("sid").alias("src"), F.col("sh").alias("sh_a"),
-                     F.col("n_sh").alias("n_a"))
-    sh_b = sh.select(F.col("sid").alias("dst"), F.col("sh").alias("sh_b"),
-                     F.col("n_sh").alias("n_b"))
-    verified = cand.join(sh_a, "src").join(sh_b, "dst")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    return verified.select(
-        "src",
-        "dst",
-        F.round(
-            inter / (F.col("n_a") + F.col("n_b") - inter), 6
-        ).alias("sim"),
-    ).where(F.col("sim") >= threshold)
+    return _jaccard_verify(cand, sh, threshold)
 
 
 def paragraph_dedup(
@@ -495,75 +475,36 @@ def minhash_dups(
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, exact-verified. Scale path for
     ``ngram_jaccard_dups`` (b=32, r=4 → ~50% collision at J=0.8 per
-    band set; ≥1-of-32 collision prob ≈ 1 for J ≥ 0.8)."""
-    assert n_perms % bands == 0
-    rows = n_perms // bands
-    docs = ensure_parallelism(docs)
+    band set; ≥1-of-32 collision prob ≈ 1 for J ≥ 0.8). Candidates come
+    from the shared guarded band self-join (``bands.band_pairs``) on
+    exact signature slices; ``dropped_buckets`` over
+    ``_minhash_bands`` audits its guard."""
     # materialized ONCE (guide §2.4): the shingle table feeds the
-    # signature aggregation AND both sides of the final exact verify;
-    # the signature table feeds the band explode, the bucket guard and
-    # both sides of the band join. Without pinning, the r6 plan scanned
-    # documents.parquet SIX times and ran the full shingle → explode →
-    # 128-min aggregation three times (plans/r07/dedup_minhash_before:
-    # 6 Scan parquet nodes) — measured as the bulk of dedup_minhash.
-    sh = docs.select(
-        F.col(id_col).cast("long").alias("sid"),
-        word_shingles(F.col(text_col), k).alias("sh"),
-    ).select("sid", "sh", F.size("sh").alias("n_sh")).localCheckpoint()
-    hashed = sh.select(
-        "sid", hash_shingles(F.col("sh")).alias("hx")
-    )
-    # row-local numpy signature stage (guide §4.2) — same values as the
-    # old explode + 128-min aggregation (shared perm_params), no
-    # explode and no aggregation shuffle
-    sig = minhash_signature_map(hashed, n_perms, seed).localCheckpoint()
-    # band keys only — the candidate join must not drag the shingle
-    # arrays through its shuffle (they rejoin below, candidate set ≪ docs)
-    banded = sig.select(
-        "sid",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(F.slice(F.col("sig"), i * rows + 1, rows)),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
-    bucket = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .where((F.col("bn") > 1) & (F.col("bn") <= max_bucket))
-        .select("band_idx", "band_hash")
-    )
-    pruned = banded.join(bucket, ["band_idx", "band_hash"])
-    a = pruned.alias("a")
-    b = pruned.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.sid") < F.col("b.sid")),
-        )
-        .select(F.col("a.sid").alias("src"), F.col("b.sid").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    sh_a = sh.select(
-        F.col("sid").alias("src"),
-        F.col("sh").alias("sh_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    sh_b = sh.select(
-        F.col("sid").alias("dst"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    verified = cand.join(sh_a, "src").join(sh_b, "dst")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    return verified.select(
-        "src",
-        "dst",
-        F.round(inter / (F.col("n_a") + F.col("n_b") - inter), 6).alias("sim"),
-    ).where(F.col("sim") >= threshold)
+    # signature stage AND both sides of the final exact verify
+    sh = _doc_shingles(
+        ensure_parallelism(docs), k, id_col, text_col
+    ).localCheckpoint()
+    banded, keys = _minhash_bands(sh, n_perms, bands, seed)
+    cand = band_pairs(
+        banded, keys, max_bucket, F.col("a.sid") < F.col("b.sid"),
+    ).select(F.col("a.sid").alias("src"), F.col("b.sid").alias("dst"))
+    return _jaccard_verify(cand.dropDuplicates(["src", "dst"]), sh,
+                           threshold)
+
+
+def _minhash_bands(sh: DataFrame, n_perms: int, bands: int,
+                   seed: int) -> tuple[DataFrame, tuple[str, ...]]:
+    """(sid, band_idx, band_key…) and its bucket keys: the banded
+    signature table ``minhash_dups`` joins, of a ``_doc_shingles``
+    table. Band keys only — the candidate join must not drag the
+    shingle arrays through its shuffle (they rejoin in the verify,
+    candidate set ≪ docs)."""
+    # row-local numpy signature stage (guide §4.2): no explode and no
+    # aggregation shuffle
+    hashed = sh.select("sid", hash_shingles(F.col("sh")).alias("hx"))
+    banded, keys = minhash_bands(n_perms, bands)
+    return minhash_signature_map(hashed, n_perms, seed).select(
+        "sid", banded), keys
 
 
 _SIMHASH_SCHEMA = T.StructType(
@@ -725,43 +666,7 @@ def simhash_dups(
     the right lever is band_bits=16 (fewer, selective buckets), not a
     faster scorer.
     """
-    # materialized ONCE (guide §2.4): the signature table feeds the band
-    # explode, whose three consumers (bucket guard, join sides a and b)
-    # otherwise each re-ran the scan + token-hash + vote mapInPandas —
-    # the r6 plan carried three MapInPandas nodes over four parquet
-    # scans (plans/r07/dedup_simhash_before) for one Python stage's
-    # worth of work. The checkpoint holds (doc_id, simhash) ints only.
-    sig = simhash_signatures(
-        docs, id_col, text_col, hash_family
-    ).localCheckpoint()
-    # band_bits=8 → 8 bands: a pair with Hamming ≤ 6 always leaves ≥ 2
-    # of 8 bytes identical; at web scale prefer band_bits=16 (4 bands,
-    # exact up to max_hamming=3) — byte-bands collide too often on
-    # 10^12 docs. The bucket guard bounds quadratic blowup either way.
-    n_bands = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    bands = sig.select(
-        F.col("doc_id"),
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), i * band_bits)
-                    .bitwiseAND(F.lit(mask))
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    bucket = (
-        bands.groupBy("band_idx", "band_val")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .where((F.col("bn") > 1) & (F.col("bn") <= max_bucket))
-        .select("band_idx", "band_val")
-    )
-    bands = bands.join(bucket, ["band_idx", "band_val"])
-    a = bands.alias("a")
-    b = bands.alias("b")
+    sig = simhash_signatures(docs, id_col, text_col, hash_family)
     ham = F.bit_count(
         F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     )
@@ -770,15 +675,33 @@ def simhash_dups(
     # the dropDuplicates shuffle — on convergent-signature corpora the
     # raw bucket-pair volume is orders of magnitude above the surviving
     # set, so filtering pre-shuffle is the scale win
-    cand = a.join(
-        b,
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (ham <= max_hamming),
+    return band_pairs(
+        *_simhash_bands(sig, band_bits), max_bucket,
+        (F.col("a.doc_id") < F.col("b.doc_id")) & (ham <= max_hamming),
     ).select(
         F.col("a.doc_id").alias("src"),
         F.col("b.doc_id").alias("dst"),
         ham.alias("hamming"),
-    )
-    return cand.dropDuplicates(["src", "dst"])
+    ).dropDuplicates(["src", "dst"])
+
+
+def _simhash_bands(sig: DataFrame,
+                   band_bits: int) -> tuple[DataFrame, tuple[str, ...]]:
+    """(doc_id, simhash, band_idx, band_key) and its bucket keys: the
+    banded table ``simhash_dups`` joins — each 64-bit signature cut
+    into 64 / ``band_bits`` bands, keyed by the band's bits.
+
+    band_bits=8 → 8 bands: a pair with Hamming ≤ 6 always leaves ≥ 2
+    of 8 bytes identical; at web scale prefer band_bits=16 (4 bands,
+    exact up to max_hamming=3) — byte-bands collide too often on
+    10^12 docs. The bucket guard bounds quadratic blowup either way."""
+    mask = (1 << band_bits) - 1
+    return sig.select(
+        "doc_id",
+        "simhash",
+        F.posexplode(F.array(*[
+            F.shiftrightunsigned(F.col("simhash"), i * band_bits)
+            .bitwiseAND(F.lit(mask))
+            for i in range(64 // band_bits)
+        ])).alias("band_idx", "band_key"),
+    ), ("band_idx", "band_key")

@@ -13,8 +13,9 @@ cosine scoring over span embeddings"). Two interchangeable paths:
    Jaccard verification on candidates only. The 100 TB path: shingles
    and their hashes stay JVM-side (``xxhash64``, codegen'd), the
    permutation mins run in one row-local numpy Arrow stage
-   (``minhash_signature_map``), and candidate generation is a single
-   equi-join on (label, band_idx, band_key). ``lsh_links_local`` is the
+   (``minhash_signature_map``), and candidate generation is the shared
+   guarded band self-join (``bands.band_pairs``) on (label, band_idx,
+   band_key…), keyed by exact signature slices. ``lsh_links_local`` is the
    same computation on the driver over a collected surface table —
    ``build_kg`` runs it below ``util.DRIVER_ROWS`` surfaces and
    candidate pairs.
@@ -23,7 +24,8 @@ Skew: surfaces are distinct strings, so the shingle join's hot keys are
 common shingles (e.g. "the"). ``max_bucket`` drops shingle buckets larger
 than a cutoff (standard prefix-filter trick: a shingle shared by
 thousands of surfaces carries ~no signal and would produce a quadratic
-bucket). LSH band buckets are bounded the same way.
+bucket). LSH band buckets are bounded the same way, by the window-count
+guard of ``bands.band_pairs``; ``lsh_dropped_buckets`` audits it.
 """
 
 from __future__ import annotations
@@ -32,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .bands import band_pairs, dropped_buckets, minhash_bands
 
 # deterministic MinHash permutation modulus: Mersenne prime 2^31-1, small
 # enough that (a*x + b) stays under 2^62 — Spark 4 runs ANSI mode, where
@@ -179,25 +183,6 @@ def perm_params(n_perms: int, seed: int = MINHASH_SEED):
     ]
 
 
-def minhash_signature_agg(hashed_exploded: DataFrame, id_cols, n_perms: int,
-                          seed: int = MINHASH_SEED):
-    """Signature via explode + map-side-combined min aggregation —
-    ~2× faster than nested array transforms at 128 perms (the partial
-    agg computes the mins before the shuffle; only id→128 mins move).
-    Input: rows (id…, h); output: (id…, sig array<long>)."""
-    perms = perm_params(n_perms, seed)
-    mins = [
-        F.min(
-            F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(MERSENNE))
-        ).alias(f"_m{i}")
-        for i, (a, b) in enumerate(perms)
-    ]
-    agg = hashed_exploded.groupBy(*id_cols).agg(*mins)
-    return agg.select(
-        *id_cols, F.array(*[F.col(f"_m{i}") for i in range(n_perms)]).alias("sig")
-    )
-
-
 def minhash_kernel(flat: np.ndarray, lens: np.ndarray, n_perms: int,
                    seed: int = MINHASH_SEED) -> np.ndarray:
     """(len(lens), n_perms) int64 MinHash signatures of ``len(lens)``
@@ -214,10 +199,11 @@ def minhash_kernel(flat: np.ndarray, lens: np.ndarray, n_perms: int,
     51k shingles; ~2× on the whole kernel). Chunks are run-aligned, so
     peak memory is ~CHUNK × n_perms × 8 B whatever the input size.
 
-    Value-identical to ``minhash_signature_agg`` by construction:
-    shared ``perm_params``; h ∈ [0, M) and a, b < M = 2³¹−1 keep
+    Each signature entry is min over the run of (a·h + b) mod M with
+    the shared ``perm_params``: h ∈ [0, M) and a, b < M = 2³¹−1 keep
     a·h + b < 2⁶² + 2³¹ inside int64, and numpy ``%`` on non-negatives
-    equals Spark ``pmod`` (pinned in tests)."""
+    equals Spark ``pmod`` — pinned in tests against the explode +
+    min-aggregation reference kept there."""
     perms = perm_params(n_perms, seed)
     pa = np.array([p[0] for p in perms], dtype=np.int64)[:, None]
     pb = np.array([p[1] for p in perms], dtype=np.int64)[:, None]
@@ -244,12 +230,12 @@ def minhash_signature_map(hashed: DataFrame, n_perms: int,
     """``hashed`` with its ``hx array<long>`` column of pre-hashed
     shingles (``hash_shingles``) replaced by ``sig array<long>``, the
     MinHash signature: one row-local Arrow stage running
-    ``minhash_kernel`` over each batch (guide §4.2), in place of the
-    explode + n_perms-min aggregation of ``minhash_signature_agg``
-    (measured ~4× on the 50k-doc signature pass; zero shuffle instead
-    of one). Every other input column is carried through, so ``(id,
-    hx)`` rows give ``(id, sig)``. Rows with NULL or empty hash arrays
-    are dropped — exactly what ``explode`` did in the agg form."""
+    ``minhash_kernel`` over each batch (guide §4.2), in place of an
+    explode + n_perms-min aggregation (measured ~4× on the 50k-doc
+    signature pass; zero shuffle instead of one — the aggregation form
+    stays in tests as the reference). Every other input column is
+    carried through, so ``(id, hx)`` rows give ``(id, sig)``. Rows
+    with NULL or empty hash arrays are dropped, as an explode would."""
     out = T.StructType(
         [f for f in hashed.schema.fields if f.name != "hx"]
         + [T.StructField("sig", T.ArrayType(T.LongType()))]
@@ -291,35 +277,18 @@ def _surface_signatures(surfaces: DataFrame, k: int, n_perms: int,
 
 def _banded_signatures(
     surfaces: DataFrame, k: int, n_perms: int, bands: int, seed: int
-) -> DataFrame:
-    """(sid, label, n_sh, sh, band_idx, band_key): the banded MinHash
-    signature table ``lsh_links`` joins on — shared with
-    ``lsh_dropped_buckets`` so the recall audit sees the exact same
-    band keys. A band key is the signature slice itself
-    (``array<bigint>``), not a hash of it: no hash collision makes a
-    false candidate, and the driver tail (``lsh_links_local``) keys on
-    the same slices."""
-    assert n_perms % bands == 0
-    rows = n_perms // bands
-    # materialized ONCE (guide §2.4): the signature table is consumed by
-    # the bucket-guard aggregation and the pruned join side in lsh_links
-    # (and once in lsh_dropped_buckets) — each reference otherwise
-    # re-runs the surfaces aggregation over the full mentions table plus
-    # the shingles and the MinHash stage. The table is
-    # surface-universe-sized (vocabulary-bounded).
-    sig = _surface_signatures(surfaces, k, n_perms, seed).localCheckpoint()
-    return sig.select(
-        "sid",
-        "label",
-        "n_sh",
-        "sh",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.slice(F.col("sig"), i * rows + 1, rows),
-            )
-        ).alias("band_idx", "band_key"),
-    )
+) -> tuple[DataFrame, tuple[str, ...]]:
+    """(sid, label, n_sh, sh, band_idx, band_key…) and its bucket keys:
+    the banded MinHash signature table ``lsh_links`` joins on — shared
+    with ``lsh_dropped_buckets`` so the recall audit sees the exact
+    same band buckets. A bucket lies within one label; band keys are
+    exact signature slices (``bands.minhash_bands``), the keys the
+    driver tail (``lsh_links_local``) uses too. Not pinned: its one
+    consumer is the band-key exchange of ``band_pairs``, which both
+    join sides reuse."""
+    banded, keys = minhash_bands(n_perms, bands)
+    return (_surface_signatures(surfaces, k, n_perms, seed).select(
+        "sid", "label", "n_sh", "sh", banded), ("label", *keys))
 
 
 def lsh_dropped_buckets(
@@ -331,7 +300,8 @@ def lsh_dropped_buckets(
     seed: int = MINHASH_SEED,
 ) -> int:
     """Number of band buckets ``lsh_links`` (same parameters) would DROP
-    under its skew guard. The banding miss-probability argument
+    under its skew guard (``bands.dropped_buckets`` on its banded
+    table). The banding miss-probability argument
     — (1-J)^bands at r=1 — silently assumes no true pair ever sits in a
     truncated bucket; this audit makes the assumption checkable: a
     recall-1.0 claim (e.g. q_kg_links_lsh's exact-oracle sharing) is
@@ -339,13 +309,20 @@ def lsh_dropped_buckets(
     key is a single minhash value, so mega-buckets get likelier as the
     corpus grows — monitor this counter in production jobs before
     trusting banding math alone."""
-    banded = _banded_signatures(surfaces, k, n_perms, bands, seed)
-    return (
-        banded.groupBy("label", "band_idx", "band_key")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .where(F.col("bn") > max_bucket)
-        .count()
-    )
+    banded, keys = _banded_signatures(surfaces, k, n_perms, bands, seed)
+    return dropped_buckets(banded, keys, max_bucket)
+
+
+def _exact_jaccard(cand: DataFrame, threshold: float) -> DataFrame:
+    """(src, dst, sim) of candidate rows (src, dst, sh_a, n_a, sh_b,
+    n_b) whose exact shingle Jaccard, rounded to 6 places, reaches
+    ``threshold`` — the verify of every shingle-set pair operator."""
+    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    return cand.select(
+        "src",
+        "dst",
+        F.round(inter / (F.col("n_a") + F.col("n_b") - inter), 6).alias("sim"),
+    ).where(F.col("sim") >= threshold)
 
 
 def lsh_links(
@@ -360,47 +337,23 @@ def lsh_links(
     """MinHash-LSH candidate generation + exact-Jaccard verification.
 
     bands×rows = n_perms; a pair collides if any band's row-slice of the
-    signature matches. Candidates then verified exactly, so the output is
-    a (possibly incomplete, tunably-high-recall) subset of
-    ``exact_jaccard_links`` — recall measured in tests/bench.
+    signature matches (``bands.band_pairs`` within each label). Candidates
+    then verified exactly, so the output is a (possibly incomplete,
+    tunably-high-recall) subset of ``exact_jaccard_links`` — recall
+    measured in tests/bench.
     """
-    banded = _banded_signatures(surfaces, k, n_perms, bands, seed)
-    # bound pathological band buckets (skew guard)
-    bucket = (
-        banded.groupBy("label", "band_idx", "band_key")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .where((F.col("bn") > 1) & (F.col("bn") <= max_bucket))
-        .select("label", "band_idx", "band_key")
+    banded, keys = _banded_signatures(surfaces, k, n_perms, bands, seed)
+    cand = band_pairs(
+        banded, keys, max_bucket, F.col("a.sid") < F.col("b.sid"),
+    ).select(
+        F.col("a.sid").alias("src"),
+        F.col("b.sid").alias("dst"),
+        F.col("a.sh").alias("sh_a"),
+        F.col("a.n_sh").alias("n_a"),
+        F.col("b.sh").alias("sh_b"),
+        F.col("b.n_sh").alias("n_b"),
     )
-    pruned = banded.join(bucket, ["label", "band_idx", "band_key"])
-    a = pruned.alias("a")
-    b = pruned.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.sid") < F.col("b.sid")),
-        )
-        .select(
-            F.col("a.sid").alias("src"),
-            F.col("b.sid").alias("dst"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.sh").alias("sh_b"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    return cand.select(
-        "src",
-        "dst",
-        F.round(
-            inter / (F.col("n_a") + F.col("n_b") - inter), 6
-        ).alias("sim"),
-    ).where(F.col("sim") >= threshold)
+    return _exact_jaccard(cand.dropDuplicates(["src", "dst"]), threshold)
 
 
 def _spark_round(x: float, scale: int) -> float:

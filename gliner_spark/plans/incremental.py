@@ -27,13 +27,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.canonicalize import canonical_entities, nodes_table
+from ..operators.bands import band_pairs, minhash_bands
 from ..operators.checkpoint import checkpoint_write, with_part_key
-from ..operators.linking import entity_surfaces, lsh_links
+from ..operators.linking import entity_surfaces
 from ..operators.ner import extract_mentions
 from ..operators.relations import extract_relations
 from ..operators.util import DRIVER_ROWS
-from .kg import KgResult
+from .kg import KgResult, _nodes_and_edges
 
 
 def _batch_fingerprint(
@@ -67,7 +67,6 @@ def merge_kg_batch(
     cfg: PipelineConfig = PipelineConfig(),
     id_col: str = "url",
     text_col: str = "text",
-    link_fn=None,
     batch_id: str | int | None = None,
 ) -> KgResult:
     """Score ONLY ``new_pages``, append their mentions/triples under
@@ -86,10 +85,11 @@ def merge_kg_batch(
     make a replay of the same batch a no-op while distinct batches
     never collide.
 
-    ``link_fn`` picks the linking path; the default is the SAME
-    lsh_links configuration plans/kg.build_kg uses, so incremental
-    merging is bit-equivalent to a from-scratch build (pytest-pinned);
-    pass ``exact_jaccard_links`` for the oracle-exact path."""
+    Nodes and edges come from the linking tail ``build_kg`` runs
+    (``kg._nodes_and_edges``: the driver pass below
+    ``util.DRIVER_ROWS``, the distributed LSH plan past it), so
+    incremental merging is bit-equivalent to a from-scratch build
+    (pytest-pinned)."""
     spark = new_pages.sparkSession
 
     fp = (
@@ -135,45 +135,7 @@ def merge_kg_batch(
 
     # global closure over the merged (vocabulary-bounded) surface set:
     # new surfaces may bridge previously separate components
-    surfaces = entity_surfaces(mentions)
-    if link_fn is None:
-        links = lsh_links(
-            surfaces, k=cfg.shingle_k, n_perms=cfg.minhash_perms,
-            bands=cfg.lsh_bands * 2,
-        )
-    else:
-        links = link_fn(surfaces)
-    entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
-    nodes = nodes_table(entities)
-
-    ent_map = F.broadcast(
-        entities.select(
-            F.col("label").alias("e_label"),
-            F.col("surface").alias("e_surface"),
-            "entity_id",
-        )
-    )
-    t = triples
-    edges = (
-        t.join(
-            ent_map,
-            (F.lower(t.subj) == F.col("e_surface"))
-            & (t.subj_label == F.col("e_label")),
-        )
-        .withColumnRenamed("entity_id", "src_entity")
-        .drop("e_label", "e_surface")
-        .join(
-            ent_map,
-            (F.lower(t.obj) == F.col("e_surface"))
-            & (t.obj_label == F.col("e_label")),
-        )
-        .withColumnRenamed("entity_id", "dst_entity")
-        .groupBy("src_entity", "dst_entity", "pred")
-        .agg(
-            F.count(F.lit(1)).alias("support"),
-            F.round(F.sum("prob"), 4).alias("weight"),
-        )
-    )
+    nodes, edges = _nodes_and_edges(entity_surfaces(mentions), triples, cfg)
     return KgResult(mentions, triples, nodes, edges)
 
 
@@ -187,8 +149,9 @@ def batch_minhash_signatures(
 ) -> DataFrame:
     """(doc_id, sig array<long>): the fixed-width MinHash signature of
     each document — the only state ``dedup_admit_batch`` ever persists
-    per admitted doc. Band keys are DERIVED from the signature, so the
-    store needs no shingles, no text, no band columns."""
+    per admitted doc. Band keys are DERIVED from the signature (its
+    exact slices, ``bands.minhash_bands``), so the store needs no
+    shingles, no text, no band columns."""
     from ..operators.dedup import word_shingles
     from ..operators.linking import hash_shingles, minhash_signature_map
     from ..operators.util import ensure_parallelism
@@ -196,8 +159,8 @@ def batch_minhash_signatures(
     # row-local form (guide §4.2): shingle-hash arrays stay JVM-side
     # (xxhash64 + pmod, codegen), the 128-permutation min runs as ONE
     # vectorized Arrow stage — no explode, no aggregation shuffle.
-    # Value-identical to the old explode + minhash_signature_agg plan
-    # (shared perm_params; equality pinned in tests).
+    # Value-identical to the explode + min-aggregation form kept in
+    # tests as the reference (shared perm_params; equality pinned).
     hashed = ensure_parallelism(docs).select(
         F.col(id_col).cast("long").alias("doc_id"),
         hash_shingles(word_shingles(F.col(text_col), k)).alias("hx"),
@@ -206,20 +169,6 @@ def batch_minhash_signatures(
 
 
 STORE_DDL = "doc_id long, sig array<bigint>"
-
-
-def _band_keys(sig_df: DataFrame, bands: int, rows: int) -> DataFrame:
-    """(doc_id, new, band_idx, band_hash) of tagged signature rows."""
-    return sig_df.select(
-        "doc_id",
-        "new",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(F.slice(F.col("sig"), i * rows + 1, rows)),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
 
 
 def _verified_pairs(
@@ -232,38 +181,19 @@ def _verified_pairs(
 ) -> DataFrame:
     """(src, dst, dst_new): steps 2-3 of ``dedup_admit_batch`` — the
     batch docs ``src`` whose signature Ĵ-matches a stored doc or a
-    larger batch doc ``dst`` (``dst_new`` tags which), from ONE band
-    self-join over the tagged store ∪ batch band keys and one verify.
-    New-vs-old rows are reduced to each ``src``'s smallest match."""
-    from pyspark.sql import Window
-
-    rows = n_perms // bands
-    assert bands * rows == n_perms
-
+    larger batch doc ``dst`` (``dst_new`` tags which), from ONE guarded
+    band self-join (``bands.band_pairs``) over the tagged store ∪ batch
+    band keys and one verify. New-vs-old rows are reduced to each
+    ``src``'s smallest match."""
     tagged = sig_new.withColumn("new", F.lit(True)).unionByName(
         sig_old.withColumn("new", F.lit(False))
     )
-
-    # skew guard as a window count: the band-key exchange it needs is
-    # the one the self-join below needs too, so guard + join cost one
-    # shuffle of (id, band, tag) ints
-    guarded = (
-        _band_keys(tagged, bands, rows)
-        .withColumn("bn", F.count(F.lit(1)).over(
-            Window.partitionBy("band_idx", "band_hash")))
-        .where(F.col("bn") <= max_bucket)
-    )
-    # merge hint: both sides already sit in the window's band-key
-    # partitions and sort order, so the sort-merge join needs no new
-    # exchange; an adaptive switch to a broadcast join would add one
-    a, b = guarded.alias("a").hint("merge"), guarded.alias("b")
+    banded, keys = minhash_bands(n_perms, bands)
     # a.doc_id != b.doc_id keeps a RETRIED batch sane: a doc already
     # admitted under its own id must not read as "duplicate of itself"
-    cand = a.join(
-        b,
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & F.col("a.new")
+    cand = band_pairs(
+        tagged.select("doc_id", "new", banded), keys, max_bucket,
+        F.col("a.new")
         & (F.col("a.doc_id") != F.col("b.doc_id"))
         & (~F.col("b.new") | (F.col("a.doc_id") < F.col("b.doc_id"))),
     ).select(
@@ -335,10 +265,10 @@ def dedup_admit_batch(
     2. tag the band keys of store ∪ batch as old/new and run ONE
        guarded band self-join over them: a pair (a, b) is a candidate
        when a is new, a ≠ b, and b is old or a < b — new-vs-old and
-       new-vs-new in the same join, whose shuffle moves (id, band,
-       tag) ints, never documents. The skew guard drops band buckets
-       holding more than ``max_bucket`` rows of store and batch
-       together;
+       new-vs-new in the same join, whose shuffle moves (id, tag,
+       band index, packed signature slice) rows of primitive columns,
+       never documents. The skew guard drops band buckets holding
+       more than ``max_bucket`` rows of store and batch together;
     3. verify every candidate ONCE with the signature-overlap
        estimator Ĵ = |matching positions| / n_perms, looking the
        b side's signature up by (tag, id). The corpus text is

@@ -29,7 +29,9 @@ to ``util.DRIVER_ROWS`` distinct surfaces and as many LSH candidate
 pairs that tail is one driver pass (``lsh_links_local`` +
 ``union_find``) on the same JVM-computed shingles and hashes, with the
 same output as the distributed tail; past either bound the
-distributed plan runs (measurements: docs/SCALE.md). Checkpointing
+distributed plan runs (measurements: docs/SCALE.md). The tail —
+surfaces → nodes + edges — is ``_nodes_and_edges``, shared with
+``incremental.merge_kg_batch``. Checkpointing
 wraps each materialized stage (mentions, triples, nodes, edges) with
 per-partition manifests for resume.
 """
@@ -108,6 +110,62 @@ def _linking_tail_local(surfaces: DataFrame, k: int, n_perms: int,
             local_table(spark, ent_map, ENTITY_MAP_DDL))
 
 
+def _nodes_and_edges(surfaces: DataFrame, triples: DataFrame,
+                     cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges) of the distinct ``surfaces`` and the ``triples``:
+    the linking tail ``build_kg`` and ``incremental.merge_kg_batch``
+    share. Up to ``DRIVER_ROWS`` surfaces and candidate pairs it is the
+    driver pass (``_linking_tail_local``), past either bound the
+    distributed ``lsh_links`` → ``canonical_entities`` plan; the edges
+    join the triples to the entity map either way."""
+    # pinned: read by the driver tail's bounded collect and, past the
+    # bound, again by the distributed tail's signature pass and entity
+    # join
+    surfaces = surfaces.persist()
+    lsh = dict(k=cfg.shingle_k, n_perms=cfg.minhash_perms,
+               bands=cfg.lsh_bands * 2)
+    try:
+        tail = _linking_tail_local(surfaces, **lsh)
+        if tail is None:
+            links = lsh_links(surfaces, **lsh)
+            entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
+            tail = nodes_table(entities), entities.select(
+                F.col("label").alias("e_label"),
+                F.col("surface").alias("e_surface"),
+                "entity_id",
+            )
+    finally:
+        # both tails have materialized everything they read of it
+        # (localCheckpoints, local tables)
+        surfaces.unpersist()
+    nodes, ent_map = tail
+
+    # entity map is distinct surfaces → broadcast against triples
+    ent_map = F.broadcast(ent_map)
+    t = triples
+    edges = (
+        t.join(
+            ent_map,
+            (F.lower(t.subj) == F.col("e_surface"))
+            & (t.subj_label == F.col("e_label")),
+        )
+        .withColumnRenamed("entity_id", "src_entity")
+        .drop("e_label", "e_surface")
+        .join(
+            ent_map,
+            (F.lower(t.obj) == F.col("e_surface"))
+            & (t.obj_label == F.col("e_label")),
+        )
+        .withColumnRenamed("entity_id", "dst_entity")
+        .groupBy("src_entity", "dst_entity", "pred")
+        .agg(
+            F.count(F.lit(1)).alias("support"),
+            F.round(F.sum("prob"), 4).alias("weight"),
+        )
+    )
+    return nodes, edges
+
+
 def build_kg(
     pages: DataFrame,
     labels: Sequence[str],
@@ -166,51 +224,8 @@ def build_kg(
         )
         if probe.take(1):
             salt = cfg.salt_buckets
-    # pinned: read by the driver tail's bounded collect and, past the
-    # bound, again by the distributed tail's signature pass and entity
-    # join
-    surfaces = entity_surfaces(mentions, salt_buckets=salt).persist()
-    lsh = dict(k=cfg.shingle_k, n_perms=cfg.minhash_perms,
-               bands=cfg.lsh_bands * 2)
-    try:
-        tail = _linking_tail_local(surfaces, **lsh)
-        if tail is None:
-            links = lsh_links(surfaces, **lsh)
-            entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
-            tail = nodes_table(entities), entities.select(
-                F.col("label").alias("e_label"),
-                F.col("surface").alias("e_surface"),
-                "entity_id",
-            )
-    finally:
-        # both tails have materialized everything they read of it
-        # (localCheckpoints, local tables)
-        surfaces.unpersist()
-    nodes, ent_map = tail
-
-    # entity map is distinct surfaces → broadcast against triples
-    ent_map = F.broadcast(ent_map)
-    t = triples
-    edges = (
-        t.join(
-            ent_map,
-            (F.lower(t.subj) == F.col("e_surface"))
-            & (t.subj_label == F.col("e_label")),
-        )
-        .withColumnRenamed("entity_id", "src_entity")
-        .drop("e_label", "e_surface")
-        .join(
-            ent_map,
-            (F.lower(t.obj) == F.col("e_surface"))
-            & (t.obj_label == F.col("e_label")),
-        )
-        .withColumnRenamed("entity_id", "dst_entity")
-        .groupBy("src_entity", "dst_entity", "pred")
-        .agg(
-            F.count(F.lit(1)).alias("support"),
-            F.round(F.sum("prob"), 4).alias("weight"),
-        )
-    )
+    nodes, edges = _nodes_and_edges(
+        entity_surfaces(mentions, salt_buckets=salt), triples, cfg)
 
     if checkpoint_root:
         nodes = checkpoint_write(

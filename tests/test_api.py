@@ -186,3 +186,16 @@ def test_from_pretrained_real_onnx_export_dir(tmp_path, spark):
         ("a", 0, 4, "Kyiv", "city", 0.9),
         ("a", 23, 30, "Ukraine", "country", 0.9),
     ]
+
+
+def test_session_page_size_follows_heap(spark):
+    """The unsafe page is heap / 8192 as a power of two, clamped to
+    64 KiB–64 MiB, and the built session carries it."""
+    from gliner_spark.session import _page_size
+
+    assert [_page_size(m) for m in ("2g", "8G", "16gb", "4096", "512m",
+                                    "100m", "1t")] == [
+        "256k", "1024k", "2048k", "512k", "64k", "64k", "65536k"]
+    mem = spark.sparkContext.getConf().get("spark.driver.memory")
+    assert (spark.sparkContext.getConf().get("spark.buffer.pageSize")
+            == _page_size(mem))

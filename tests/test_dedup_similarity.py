@@ -564,3 +564,282 @@ def test_paragraph_dedup_newline_mode(spark):
     assert out[2] == ("body two", 1, 2)   # both boiler copies dropped
     assert out[3] == ("", 0, 1)           # empty but present
     assert out[4] == ("fresh four", 1, 1)  # "body two" first seen in 2
+
+
+# --- the shared guarded band self-join (operators/bands.band_pairs) ---
+
+BAND_MAX = 3  # max_bucket under test: buckets of 3 join, of 4 drop
+
+
+def _words(tag, n=40):
+    return " ".join(f"{tag}{i}" for i in range(n))
+
+
+# A: a bucket of exactly BAND_MAX identical docs (every band shared);
+# B: BAND_MAX + 1 identical docs (every bucket dropped); C/C2: a near
+# pair (one word edited: J = 35/41, shares some bands, not all); E: alone
+_TA, _TB, _TE = _words("a"), _words("b"), _words("e")
+_TC = _words("c")
+_TC2 = _TC.replace("c20", "x20")
+DOC_RECS = [(1, _TA), (2, _TA), (3, _TA), (11, _TB), (12, _TB), (13, _TB),
+            (14, _TB), (21, _TC), (22, _TC2), (31, _TE)]
+# admission: (id, text, new). A: store 1 + batch 2, 3 (bucket of 3);
+# B: store 11 + batch 12-14 (bucket of 4); D: id 40 both stored and in
+# the batch again (a retry) plus batch 41
+_TD = _words("d")
+ADMIT_RECS = [(1, _TA, False), (11, _TB, False), (40, _TD, False),
+              (2, _TA, True), (3, _TA, True), (12, _TB, True),
+              (13, _TB, True), (14, _TB, True), (40, _TD, True),
+              (41, _TD, True), (21, _TC, True), (22, _TC2, True)]
+# lsh_links: (label, surface). x:abab… share one char-3-gram set
+# {aba, bab} (a bucket of 3 in every band), x:cdcd… share {cdc, dcd}
+# (a bucket of 4); y:abab has x:abab's band keys under another label
+LSH_RECS = [("x", "abab"), ("x", "ababa"), ("x", "ababab"),
+            ("x", "cdcd"), ("x", "cdcdc"), ("x", "cdcdcd"), ("x", "cdcdcdc"),
+            ("y", "abab"), ("z", "new york"), ("z", "new york city")]
+
+
+def _ref_band_pairs(recs, keys, pred, verify):
+    """Brute force over every ordered pair of records (index i, j):
+    ``pred`` holds and the two meet in some band whose bucket —
+    (part, band, key) over ALL records — has at most BAND_MAX rows;
+    ``verify`` maps the pair to an output row or None. Returns (rows,
+    number of buckets over BAND_MAX)."""
+    from collections import Counter
+
+    size = Counter((p, n, k) for (p, ks) in keys for n, k in enumerate(ks))
+    out = set()
+    for i in range(len(recs)):
+        for j in range(len(recs)):
+            (pa, ka), (pb, kb) = keys[i], keys[j]
+            if i == j or pa != pb or not pred(i, j):
+                continue
+            if any(x == y and size[(pa, n, x)] <= BAND_MAX
+                   for n, (x, y) in enumerate(zip(ka, kb))):
+                row = verify(i, j)
+                if row is not None:
+                    out.add(row)
+    return out, sum(1 for v in size.values() if v > BAND_MAX)
+
+
+def _slices(sig, bands):
+    r = len(sig) // bands
+    return [tuple(sig[n * r:(n + 1) * r]) for n in range(bands)]
+
+
+def _case_lsh_links(spark):
+    from gliner_spark.operators.linking import (
+        _spark_round,
+        _surface_signatures,
+        lsh_dropped_buckets,
+        lsh_links,
+    )
+
+    surfaces = spark.createDataFrame(
+        [(f"{lab}:{s}", lab, s, 1) for lab, s in LSH_RECS],
+        "sid string, label string, surface string, n_mentions long")
+    rows = {r.sid: r for r in
+            _surface_signatures(surfaces, 3, 64, 7).collect()}
+    recs = [rows[f"{lab}:{s}"] for lab, s in LSH_RECS]
+    keys = [(r.label, _slices(list(r.sig), 32)) for r in recs]
+
+    def verify(i, j):
+        a, b = set(recs[i].sh), set(recs[j].sh)
+        sim = _spark_round(len(a & b) / len(a | b), 6)
+        return (recs[i].sid, recs[j].sid, sim) if sim >= 0.30 else None
+
+    want, want_dropped = _ref_band_pairs(
+        recs, keys, lambda i, j: recs[i].sid < recs[j].sid, verify)
+    got = [tuple(r) for r in lsh_links(surfaces, max_bucket=BAND_MAX)
+           .collect()]
+    got_dropped = lsh_dropped_buckets(surfaces, max_bucket=BAND_MAX)
+    kept = {("x:abab", "x:ababa"), ("x:abab", "x:ababab"),
+            ("x:ababa", "x:ababab")}
+    dropped = {(f"x:{a}", f"x:{b}") for a in ("cdcd", "cdcdc", "cdcdcd")
+               for b in ("cdcdc", "cdcdcd", "cdcdcdc") if a < b}
+    pairs = {(s, d) for s, d, _ in got}
+    # an equal band key under two labels never pairs
+    assert all(s.split(":")[0] == d.split(":")[0] for s, d in pairs)
+    return got, want, got_dropped, want_dropped, kept, dropped
+
+
+def _doc_rows(spark):
+    return spark.createDataFrame(DOC_RECS, "doc_id long, text string")
+
+
+def _case_minhash_dups(spark):
+    from gliner_spark.operators.bands import dropped_buckets
+    from gliner_spark.operators.dedup import (
+        _doc_shingles,
+        _minhash_bands,
+        minhash_dups,
+    )
+    from gliner_spark.plans.incremental import batch_minhash_signatures
+
+    docs = _doc_rows(spark)
+    sig = {r.doc_id: list(r.sig)
+           for r in batch_minhash_signatures(docs).collect()}
+    sh = {r.sid: set(r.sh) for r in
+          _doc_shingles(docs, 3, "doc_id", "text").collect()}
+    ids = [i for i, _ in DOC_RECS]
+    keys = [(0, _slices(sig[i], 32)) for i in ids]
+
+    def verify(i, j):
+        a, b = sh[ids[i]], sh[ids[j]]
+        sim = round(len(a & b) / len(a | b), 6)
+        return (ids[i], ids[j], sim) if sim >= 0.8 else None
+
+    want, want_dropped = _ref_band_pairs(
+        ids, keys, lambda i, j: ids[i] < ids[j], verify)
+    got = [tuple(r) for r in minhash_dups(docs, max_bucket=BAND_MAX)
+           .collect()]
+    got_dropped = dropped_buckets(
+        *_minhash_bands(_doc_shingles(docs, 3, "doc_id", "text"), 128, 32,
+                        11), BAND_MAX)
+    return (got, want, got_dropped, want_dropped,
+            {(1, 2), (1, 3), (2, 3)}, {(11, 12), (12, 13), (13, 14)})
+
+
+def _case_simhash_dups(spark):
+    from gliner_spark.operators.bands import dropped_buckets
+    from gliner_spark.operators.dedup import (
+        _simhash_bands,
+        simhash_dups,
+        simhash_signatures,
+    )
+
+    docs = _doc_rows(spark)
+    sim = {r.doc_id: r.simhash for r in simhash_signatures(docs).collect()}
+    ids = [i for i, _ in DOC_RECS]
+    keys = [(0, [(sim[i] >> (8 * n)) & 0xFF for n in range(8)])
+            for i in ids]
+
+    def ham(i, j):
+        return bin((sim[ids[i]] ^ sim[ids[j]]) & (2**64 - 1)).count("1")
+
+    want, want_dropped = _ref_band_pairs(
+        ids, keys, lambda i, j: ids[i] < ids[j] and ham(i, j) <= 6,
+        lambda i, j: (ids[i], ids[j], ham(i, j)))
+    got = [tuple(r) for r in simhash_dups(docs, max_bucket=BAND_MAX)
+           .collect()]
+    got_dropped = dropped_buckets(
+        *_simhash_bands(simhash_signatures(docs), 8), BAND_MAX)
+    return (got, want, got_dropped, want_dropped,
+            {(1, 2), (1, 3), (2, 3)}, {(11, 12), (12, 13), (13, 14)})
+
+
+def _case_admission(spark):
+    from pyspark.sql import functions as F
+
+    from gliner_spark.operators.bands import dropped_buckets, minhash_bands
+    from gliner_spark.plans.incremental import (
+        _verified_pairs,
+        batch_minhash_signatures,
+    )
+
+    def sigs(new):
+        return batch_minhash_signatures(spark.createDataFrame(
+            [(i, t) for i, t, n in ADMIT_RECS if n == new],
+            "doc_id long, text string"))
+
+    sig_new, sig_old = sigs(True), sigs(False)
+    sig = {(r.doc_id, new): list(r.sig)
+           for new, df in ((True, sig_new), (False, sig_old))
+           for r in df.collect()}
+    recs = [(i, n) for i, _, n in ADMIT_RECS]
+    keys = [(0, _slices(sig[r], 32)) for r in recs]
+
+    def pred(i, j):
+        (a, an), (b, bn) = recs[i], recs[j]
+        return an and a != b and (not bn or a < b)
+
+    def verify(i, j):
+        x, y = sig[recs[i]], sig[recs[j]]
+        jhat = round(sum(p == q for p, q in zip(x, y)) / 128, 6)
+        return (recs[i][0], recs[j][0], recs[j][1]) if jhat >= 0.8 else None
+
+    pairs, want_dropped = _ref_band_pairs(recs, keys, pred, verify)
+    # new-vs-old reduced to each doc's smallest admitted match
+    best = {}
+    for s, d, _ in (p for p in pairs if not p[2]):
+        best[s] = min(d, best.get(s, d))
+    want = {p for p in pairs if p[2]} | {(s, d, False)
+                                         for s, d in best.items()}
+    got = [tuple(r) for r in _verified_pairs(
+        sig_new, sig_old, 32, 128, 0.8, BAND_MAX).collect()]
+    tagged = sig_new.withColumn("new", F.lit(True)).unionByName(
+        sig_old.withColumn("new", F.lit(False)))
+    banded, keys = minhash_bands(128, 32)
+    got_dropped = dropped_buckets(
+        tagged.select("doc_id", "new", banded), keys, BAND_MAX)
+    # a retried id (40 stored and in the batch) never pairs with itself
+    assert all(s != d for s, d, _ in got)
+    return (got, want, got_dropped, want_dropped,
+            {(2, 1), (3, 1), (41, 40), (40, 41)},
+            {(12, 11), (13, 11), (14, 11), (12, 13), (40, 40)})
+
+
+@pytest.mark.parametrize("case", [_case_lsh_links, _case_minhash_dups,
+                                  _case_simhash_dups, _case_admission],
+                         ids=["lsh_links", "minhash_dups", "simhash_dups",
+                              "admission"])
+def test_band_pairs_callers_match_bruteforce(spark, case):
+    """Every caller of the shared guarded band self-join against a
+    brute-force reference of its own predicate and verify, on inputs
+    built so that one bucket holds exactly ``max_bucket`` rows (kept)
+    and one ``max_bucket + 1`` (dropped, and counted by the audit);
+    pairs meeting in many bands come back once."""
+    got, want, got_dropped, want_dropped, kept, dropped = case(spark)
+    assert len(got) == len(set(got))  # several shared bands: one row
+    assert set(got) == want
+    pairs = {(r[0], r[1]) for r in got}
+    assert kept <= pairs and not (dropped & pairs)
+    assert got_dropped == want_dropped >= 8
+
+
+def test_dedup_band_audits_zero_at_gate_scale(spark):
+    """The guards of minhash_dups and simhash_dups drop no bucket on the
+    gate corpus: q_dedup_minhash shares the exact dedup_ngram oracle,
+    and that sharing holds only while this audit reads 0 (as
+    lsh_dropped_buckets does for kg_links_lsh)."""
+    from gliner_spark.operators.bands import dropped_buckets
+    from gliner_spark.operators.dedup import (
+        _doc_shingles,
+        _minhash_bands,
+        _simhash_bands,
+        simhash_signatures,
+    )
+
+    gate = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    assert dropped_buckets(
+        *_minhash_bands(_doc_shingles(gate, 3, "doc_id", "text"), 128, 32,
+                        11), 2000) == 0
+    for family in ("xxhash64", "md5_60"):
+        assert dropped_buckets(
+            *_simhash_bands(simhash_signatures(gate, hash_family=family), 8),
+            10_000) == 0
+
+
+def test_minhash_band_keys_are_exact_slices(spark):
+    """The packed MinHash band keys decode back to the exact signature
+    slice — even and odd rows per band, values at the top of the 31-bit
+    range — so two records share a bucket iff their slices are equal."""
+    from gliner_spark.operators.bands import minhash_bands
+
+    top, mask = (1 << 31) - 2, (1 << 31) - 1
+    sigs = [[top, 0, 1, top, 5, 6], [0, top, 1, top, 5, 6],
+            [top, 0, 1, top, 5, 7]]
+    df = spark.createDataFrame(list(enumerate(sigs)),
+                               "doc_id long, sig array<bigint>")
+    for bands, rows in ((3, 2), (2, 3), (1, 6)):
+        banded, keys = minhash_bands(6, bands)
+        got = {}
+        for r in df.select("doc_id", banded).collect():
+            vals = []
+            for j, name in enumerate(keys[1:]):
+                # a pair of values per key; an odd slice ends in one
+                vals += ([r[name] >> 31, r[name] & mask]
+                         if 2 * j + 1 < rows else [r[name]])
+            got[r.doc_id, r.band_idx] = tuple(vals)
+        assert got == {(d, n): tuple(s[n * rows:(n + 1) * rows])
+                       for d, s in enumerate(sigs) for n in range(bands)}

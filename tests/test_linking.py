@@ -287,6 +287,27 @@ def test_lsh_cosine_links_on_mentions(spark):
     ) in pairs
 
 
+def minhash_signature_agg(hashed_exploded, id_cols, n_perms: int,
+                          seed: int):
+    """Reference MinHash: explode + map-side-combined min aggregation,
+    one ``min((a·h + b) mod M)`` per permutation of ``perm_params``.
+    Input: rows (id…, h); output: (id…, sig array<long>)."""
+    from gliner_spark.operators.linking import MERSENNE, perm_params
+
+    perms = perm_params(n_perms, seed)
+    mins = [
+        F.min(
+            F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(MERSENNE))
+        ).alias(f"_m{i}")
+        for i, (a, b) in enumerate(perms)
+    ]
+    agg = hashed_exploded.groupBy(*id_cols).agg(*mins)
+    return agg.select(
+        *id_cols,
+        F.array(*[F.col(f"_m{i}") for i in range(n_perms)]).alias("sig"),
+    )
+
+
 def test_minhash_signature_map_equals_agg(spark):
     """The row-local numpy signature stage must be value-identical to
     the explode + n_perms-min aggregation it replaced (shared
@@ -297,7 +318,6 @@ def test_minhash_signature_map_equals_agg(spark):
     from gliner_spark.operators.dedup import word_shingles
     from gliner_spark.operators.linking import (
         hash_shingles,
-        minhash_signature_agg,
         minhash_signature_map,
     )
 
@@ -357,7 +377,6 @@ def test_minhash_signature_map_chunk_boundary_and_empty_rows(spark):
 
     from gliner_spark.operators.linking import (
         MERSENNE,
-        minhash_signature_agg,
         minhash_signature_map,
     )
     from gliner_spark.operators.util import local_table

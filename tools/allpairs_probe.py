@@ -33,6 +33,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from gliner_spark.operators.dedup import (  # noqa: E402
     _prefix_index,
+    _prefix_rows,
     ngram_jaccard_dups,
     ngram_prefix_dropped_buckets,
     word_shingles,
@@ -71,7 +72,7 @@ def main() -> None:
         "doc_id", F.explode(word_shingles(F.col("text"), K)).alias("shingle")
     )
     vol_full = _pair_volume(full_idx, ["shingle"])
-    _, pref = _prefix_index(docs, K, T, "doc_id", "text")
+    pref = _prefix_rows(_prefix_index(docs, K, "doc_id", "text"), T)
     vol_prefix = _pair_volume(pref, ["shingle"])
 
     dropped = ngram_prefix_dropped_buckets(

@@ -58,6 +58,23 @@ def check(name: str, plan: str, expects: dict[str, bool]):
     return ok
 
 
+def band_join_check(name: str, plan: str) -> bool:
+    """The shared guarded band self-join (operators/bands.band_pairs):
+    exactly ONE join on the band keys, its skew guard a window count
+    (the join's own exchange), and no guard aggregation on the band
+    keys joined back."""
+    n_joins = len(re.findall(r"Join \[[^\]]*band_idx", plan))
+    n_guard_aggs = len(re.findall(r"HashAggregate\(keys=\[[^\]]*band_idx",
+                                  plan))
+    window = "Window [count(1)" in plan
+    ok = n_joins == 1 and n_guard_aggs == 0 and window
+    print(f"  [{'OK ' if ok else 'BAD'}] {name}: {n_joins} band join(s), "
+          f"{n_guard_aggs} band-key aggregation(s), window guard {window}")
+    if not ok:
+        print(plan)
+    return ok
+
+
 def main() -> int:
     spark = build_session(cores=8)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -117,11 +134,22 @@ def main() -> int:
         p,
         {"ArrowEvalPython": False, "BatchEvalPython": False},
     )
+    p = executed_plan_of(lsh_links(surf)).split("== Initial Plan ==")[0]
     bad += not check(
         "kg_links_lsh (codegen band join)",
-        executed_plan_of(lsh_links(surf)),
+        p,
         {"ArrowEvalPython": False, "BatchEvalPython": False, "*(": True},
     )
+    bad += not band_join_check("kg_links_lsh", p)
+
+    # 4a. the dedup band joins run through the same guarded self-join
+    from gliner_spark.operators.dedup import minhash_dups, simhash_dups
+
+    print("\n=== dedup band joins (one guarded band self-join) ===")
+    for name, df in (("dedup_minhash", minhash_dups(docs)),
+                     ("dedup_simhash", simhash_dups(docs))):
+        bad += not band_join_check(
+            name, executed_plan_of(df).split("== Initial Plan ==")[0])
 
     # 4b. build_kg below the driver-row bound: the linking tail is one
     # driver pass, so the nodes are a LocalTableScan, and the edges
@@ -249,13 +277,10 @@ def main() -> int:
                 read_parquet_or_empty(spark, adm_store, STORE_DDL),
                 32, 128, 0.8, 2000,
             )).split("== Initial Plan ==")[0]
-            n_band_joins = p.count("Join [band_idx")
-            ok = n_band_joins == 1 and "ExistingRDD" not in p
+            bad += not band_join_check(f"admission pairs, {when}", p)
+            ok = "ExistingRDD" not in p
             print(f"  [{'OK ' if ok else 'BAD'}] admission pairs, {when}: "
-                  f"{n_band_joins} band join(s), ExistingRDD scan "
-                  f"{'ExistingRDD' in p}")
-            if not ok:
-                print(p)
+                  f"ExistingRDD scan {not ok}")
             bad += not ok
             dedup_admit_batch(batch, adm_store)
         store_cols = spark.read.parquet(adm_store).columns

@@ -19,6 +19,11 @@ document, ~10^6 documents — and measures, per variant:
 - an order-insensitive output hash proving the two plans compute the
   IDENTICAL (doc_id, text_clean, n_kept, n_dropped) result.
 
+Each variant is measured twice, in the order window, groupby, groupby,
+window, and reported by its faster run (min-of-2), so neither variant
+gets all of the JVM warm-up; a variant with no attributed shuffle
+stage fails the probe instead of reporting an empty stage record.
+
 Variants (both consume the same persisted (doc_id, idx, para) table,
 so generation/explode cost is outside the comparison; both run under
 the production session config, AQE + skew split ON):
@@ -172,8 +177,7 @@ def main() -> None:
         # most SKEWED (largest max/median — where the hot key shows;
         # the window's single-task hot sort lives here even when the
         # uniform reassembly stage owns the absolute max)
-        heavy = {"max_task_ms": 0.0}
-        skewed = {"skew": 0.0}
+        heavy = skewed = None
         all_stages = []
         for st, info in sorted(stages.items()):
             if st in before or not info.get("shuffleReadBytes", 0):
@@ -190,10 +194,13 @@ def main() -> None:
                 "skew": round(m / max(md, 1.0), 2),
             }
             all_stages.append(rec)
-            if m > heavy["max_task_ms"]:
+            if heavy is None or m > heavy["max_task_ms"]:
                 heavy = rec
-            if rec["skew"] > skewed["skew"]:
+            if skewed is None or rec["skew"] > skewed["skew"]:
                 skewed = rec
+        # a variant with no attributed shuffle stage is a broken
+        # measurement (stages missed by the REST poll), not a result
+        assert all_stages, f"{name}: no shuffle-reading stage attributed"
         h = out_hash(make_df())
         time.sleep(0.2)
         return {
@@ -205,8 +212,14 @@ def main() -> None:
             "out_hash": h,
         }
 
-    results = [measure("window", window_plan),
-               measure("groupby", groupby_plan)]
+    # each variant runs twice, in the order window, groupby, groupby,
+    # window, so JVM warm-up and cache effects fall on both alike; each
+    # reports its faster run (min-of-2)
+    plans = {"window": window_plan, "groupby": groupby_plan}
+    runs = [measure(n, plans[n])
+            for n in ("window", "groupby", "groupby", "window")]
+    results = [min((r for r in runs if r["name"] == n),
+                   key=lambda r: r["wall_s"]) for n in plans]
     hashes = {tuple(r["out_hash"]) for r in results}
     report = {
         "probe": "paragraph_hotkey",
