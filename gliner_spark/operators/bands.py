@@ -22,13 +22,19 @@ A hot bucket is counted inside one task before it is dropped
 (docs/SCALE.md). ``dropped_buckets`` is the audit of the guard: an
 operator's recall claim holds only while it returns 0 on the banded
 table the operator joins.
+
+``band_pairs_local`` is the driver twin of ``band_pairs`` over numpy
+key arrays, with the same bucket and the same guard: the driver passes
+below ``util.DRIVER_ROWS`` (``linking.lsh_links_local``, admission's
+``incremental._admit_local``) pair their rows through it.
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from typing import Sequence
+from typing import Iterable, Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -91,3 +97,47 @@ def dropped_buckets(banded: DataFrame, keys: Sequence[str],
         .where(F.col("bn") > max_bucket)
         .count()
     )
+
+
+def band_pairs_local(band_keys: Iterable[np.ndarray], max_bucket: int,
+                     max_pairs: int, right: np.ndarray | None = None):
+    """``band_pairs`` on the driver: the distinct row-position pairs
+    (i, j), i < j, that meet in a bucket of at most ``max_bucket`` rows
+    in any band — as two arrays in (i, j) order — or None once there
+    are more than ``max_pairs`` of them, so the driver never holds
+    more. ``band_keys`` yields one (rows × key width) integer array per
+    band; rows with equal keys share its bucket. A pair is emitted only
+    when its later row j is ``right`` (all rows when None): a caller
+    ordering its rows so that j is the side its predicate needs builds
+    no pair it would throw away."""
+    cand = None
+    for key in band_keys:
+        n = len(key)
+        # sorted by key, then position: a bucket's members in row order
+        o = np.lexsort((np.arange(n), *key.T[::-1]))
+        key = key[o]
+        first = np.ones(n, bool)
+        first[1:] = (key[1:] != key[:-1]).any(axis=1)
+        grp = np.cumsum(first) - 1
+        start = np.flatnonzero(first)[grp]
+        size = np.bincount(grp)[grp]
+        ok = (size > 1) & (size <= max_bucket)
+        if right is not None:
+            ok &= right[o]
+        # each j pairs with the bucket members before it; two rows share
+        # at most one bucket of a band, so the band's pairs are
+        # distinct, counted before they are built
+        j = np.flatnonzero(ok)
+        before = j - start[j]
+        if before.sum() > max_pairs:
+            return None
+        jj = np.repeat(j, before)
+        ii = np.repeat(start[j], before) + np.arange(len(jj)) - np.repeat(
+            np.cumsum(before) - before, before)
+        codes = o[ii] * n + o[jj]
+        cand = codes if cand is None else np.union1d(cand, codes)
+        if len(cand) > max_pairs:
+            return None
+    if cand is None:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    return np.divmod(np.unique(cand), max(n, 1))

@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from .bands import band_pairs, dropped_buckets, minhash_bands
 from .linking import _exact_jaccard, hash_shingles, minhash_signature_map
-from .util import ensure_parallelism
+from .util import drop_zip_importers, ensure_parallelism
 
 
 def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id",
@@ -213,6 +213,7 @@ def _bucket_jaccard_candidates(
                           "dst": np.empty(0, dtype=np.int64)})
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         m = len(pdf)
         if m < 2 or m > max_bucket:
             return empty
@@ -598,6 +599,7 @@ def simhash_signatures(
     )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             sig = simhash_vote_batch(
                 [np.asarray(a, dtype=np.int64) for a in pdf["hs"]]

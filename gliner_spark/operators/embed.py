@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 
 from .linking import char_shingles, entity_surfaces  # noqa: F401 (re-export)
 from .similarity import cosine_expr
-from .util import ensure_parallelism
+from .util import drop_zip_importers, ensure_parallelism
 
 EMBED_SCHEMA = T.StructType(
     [
@@ -111,6 +111,7 @@ def embed_surfaces(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             mat = embed_texts(pdf["text"].tolist(), dim, k)
             yield pd.DataFrame(

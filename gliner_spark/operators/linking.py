@@ -35,7 +35,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .bands import band_pairs, dropped_buckets, minhash_bands
+from .bands import (
+    band_pairs,
+    band_pairs_local,
+    dropped_buckets,
+    minhash_bands,
+)
+from .util import drop_zip_importers
 
 # deterministic MinHash permutation modulus: Mersenne prime 2^31-1, small
 # enough that (a*x + b) stays under 2^62 — Spark 4 runs ANSI mode, where
@@ -242,6 +248,7 @@ def minhash_signature_map(hashed: DataFrame, n_perms: int,
     )
 
     def run(batches):
+        drop_zip_importers()
         for pdf in batches:
             keep = np.fromiter((x is not None and len(x) > 0
                                 for x in pdf["hx"]), bool, len(pdf))
@@ -369,17 +376,6 @@ def _spark_round(x: float, scale: int) -> float:
                                            ROUND_HALF_UP))
 
 
-def _bucket_pairs(grp: np.ndarray):
-    """(i, j) position pairs, i < j, of every two entries of the
-    sorted group-id array ``grp`` that share a group."""
-    idx = np.arange(len(grp))
-    after = np.searchsorted(grp, grp, "right") - idx - 1  # later mates
-    left = np.repeat(idx, after)
-    right = left + 1 + np.arange(len(left)) - np.repeat(
-        np.cumsum(after) - after, after)
-    return left, right
-
-
 def lsh_links_local(tbl, n_perms: int, bands: int, max_pairs: int):
     """``lsh_links`` on the driver: the (src, dst) pairs it would emit
     with the same ``n_perms`` and ``bands`` and its default threshold,
@@ -402,34 +398,18 @@ def lsh_links_local(tbl, n_perms: int, bands: int, max_pairs: int):
     # makes position order the a.sid < b.sid test
     tbl = tbl.take(pc.sort_indices(tbl.column("sid")))
     sid = tbl.column("sid").to_pylist()
-    n = len(sid)
     hx = tbl.column("hx").combine_chunks()
     sig = minhash_kernel(pc.list_flatten(hx).to_numpy(),
                          pc.list_value_length(hx).to_numpy().astype(np.int64),
                          n_perms, MINHASH_SEED)
     label = (tbl.column("label").combine_chunks().dictionary_encode()
              .indices.to_numpy().astype(np.int64))
-    cand = np.empty(0, np.int64)
-    for b in range(bands):
-        key = np.column_stack([label, sig[:, b * rows:(b + 1) * rows]])
-        # sorted by key, then position: a bucket's members in sid order
-        o = np.lexsort((np.arange(n), *key.T[::-1]))
-        key = key[o]
-        new = np.ones(n, bool)
-        new[1:] = (key[1:] != key[:-1]).any(axis=1)
-        grp = np.cumsum(new)
-        size = np.bincount(grp)[grp]
-        ok = (size > 1) & (size <= LSH_MAX_BUCKET)
-        # two surfaces share at most one bucket of a band: the band's
-        # pairs are distinct candidates, counted before they are built
-        if (size[ok] - 1).sum() // 2 > max_pairs:
-            return None
-        i, j = _bucket_pairs(grp[ok])
-        member = o[ok]
-        cand = np.union1d(cand, member[i] * n + member[j])
-        if len(cand) > max_pairs:
-            return None
-    src, dst = np.divmod(cand, max(n, 1))
+    pairs = band_pairs_local(
+        (np.column_stack([label, sig[:, b * rows:(b + 1) * rows]])
+         for b in range(bands)), LSH_MAX_BUCKET, max_pairs)
+    if pairs is None:
+        return None
+    src, dst = pairs
     need = np.unique(np.concatenate([src, dst]))
     sets = dict(zip(need.tolist(),
                     map(set, tbl.column("sh").take(need).to_pylist())))

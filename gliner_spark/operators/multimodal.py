@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .util import ensure_parallelism
+from .util import drop_zip_importers, ensure_parallelism
 
 MEDIA_KINDS = ["image", "audio", "video"]
 
@@ -137,6 +137,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     raw byte moments. All-integer output ⇒ bit-exact SQL oracle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             rows = []
             for doc_id, kind, blob in zip(
@@ -195,6 +196,7 @@ def media_embeddings(media: DataFrame, dim: int = 16) -> DataFrame:
     """Arrow-batched fixed-width embedding per blob (see _hash_embed)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             feats = [_hash_embed(b, dim).tolist() for b in pdf["media"]]
             yield pd.DataFrame(

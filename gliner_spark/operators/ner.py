@@ -36,7 +36,7 @@ from ..kernels.decode import Span
 from ..kernels.pipeline import ner_documents
 from ..kernels.scorer import make_scorer
 from ..schemas import MENTIONS
-from .util import ensure_parallelism
+from .util import drop_zip_importers, ensure_parallelism
 
 # (doc_ids, per-document selected spans) → one Arrow batch's output rows
 Emitter = Callable[[List[str], List[List[Span]]], List[tuple]]
@@ -83,6 +83,7 @@ def _ner_stage(
         src = src.sortWithinPartitions(F.length("text"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         scorer = factory()  # once per task; sessions cache per process
         for pdf in batches:
             spans_batch = ner_documents(

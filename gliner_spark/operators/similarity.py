@@ -25,7 +25,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import local_table
+from .util import drop_zip_importers, local_table
 
 
 def _as_double(col):
@@ -119,6 +119,7 @@ def _bucket_keys_udf(dim: int, n_bits: int, n_tables: int, seed: int):
 
     @pandas_udf("array<int>")
     def keys(v: pd.Series) -> pd.Series:
+        drop_zip_importers()
         if not len(v):
             return pd.Series([], dtype=object)
         x = np.stack([np.asarray(e, dtype=np.float64) for e in v])
@@ -222,6 +223,7 @@ def _ivf_assign(corpus: DataFrame, centroids: np.ndarray,
     )
 
     def assign(batches):
+        drop_zip_importers()
         for pdf in batches:
             if not len(pdf):
                 yield pdf.assign(cell=pd.Series([], dtype="int32"))
@@ -394,6 +396,7 @@ def _bucket_pair_candidates(
     cut = threshold - margin
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         ids = pdf["nid"].to_numpy(dtype=np.int64)
         order = np.argsort(ids)
         ids = ids[order]

@@ -2,14 +2,17 @@
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+import sys
+import zipimport
+
 from pyspark.sql import DataFrame, SparkSession
 
 # rows a plan may hold on the driver in place of distributed work: the
 # bound of every size-adaptive driver path (the KG linking tail's
-# surfaces and LSH candidate pairs, connected components, admission
-# verdicts). Each collect is a ``limit(DRIVER_ROWS + 1)``, so an
-# oversized input is detected without materializing it on the driver.
+# surfaces and LSH candidate pairs, connected components, admission's
+# store ∪ batch signatures and verdicts). Each path probes its size
+# with a ``limit(DRIVER_ROWS + 1)``, so an oversized input is detected
+# without materializing it on the driver.
 DRIVER_ROWS = 1_000_000
 
 
@@ -57,14 +60,43 @@ def read_parquet_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame
     """The parquet table at ``path`` read with schema ``ddl``, or an
     empty table of that schema when ``path`` does not exist.
 
-    Only a missing path reads as empty: any other failure (permissions,
-    a truncated or corrupt file) raises, at once or when the rows are
-    read. Reading an unreadable table as empty would pass for "nothing
-    stored yet". The explicit schema also spares the footer-reading
-    job that schema inference costs."""
-    try:
-        return spark.read.schema(ddl).parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-    return local_table(spark, [], ddl)
+    Existence is asked of the path's own filesystem (``fsio.fs_for``)
+    before Spark reads it, so a missing path costs no Spark read and no
+    logged ``FileNotFoundException``. Only a missing path reads as
+    empty: any other failure (permissions, a truncated or corrupt file)
+    raises, at once or when the rows are read. Reading an unreadable
+    table as empty would pass for "nothing stored yet". The explicit
+    schema also spares the footer-reading job that schema inference
+    costs."""
+    from .fsio import fs_for
+
+    fs, p = fs_for(spark, path)
+    if not fs.exists(p):
+        return local_table(spark, [], ddl)
+    return spark.read.schema(ddl).parquet(path)
+
+
+def unpin(df: DataFrame) -> None:
+    """Release the blocks of ``df``, a DataFrame ``localCheckpoint``
+    returned, once nothing lazy reads it any more: a later plan over it
+    would find its blocks gone, with no lineage to recompute them."""
+    rdd = df._jdf.logicalPlan().rdd()
+    # what RDD.unpersist does, without its warning that the lineage of
+    # a local checkpoint is gone
+    rdd.context().unpersistRDD(rdd.id(), False)
+
+
+def drop_zip_importers() -> None:
+    """Drop the ``zipimporter`` entries of ``sys.path_importer_cache``.
+
+    A Python worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and on Python 3.11 each cached ``zipimporter`` then
+    re-reads its whole archive directory: ``pyspark.zip``, its
+    subpackages, the py4j zip and the spark-core jar, tens of thousands
+    of entries per task (~0.2 CPU-s a task on 4 cores). Without the
+    entries there is nothing to re-read; an import that needs one
+    re-creates it from zipimport's directory cache. Every Python stage
+    function of the package calls this first."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]

@@ -23,16 +23,17 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.bands import band_pairs, minhash_bands
+from ..operators.bands import band_pairs, band_pairs_local, minhash_bands
 from ..operators.checkpoint import checkpoint_write, with_part_key
 from ..operators.linking import entity_surfaces
 from ..operators.ner import extract_mentions
 from ..operators.relations import extract_relations
-from ..operators.util import DRIVER_ROWS
+from ..operators.util import DRIVER_ROWS, local_table, unpin
 from .kg import KgResult, _nodes_and_edges
 
 
@@ -171,6 +172,13 @@ def batch_minhash_signatures(
 STORE_DDL = "doc_id long, sig array<bigint>"
 
 
+def _tagged(sig_new: DataFrame, sig_old: DataFrame) -> DataFrame:
+    """(doc_id, sig, new): batch ∪ store signatures, tagged new/old."""
+    return sig_new.withColumn("new", F.lit(True)).unionByName(
+        sig_old.withColumn("new", F.lit(False))
+    )
+
+
 def _verified_pairs(
     sig_new: DataFrame,
     sig_old: DataFrame,
@@ -185,9 +193,7 @@ def _verified_pairs(
     band self-join (``bands.band_pairs``) over the tagged store ∪ batch
     band keys and one verify. New-vs-old rows are reduced to each
     ``src``'s smallest match."""
-    tagged = sig_new.withColumn("new", F.lit(True)).unionByName(
-        sig_old.withColumn("new", F.lit(False))
-    )
+    tagged = _tagged(sig_new, sig_old)
     banded, keys = minhash_bands(n_perms, bands)
     # a.doc_id != b.doc_id keeps a RETRIED batch sane: a doc already
     # admitted under its own id must not read as "duplicate of itself"
@@ -227,6 +233,110 @@ def _verified_pairs(
                  F.when(F.col("dst_new"), F.col("dst")).alias("_d"))
         .agg(F.min("dst").alias("dst"))
         .select("src", "dst", "dst_new")
+    )
+
+
+VERDICT_DDL = "doc_id long, dup_of long, keep boolean"
+# candidate pairs per vectorized Ĵ block: 16k pairs × 2 × 128 × 8 B
+# of gathered signatures, 32 MiB
+_VERIFY_BLOCK = 1 << 14
+
+
+def _suppressors(vs_new, vs_old) -> dict:
+    """doc → the doc that suppresses it at first sight (step 4): its
+    smallest admitted match (``vs_old`` holds one (doc, match) pair per
+    doc), else the minimum of its new-vs-new duplicate component
+    (``vs_new``, a list of pairs) when that is another doc."""
+    from ..operators.canonicalize import union_find
+
+    first = {n: c for n, c in union_find(vs_new).items() if c != n}
+    first.update(vs_old)
+    return first
+
+
+def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
+                 n_perms: int, threshold: float, max_bucket: int):
+    """(verdicts, keepers) of steps 2-4 of ``dedup_admit_batch`` as
+    local tables, computed in one driver pass — or None when store ∪
+    batch holds more than ``DRIVER_ROWS`` rows or more than
+    ``DRIVER_ROWS`` candidate pairs, before either is held.
+
+    A doc_id-only count probes the size, then the tagged
+    (doc_id, new, sig) rows come to the driver in ONE Arrow collect —
+    up to ``DRIVER_ROWS`` signatures of n_perms × 8 B, ~1 GiB at the
+    bound for 128 permutations. The steps of ``_verified_pairs`` run on
+    their values: ``bands.band_pairs_local`` over the exact signature
+    slices with the same guard (a bucket counts store and batch rows),
+    the same pair predicate, Ĵ with Spark's ``round(…, 6)``, each doc's
+    smallest new-vs-old match and ``_suppressors``. ``keepers`` holds
+    the kept docs' (doc_id, sig) not already stored."""
+    import pyarrow.compute as pc
+
+    from ..operators.linking import _spark_round
+
+    tagged = _tagged(sig_new, sig_old)
+    if tagged.select("doc_id").limit(DRIVER_ROWS + 1).count() > DRIVER_ROWS:
+        return None
+    tbl = tagged.toArrow()
+    sigs = tbl.column("sig").combine_chunks()
+    # rows with a NULL id or a signature of another width are left to
+    # the distributed plan and its NULL semantics
+    if (tbl.column("doc_id").null_count
+            or (pc.list_value_length(sigs).fill_null(0).to_numpy()
+                != n_perms).any()):
+        return None
+    ids = tbl.column("doc_id").to_numpy()
+    new = tbl.column("new").to_numpy()
+    sig = pc.list_flatten(sigs).to_numpy().reshape(-1, n_perms)
+
+    # stored rows first, then batch rows by id: in a bucket each batch
+    # row j pairs with the rows before it — every stored row and every
+    # smaller batch id, the predicate's two kinds of b (or of a)
+    o = np.lexsort((ids, new))
+    assert n_perms % bands == 0
+    rows = n_perms // bands
+    pairs = band_pairs_local(
+        (sig[o, b * rows:(b + 1) * rows] for b in range(bands)),
+        max_bucket, DRIVER_ROWS, right=new[o],
+    )
+    if pairs is None:
+        return None
+    i, j = o[pairs[0]], o[pairs[1]]
+    src = np.where(new[i], i, j)
+    dst = np.where(new[i], j, i)
+    # a RETRIED doc, stored and new under one id, is no duplicate of
+    # itself
+    keep = ids[src] != ids[dst]
+    src, dst = src[keep], dst[keep]
+    matches = np.empty(len(src), np.int64)
+    for c in range(0, len(src), _VERIFY_BLOCK):
+        blk = slice(c, c + _VERIFY_BLOCK)
+        matches[blk] = (sig[src[blk]] == sig[dst[blk]]).sum(axis=1)
+    passes = np.array([_spark_round(m / n_perms, 6) >= threshold
+                       for m in range(n_perms + 1)])
+    src, dst = src[passes[matches]], dst[passes[matches]]
+    old = ~new[dst]
+    a, b = ids[src[old]], ids[dst[old]]
+    # each doc's smallest admitted match: the first of its sorted pairs
+    srt = np.lexsort((b, a))
+    a, at = np.unique(a[srt], return_index=True)
+    first = _suppressors(
+        list(zip(ids[src[~old]].tolist(), ids[dst[~old]].tolist())),
+        zip(a.tolist(), b[srt][at].tolist()),
+    )
+
+    # the one-hop rewrite to a keeper, as the distributed verdict's
+    # second lookup
+    batch = np.flatnonzero(new)
+    dup_of = [first.get(d, d) if d is not None else None
+              for d in map(first.get, ids[batch].tolist())]
+    kept = np.array([d is None for d in dup_of], bool)
+    kept &= ~np.isin(ids[batch], ids[~new])
+    spark = sig_new.sparkSession
+    return (
+        local_table(spark, [(x, d, d is None) for x, d in
+                            zip(ids[batch].tolist(), dup_of)], VERDICT_DDL),
+        local_table(spark, tbl.take(batch[kept]), STORE_DDL),
     )
 
 
@@ -280,11 +390,20 @@ def dedup_admit_batch(
        tag: new-vs-old gives each doc's smallest admitted match,
        new-vs-new gives the edges of the batch's duplicate graph;
     4. keep = not Ĵ-matched to any admitted doc, and the minimum
-       doc_id of its new-vs-new duplicate component (transitive, via
-       the size-adaptive connected components: up to ``DRIVER_ROWS``
-       verified pairs the components and verdicts are resolved on the
-       driver, past it with the distributed hash-min iteration);
+       doc_id of its new-vs-new duplicate component (transitive);
     5. append the KEPT docs' signatures to the store.
+
+    Steps 2-5 are size-adaptive, with ``util.DRIVER_ROWS`` as the one
+    bound. While store ∪ batch holds at most that many rows and
+    candidate pairs, they run as one driver pass (``_admit_local``):
+    one doc_id-only count, one Arrow collect of the tagged signatures
+    (~1 GiB on the driver at the bound, one 128 × 8 B signature per
+    row), numpy banding and verify, and local tables for the verdicts
+    and the appended keepers. Past either bound the band join and the
+    verify run distributed (``_verified_pairs``), and steps 4-5 resolve
+    the verified pairs on the driver up to ``DRIVER_ROWS`` of them,
+    past it with the distributed hash-min components. Both paths give
+    the same verdicts and store rows (pytest-pinned).
 
     Returns (doc_id, dup_of, keep) for the new batch: ``dup_of`` is
     the admitted doc (or kept smaller new doc) that suppressed it,
@@ -293,15 +412,21 @@ def dedup_admit_batch(
     plain parquet append and NOT atomic: a crash inside it can leave
     part of the batch's keepers stored. Wrap calls in the checkpoint
     manifest (``checkpoint_write``) when retries must be idempotent,
-    exactly like merge_batch above."""
-    from ..operators.canonicalize import connected_components, union_find
-    from ..operators.util import local_table, read_parquet_or_empty
+    exactly like merge_batch above.
 
-    # referenced by the band keys, both verify sides, the verdict and
-    # the store append — materialized once. A caller-provided ``sig``
-    # slice is re-pinned too: skipping its checkpoint was measured
-    # ~1 s SLOWER per admission (filter-rescans of the full-corpus
-    # signature checkpoint beat one slice materialization).
+    Pins: the driver pass releases the batch-signature checkpoint
+    before it returns. The distributed path leaves two checkpoints
+    pinned, the batch signatures and the verified pairs, because its
+    returned verdicts are a lazy plan over both."""
+    from ..operators.canonicalize import connected_components
+    from ..operators.util import read_parquet_or_empty
+
+    # referenced by the size probe and the collect, or by the band
+    # keys, both verify sides, the verdict and the store append —
+    # materialized once. A caller-provided ``sig`` slice is re-pinned
+    # too: skipping its checkpoint was measured ~1 s SLOWER per
+    # admission (filter-rescans of the full-corpus signature
+    # checkpoint beat one slice materialization).
     sig_new = (
         sig if sig is not None
         else batch_minhash_signatures(
@@ -310,6 +435,15 @@ def dedup_admit_batch(
     ).localCheckpoint()
     spark = new_docs.sparkSession
     sig_old = read_parquet_or_empty(spark, store_dir, STORE_DDL)
+    local = _admit_local(sig_new, sig_old, bands, n_perms, threshold,
+                         max_bucket)
+    if local is not None:
+        verdicts, keepers = local
+        keepers.write.mode("append").parquet(store_dir)
+        # both tables are local: nothing lazy reads the pin any more
+        unpin(sig_new)
+        return verdicts
+
     # pinned: the driver collect below, the distributed fallback and
     # its verdict all read the verified pairs
     verified = _verified_pairs(
@@ -317,17 +451,17 @@ def dedup_admit_batch(
     ).localCheckpoint()
 
     # dup0 lookup table (m_doc, m_dup): a batch doc → the doc that
-    # suppresses it at first sight — its smallest admitted match, else
-    # its new-vs-new component minimum when that is another doc. The
-    # same bounded driver path as connected_components_auto: normally
-    # built on the driver (union-find + dict) and shipped back as ONE
-    # local table; past the bound it stays distributed (hash-min
-    # components over the pinned pairs).
+    # suppresses it at first sight. The same bounded driver path as
+    # connected_components_auto: normally built on the driver
+    # (``_suppressors``) and shipped back as ONE local table; past the
+    # bound it stays distributed (hash-min components over the pinned
+    # pairs).
     pairs = verified.limit(DRIVER_ROWS + 1).collect()
     if len(pairs) <= DRIVER_ROWS:
-        first = {n: c for n, c in union_find(
-            [(p.src, p.dst) for p in pairs if p.dst_new]).items() if c != n}
-        first.update((p.src, p.dst) for p in pairs if not p.dst_new)
+        first = _suppressors(
+            [(p.src, p.dst) for p in pairs if p.dst_new],
+            [(p.src, p.dst) for p in pairs if not p.dst_new],
+        )
         lookup = local_table(spark, list(first.items()),
                              "m_doc long, m_dup long")
     else:

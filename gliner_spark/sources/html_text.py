@@ -30,6 +30,8 @@ from typing import List
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.util import drop_zip_importers
+
 SKIP_SUBTREES = frozenset(
     {"script", "style", "noscript", "template", "iframe", "head", "svg"}
 )
@@ -101,6 +103,7 @@ def html_to_text(html: bytes | str | None) -> str:
 
 
 def _html_text_batch(html: pd.Series) -> pd.Series:
+    drop_zip_importers()
     return html.map(html_to_text)
 
 

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.util import drop_zip_importers
+
 OUT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
@@ -37,6 +39,7 @@ def _first_seen(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
+    drop_zip_importers()
     if state.exists:
         return  # fingerprint already emitted in an earlier batch
     # applyInPandasWithState may deliver ONE group as SEVERAL chunks —

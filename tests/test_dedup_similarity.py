@@ -843,3 +843,69 @@ def test_minhash_band_keys_are_exact_slices(spark):
             got[r.doc_id, r.band_idx] = tuple(vals)
         assert got == {(d, n): tuple(s[n * rows:(n + 1) * rows])
                        for d, s in enumerate(sigs) for n in range(bands)}
+
+
+def test_band_pairs_local_matches_bruteforce():
+    """The driver band pairing against a brute-force reference: random
+    two-column keys over 6 bands, buckets of exactly ``max_bucket`` rows
+    joining and larger ones dropped, pairs only where the later row is
+    ``right``, and the pair-count bound giving up exactly past the
+    number of distinct pairs."""
+    from collections import Counter
+    from itertools import combinations
+
+    import numpy as np
+
+    from gliner_spark.operators.bands import band_pairs_local
+
+    rng = np.random.default_rng(5)
+    n, bands, max_bucket = 60, 6, 3
+    keys = [rng.integers(0, 4, (n, 2)) for _ in range(bands)]
+    for right in (None, rng.random(n) < 0.5):
+        want = set()
+        for key in keys:
+            size = Counter(map(tuple, key))
+            assert max_bucket in size.values()
+            assert max(size.values()) > max_bucket
+            want |= {(i, j) for i, j in combinations(range(n), 2)
+                     if tuple(key[i]) == tuple(key[j])
+                     and size[tuple(key[i])] <= max_bucket
+                     and (right is None or right[j])}
+        got = band_pairs_local(iter(keys), max_bucket, len(want), right)
+        assert list(zip(*(a.tolist() for a in got))) == sorted(want)
+        assert band_pairs_local(iter(keys), max_bucket, len(want) - 1,
+                                right) is None
+
+
+@pytest.mark.parametrize("driver_rows", [1_000_000, 0],
+                         ids=["driver", "distributed"])
+def test_admit_guard_parity_on_both_paths(spark, tmp_path, monkeypatch,
+                                          driver_rows):
+    """Admission's skew guard counts store and batch rows together on
+    both paths: A's bucket (store 1 + batch 2, 3: exactly ``max_bucket``
+    rows) joins, B's (store 11 + batch 12-14) is dropped, so B's copies
+    are kept and stored; a retried stored id (40) never matches itself
+    and is not stored twice. The batch signatures come in through
+    ``sig=``."""
+    from pyspark.sql import functions as F
+
+    from gliner_spark.plans import incremental
+    from gliner_spark.plans.incremental import (
+        batch_minhash_signatures,
+        dedup_admit_batch,
+    )
+
+    monkeypatch.setattr(incremental, "DRIVER_ROWS", driver_rows)
+    store = str(tmp_path / "store")
+    recs = spark.createDataFrame(ADMIT_RECS,
+                                 "doc_id long, text string, new boolean")
+    batch_minhash_signatures(recs.where(~F.col("new"))).write.parquet(store)
+    docs = recs.where("new").drop("new")
+    got = {r.doc_id: r.dup_of for r in dedup_admit_batch(
+        docs, store, max_bucket=BAND_MAX,
+        sig=batch_minhash_signatures(docs)).collect()}
+    stored = sorted(r.doc_id for r in spark.read.parquet(store).collect())
+    # C2 (22) matches C (21) at Ĵ = 106/128
+    assert got == {2: 1, 3: 1, 12: None, 13: None, 14: None, 40: None,
+                   41: 40, 21: None, 22: 21}
+    assert stored == [1, 11, 12, 13, 14, 21, 40]

@@ -1,5 +1,7 @@
 """End-to-end pipeline + checkpoint/resume tests (SURVEY.md §5)."""
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -736,15 +738,46 @@ _ADMIT_VERDICTS = [
 ]
 
 
+@contextmanager
+def _admission_spies():
+    """Counts ``_verified_pairs`` calls (the distributed path) and
+    records the columns of every DataFrame an admission brings to the
+    driver through ``toArrow`` or ``collect``."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from gliner_spark.plans import incremental
+
+    seen = {"distributed": 0, "driver_columns": []}
+    verified_pairs = incremental._verified_pairs
+
+    def spy_pairs(*a, **kw):
+        seen["distributed"] += 1
+        return verified_pairs(*a, **kw)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(incremental, "_verified_pairs", spy_pairs)
+        for name in ("toArrow", "collect"):
+            method = getattr(DataFrame, name)
+
+            def spy(self, _method=method):
+                seen["driver_columns"].append(self.columns)
+                return _method(self)
+
+            mp.setattr(DataFrame, name, spy)
+        yield seen
+
+
 @pytest.mark.parametrize("driver_rows", [1_000_000, 0])
 def test_admit_three_batches_pinned_verdicts_and_store(spark, tmp_path,
                                                        monkeypatch,
                                                        driver_rows):
-    """One band self-join + one verify admits three batches exactly as
-    the two-pipeline form did, on the driver path and on the
-    distributed one (DRIVER_ROWS=0); re-admitting the last batch
+    """Admission gives three batches the pinned verdicts on the driver
+    pass and on the distributed one (DRIVER_ROWS=0), chosen by the one
+    ``incremental.DRIVER_ROWS`` bound; re-admitting the last batch
     changes neither its verdicts nor the store, and the store holds
-    each keeper's own signature."""
+    each keeper's own signature. The driver pass collects store ∪ batch
+    signatures once per batch and leaves no pinned RDD behind; past the
+    bound no signature reaches the driver."""
     from gliner_spark.plans import incremental
     from gliner_spark.plans.incremental import (
         batch_minhash_signatures,
@@ -755,12 +788,23 @@ def test_admit_three_batches_pinned_verdicts_and_store(spark, tmp_path,
     store = str(tmp_path / "sig_store")
     batches = _admit_batches()
     texts = {}
+    jsc = spark.sparkContext._jsc
     for rows, want in zip(batches + batches[-1:],
                           _ADMIT_VERDICTS + _ADMIT_VERDICTS[-1:]):
         texts.update(rows)
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {r.doc_id: (r.dup_of, r.keep) for r in dedup_admit_batch(
-            df, store, threshold=0.78).collect()}
+        pinned = len(jsc.getPersistentRDDs())
+        with _admission_spies() as seen:
+            verdicts = dedup_admit_batch(df, store, threshold=0.78)
+        sig_collects = [c for c in seen["driver_columns"] if "sig" in c]
+        if driver_rows:
+            assert seen["distributed"] == 0
+            assert sig_collects == [["doc_id", "sig", "new"]]
+            assert len(jsc.getPersistentRDDs()) == pinned
+        else:
+            assert seen["distributed"] == 1
+            assert sig_collects == []
+        got = {r.doc_id: (r.dup_of, r.keep) for r in verdicts.collect()}
         assert got == {d: (o, o is None) for d, o in want.items()}
     keepers = sorted(d for v in _ADMIT_VERDICTS for d, o in v.items()
                      if o is None)
@@ -771,6 +815,62 @@ def test_admit_three_batches_pinned_verdicts_and_store(spark, tmp_path,
                                  "doc_id long, text string")
     assert stored == {r.doc_id: list(r.sig) for r in
                       batch_minhash_signatures(kept).collect()}
+
+
+def test_admit_candidate_pair_bound_falls_back(spark, tmp_path,
+                                               monkeypatch):
+    """Store ∪ batch within ``DRIVER_ROWS`` rows but past it in
+    candidate pairs: the driver pass collects the signatures, gives up
+    before holding the pairs, and the distributed path admits the
+    batch with the verdicts and store rows of the driver pass."""
+    from gliner_spark.plans import incremental
+    from gliner_spark.plans.incremental import dedup_admit_batch
+
+    doc = " ".join(f"w{j}" for j in range(40))
+    first = [(1, doc), (2, "a b c d e f g h")]
+    # 6 batch copies of stored doc 1: 6 new-vs-old and 15 new-vs-new
+    # candidate pairs over 2 + 7 rows of store ∪ batch
+    second = [(10 + i, doc) for i in range(6)] + [(20, "p q r s t u v")]
+    results = []
+    for bound in (1_000_000, 9):
+        store = str(tmp_path / f"store-{bound}")
+        monkeypatch.setattr(incremental, "DRIVER_ROWS", bound)
+        dedup_admit_batch(
+            spark.createDataFrame(first, "doc_id long, text string"), store)
+        with _admission_spies() as seen:
+            verdicts = dedup_admit_batch(
+                spark.createDataFrame(second, "doc_id long, text string"),
+                store)
+        got = {r.doc_id: r.dup_of for r in verdicts.collect()}
+        assert seen["distributed"] == (bound == 9)
+        assert [c for c in seen["driver_columns"] if "sig" in c] == [
+            ["doc_id", "sig", "new"]]
+        results.append((got, sorted(
+            (r.doc_id, list(r.sig))
+            for r in spark.read.parquet(store).collect())))
+    assert results[0] == results[1]
+    assert results[0][0] == {**{10 + i: 1 for i in range(6)}, 20: None}
+
+
+@pytest.mark.parametrize("driver_rows", [1_000_000, 0])
+def test_admit_null_id_same_on_both_paths(spark, tmp_path, monkeypatch,
+                                          driver_rows):
+    """A batch doc with a NULL id pairs with nothing and is kept, on the
+    driver pass (which hands such a batch to the distributed plan) as
+    on the distributed one."""
+    from gliner_spark.plans import incremental
+    from gliner_spark.plans.incremental import dedup_admit_batch
+
+    monkeypatch.setattr(incremental, "DRIVER_ROWS", driver_rows)
+    doc = " ".join(f"w{j}" for j in range(40))
+    got = sorted(
+        (r.doc_id is None, r.doc_id, r.dup_of, r.keep)
+        for r in dedup_admit_batch(
+            spark.createDataFrame([(1, doc), (None, doc), (2, doc)],
+                                  "doc_id long, text string"),
+            str(tmp_path / "store")).collect())
+    assert got == [(False, 1, None, True), (False, 2, 1, False),
+                   (True, None, None, True)]
 
 
 def test_admit_unreadable_store_raises_and_keeps_store(spark, tmp_path):

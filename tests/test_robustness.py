@@ -146,6 +146,52 @@ def test_local_table_plans_as_local_table_scan_without_arrow(spark):
         spark.conf.set(key, prev)
 
 
+def test_read_parquet_or_empty_checks_existence_first(spark, tmp_path):
+    """A missing path (plain or ``file://``) gives the empty local table
+    without a Spark read; a present one is read."""
+    from gliner_spark.operators.util import read_parquet_or_empty
+
+    ddl = "doc_id long, sig array<bigint>"
+    for path in (str(tmp_path / "none"), f"file://{tmp_path}/none"):
+        df = read_parquet_or_empty(spark, path, ddl)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Parquet" not in plan
+        assert df.count() == 0
+    spark.createDataFrame([(1, [2])], ddl).write.parquet(str(tmp_path / "t"))
+    got = read_parquet_or_empty(spark, str(tmp_path / "t"), ddl).collect()
+    assert [tuple(r) for r in got] == [(1, [2])]
+
+
+def test_drop_zip_importers_keeps_zip_imports_working(tmp_path,
+                                                      monkeypatch):
+    """The cached zipimporters go, and a module of the same zip still
+    imports afterwards, also after ``importlib.invalidate_caches``."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from gliner_spark.operators.util import drop_zip_importers
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("gs_zmod_a.py", "X = 1\n")
+        z.writestr("gs_zmod_b.py", "X = 2\n")
+    monkeypatch.syspath_prepend(archive)
+    for name in ("gs_zmod_a", "gs_zmod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("gs_zmod_a").X == 1
+    assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+    drop_zip_importers()
+    assert not any(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+    importlib.invalidate_caches()
+    b = importlib.import_module("gs_zmod_b")
+    assert b.X == 2 and b.__spec__.origin.startswith(archive)
+    for name in ("gs_zmod_a", "gs_zmod_b"):
+        sys.modules.pop(name, None)
+
+
 def test_manifest_missing_reads_empty_unreadable_raises(spark, tmp_path):
     """Only a root with no manifest yet reads as an empty manifest; a
     manifest that exists but cannot be read raises instead of passing
