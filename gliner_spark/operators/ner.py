@@ -6,9 +6,10 @@ stage, because the greedy group is a single document — i.e. a single
 input row — so **no shuffle is needed for NER**. The first shuffle in the
 whole pipeline is the relation/linking join downstream.
 
-``_ner_stage`` is the one Spark NER stage; ``extract_mentions`` and the
-fused ``extract_triples_fused`` (operators/ner_fused.py) differ only in
-the emitter that turns a batch's spans into output rows, and its schema.
+``_ner_stage`` is the one Spark NER stage; ``extract_mentions``, the
+fused ``extract_triples_fused`` and ``plans/kg.build_kg``'s mention rows
+with their relations (operators/ner_fused.py) differ only in the emitter
+that turns a batch's spans into output rows, and its schema.
 
 Scale notes (100 TB / 1000 executors):
 - the stage is embarrassingly parallel over input splits; throughput

@@ -11,9 +11,15 @@ as a proximity self-join over the long-format mentions table:
 This is a plain Catalyst equi-join on ``doc_id`` with a range residual —
 fully declarative, so AQE handles skew (one hot page with thousands of
 mentions) and the rule table is broadcast. Wall-clock at scale is
-dominated by the single shuffle of mentions by doc_id; callers running
-several mention-consuming stages should ``repartition(doc_id)`` once
-upstream and reuse (see plans/kg.py).
+dominated by the single shuffle of mentions by doc_id.
+
+It is the pairing for mentions that already are a table:
+``incremental.merge_kg_batch`` (the checkpointed mentions of every
+batch), the ``ner_triples``/``kg_edges`` queries and bench.py. Where the
+spans come straight out of NER — ``plans/kg.build_kg``,
+``ner_fused.extract_triples_fused`` — the NER stage pairs each Arrow
+batch's spans itself (``ner_fused.pair_spans``), with no shuffle and
+the same triples.
 """
 
 from __future__ import annotations

@@ -3,11 +3,11 @@
 Composition of every stage (BASELINE.json:north_star), structured for
 the 100 TB plan shape:
 
-  pages ──mapInPandas(NER)──► mentions          [no shuffle; pinned]
-        ──repartition(doc_id) once──►           [THE mentions shuffle]
-        ├─ self-join window ──► triples         [reuses doc_id
-        │                                         partitioning; pinned]
-        └─ groupBy surface ──► surfaces         [small output; pinned]
+  pages ──mapInPandas(NER + in-batch pairing)──► mention rows + rels
+                                                [no shuffle; pinned once]
+        ├─ drop(rels) ──► mentions
+        ├─ explode(rels) ──► triples            [no shuffle, no join]
+        └─ mentions groupBy surface ──► surfaces [small output; pinned]
                │
                ├─ ≤ DRIVER_ROWS surfaces: ONE bounded Arrow collect
                │  of (sid, label, surface, n_mentions, shingles, hashes)
@@ -22,18 +22,22 @@ the 100 TB plan shape:
   triples × entity map (broadcast) ──► edges    [broadcast join: the
                                                  entity map is ≪ triples]
 
-Only one big shuffle (mentions by doc_id) touches data proportional to
-the input; everything after ``entity_surfaces`` operates on the distinct-
-surface universe, which is bounded by vocabulary, not corpus size. Up
-to ``util.DRIVER_ROWS`` distinct surfaces and as many LSH candidate
-pairs that tail is one driver pass (``lsh_links_local`` +
-``union_find``) on the same JVM-computed shingles and hashes, with the
-same output as the distributed tail; past either bound the
-distributed plan runs (measurements: docs/SCALE.md). The tail —
-surfaces → nodes + edges — is ``_nodes_and_edges``, shared with
-``incremental.merge_kg_batch``. Checkpointing
-wraps each materialized stage (mentions, triples, nodes, edges) with
-per-partition manifests for resume.
+The relation window is intra-document and a document's spans come out
+of one NER Arrow batch together, so the NER stage's emitter
+(``ner_fused.mention_relations``) pairs them right there: each mention
+row carries the relations it is the subject of. No shuffle touches data
+proportional to the input; the surface aggregation and everything after
+it operate on the distinct-surface universe, which is bounded by
+vocabulary, not corpus size. Up to ``util.DRIVER_ROWS`` distinct
+surfaces and as many LSH candidate pairs that tail is one driver pass
+(``lsh_links_local`` + ``union_find``) on the same JVM-computed shingles
+and hashes, with the same output as the distributed tail; past either
+bound the distributed plan runs (measurements: docs/SCALE.md). The tail
+— surfaces → nodes + edges — is ``_nodes_and_edges``, shared with
+``incremental.merge_kg_batch`` (which pairs its checkpointed mentions
+with the ``relations.extract_relations`` self-join). Checkpointing
+writes the mentions and the triples from the one NER pin, then nodes
+and edges, each with per-partition manifests for resume.
 """
 
 from __future__ import annotations
@@ -58,9 +62,10 @@ from ..operators.linking import (
     lsh_links_local,
     surface_shingles,
 )
-from ..operators.ner import extract_mentions
-from ..operators.relations import extract_relations
+from ..operators.ner import _ner_stage
+from ..operators.ner_fused import mention_relations
 from ..operators.util import DRIVER_ROWS, local_table
+from ..schemas import MENTION_RELATIONS
 
 ENTITY_MAP_DDL = "e_label string, e_surface string, entity_id string"
 
@@ -166,6 +171,20 @@ def _nodes_and_edges(surfaces: DataFrame, triples: DataFrame,
     return nodes, edges
 
 
+def _explode_rels(ner: DataFrame) -> DataFrame:
+    """``TRIPLES`` rows of ``MENTION_RELATIONS`` rows: each mention as
+    the subject of every relation in its ``rels``."""
+    r = F.explode("rels").alias("r")
+    return ner.select(
+        "doc_id",
+        F.col("m_text").alias("subj"),
+        F.col("label").alias("subj_label"),
+        F.col("m_start").alias("subj_start"),
+        r,
+    ).select("doc_id", "subj", "subj_label", "subj_start", "r.pred",
+             "r.obj", "r.obj_label", "r.obj_start", "r.prob")
+
+
 def build_kg(
     pages: DataFrame,
     labels: Sequence[str],
@@ -174,35 +193,31 @@ def build_kg(
     id_col: str = "url",
     text_col: str = "text",
 ) -> KgResult:
-    mentions = extract_mentions(
-        pages, labels, id_col=id_col, text_col=text_col, config=cfg.gliner
-    )
+    # one NER pass whose mention rows carry the relations they are the
+    # subject of, paired inside each Arrow batch: no mentions shuffle,
+    # no self-join. Pinned once: the mentions, the triples and (with
+    # checkpoints) both writes read it, so the scorer runs once per
+    # input task
+    ner = _ner_stage(
+        pages, labels, id_col, text_col, cfg.gliner, None,
+        mention_relations(window_bytes=cfg.relation_window * 4),
+        MENTION_RELATIONS,
+    ).persist()
+    mentions, triples = ner.drop("rels"), _explode_rels(ner)
     if checkpoint_root:
-        mentions = checkpoint_write(
-            with_part_key(mentions, "doc_id"),
-            checkpoint_root,
-            "mentions",
-            lineage={"labels": list(labels)},
-        )
-    else:
-        # mentions feed BOTH the relation self-join (two branches) and
-        # the surface aggregation; without materialization every consumer
-        # re-runs the scoring mapInPandas — persist once instead
-        mentions = mentions.persist()
-
-    # one explicit repartition reused by the relation self-join (both
-    # sides co-partitioned on doc_id → single shuffle, local join)
-    mentions_by_doc = mentions.repartition("doc_id")
-
-    triples = extract_relations(mentions_by_doc, window_bytes=cfg.relation_window * 4)
-    if checkpoint_root:
-        triples = checkpoint_write(
-            with_part_key(triples, "doc_id"), checkpoint_root, "triples"
-        )
-    else:
-        # the triples write and the edge join both read the triples:
-        # pinned once, the relation self-join runs once
-        triples = triples.persist()
+        try:
+            mentions = checkpoint_write(
+                with_part_key(mentions, "doc_id"),
+                checkpoint_root,
+                "mentions",
+                lineage={"labels": list(labels)},
+            )
+            triples = checkpoint_write(
+                with_part_key(triples, "doc_id"), checkpoint_root, "triples"
+            )
+        finally:
+            # both stages now read back from their checkpoints
+            ner.unpersist()
 
     # hot-key probe before the link-scoring shuffle (north rule: skewed
     # domains salted): if any surface key exceeds hot_key_threshold

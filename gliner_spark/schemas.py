@@ -46,6 +46,28 @@ TRIPLES = T.StructType(
     ]
 )
 
+# build_kg's one NER pass (operators/ner_fused.mention_relations): each
+# mention row plus the relations it is the subject of, so the mentions
+# and the triples (``explode(rels)``) come from one pin
+MENTION_RELATIONS = T.StructType(
+    MENTIONS.fields
+    + [
+        T.StructField(
+            "rels",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField(f.name, f.dataType, False)
+                        for f in TRIPLES.fields[4:]
+                    ]
+                ),
+                containsNull=False,
+            ),
+            False,
+        )
+    ]
+)
+
 LINK_EDGES = T.StructType(
     [
         T.StructField("src", T.StringType(), False),

@@ -1093,11 +1093,18 @@ def test_build_kg_driver_tail_equals_distributed(spark, monkeypatch, case,
     max_bucket."""
     from gliner_spark.config import PipelineConfig
     from gliner_spark.plans import kg as kg_mod
-    from gliner_spark.schemas import MENTIONS
 
-    mentions = spark.createDataFrame(_tail_mentions(case, seed), MENTIONS)
-    monkeypatch.setattr(kg_mod, "extract_mentions",
-                        lambda pages, labels, **kw: mentions)
+    spans: dict = {}
+    for doc_id, *span in _tail_mentions(case, seed):
+        spans.setdefault(doc_id, []).append(span)
+
+    def ner_stage(pages, labels, id_col, text_col, config, factory, emit,
+                  schema):
+        # the case's spans through build_kg's own emitter, in one batch
+        return spark.createDataFrame(
+            emit(list(spans), list(spans.values())), schema)
+
+    monkeypatch.setattr(kg_mod, "_ner_stage", ner_stage)
     cfg = (PipelineConfig(salt_buckets=8, hot_key_threshold=2) if salted
            else PipelineConfig())
     got = {}
@@ -1111,8 +1118,7 @@ def test_build_kg_driver_tail_equals_distributed(spark, monkeypatch, case,
                       kg.edges.schema.simpleString(),
                       sorted(map(tuple, kg.nodes.collect())),
                       sorted(map(tuple, kg.edges.collect())))
-        kg.mentions.unpersist()
-        kg.triples.unpersist()
+        spark.catalog.clearCache()  # build_kg's NER pin
     (*schemas, nodes, edges), (*schemas0, nodes0, edges0) = got.values()
     assert schemas == schemas0  # one nodes schema: NODES_DDL
     assert nodes == nodes0 and edges == edges0

@@ -175,8 +175,20 @@ def main() -> int:
     if not ok4b:
         print(p)
     bad += not ok4b
-    kg.mentions.unpersist()
-    kg.triples.unpersist()
+    # build_kg's triples are its pinned NER pass exploded: the pairing
+    # ran inside the one MapInPandas, so no Exchange (mentions shuffle)
+    # and no join sit above it
+    p = kg.triples._jdf.queryExecution().executedPlan().toString().split(
+        "== Initial Plan ==")[0]
+    n_map = p.count("MapInPandas")
+    above = p.split("MapInPandas")[0]
+    ok4c = n_map == 1 and "Exchange" not in above and "Join" not in above
+    print(f"  [{'OK ' if ok4c else 'BAD'}] build_kg triples: {n_map} "
+          f"MapInPandas, Exchange above it {'Exchange' in above}, "
+          f"join above it {'Join' in above}")
+    if not ok4c:
+        print(p)
+    bad += not ok4c
 
     # 5. bpe token counting: pure Catalyst (regexp_extract_all inside
     # codegen — zero Python stage)
