@@ -1,6 +1,6 @@
-"""DuckDB/numpy oracle twins for the graph-analytics and temporal
-operators (no gate slots — the driver gate is capped at 50 rows; these
-follow the PII/webstats oracle-grade-pytest precedent)."""
+"""DuckDB oracle twins for the temporal operators (no gate slots — the
+driver gate is capped at 50 rows; these follow the PII/webstats
+oracle-grade-pytest precedent)."""
 
 import duckdb
 import pytest
@@ -16,147 +16,11 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(scope="module")
-def edges(spark):
-    """Deterministic directed multigraph: a hash-generated bulk (with
-    hub skew and parallel/self edges to exercise canonicalization) plus
-    a hand-written clique whose triangle count is known."""
-    bulk = (
-        spark.range(0, 600)
-        .select(
-            (F.abs(F.xxhash64("id", F.lit(1))) % 40).alias("src_entity"),
-            (F.abs(F.xxhash64("id", F.lit(2))) % 40).alias("dst_entity"),
-        )
-    )
-    clique = spark.createDataFrame(
-        [(100 + i, 100 + j) for i in range(5) for j in range(5) if i != j],
-        "src_entity long, dst_entity long",
-    )
-    return bulk.unionByName(clique).localCheckpoint(eager=True)
-
-
 def _con(**frames):
     con = duckdb.connect()
     for name, pdf in frames.items():
         con.register(name, pdf)
     return con
-
-
-def test_degrees_match_duckdb(spark, edges):
-    from gliner_spark.operators.graph import degrees
-
-    got = {tuple(r) for r in degrees(edges).collect()}
-    con = _con(e=edges.toPandas())
-    want = {
-        tuple(r)
-        for r in con.execute(
-            """
-            SELECT node, SUM(o)::BIGINT out_degree, SUM(i)::BIGINT in_degree,
-                   COUNT(*)::BIGINT degree
-            FROM (SELECT src_entity node, 1 o, 0 i FROM e
-                  UNION ALL SELECT dst_entity, 0, 1 FROM e)
-            GROUP BY node
-            """
-        ).fetchall()
-    }
-    assert got == want and len(got) > 20
-
-
-def test_triangles_match_duckdb_and_clique_count(spark, edges):
-    from gliner_spark.operators.graph import triangle_stats, triangles
-
-    got = {tuple(r) for r in triangles(edges).collect()}
-    con = _con(e=edges.toPandas())
-    want = {
-        tuple(r)
-        for r in con.execute(
-            """
-            WITH und AS (
-              SELECT DISTINCT least(src_entity, dst_entity) a,
-                              greatest(src_entity, dst_entity) b
-              FROM e WHERE src_entity <> dst_entity)
-            SELECT e1.a x, e1.b y, e2.b z
-            FROM und e1 JOIN und e2 ON e2.a = e1.b
-                        JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-            """
-        ).fetchall()
-    }
-    assert got == want
-    # the planted K5 contributes exactly C(5,3)=10 triangles on 100..104
-    assert sum(1 for t in got if all(v >= 100 for v in t)) == 10
-    # per-node participation: explode twin
-    stats = {tuple(r) for r in triangle_stats(edges).collect()}
-    want_stats = {}
-    for x, y, z in want:
-        for v in (x, y, z):
-            want_stats[v] = want_stats.get(v, 0) + 1
-    assert stats == set(want_stats.items())
-
-
-def test_k_hop_matches_recursive_cte(spark, edges):
-    from gliner_spark.operators.graph import k_hop
-
-    seeds = spark.createDataFrame([(100,), (0,)], "node long")
-    got = {tuple(r) for r in k_hop(edges, seeds, k=3).collect()}
-    con = _con(e=edges.toPandas())
-    want = {
-        tuple(r)
-        for r in con.execute(
-            """
-            WITH RECURSIVE r(node, d) AS (
-              SELECT * FROM (VALUES (100, 0), (0, 0))
-              UNION
-              SELECT e.dst_entity, r.d + 1
-              FROM r JOIN (SELECT DISTINCT src_entity, dst_entity FROM e) e
-                ON e.src_entity = r.node
-              WHERE r.d < 3)
-            SELECT node, MIN(d)::INT dist FROM r GROUP BY node
-            """
-        ).fetchall()
-    }
-    assert got == want and any(d == 3 for _, d in got)
-
-
-def test_k_hop_undirected_and_early_exit(spark):
-    from gliner_spark.operators.graph import k_hop
-
-    # path 1->2->3, plus isolated 9: undirected from 3 reaches all of
-    # the path; k larger than the diameter exercises the early exit
-    e = spark.createDataFrame([(1, 2), (2, 3)], "src_entity long, dst_entity long")
-    seeds = spark.createDataFrame([(3,)], "node long")
-    got = {tuple(r) for r in k_hop(e, seeds, k=10, directed=False).collect()}
-    assert got == {(3, 0), (2, 1), (1, 2)}
-    assert {tuple(r) for r in k_hop(e, seeds, k=10).collect()} == {(3, 0)}
-
-
-def test_pagerank_matches_numpy(spark, edges):
-    import numpy as np
-
-    from gliner_spark.operators.graph import pagerank
-
-    got = {r["node"]: r["rank"] for r in pagerank(edges, iters=8).collect()}
-    pairs = {
-        (r.src_entity, r.dst_entity)
-        for r in edges.select("src_entity", "dst_entity").distinct().collect()
-    }
-    nodes = sorted({u for u, _ in pairs} | {v for _, v in pairs})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    od = np.zeros(n)
-    for u, _ in pairs:
-        od[idx[u]] += 1
-    rank = np.full(n, 1.0 / n)
-    d = 0.85
-    for _ in range(8):
-        new = np.zeros(n)
-        for u, v in pairs:
-            new[idx[v]] += rank[idx[u]] / od[idx[u]]
-        dangling = rank[od == 0].sum()
-        rank = (1 - d) / n + d * dangling / n + d * new
-    assert set(got) == set(idx)
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-    for v, i in idx.items():
-        assert got[v] == pytest.approx(rank[i], abs=1e-12)
 
 
 @pytest.fixture(scope="module")
@@ -311,131 +175,6 @@ def test_kg_asof_snapshot_matches_duckdb(spark, ts_triples):
         }
         assert got == want
         assert ("acme", "ceo", expect_ceo) in {g[:3] for g in got}
-
-
-def test_label_propagation_two_cliques(spark):
-    """Two 4-cliques joined by one bridge edge: each clique converges
-    to its own min-id community; matches a Python fold of the same
-    synchronous min-tie rule on the bulk graph too."""
-    from gliner_spark.operators.graph import label_propagation, undirected_edges
-
-    pairs = (
-        [(i, j) for i in range(4) for j in range(4) if i < j]
-        + [(10 + i, 10 + j) for i in range(4) for j in range(4) if i < j]
-        + [(3, 10)]
-    )
-    edges = spark.createDataFrame(pairs, "src_entity long, dst_entity long")
-    got = dict(label_propagation(edges, iters=5).collect())
-    assert {got[n] for n in (0, 1, 2)} == {0}
-    assert {got[n] for n in (11, 12, 13)} == {10}
-
-    # exactness vs a driver-side fold of the identical update rule
-    und = [tuple(r) for r in undirected_edges(edges).collect()]
-    adj = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    lab = {n: n for n in adj}
-    for _ in range(5):
-        nxt = {}
-        for n, nb in adj.items():
-            counts = {}
-            for m in nb:
-                counts[lab[m]] = counts.get(lab[m], 0) + 1
-            best = max(counts.items(), key=lambda kv: (kv[1], -kv[0]))
-            nxt[n] = best[0]
-        lab = nxt
-    assert got == lab
-
-
-def test_label_propagation_matches_fold_on_bulk(spark, edges):
-    from gliner_spark.operators.graph import label_propagation, undirected_edges
-
-    got = dict(label_propagation(edges, iters=3).collect())
-    und = [tuple(r) for r in undirected_edges(edges).collect()]
-    adj = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    lab = {n: n for n in adj}
-    for _ in range(3):
-        nxt = {}
-        for n, nb in adj.items():
-            counts = {}
-            for m in nb:
-                counts[lab[m]] = counts.get(lab[m], 0) + 1
-            best = max(counts.items(), key=lambda kv: (kv[1], -kv[0]))
-            nxt[n] = best[0]
-        lab = nxt
-    assert got == lab and len(got) > 20
-
-
-def test_link_prediction_matches_duckdb(spark, edges):
-    """Exact (no hub cap) vs a DuckDB twin. The bulk graph has hub
-    nodes (40-node id space, 600 edges), so this also pins that the
-    full symmetric wedge join — not the degree-oriented one — is used:
-    orientation would miss intersections through high-ranked centers."""
-    from gliner_spark.operators.graph import link_prediction
-
-    got = {(r.a, r.b, r.common) for r in link_prediction(edges).collect()}
-    con = _con(e=edges.toPandas())
-    want = {
-        tuple(r)
-        for r in con.execute(
-            """
-            WITH und AS (
-              SELECT DISTINCT least(src_entity, dst_entity) a,
-                              greatest(src_entity, dst_entity) b
-              FROM e WHERE src_entity <> dst_entity),
-            sym AS (SELECT a u, b v FROM und UNION ALL SELECT b, a FROM und),
-            com AS (
-              SELECT e1.v a, e2.v b, COUNT(*)::BIGINT common
-              FROM sym e1 JOIN sym e2 ON e1.u = e2.u AND e1.v < e2.v
-              GROUP BY e1.v, e2.v)
-            SELECT c.a, c.b, c.common FROM com c
-            ANTI JOIN und ON und.a = c.a AND und.b = c.b
-            """
-        ).fetchall()
-    }
-    assert got == want and len(got) > 50
-
-    # jaccard denominator: spot-check against degrees from the same twin
-    deg = dict(
-        con.execute(
-            """
-            WITH und AS (
-              SELECT DISTINCT least(src_entity, dst_entity) a,
-                              greatest(src_entity, dst_entity) b
-              FROM e WHERE src_entity <> dst_entity)
-            SELECT node, COUNT(*)::BIGINT FROM (
-              SELECT a node FROM und UNION ALL SELECT b FROM und)
-            GROUP BY node
-            """
-        ).fetchall()
-    )
-    for r in link_prediction(edges).limit(20).collect():
-        assert abs(r.jaccard - r.common / (deg[r.a] + deg[r.b] - r.common)) < 1e-6
-
-
-def test_link_prediction_hub_cap_audited_subset(spark):
-    """max_wedge_degree drops exactly the intersections routed through
-    over-cap centers: on a star + one side pair, capping below the hub
-    degree removes the hub-mediated pairs and keeps the rest."""
-    from gliner_spark.operators.graph import link_prediction
-
-    # hub 0 -- {1..6}; plus chain 1-7, 2-7 (7 is a degree-2 center)
-    pairs = [(0, i) for i in range(1, 7)] + [(1, 7), (2, 7)]
-    edges = spark.createDataFrame(pairs, "src_entity long, dst_entity long")
-    exact = {(r.a, r.b): r.common for r in link_prediction(edges).collect()}
-    capped = {
-        (r.a, r.b): r.common
-        for r in link_prediction(edges, max_wedge_degree=2).collect()
-    }
-    # hub-mediated leaf pairs present exactly, gone under the cap:
-    # only wedges through degree<=2 centers (nodes 1 and 2) survive
-    assert exact[(1, 2)] == 2  # via hub 0 AND via center 7
-    assert capped == {(1, 2): 1, (0, 7): 2}
-    assert all(k in exact for k in capped)
 
 
 def test_asof_join_tied_right_timestamps_deterministic(spark):

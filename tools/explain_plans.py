@@ -346,29 +346,6 @@ def main() -> int:
          "MapInPandas": False},
     )
 
-    # 8e. label_propagation round: both levels partial-aggregated
-    # (hot nodes combine map-side), no window, no Python
-    from gliner_spark.operators.graph import lpa_round, undirected_edges
-
-    kg_edges = pages.select(
-        (_F.abs(_F.xxhash64("url")) % 50).alias("src_entity"),
-        (_F.abs(_F.xxhash64("url", _F.lit(1))) % 50).alias("dst_entity"),
-    )
-    und = undirected_edges(kg_edges)
-    sym = und.unionByName(
-        und.select(_F.col("b").alias("a"), _F.col("a").alias("b"))
-    )
-    labels0 = sym.select(_F.col("a").alias("node")).distinct().withColumn(
-        "label", _F.col("node")
-    )
-    p = executed_plan_of(lpa_round(sym, labels0))
-    bad += not check(
-        "label_propagation (partial-agg rounds, no window, no Python)",
-        p,
-        {"Window": False, "partial_count": True, "partial_max": True,
-         "ArrowEvalPython": False, "MapInPandas": False},
-    )
-
     # 9. TPC-H-style join: small dim broadcast without hints
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     cust = spark.read.parquet(f"{SF}/customer.parquet")
