@@ -305,47 +305,6 @@ def main() -> int:
           f"== [doc_id, sig] -> {store_cols}")
     bad += not store_ok
 
-    # 8c. temporal family: the hot-key discipline is structural.
-    # latest_snapshot must be a partial-aggregated max(struct) groupBy
-    # — NO window (a row_number window would single-task hot urls);
-    # same for kg_asof.
-    from gliner_spark.operators.temporal import (
-        asof_join,
-        latest_snapshot,
-        synthesize_recrawls,
-    )
-
-    # checkpoint: the synthesizer's own version-counter window must not
-    # leak into the operator plans under audit
-    pages = synthesize_recrawls(spark, n_urls=300).localCheckpoint(eager=True)
-    p = executed_plan_of(latest_snapshot(pages))
-    bad += not check(
-        "latest_snapshot (partial-agg max(struct), no window)",
-        p,
-        {"Window": False, "partial_max": True,
-         "ArrowEvalPython": False, "MapInPandas": False},
-    )
-
-    # 8d. asof_join: union-tag plan — the right side attaches via ONE
-    # sort-shuffle + running window, never a range-expanded join (no
-    # nested-loop/cartesian product anywhere)
-    dic = spark.createDataFrame(
-        [("https://site-1.example/", "2024-05-01 00:30:00", 2)],
-        "url string, valid_from string, dict_ver int",
-    ).select("url", _F.to_timestamp("valid_from").alias("valid_from"),
-             "dict_ver")
-    p = executed_plan_of(
-        asof_join(pages, dic, key="url", left_ts="warc_ts",
-                  right_ts="valid_from")
-    )
-    bad += not check(
-        "asof_join (union-tag window, no range-expanded join)",
-        p,
-        {"Window": True, "BroadcastNestedLoopJoin": False,
-         "CartesianProduct": False, "SortMergeJoin": False,
-         "MapInPandas": False},
-    )
-
     # 9. TPC-H-style join: small dim broadcast without hints
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     cust = spark.read.parquet(f"{SF}/customer.parquet")
