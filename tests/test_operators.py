@@ -110,143 +110,3 @@ def test_paragraph_dedup_property_vs_python_fold(spark):
                     kept.append(p)
             expect[d] = ("\n".join(kept), len(kept), dropped)
         assert got == expect, f"trial {trial}"
-
-
-def test_webstats_host_ops_match_duckdb_twin(spark):
-    """Per-host operators with an oracle-grade DuckDB twin (same
-    pii_scrub trick: identical RE2∩Java host regex on both engines) —
-    host/tld/path parsing, per-domain profile aggregation, and the
-    skew-aware per-host cap, which must equal BOTH the naive
-    rank-everything window and the DuckDB ranking."""
-    import duckdb
-
-    from gliner_spark.operators.webstats import (
-        cap_per_host,
-        host_stats,
-        with_url_parts,
-    )
-    from gliner_spark.sources.pages import synthesize_pages
-
-    pages = synthesize_pages(spark, 200).select("url", "text", "lang") \
-        .persist()
-
-    parts = with_url_parts(pages).select("url", "host", "tld",
-                                         "path_depth").collect()
-    for r in parts:
-        assert r.url.split("/")[2].lower() == r.host
-        assert r.host.endswith("." + r.tld)
-        assert r.path_depth == len(
-            [s for s in r.url.split("/", 3)[3].split("/") if s]
-        )
-
-    got = {r.host: (r.n_pages, r.n_chars, r.mean_quality, r.n_langs)
-           for r in host_stats(pages).collect()}
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE p(url VARCHAR, text VARCHAR, lang VARCHAR)")
-    con.executemany("INSERT INTO p VALUES (?, ?, ?)",
-                    [(r.url, r.text, r.lang) for r in pages.collect()])
-    from gliner_spark.operators.textstats import EN_STOPWORDS
-
-    sw = "[" + ", ".join(f"'{w}'" for w in sorted(EN_STOPWORDS)) + "]"
-    oracle = {r[0]: r[1:] for r in con.execute(f"""
-WITH h AS (
-  SELECT lower(regexp_extract(url,
-           '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)', 1)) AS host,
-         length(text) AS chars, lang,
-         string_split(text, ' ') AS w
-  FROM p
-),
-q AS (
-  SELECT host, chars, lang,
-         ROUND(0.4 * least(len(w) / 50.0, 1.0)
-               + 0.3 * (1.0 - abs(
-                   CAST(len(list_filter(w, x -> list_contains({sw}, x)))
-                        AS DOUBLE) / len(w) - 0.4))
-               + 0.3 * CAST(len(list_distinct(w)) AS DOUBLE) / len(w),
-               4) AS quality
-  FROM h
-)
-SELECT host, CAST(COUNT(*) AS BIGINT), CAST(SUM(chars) AS BIGINT),
-       ROUND(AVG(quality), 4), CAST(COUNT(DISTINCT lang) AS BIGINT)
-FROM q GROUP BY host""").fetchall()}
-    assert got == oracle and len(got) > 1
-
-    # cap: skew-aware split ≡ naive window ≡ DuckDB ranking
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from gliner_spark.operators.textstats import quality_expr
-
-    capped = {r.url for r in cap_per_host(pages, 3).collect()}
-    w = Window.partitionBy("host").orderBy(
-        F.desc(quality_expr(F.col("text"))), F.col("url"))
-    naive = {
-        r.url
-        for r in with_url_parts(pages)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= 3).collect()
-    }
-    ducked = {r[0] for r in con.execute(f"""
-WITH h AS (
-  SELECT url, lower(regexp_extract(url,
-           '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)', 1)) AS host,
-         string_split(text, ' ') AS w
-  FROM p
-),
-q AS (
-  SELECT url, host,
-         ROUND(0.4 * least(len(w) / 50.0, 1.0)
-               + 0.3 * (1.0 - abs(
-                   CAST(len(list_filter(w, x -> list_contains({sw}, x)))
-                        AS DOUBLE) / len(w) - 0.4))
-               + 0.3 * CAST(len(list_distinct(w)) AS DOUBLE) / len(w),
-               4) AS quality
-  FROM h
-),
-r AS (SELECT url, ROW_NUMBER() OVER
-        (PARTITION BY host ORDER BY quality DESC, url) AS rn FROM q)
-SELECT url FROM r WHERE rn <= 3""").fetchall()}
-    assert capped == naive == ducked
-    # the hot-domain corpus actually exercises the over-cap branch
-    assert len(capped) < pages.count()
-    # collision safety: input already carrying a host column (e.g.
-    # with_url_parts output) must neither be ambiguous nor lose it
-    enriched = cap_per_host(with_url_parts(pages), 3)
-    assert "host" in enriched.columns
-    assert {r.url for r in enriched.collect()} == capped
-    pages.unpersist()
-
-
-def test_webstats_url_parts_port_query_fragment(spark):
-    """r6 ADVICE: the host capture must stop at ':', '?' and '#', not
-    just '/': path-less URLs were swallowing the query/fragment into
-    ``host`` and ports corrupted the tld — pinned here for every shape,
-    including that the port/query never leaks into path_depth."""
-    from gliner_spark.operators.webstats import with_url_parts
-
-    pages = spark.createDataFrame(
-        [
-            ("https://a.com?q=1",),
-            ("https://a.com#frag",),
-            ("https://a.com:8080/x",),
-            ("https://a.com:8080",),
-            ("https://b.example.org/x/y?q=1",),
-            ("https://plain.net",),
-        ],
-        "url string",
-    )
-    got = {
-        r.url: (r.host, r.tld, r.path_depth)
-        for r in with_url_parts(pages).collect()
-    }
-    assert got == {
-        "https://a.com?q=1": ("a.com", "com", 0),
-        "https://a.com#frag": ("a.com", "com", 0),
-        "https://a.com:8080/x": ("a.com", "com", 1),
-        "https://a.com:8080": ("a.com", "com", 0),
-        # query after a path segment stays in that segment (the split
-        # is on '/', matching the DuckDB twin), so depth counts it once
-        "https://b.example.org/x/y?q=1": ("b.example.org", "org", 2),
-        "https://plain.net": ("plain.net", "net", 0),
-    }
