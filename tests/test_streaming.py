@@ -183,58 +183,6 @@ def test_run_kg_stream_job_entrypoint(spark, tmp_path, monkeypatch):
     assert spark.read.parquet(f"{root}/mentions").count() > 0
 
 
-def test_stateful_streaming_dedup(spark, tmp_path):
-    """applyInPandasWithState: first-seen dedup must hold ACROSS
-    micro-batches (state store), not just within one."""
-    from pyspark.sql import types as T
-
-    from gliner_spark.streaming.dedup_stream import stream_distinct_documents
-
-    src = str(tmp_path / "docs")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    batch1 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha beta")], schema
-    )
-    batch2 = spark.createDataFrame(
-        [(4, "alpha beta"), (5, "epsilon zeta"), (6, "gamma delta")], schema
-    )
-    batch1.coalesce(1).write.parquet(src)
-    batch2.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(
-            T.StructType(
-                [
-                    T.StructField("doc_id", T.LongType()),
-                    T.StructField("text", T.StringType()),
-                ]
-            )
-        )
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(src)
-    )
-    q = (
-        stream_distinct_documents(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.read.parquet(out).collect()
-    by_text = {r.text: r.doc_id for r in rows}
-    assert len(rows) == 3  # three distinct texts, each emitted once
-    assert by_text["epsilon zeta"] == "5"
-    # first-seen: whichever batch arrived first owns the fingerprint;
-    # within a batch min doc_id wins
-    assert by_text["alpha beta"] in ("1", "4")
-    assert by_text["gamma delta"] in ("2", "6")
-
-
 def test_stream_admissions_matches_batch_admission(spark, tmp_path):
     """Streaming admission ≡ sequential batch admission: documents
     arriving across micro-batches produce the same verdicts and the
