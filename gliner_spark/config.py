@@ -49,8 +49,6 @@ class PipelineConfig:
     minhash_perms: int = 64
     lsh_bands: int = 16          # 16 bands × 4 rows
     shingle_k: int = 3           # char shingles
-    link_threshold: float = 0.60  # cosine threshold on span embeddings
-    embed_dim: int = 64          # hashing-trick surrogate embedding dim
 
     # skew handling: salt factor for hot join keys
     salt_buckets: int = 8
