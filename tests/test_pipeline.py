@@ -793,14 +793,16 @@ def test_admit_three_batches_pinned_verdicts_and_store(spark, tmp_path,
                           _ADMIT_VERDICTS + _ADMIT_VERDICTS[-1:]):
         texts.update(rows)
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        pinned = len(jsc.getPersistentRDDs())
+        # ids, not a count: the context cleaner may release an earlier
+        # test's garbage-collected pin while the batch is admitted
+        pinned = set(jsc.getPersistentRDDs())
         with _admission_spies() as seen:
             verdicts = dedup_admit_batch(df, store, threshold=0.78)
         sig_collects = [c for c in seen["driver_columns"] if "sig" in c]
         if driver_rows:
             assert seen["distributed"] == 0
             assert sig_collects == [["doc_id", "sig", "new"]]
-            assert len(jsc.getPersistentRDDs()) == pinned
+            assert set(jsc.getPersistentRDDs()) <= pinned
         else:
             assert seen["distributed"] == 1
             assert sig_collects == []
