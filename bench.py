@@ -544,8 +544,7 @@ def _write_bench_md(r: dict) -> None:
             "groupBy partial-aggregates map-side, so hot keys ship one "
             "row per map task already — the salted form is kept for "
             "aggregates partial agg cannot absorb (applyInPandas "
-            "groups), and build_kg only switches it on when the "
-            "hot-key probe fires.",
+            "groups), and build_kg aggregates its surfaces unsalted.",
             "",
         ]
     with open(os.path.join(REPO, "BENCH.md"), "w") as f:

@@ -50,7 +50,7 @@ class PipelineConfig:
     lsh_bands: int = 16          # 16 bands × 4 rows
     shingle_k: int = 3           # char shingles
 
-    # skew handling: salt factor for hot join keys
+    # skew handling: the salted surface aggregation perfbench times
     salt_buckets: int = 8
     hot_key_threshold: int = 10_000  # rows per key before salting kicks in
 

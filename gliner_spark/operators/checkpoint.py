@@ -129,8 +129,10 @@ def checkpoint_write(
     done = completed_partitions(spark, root, stage)
     todo = df.join(F.broadcast(done), PART_COL, "left_anti").persist()
     try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        todo.write.mode("overwrite").partitionBy(PART_COL).parquet(out_path)
+        # writer-scoped dynamic overwrite: the session's mode stays put
+        todo.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(PART_COL).parquet(out_path)
 
         # manifest rows: per-partition row counts = the metrics the north
         # rule asks to track (triples per partition etc.)

@@ -71,8 +71,9 @@ def entity_surfaces(mentions: DataFrame, salt_buckets: int = 0) -> DataFrame:
     guaranteed to spread over ``salt_buckets`` reducers in the first
     shuffle instead of landing on one. The salt is a pure function of
     row content (xxhash64 over doc_id + offset), so task retries are
-    deterministic. plans/kg.py enables this when its hot-key probe
-    fires (cfg.salt_buckets / cfg.hot_key_threshold)."""
+    deterministic. No plan enables it: on a count the salted form is
+    slower, since map-side partial aggregation already ships one row
+    per hot surface per map task (tools/salt_probe.py)."""
     if salt_buckets > 1:
         partial = mentions.groupBy(
             F.col("label"),

@@ -73,11 +73,10 @@ def write_table(
         return
     w = df.write.format(fmt).mode(mode)
     if partition_by:
-        # dynamic overwrite replaces only the partitions present in df
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        w = w.partitionBy(*partition_by)
+        # dynamic overwrite replaces only the partitions present in df;
+        # writer-scoped, so the session's mode stays as it was
+        w = w.option("partitionOverwriteMode", "dynamic").partitionBy(
+            *partition_by)
     w.save(target)
 
 

@@ -7,16 +7,17 @@ the 100 TB plan shape:
                                                 [no shuffle; pinned once]
         ├─ drop(rels) ──► mentions
         ├─ explode(rels) ──► triples            [no shuffle, no join]
-        └─ mentions groupBy surface ──► surfaces [small output; pinned]
+        └─ mentions groupBy surface ──► surfaces [small output]
                │
                ├─ ≤ DRIVER_ROWS surfaces: ONE bounded Arrow collect
                │  of (sid, label, surface, n_mentions, shingles, hashes)
                │    driver: MinHash kernel → bands (≤ DRIVER_ROWS
                │            candidate pairs) → exact Jaccard
                │            → union-find → nodes + entity map
-               │            (two LocalTableScans)
+               │            (two LocalTableScans; the nodes one
+               │            partition, so one file per label)
                │
-               └─ more: distributed tail
+               └─ more: surfaces pinned, distributed tail
                     MinHash stage → band join ──► links
                     CC iterations ──► entities ──► nodes + entity map
   triples × entity map (broadcast) ──► edges    [broadcast join: the
@@ -32,7 +33,11 @@ vocabulary, not corpus size. Up to ``util.DRIVER_ROWS`` distinct
 surfaces and as many LSH candidate pairs that tail is one driver pass
 (``lsh_links_local`` + ``union_find``) on the same JVM-computed shingles
 and hashes, with the same output as the distributed tail; past either
-bound the distributed plan runs (measurements: docs/SCALE.md). The tail
+bound the distributed plan runs (measurements: docs/SCALE.md). The
+surface count aggregation is not salted: map-side partial aggregation
+already ships one row per hot surface per map task
+(``tools/salt_probe.py``), and the band join's skew is bounded by
+``band_pairs``' ``max_bucket`` guard. The tail
 — surfaces → nodes + edges — is ``_nodes_and_edges``, shared with
 ``incremental.merge_kg_batch`` (which pairs its checkpointed mentions
 with the ``relations.extract_relations`` self-join). Checkpointing
@@ -80,9 +85,9 @@ class KgResult:
 
 def _linking_tail_local(surfaces: DataFrame, k: int, n_perms: int,
                         bands: int):
-    """(nodes, entity map) of the pinned ``surfaces`` computed on the
-    driver, or None when there are more than ``DRIVER_ROWS`` of them or
-    of their LSH candidate pairs.
+    """(nodes, entity map) of the ``surfaces`` computed on the driver,
+    or None when there are more than ``DRIVER_ROWS`` of them or of their
+    LSH candidate pairs.
 
     One bounded Arrow collect of ``surface_shingles``
     (``limit(DRIVER_ROWS + 1)``), then the distributed tail's steps on
@@ -111,7 +116,9 @@ def _linking_tail_local(surfaces: DataFrame, k: int, n_perms: int,
     ent_map = pa.table({"e_label": ents["label"],
                         "e_surface": ents["surface"], "entity_id": eid})
     spark = surfaces.sparkSession
-    return (local_table(spark, nodes, NODES_DDL),
+    # the nodes in one partition: at most DRIVER_ROWS driver-resident
+    # rows, written as one file per label instead of one per task
+    return (local_table(spark, nodes, NODES_DDL).coalesce(1),
             local_table(spark, ent_map, ENTITY_MAP_DDL))
 
 
@@ -123,15 +130,16 @@ def _nodes_and_edges(surfaces: DataFrame, triples: DataFrame,
     driver pass (``_linking_tail_local``), past either bound the
     distributed ``lsh_links`` → ``canonical_entities`` plan; the edges
     join the triples to the entity map either way."""
-    # pinned: read by the driver tail's bounded collect and, past the
-    # bound, again by the distributed tail's signature pass and entity
-    # join
-    surfaces = surfaces.persist()
     lsh = dict(k=cfg.shingle_k, n_perms=cfg.minhash_perms,
                bands=cfg.lsh_bands * 2)
-    try:
-        tail = _linking_tail_local(surfaces, **lsh)
-        if tail is None:
+    # the driver tail reads the surfaces once (its bounded collect), so
+    # they are not pinned for it
+    tail = _linking_tail_local(surfaces, **lsh)
+    if tail is None:
+        # pinned: the distributed tail's signature pass and entity join
+        # both read them
+        surfaces = surfaces.persist()
+        try:
             links = lsh_links(surfaces, **lsh)
             entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
             tail = nodes_table(entities), entities.select(
@@ -139,10 +147,9 @@ def _nodes_and_edges(surfaces: DataFrame, triples: DataFrame,
                 F.col("surface").alias("e_surface"),
                 "entity_id",
             )
-    finally:
-        # both tails have materialized everything they read of it
-        # (localCheckpoints, local tables)
-        surfaces.unpersist()
+        finally:
+            # the tail's localCheckpoints hold all it read of them
+            surfaces.unpersist()
     nodes, ent_map = tail
 
     # entity map is distinct surfaces → broadcast against triples
@@ -219,28 +226,9 @@ def build_kg(
             # both stages now read back from their checkpoints
             ner.unpersist()
 
-    # hot-key probe before the link-scoring shuffle (north rule: skewed
-    # domains salted): if any surface key exceeds hot_key_threshold
-    # mentions, the surface aggregation runs in the explicit two-phase
-    # salted form (identical output, hot keys spread over salt_buckets
-    # reducers). The probe is one cheap count-aggregation over the
-    # already-persisted mentions; downstream, LSH band-join skew is
-    # bounded separately by lsh_links' max_bucket guard (mega-buckets
-    # carry no signal and are dropped — the key-splitting analogue).
-    salt = 0
-    if cfg.salt_buckets > 1:
-        from ..operators.linking import surface_key
-        from ..operators.skew import hot_keys
-
-        probe = hot_keys(
-            mentions.select(surface_key().alias("sk")),
-            "sk",
-            cfg.hot_key_threshold,
-        )
-        if probe.take(1):
-            salt = cfg.salt_buckets
-    nodes, edges = _nodes_and_edges(
-        entity_surfaces(mentions, salt_buckets=salt), triples, cfg)
+    # the surface aggregation runs unsalted whatever the skew: a hot
+    # surface's partial count leaves each map task as one row
+    nodes, edges = _nodes_and_edges(entity_surfaces(mentions), triples, cfg)
 
     if checkpoint_root:
         nodes = checkpoint_write(

@@ -475,16 +475,13 @@ def test_curate_fused_plan_scans_at_most_twice(spark):
 
 
 def test_salted_surface_agg_identical_and_wired(spark):
-    """North-rule skew handling: on a corpus with a hot surface key the
-    KG plan's surface aggregation runs in the two-phase salted form
-    (cfg.salt_buckets, previously dead config) — links/nodes must be
-    IDENTICAL salted vs unsalted, and the salted plan must contain two
-    aggregation exchanges (partial by (label, surface, salt), final by
-    (label, surface)) instead of one."""
+    """``entity_surfaces``' two-phase salted form on a corpus with a hot
+    surface key: surfaces and links IDENTICAL salted vs unsalted, and the
+    salted plan wired as two aggregation exchanges (partial by (label,
+    surface, salt), final by (label, surface)) instead of one."""
     import io
     from contextlib import redirect_stdout
 
-    from gliner_spark.config import PipelineConfig
     from gliner_spark.operators.linking import (
         entity_surfaces,
         exact_jaccard_links,
@@ -521,19 +518,6 @@ def test_salted_surface_agg_identical_and_wired(spark):
         plain.explain("formatted")
     assert buf2.getvalue().count("Exchange (") == 1
 
-    # end-to-end wiring: build_kg with a firing hot-key probe must match
-    # the unsalted build on nodes (pages corpus reused from other tests)
-    pages = synthesize_pages(spark, 150).persist()
-    cfg_hot = PipelineConfig(salt_buckets=8, hot_key_threshold=2)
-    cfg_off = PipelineConfig(salt_buckets=0)
-    node_cols = ["entity_id", "canonical", "label", "n_mentions",
-                 "n_surfaces"]
-    kg_a = build_kg(pages, ALL_LABELS, cfg=cfg_hot)
-    kg_b = build_kg(pages, ALL_LABELS, cfg=cfg_off)
-    assert sorted(map(tuple, kg_a.nodes.select(*node_cols).collect())) == \
-        sorted(map(tuple, kg_b.nodes.select(*node_cols).collect()))
-    pages.unpersist()
-
 
 def test_materialize_kg_partition_layout_and_pruning(spark, tmp_path):
     """materialize_kg writes nodes partitioned by label / edges by pred
@@ -567,6 +551,107 @@ def test_materialize_kg_partition_layout_and_pruning(spark, tmp_path):
     edges_back = spark.read.parquet(targets["edges"])
     assert edges_back.count() == kg.edges.count()
     assert sorted(edges_back.columns) == sorted(kg.edges.columns)
+
+
+@contextmanager
+def _persist_spy():
+    """Records every DataFrame ``persist`` call made in the block."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    persisted = []
+    persist = DataFrame.persist
+
+    def spy(self, *a, **kw):
+        persisted.append(self)
+        return persist(self, *a, **kw)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrame, "persist", spy)
+        yield persisted
+
+
+def _is_pinned(df) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
+def test_build_kg_driver_tail_pins_ner_only_and_writes_one_node_file(
+        spark, tmp_path, monkeypatch):
+    """On the driver linking tail build_kg pins only its NER pass (the
+    surfaces are read once, by the bounded collect), its nodes are one
+    partition, and materialize_kg writes one nodes file per label. Past
+    the bound the distributed tail pins the surfaces and releases them
+    before build_kg returns."""
+    import os
+
+    from gliner_spark.operators.sinks import materialize_kg
+    from gliner_spark.plans import kg as kg_mod
+
+    pages = synthesize_pages(spark, 120)
+    # an earlier build_kg of this corpus may still hold the same NER pin
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    # ids, not a count: the context cleaner may release an earlier
+    # test's garbage-collected pin during the call
+    before = set(jsc.getPersistentRDDs())
+    with _persist_spy() as persisted:
+        kg = build_kg(pages, ALL_LABELS)
+    new_rdds = set(jsc.getPersistentRDDs()) - before
+    try:
+        assert len(persisted) == 1 and _is_pinned(persisted[0])  # NER
+        assert len(new_rdds) == 1
+        assert "LocalTableScan" in kg.nodes._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert kg.nodes.rdd.getNumPartitions() == 1
+        nodes_dir = materialize_kg(kg, str(tmp_path / "kg"))["nodes"]
+        labels = [d for d in os.listdir(nodes_dir) if d.startswith("label=")]
+        assert labels
+        for d in labels:
+            files = os.listdir(os.path.join(nodes_dir, d))
+            assert sum(f.endswith(".parquet") for f in files) == 1, d
+    finally:
+        for df in persisted:
+            df.unpersist()
+
+    monkeypatch.setattr(kg_mod, "DRIVER_ROWS", 0)
+    with _persist_spy() as persisted:
+        build_kg(pages, ALL_LABELS)
+    try:
+        ner, surfaces = persisted[:2]
+        assert "rels" in ner.columns and "sid" in surfaces.columns
+        assert _is_pinned(ner) and not _is_pinned(surfaces)
+    finally:
+        for df in persisted:
+            df.unpersist()
+
+
+def test_write_table_keeps_session_overwrite_mode(spark, tmp_path):
+    """Partitioned writes replace only the partitions they carry without
+    switching the session's partitionOverwriteMode: a later write in the
+    same session keeps whatever mode the session had."""
+    from gliner_spark.operators.sinks import write_table
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        df = spark.range(12).select("id", (F.col("id") % 3).alias("side"))
+        tgt = str(tmp_path / "t")
+        write_table(df, tgt, partition_by=["side"])
+        assert spark.conf.get(key) == "static"
+        # overwrite with side 0 only: sides 1 and 2 stay
+        write_table(df.where("side = 0").withColumn("id", F.col("id") + 100),
+                    tgt, partition_by=["side"])
+        assert spark.conf.get(key) == "static"
+        back = {(r.id, r.side) for r in spark.read.parquet(tgt).collect()}
+        assert back == {(i + 100 * (i % 3 == 0), i % 3) for i in range(12)}
+
+        ck = with_part_key(df.select(F.col("id").cast("string")
+                                     .alias("doc_id")), "doc_id")
+        checkpoint_write(ck, str(tmp_path / "ck"), "stage")
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_connected_components_warns_when_unconverged():
@@ -1080,20 +1165,18 @@ def _tail_mentions(case, seed):
             for i, (lab, text) in enumerate(seq)]
 
 
-@pytest.mark.parametrize("case,seed,salted", [
-    ("random", 1, False), ("random", 2, False), ("random", 3, False),
-    ("random", 4, True), ("chain", 0, False), ("shared_surface", 0, False),
-    ("j_exactly_0.3", 0, False), ("oversized_bucket", 0, False),
+@pytest.mark.parametrize("case,seed", [
+    ("random", 1), ("random", 2), ("random", 3), ("random", 4),
+    ("chain", 0), ("shared_surface", 0), ("j_exactly_0.3", 0),
+    ("oversized_bucket", 0),
 ])
 def test_build_kg_driver_tail_equals_distributed(spark, monkeypatch, case,
-                                                 seed, salted):
+                                                 seed):
     """build_kg's nodes and edges (schema and rows) are the same whether
     its linking tail runs as one driver pass (default bound) or
-    distributed (bound 0): on random vocabularies, with the salted
-    surface aggregation, across a transitive chain, a surface shared by
-    two labels, a pair at exactly J = 3/10 and a band bucket over
-    max_bucket."""
-    from gliner_spark.config import PipelineConfig
+    distributed (bound 0): on random vocabularies, across a transitive
+    chain, a surface shared by two labels, a pair at exactly J = 3/10
+    and a band bucket over max_bucket."""
     from gliner_spark.plans import kg as kg_mod
 
     spans: dict = {}
@@ -1107,12 +1190,10 @@ def test_build_kg_driver_tail_equals_distributed(spark, monkeypatch, case,
             emit(list(spans), list(spans.values())), schema)
 
     monkeypatch.setattr(kg_mod, "_ner_stage", ner_stage)
-    cfg = (PipelineConfig(salt_buckets=8, hot_key_threshold=2) if salted
-           else PipelineConfig())
     got = {}
     for bound in (kg_mod.DRIVER_ROWS, 0):
         monkeypatch.setattr(kg_mod, "DRIVER_ROWS", bound)
-        kg = kg_mod.build_kg(None, ALL_LABELS, cfg=cfg)
+        kg = kg_mod.build_kg(None, ALL_LABELS)
         local = "LocalTableScan" in kg.nodes._jdf.queryExecution() \
             .executedPlan().toString()
         assert local == (bound > 0)  # each bound ran its own tail

@@ -77,6 +77,38 @@ def band_join_check(name: str, plan: str) -> bool:
     return ok
 
 
+def kg_jobs_check(spark, docs) -> bool:
+    """Counts the Spark jobs of one driver-tail ``build_kg`` +
+    ``materialize_kg`` run under its own job group (once per session:
+    the tracker keeps a group's finished jobs)."""
+    import shutil
+    import tempfile
+
+    from gliner_spark.operators.sinks import materialize_kg
+    from gliner_spark.plans.kg import build_kg
+
+    sc, group = spark.sparkContext, "explain_plans.kg"
+    out = tempfile.mkdtemp(prefix="gs_plan_kg_")
+    spark.catalog.clearCache()  # an earlier build_kg's NER pin
+    sc.setJobGroup(group, "build_kg + materialize_kg")
+    try:
+        kg = build_kg(docs, SOUP_LABELS, id_col="doc_id")
+        materialize_kg(kg, out)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        n_parts = kg.nodes.rdd.getNumPartitions()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        spark.catalog.clearCache()
+        shutil.rmtree(out, ignore_errors=True)
+    ok_jobs, ok_parts = n_jobs <= 10, n_parts == 1
+    print("\n=== build_kg + materialize_kg (driver tail, job count) ===")
+    print(f"  [{'OK ' if ok_jobs else 'BAD'}] <= 10 jobs -> {n_jobs}")
+    print(f"  [{'OK ' if ok_parts else 'BAD'}] nodes plan is one partition "
+          f"-> {n_parts}")
+    return ok_jobs and ok_parts
+
+
 def main() -> int:
     spark = build_session(cores=8)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -189,6 +221,11 @@ def main() -> int:
     if not ok4c:
         print(p)
     bad += not ok4c
+
+    # 4d. the driver-tail build_kg + materialize_kg job runs only the
+    # Spark jobs it needs (no hot-key probe, no surfaces pin), and its
+    # nodes are one partition (one file per label directory)
+    bad += not kg_jobs_check(spark, docs)
 
     # 5. bpe token counting: pure Catalyst (regexp_extract_all inside
     # codegen — zero Python stage)

@@ -1,9 +1,9 @@
 """Skew probe: salted vs unsalted execution on a 30%-hot-key corpus.
 
-VERDICT r3 #8: the salted paths (plans/kg.py hot-key-probe surface
-aggregation; skew.salted_equi_join for the north rule's "skewed domains
-are salted before the link-scoring shuffle") are correctness-tested but
-the bench corpus never stresses them. This probe synthesizes a corpus
+VERDICT r3 #8: the salted paths (the salted surface aggregation of
+``linking.entity_surfaces``; skew.salted_equi_join for the north rule's
+"skewed domains are salted before the link-scoring shuffle") are
+correctness-tested but the bench corpus never stresses them. This probe synthesizes a corpus
 where ONE key carries 30% of all rows and measures, per variant:
 
 - wall-clock,
