@@ -155,12 +155,11 @@ def q_kg_links_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_links_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # EXACT oracle: same hashing-trick ±1 gram-vote embedding + cosine
-    # as the production lsh_cosine_links, but with the 60-bit md5-fold
-    # gram hash (SQL-reproducible) over exact-verified Jaccard blocking
-    # — every stage has a DuckDB form, so the hash gate finally sees the
-    # whole linking math. The FNV + MinHash-LSH production variant stays
-    # pytest-pinned (tests/test_linking.py).
+    # EXACT oracle: hashing-trick ±1 gram-vote embedding (60-bit
+    # md5-fold gram hash, SQL-reproducible) + cosine over exact-verified
+    # Jaccard blocking — every stage has a DuckDB form, so the hash gate
+    # sees the whole linking math (embed.cosine_links_md5, the one
+    # implementation).
     from gliner_spark.operators.embed import cosine_links_md5
 
     # surfaces materialized once (guide §2.4): it feeds the Jaccard

@@ -16,8 +16,6 @@ columns with typed metadata, processed by Arrow-batched pandas stages.
   split) emitting integer moment features (dims, per-channel sums,
   sum-of-squares — integers, so the DuckDB oracle matches bit-for-bit);
   audio/video emit raw byte moments. No media wheels required.
-- ``media_embeddings``: byte-hash embedding (fixed-width float vector
-  per blob) — the embedding-shaped contract an image-encoder stage has.
 - ``sample_frames``: frame-sampling plumbing for video-like payloads:
   slices the blob into fixed-size "frames", keeps every n-th — shows the
   explode/row-count-amplification pattern without a codec.
@@ -167,47 +165,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in MOMENTS_SCHEMA])
 
     return ensure_parallelism(media).mapInPandas(run, schema=MOMENTS_SCHEMA)
-
-
-def _hash_embed(blob: bytes, dim: int) -> np.ndarray:
-    """Deterministic byte-hash embedding: folds byte windows into a
-    fixed-width float vector — the embedding-shaped contract an
-    image-encoder/audio-fingerprint stage has (swap in a real encoder;
-    the Spark-side contract bytes → float32[dim] is identical)."""
-    if not blob:
-        return np.zeros(dim, dtype=np.float32)
-    arr = np.frombuffer(blob, dtype=np.uint8)
-    idx = np.arange(arr.size)
-    out = np.zeros(dim, dtype=np.float64)
-    np.add.at(out, idx % dim, (arr.astype(np.float64) - 127.5) / 128.0)
-    return (out / max(1.0, arr.size / dim)).astype(np.float32)
-
-
-EMBED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def media_embeddings(media: DataFrame, dim: int = 16) -> DataFrame:
-    """Arrow-batched fixed-width embedding per blob (see _hash_embed)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
-        for pdf in batches:
-            feats = [_hash_embed(b, dim).tolist() for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "kind": pdf["kind"],
-                    "feature": feats,
-                }
-            )
-
-    return ensure_parallelism(media).mapInPandas(run, schema=EMBED_SCHEMA)
 
 
 def sample_frames(media: DataFrame, frame_bytes: int = 32,

@@ -17,8 +17,8 @@ Who pairs with which implementation:
 
 - ``pair_spans`` (this module), in the NER stage
   (``operators/ner._ner_stage``, only the emitter differs):
-  ``extract_triples_fused`` (the ``ner_triples_fused`` query, the
-  ``entry()`` flagship, ``streaming/ner_stream.stream_triples``);
+  ``extract_triples_fused`` (the ``ner_triples_fused`` query and the
+  ``entry()`` flagship);
   ``plans/kg.build_kg`` through ``mention_relations``, whose mention
   rows carry the relations they are the subject of (schema
   ``MENTION_RELATIONS``); and ``relations_for_doc`` for one document.

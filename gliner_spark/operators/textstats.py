@@ -285,43 +285,3 @@ def bigram_lm_scores(
         F.col("n_bigrams").cast("long").alias("n_bigrams"),
         "avg_nll",
     ).unionByName(no_bigrams)
-
-
-# PII patterns kept in the RE2 ∩ Java-regex subset (no lookaround), so
-# the DuckDB twin in tests runs the LITERAL same patterns
-PII_PATTERNS = [
-    # (name, pattern, replacement) — applied in order; emails first so
-    # their digits can't be half-eaten by the looser phone pattern
-    ("emails", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-     "<EMAIL>"),
-    ("ips", r"\b(\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-    ("phones", r"\+?\d[\d\- ][\d\- ]{6,}\d", "<PHONE>"),
-]
-
-
-def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """(doc_id, text_clean, n_emails, n_ips, n_phones): Dolma-style PII
-    redaction — emails, IPv4s and phone-like digit runs replaced with
-    typed placeholder tokens, counts per category. Row-local pure
-    Catalyst (regexp_replace / regexp_extract_all inside codegen, no
-    Python stage, no shuffle); each category counts on the text AFTER
-    the previous replacements, exactly matching what got redacted.
-
-    The patterns are deliberately simple, high-recall forms (the ones
-    production pipelines start from — cf. Dolma's PII taggers); being a
-    data column transform, swapping stricter patterns is config, not
-    architecture."""
-    cur = F.col(text_col)
-    counts = {}
-    for name, pat, rep in PII_PATTERNS:
-        counts[name] = F.size(F.regexp_extract_all(cur, F.lit(pat), 0)) \
-            .cast("long")
-        cur = F.regexp_replace(cur, pat, rep)
-    return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        cur.alias("text_clean"),
-        counts["emails"].alias("n_emails"),
-        counts["ips"].alias("n_ips"),
-        counts["phones"].alias("n_phones"),
-    )

@@ -18,6 +18,8 @@ nodes/edges are rewritten per micro-batch from the merged
 a new surface can bridge two previously separate components
 (plans/incremental.py); the rewrite cost is bounded by vocabulary, not
 corpus size.
+
+``read_page_stream`` opens the page stream the fold consumes.
 """
 
 from __future__ import annotations
@@ -25,10 +27,23 @@ from __future__ import annotations
 import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from ..config import PipelineConfig
 from ..plans.incremental import merge_kg_batch
+from ..schemas import PAGES
+
+
+def read_page_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int = 8
+) -> DataFrame:
+    """``readStream`` over a directory of page parquet files, at most
+    ``max_files_per_trigger`` new files per micro-batch."""
+    return (
+        spark.readStream.schema(PAGES)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(path)
+    )
 
 
 def stream_kg_updates(

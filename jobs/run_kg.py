@@ -40,7 +40,6 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("gliner-kg").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     from gliner_spark.kernels.scorer import ALL_LABELS
     from gliner_spark.operators.sinks import materialize_kg

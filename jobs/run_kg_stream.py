@@ -61,11 +61,12 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("gliner-kg-stream").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     from gliner_spark.kernels.scorer import ALL_LABELS
-    from gliner_spark.streaming.kg_stream import stream_kg_updates
-    from gliner_spark.streaming.ner_stream import read_page_stream
+    from gliner_spark.streaming.kg_stream import (
+        read_page_stream,
+        stream_kg_updates,
+    )
 
     labels = args.labels.split(",") if args.labels else ALL_LABELS
     pages = read_page_stream(

@@ -137,14 +137,14 @@ def test_from_pretrained_real_onnx_export_dir(tmp_path, spark):
     """The reference README's consumption flow with REAL files and zero
     mocks: a model directory (gliner_config.json + tokenizer.json +
     onnx/model.onnx) where model.onnx is a genuine protobuf built by
-    kernels/onnx_rt, executed by the bundled numpy session inside
+    tests/tiny_onnx.py, executed by the bundled numpy session inside
     OnnxScorer — local inference() AND the Spark inference_df() path
     both reproduce the Kyiv golden from the export dir alone."""
     import json
     import os
     import shutil
 
-    from gliner_spark.kernels.onnx_rt import build_tiny_gliner_model
+    from tiny_onnx import build_tiny_gliner_model
 
     d = tmp_path / "export"
     os.makedirs(d / "onnx")

@@ -213,12 +213,12 @@ def test_chunking_overlap_contract_pinned():
 
 
 def _tiny_onnx_scorer(tmp_path, token_level):
-    """OnnxScorer over a real tiny GLiNER graph (kernels/onnx_rt.py) with
+    """OnnxScorer over a real tiny GLiNER graph (tests/tiny_onnx.py) with
     single-word Kyiv→city / Ukraine→country semantics; ids are those of
     tests/fixtures/wordpiece_tokenizer.json."""
     import os
 
-    from gliner_spark.kernels.onnx_rt import build_tiny_gliner_model
+    from tiny_onnx import build_tiny_gliner_model
     from gliner_spark.kernels.scorer import OnnxScorer
 
     path = build_tiny_gliner_model(

@@ -338,31 +338,6 @@ def test_onnx_scorer_feed_contract_with_mock_session():
 
 
 @settings(max_examples=100, deadline=None)
-@given(st.lists(st.text(max_size=12), max_size=6))
-def test_embed_texts_property_matches_scalar_reference(texts):
-    """Vectorized batch embedding ≡ the scalar FNV-1a formula for
-    arbitrary unicode inputs (incl. empty strings and surrogate-free
-    astral chars)."""
-    from gliner_spark.operators.dedup import hash_str_64
-    from gliner_spark.operators.embed import embed_texts
-
-    got = embed_texts(texts, dim=8, k=3)
-    assert got.shape == (len(texts), 8)
-    for t, row in zip(texts, got):
-        ref = np.zeros(8)
-        grams = (
-            {t[i:i + 3] for i in range(max(1, len(t) - 2))} if t else set()
-        )
-        for g in grams:
-            h = hash_str_64(g)
-            ref[h % 8] += 1.0 if (h >> 63) & 1 == 0 else -1.0
-        n = np.linalg.norm(ref)
-        if n:
-            ref /= n
-        assert np.allclose(row, ref.astype(np.float32), atol=1e-6)
-
-
-@settings(max_examples=100, deadline=None)
 @given(st.lists(st.lists(st.integers(-(2**63), 2**63 - 1), max_size=7),
                 min_size=1, max_size=5))
 def test_simhash_vote_property(hash_lists):

@@ -1,6 +1,9 @@
 """Layout guards, on the AST alone (no Spark, no package import): every
 module under ``gliner_spark/`` is reachable from a production entry
-point, and every config field is read somewhere outside ``config.py``.
+point, every public top-level function or class is used by one (or
+allowlisted below), every config field is read somewhere outside
+``config.py``, and every package import in the scripts names something
+that exists.
 
 Production roots are the 50-query driver entry, the jobs, the two bench
 scripts, the benchmark package and the public API. ``tests/`` and
@@ -120,3 +123,149 @@ def test_every_config_field_is_read():
         if name not in read
     )
     assert not unread, f"config fields nothing reads: {unread}"
+
+
+# Public functions no production root reaches, kept on purpose. Each
+# entry must be otherwise unused; one that gains a production caller
+# comes off this list.
+TEST_ONLY_KEPT = {
+    "operators.checkpoint.compact_manifest":
+        "maintenance entry point: folds manifest part files into one",
+    "operators.checkpoint.manifest_file_count":
+        "maintenance entry point: tells when compaction is due",
+    "operators.sinks.read_published":
+        "read entry point for publish_atomic tables (run_kg_stream docs)",
+    "operators.sinks.published_snapshot":
+        "read entry point: pins one published version for a reader",
+    "operators.dedup.ngram_prefix_dropped_buckets":
+        "guard audit: buckets the prefix-filter skew guard dropped",
+    "sources.pages.verify_extraction":
+        "invariant check: stored page text equals its HTML extraction",
+    "operators.dedup.hash_str_64":
+        "reference FNV hash behind _simhash64, the kernel tests pin",
+    "operators.similarity.embedding_dup_pairs":
+        "exact reference form the LSH recall test checks against",
+}
+
+
+def _refs(node: ast.AST) -> set[str]:
+    """Every name ``node`` may refer to: names, attribute names,
+    imported names, and identifier-shaped string constants (so that a
+    lookup by name, ``getattr`` or a name-keyed table, counts)."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier()):
+            out.add(n.value)
+    return out
+
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _live_and_public(
+    kept: set[str],
+) -> tuple[set[str], set[tuple[str, str]]]:
+    """Names live from the production roots, with ``kept`` counted as
+    live, and every public top-level def/class of the non-root package
+    modules as (name, dotted home).
+
+    Roots count whole; a package module's top-level statements other
+    than defs run on import, so they count too. A def is live once its
+    name is, and then its body's names are. Names are bare, so a name
+    shared by two modules keeps both: the scan errs on the live side."""
+    roots = set(_roots())
+    live = set(kept)
+    defs: dict[str, list[ast.AST]] = {}
+    public: set[tuple[str, str]] = set()
+    for f in sorted(_reachable()):
+        tree = ast.parse(f.read_text(), str(f))
+        if f in roots:
+            live |= _refs(tree)
+            continue
+        for s in tree.body:
+            if isinstance(s, _DEFS):
+                defs.setdefault(s.name, []).append(s)
+                if not s.name.startswith("_"):
+                    public.add((s.name, f"{_module_name(f)}.{s.name}"))
+            else:
+                live |= _refs(s)
+    todo = [n for n in defs if n in live]
+    while todo:
+        for s in defs.pop(todo.pop(), ()):
+            new = _refs(s) - live
+            live |= new
+            todo.extend(n for n in new if n in defs)
+    return live, public
+
+
+def test_every_public_function_is_used():
+    kept = {k.rsplit(".", 1)[1] for k in TEST_ONLY_KEPT}
+    live, public = _live_and_public(kept)
+    dead = sorted(home for name, home in public if name not in live)
+    assert not dead, f"no production path uses {dead}"
+
+    # the allowlist holds only real, otherwise-unused functions
+    bare, _ = _live_and_public(set())
+    stale = sorted(
+        k for k in TEST_ONLY_KEPT
+        if (k.rsplit(".", 1)[1], f"{PKG}.{k}") not in public
+        or k.rsplit(".", 1)[1] in bare
+    )
+    assert not stale, f"allowlisted but used or missing: {stale}"
+
+
+def _bound_names(f: Path) -> set[str]:
+    """Names ``f`` binds at module level: defs, classes, imports and
+    assignment targets, including those inside top-level if/try/with."""
+    out: set[str] = set()
+    todo = list(ast.parse(f.read_text(), str(f)).body)
+    while todo:
+        n = todo.pop()
+        if isinstance(n, _DEFS):
+            out.add(n.name)
+            continue
+        if isinstance(n, ast.alias):
+            out.add((n.asname or n.name).split(".")[0])
+        elif isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+            out.add(n.id)
+        todo.extend(ast.iter_child_nodes(n))
+    return out
+
+
+def test_script_package_imports_resolve():
+    """Scripts no test imports (``tools/``) would break silently when a
+    package function moves or goes; every ``gliner_spark`` import they
+    make must name a module or a name that module binds."""
+    scripts = [
+        REPO / "__spark_entry__.py", REPO / "bench.py",
+        REPO / "bench_extra.py",
+        *sorted((REPO / "jobs").glob("*.py")),
+        *sorted((REPO / "tools").glob("*.py")),
+    ]
+    broken = []
+    for f in scripts:
+        for n in ast.walk(ast.parse(f.read_text(), str(f))):
+            if isinstance(n, ast.Import):
+                broken += [
+                    f"{f.name}: import {a.name}" for a in n.names
+                    if a.name.split(".")[0] == PKG
+                    and _module_file(a.name) is None
+                ]
+            elif (isinstance(n, ast.ImportFrom) and not n.level
+                  and n.module and n.module.split(".")[0] == PKG):
+                mod = _module_file(n.module)
+                names = _bound_names(mod) if mod is not None else set()
+                broken += [
+                    f"{f.name}: from {n.module} import {a.name}"
+                    for a in n.names
+                    if a.name not in names
+                    and _module_file(f"{n.module}.{a.name}") is None
+                ]
+    assert not broken, f"imports of names that do not exist: {broken}"

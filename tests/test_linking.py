@@ -216,77 +216,6 @@ def test_star_cc_matches_hashmin(spark):
     assert small_path == iter_path and "solo" not in small_path
 
 
-def test_embeddings_and_cosine_links(spark):
-    import numpy as np
-
-    from gliner_spark.operators.embed import (
-        cosine_links,
-        embed_surfaces,
-        embed_text,
-        lsh_cosine_links,
-    )
-
-    # kernel determinism + self-similarity
-    # vectorized batch kernel must equal the single-string reference
-    # (same FNV-1a hashes, same ±1 scatter, same normalization)
-    import numpy as np
-
-    from gliner_spark.operators.dedup import hash_str_64
-    from gliner_spark.operators.embed import embed_texts
-
-    for t in ["big data", "données", "", "ab", "你好世界, नमस्ते"]:
-        got = embed_texts([t], dim=16, k=3)[0]
-        ref = np.zeros(16)
-        grams = {t[i:i + 3] for i in range(max(1, len(t) - 2))} if t else set()
-        for g in grams:
-            h = hash_str_64(g)
-            ref[h % 16] += 1.0 if (h >> 63) & 1 == 0 else -1.0
-        n = np.linalg.norm(ref)
-        if n:
-            ref /= n
-        assert np.allclose(got, ref.astype(np.float32))
-
-    v1, v2 = embed_text("new york"), embed_text("new york")
-    assert np.allclose(v1, v2) and abs(np.linalg.norm(v1) - 1.0) < 1e-5
-    # related strings score far above unrelated ones
-    sim_rel = float(embed_text("new york") @ embed_text("new york city"))
-    sim_unrel = float(embed_text("new york") @ embed_text("kyiv"))
-    assert sim_rel > 0.5 > sim_unrel
-
-    surfaces = _surfaces(spark, SURF_ROWS)
-    emb = embed_surfaces(surfaces)
-    rows = emb.collect()
-    assert len(rows) == len(SURF_ROWS)
-    assert all(len(r.embedding) == 64 for r in rows)
-
-    cand = spark.createDataFrame(
-        [
-            ("city:new york", "city:new york city"),
-            ("city:kyiv", "city:new york"),
-        ],
-        "src string, dst string",
-    )
-    links = {(r.src, r.dst): r.cos for r in
-             cosine_links(surfaces, cand, threshold=0.5).collect()}
-    assert ("city:new york", "city:new york city") in links
-    assert ("city:kyiv", "city:new york") not in links
-
-
-def test_lsh_cosine_links_on_mentions(spark):
-    from gliner_spark.kernels.scorer import SOUP_LABELS
-    from gliner_spark.operators.embed import lsh_cosine_links
-    from gliner_spark.operators.ner import extract_mentions
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    mentions = extract_mentions(docs, SOUP_LABELS, id_col="doc_id")
-    links = lsh_cosine_links(mentions, threshold=0.5).collect()
-    pairs = {(r.src, r.dst) for r in links}
-    # phrase ↔ head-noun pairs must link ("big data" ~ "data", …)
-    assert ("concept:big data", "concept:data") in pairs or (
-        "concept:data", "concept:big data"
-    ) in pairs
-
-
 def minhash_signature_agg(hashed_exploded, id_cols, n_perms: int,
                           seed: int):
     """Reference MinHash: explode + map-side-combined min aggregation,

@@ -16,12 +16,8 @@ import os
 import numpy as np
 import pytest
 
-from gliner_spark.kernels.onnx_rt import (
-    MiniOnnxSession,
-    build_tiny_gliner_model,
-    parse_model,
-    serialize_model,
-)
+from gliner_spark.kernels.onnx_rt import MiniOnnxSession, parse_model
+from tiny_onnx import build_tiny_gliner_model, serialize_model
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 WP = os.path.join(FIX, "wordpiece_tokenizer.json")
@@ -95,10 +91,8 @@ def test_tensor_codec_roundtrip_property():
     from hypothesis import strategies as st
     from hypothesis.extra.numpy import array_shapes, arrays
 
-    from gliner_spark.kernels.onnx_rt import (
-        tensor_from_bytes,
-        tensor_to_bytes,
-    )
+    from gliner_spark.kernels.onnx_rt import tensor_from_bytes
+    from tiny_onnx import tensor_to_bytes
 
     dtypes = st.sampled_from([np.float32, np.float64, np.int32, np.int64,
                               np.bool_])

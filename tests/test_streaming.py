@@ -1,17 +1,11 @@
-"""Streaming NER: parity with the batch operator over the same files."""
+"""Streaming KG maintenance and admission: parity with batch runs over
+the same files, and the streaming job entrypoint."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from gliner_spark.kernels.scorer import ALL_LABELS
-from gliner_spark.operators.ner import extract_mentions
 from gliner_spark.sources.pages import synthesize_pages
-from gliner_spark.streaming.ner_stream import (
-    read_page_stream,
-    run_to_table,
-    stream_hourly_mentions,
-    stream_mentions,
-)
+from gliner_spark.streaming.kg_stream import read_page_stream
 
 
 @pytest.fixture(scope="session")
@@ -23,86 +17,6 @@ def spark():
     s.stop()
 
 
-def test_stream_mentions_matches_batch(spark, tmp_path):
-    src = str(tmp_path / "pages")
-    out = str(tmp_path / "mentions_out")
-    ckpt = str(tmp_path / "ckpt")
-    pages = synthesize_pages(spark, 150)
-    pages.repartition(4).write.parquet(src)
-
-    batch = extract_mentions(spark.read.parquet(src), ALL_LABELS)
-    expected = sorted(
-        (r.doc_id, r.m_start, r.m_end, r.m_text, r.label)
-        for r in batch.collect()
-    )
-
-    stream = stream_mentions(read_page_stream(spark, src), ALL_LABELS)
-    assert stream.isStreaming
-    run_to_table(stream, out, ckpt)
-    got = sorted(
-        (r.doc_id, r.m_start, r.m_end, r.m_text, r.label)
-        for r in spark.read.parquet(out).collect()
-    )
-    assert got == expected and len(got) > 0
-
-    # incremental restart: new files only (resume from stream checkpoint)
-    synthesize_pages(spark, 40).withColumn(
-        "url", F.concat(F.lit("b-"), F.col("url"))
-    ).write.mode("append").parquet(src)
-    run_to_table(
-        stream_mentions(read_page_stream(spark, src), ALL_LABELS), out, ckpt
-    )
-    n_after = spark.read.parquet(out).count()
-    assert n_after > len(got)
-    # no duplicated processing of the original files
-    n_batch_all = extract_mentions(spark.read.parquet(src), ALL_LABELS).count()
-    assert n_after == n_batch_all
-
-
-def test_stream_triples_matches_batch(spark, tmp_path):
-    """The fused pages→triples flagship is stateless, so the streaming
-    run over the same files must equal the batch run exactly."""
-    from gliner_spark.operators.ner_fused import extract_triples_fused
-    from gliner_spark.streaming.ner_stream import stream_triples
-
-    src = str(tmp_path / "pages3")
-    out = str(tmp_path / "triples_out")
-    ckpt = str(tmp_path / "ckpt3")
-    synthesize_pages(spark, 120).repartition(3).write.parquet(src)
-
-    batch = sorted(
-        tuple(r) for r in extract_triples_fused(
-            spark.read.parquet(src), ALL_LABELS
-        ).collect()
-    )
-    stream = stream_triples(read_page_stream(spark, src), ALL_LABELS)
-    assert stream.isStreaming
-    run_to_table(stream, out, ckpt)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert got == batch and len(got) > 0
-
-
-def test_stream_windowed_counts(spark, tmp_path):
-    src = str(tmp_path / "pages2")
-    synthesize_pages(spark, 100).write.parquet(src)
-    agg = stream_hourly_mentions(read_page_stream(spark, src), ALL_LABELS)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("hourly_mentions")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("select * from hourly_mentions").collect()
-    assert rows
-    total_stream = sum(r.n_mentions for r in rows)
-    total_batch = extract_mentions(
-        spark.read.parquet(src), ALL_LABELS
-    ).count()
-    assert total_stream == total_batch
-
-
 def test_stream_kg_updates_matches_batch_build(spark, tmp_path):
     """Continuous KG maintenance: pages arriving across micro-batches
     fold into node/edge tables IDENTICAL to a from-scratch batch build
@@ -111,7 +25,6 @@ def test_stream_kg_updates_matches_batch_build(spark, tmp_path):
     idempotent (merge_kg_batch)."""
     from gliner_spark.plans.kg import build_kg
     from gliner_spark.streaming.kg_stream import stream_kg_updates
-    from gliner_spark.streaming.ner_stream import read_page_stream
 
     src = str(tmp_path / "pages_kg")
     root = str(tmp_path / "kg_root")
@@ -174,8 +87,17 @@ def test_run_kg_stream_job_entrypoint(spark, tmp_path, monkeypatch):
         "run_kg_stream.py", "--input", src, "--output", out,
         "--checkpoint-root", root, "--max-files-per-trigger", "1",
     ])
-    runpy.run_path(os.path.join(repo, "jobs/run_kg_stream.py"),
-                   run_name="__main__")
+    # the job must not switch the session's overwrite mode: its
+    # partitioned writers set dynamic overwrite on their own writers
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        runpy.run_path(os.path.join(repo, "jobs/run_kg_stream.py"),
+                       run_name="__main__")
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
 
     nodes = read_published(spark, f"{out}/nodes")
     edges = read_published(spark, f"{out}/edges")

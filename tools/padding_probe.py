@@ -28,6 +28,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))  # tiny_onnx fixture
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -37,10 +38,10 @@ def main() -> None:
     long_words = int(sys.argv[2]) if len(sys.argv) > 2 else 200
     short_words, pct_long, batch = 8, 0.10, 512
 
-    from gliner_spark.kernels.onnx_rt import build_tiny_gliner_model
     from gliner_spark.kernels.scorer import OnnxScorer
     from gliner_spark.operators.ner import extract_mentions
     from gliner_spark.session import build_session
+    from tiny_onnx import build_tiny_gliner_model
 
     spark = build_session(
         app_name="padding-probe", cores=8, arrow_batch_rows=batch
