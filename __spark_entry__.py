@@ -180,16 +180,12 @@ def q_kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_nodes_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # large-star/small-star CC (O(log n) rounds — the 10^12-node path)
-    # must produce the identical nodes table → shares the kg_nodes
-    # oracle (recursive-CTE components)
-    from gliner_spark.operators.canonicalize import connected_components_star
-
-    surfaces = entity_surfaces(_mentions(spark, sf_dir)).localCheckpoint()
-    links = exact_jaccard_links(surfaces)
-    return nodes_table(
-        canonical_entities(surfaces, links, cc_fn=connected_components_star)
-    )
+    # kg_nodes under its former star name: the one connected_components
+    # operator runs the driver union-find up to DRIVER_ROWS link edges
+    # (every gate scale) and the large-star/small-star iteration
+    # (O(log n) rounds, the 10^12-node path) past it. Same oracle
+    # (recursive-CTE components).
+    return q_kg_nodes(spark, sf_dir)
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -435,9 +435,9 @@ def near_dup_clusters(
     def pad(c):
         return F.lpad(c.cast("string"), 20, "0")
 
-    from .canonicalize import connected_components_auto
+    from .canonicalize import connected_components
 
-    comp = connected_components_auto(
+    comp = connected_components(
         pairs.select(pad(F.col("src")).alias("src"),
                      pad(F.col("dst")).alias("dst"))
     )
@@ -457,7 +457,7 @@ def near_dup_clusters(
         "doc_id",
         "cluster_id",
         "cluster_size",
-        # hash-min CC labels every member with the component minimum,
+        # CC labels every member with the component minimum,
         # so the canonical keeper IS the cluster id
         (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
     )
@@ -516,36 +516,6 @@ _SIMHASH_SCHEMA = T.StructType(
 )
 
 
-def _simhash64(tokens: list) -> int:
-    """Single-process reference kernel: 64-bit SimHash over FNV token
-    hashes. Used by unit tests to pin the bit-vote semantics; the
-    distributed ``simhash_signatures`` uses the same vote rule over
-    JVM-side ``xxhash64`` token hashes (different hash family, same
-    algorithm)."""
-    if not tokens:
-        return 0
-    hs = np.array(
-        [hash_str_64(t) for t in tokens], dtype=np.uint64
-    )
-    bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(np.int64)
-    v = (2 * bits - 1).sum(axis=0)
-    out = np.uint64(0)
-    for i in range(64):
-        if v[i] > 0:
-            out |= np.uint64(1) << np.uint64(i)
-    return int(out.astype(np.int64))  # two's-complement into LongType
-
-
-def hash_str_64(s: str) -> int:
-    """Deterministic 64-bit string hash (FNV-1a); stable across runs and
-    processes (unlike Python's salted ``hash``)."""
-    h = 0xCBF29CE484222325
-    for b in s.encode("utf-8"):
-        h ^= b
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
 def md5_hash60(col):
     """60-bit integer folded from the md5 hex digest's first 15 nibbles
     — a token-hash family DuckDB reproduces verbatim
@@ -581,10 +551,10 @@ def simhash_signatures(
         token_hash = md5_hash60
     else:
         raise ValueError(f"unknown hash_family {hash_family!r}")
-    # empty/null text → empty hash array (signature 0, matching the
-    # reference kernel _simhash64([]) == 0 — otherwise empty docs would
-    # all carry xxhash64("")'s bit pattern and false-pair with anything
-    # hashing near that constant)
+    # empty/null text → empty hash array, so signature 0 (no bit gets a
+    # positive vote) — otherwise empty docs would all carry
+    # xxhash64("")'s bit pattern and false-pair with anything hashing
+    # near that constant
     text = F.coalesce(F.col(text_col), F.lit(""))
     hashes = F.when(
         F.length(text) == 0, F.array().cast("array<long>")

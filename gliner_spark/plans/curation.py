@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import connected_components_auto
+from ..operators.canonicalize import connected_components
 from ..operators.dedup import ngram_jaccard_dups
 from ..operators.textstats import pred_lang_expr, quality_expr
 
@@ -54,11 +54,9 @@ def curate(
     pairs = (pair_source or ngram_jaccard_dups)(
         docs, threshold=near_dup_threshold
     )
-    # size-adaptive CC (near_dup_clusters uses the same): the dup-pair
-    # graph is corpus-sparse, so the driver union-find path skips the
-    # hash-min iteration's ~2 s of per-round shuffle/checkpoint fixed
-    # cost; past 1M edges it falls back to the distributed iteration
-    comp = connected_components_auto(pairs.select("src", "dst")).select(
+    # the dup-pair graph is corpus-sparse: up to DRIVER_ROWS edges CC
+    # is one driver union-find, past it the star iteration
+    comp = connected_components(pairs.select("src", "dst")).select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("dup_group"),
     )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.bands import band_pairs, band_pairs_local, minhash_bands
+from ..operators.canonicalize import connected_components, union_find
 from ..operators.checkpoint import checkpoint_write, with_part_key
 from ..operators.linking import entity_surfaces
 from ..operators.ner import extract_mentions
@@ -242,18 +243,6 @@ VERDICT_DDL = "doc_id long, dup_of long, keep boolean"
 _VERIFY_BLOCK = 1 << 14
 
 
-def _suppressors(vs_new, vs_old) -> dict:
-    """doc → the doc that suppresses it at first sight (step 4): its
-    smallest admitted match (``vs_old`` holds one (doc, match) pair per
-    doc), else the minimum of its new-vs-new duplicate component
-    (``vs_new``, a list of pairs) when that is another doc."""
-    from ..operators.canonicalize import union_find
-
-    first = {n: c for n, c in union_find(vs_new).items() if c != n}
-    first.update(vs_old)
-    return first
-
-
 def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
                  n_perms: int, threshold: float, max_bucket: int):
     """(verdicts, keepers) of steps 2-4 of ``dedup_admit_batch`` as
@@ -268,8 +257,9 @@ def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
     their values: ``bands.band_pairs_local`` over the exact signature
     slices with the same guard (a bucket counts store and batch rows),
     the same pair predicate, Ĵ with Spark's ``round(…, 6)``, each doc's
-    smallest new-vs-old match and ``_suppressors``. ``keepers`` holds
-    the kept docs' (doc_id, sig) not already stored."""
+    smallest new-vs-old match and the new-vs-new union-find.
+    ``keepers`` holds the kept docs' (doc_id, sig) not already
+    stored."""
     import pyarrow.compute as pc
 
     from ..operators.linking import _spark_round
@@ -317,13 +307,15 @@ def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
     src, dst = src[passes[matches]], dst[passes[matches]]
     old = ~new[dst]
     a, b = ids[src[old]], ids[dst[old]]
-    # each doc's smallest admitted match: the first of its sorted pairs
+    # doc → the doc that suppresses it at first sight (step 4): its
+    # smallest admitted match (the first of its sorted pairs), else the
+    # minimum of its new-vs-new component when that is another doc
     srt = np.lexsort((b, a))
     a, at = np.unique(a[srt], return_index=True)
-    first = _suppressors(
-        list(zip(ids[src[~old]].tolist(), ids[dst[~old]].tolist())),
-        zip(a.tolist(), b[srt][at].tolist()),
-    )
+    first = {n: c for n, c in union_find(list(zip(
+        ids[src[~old]].tolist(), ids[dst[~old]].tolist()))).items()
+        if c != n}
+    first.update(zip(a.tolist(), b[srt][at].tolist()))
 
     # the one-hop rewrite to a keeper, as the distributed verdict's
     # second lookup
@@ -400,10 +392,11 @@ def dedup_admit_batch(
     (~1 GiB on the driver at the bound, one 128 × 8 B signature per
     row), numpy banding and verify, and local tables for the verdicts
     and the appended keepers. Past either bound the band join and the
-    verify run distributed (``_verified_pairs``), and steps 4-5 resolve
-    the verified pairs on the driver up to ``DRIVER_ROWS`` of them,
-    past it with the distributed hash-min components. Both paths give
-    the same verdicts and store rows (pytest-pinned).
+    verify run distributed (``_verified_pairs``), and step 4 takes the
+    new-vs-new components from ``canonicalize.connected_components``
+    (a driver union-find up to ``DRIVER_ROWS`` pairs, the star
+    iteration past it). Both paths give the same verdicts and store
+    rows (pytest-pinned).
 
     Returns (doc_id, dup_of, keep) for the new batch: ``dup_of`` is
     the admitted doc (or kept smaller new doc) that suppressed it,
@@ -417,8 +410,9 @@ def dedup_admit_batch(
     Pins: the driver pass releases the batch-signature checkpoint
     before it returns. The distributed path leaves two checkpoints
     pinned, the batch signatures and the verified pairs, because its
-    returned verdicts are a lazy plan over both."""
-    from ..operators.canonicalize import connected_components
+    returned verdicts are a lazy plan over both (and, past
+    ``DRIVER_ROWS`` verified pairs, the two the star iteration's
+    components read)."""
     from ..operators.util import read_parquet_or_empty
 
     # referenced by the size probe and the collect, or by the band
@@ -444,39 +438,29 @@ def dedup_admit_batch(
         unpin(sig_new)
         return verdicts
 
-    # pinned: the driver collect below, the distributed fallback and
-    # its verdict all read the verified pairs
+    # pinned: the components' probe and the verdict both read the
+    # verified pairs
     verified = _verified_pairs(
         sig_new, sig_old, bands, n_perms, threshold, max_bucket
     ).localCheckpoint()
 
     # dup0 lookup table (m_doc, m_dup): a batch doc → the doc that
-    # suppresses it at first sight. The same bounded driver path as
-    # connected_components_auto: normally built on the driver
-    # (``_suppressors``) and shipped back as ONE local table; past the
-    # bound it stays distributed (hash-min components over the pinned
-    # pairs).
-    pairs = verified.limit(DRIVER_ROWS + 1).collect()
-    if len(pairs) <= DRIVER_ROWS:
-        first = _suppressors(
-            [(p.src, p.dst) for p in pairs if p.dst_new],
-            [(p.src, p.dst) for p in pairs if not p.dst_new],
-        )
-        lookup = local_table(spark, list(first.items()),
-                             "m_doc long, m_dup long")
-    else:
-        comp = connected_components(verified.where("dst_new"), "src", "dst")
-        lookup = (
-            verified.where(~F.col("dst_new")).select(
-                F.col("src").alias("m_doc"), F.col("dst").alias("m_old"),
-                F.lit(None).cast("long").alias("m_new"))
-            .unionByName(comp.where(F.col("component") != F.col("node"))
-                         .select(F.col("node").alias("m_doc"),
-                                 F.lit(None).cast("long").alias("m_old"),
-                                 F.col("component").alias("m_new")))
-            .groupBy("m_doc")
-            .agg(F.coalesce(F.min("m_old"), F.min("m_new")).alias("m_dup"))
-        )
+    # suppresses it at first sight — its smallest admitted match, else
+    # its new-vs-new component minimum (``connected_components``: a
+    # driver union-find up to DRIVER_ROWS pairs, the star iteration
+    # past it)
+    comp = connected_components(verified.where("dst_new"), "src", "dst")
+    lookup = (
+        verified.where(~F.col("dst_new")).select(
+            F.col("src").alias("m_doc"), F.col("dst").alias("m_old"),
+            F.lit(None).cast("long").alias("m_new"))
+        .unionByName(comp.where(F.col("component") != F.col("node"))
+                     .select(F.col("node").alias("m_doc"),
+                             F.lit(None).cast("long").alias("m_old"),
+                             F.col("component").alias("m_new")))
+        .groupBy("m_doc")
+        .agg(F.coalesce(F.min("m_old"), F.min("m_new")).alias("m_dup"))
+    )
 
     def dup0(df: DataFrame, key: str, out: str) -> DataFrame:
         return (

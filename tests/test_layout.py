@@ -1,7 +1,7 @@
 """Layout guards, on the AST alone (no Spark, no package import): every
 module under ``gliner_spark/`` is reachable from a production entry
-point, every public top-level function or class is used by one (or
-allowlisted below), every config field is read somewhere outside
+point, every top-level function or class, private ones included, is
+used by one (or allowlisted below), every config field is read somewhere outside
 ``config.py``, and every package import in the scripts names something
 that exists.
 
@@ -141,8 +141,6 @@ TEST_ONLY_KEPT = {
         "guard audit: buckets the prefix-filter skew guard dropped",
     "sources.pages.verify_extraction":
         "invariant check: stored page text equals its HTML extraction",
-    "operators.dedup.hash_str_64":
-        "reference FNV hash behind _simhash64, the kernel tests pin",
     "operators.similarity.embedding_dup_pairs":
         "exact reference form the LSH recall test checks against",
 }
@@ -169,12 +167,12 @@ def _refs(node: ast.AST) -> set[str]:
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
-def _live_and_public(
+def _live_and_defined(
     kept: set[str],
 ) -> tuple[set[str], set[tuple[str, str]]]:
     """Names live from the production roots, with ``kept`` counted as
-    live, and every public top-level def/class of the non-root package
-    modules as (name, dotted home).
+    live, and every top-level def/class of the non-root package
+    modules, private or not, as (name, dotted home).
 
     Roots count whole; a package module's top-level statements other
     than defs run on import, so they count too. A def is live once its
@@ -183,7 +181,7 @@ def _live_and_public(
     roots = set(_roots())
     live = set(kept)
     defs: dict[str, list[ast.AST]] = {}
-    public: set[tuple[str, str]] = set()
+    defined: set[tuple[str, str]] = set()
     for f in sorted(_reachable()):
         tree = ast.parse(f.read_text(), str(f))
         if f in roots:
@@ -192,8 +190,7 @@ def _live_and_public(
         for s in tree.body:
             if isinstance(s, _DEFS):
                 defs.setdefault(s.name, []).append(s)
-                if not s.name.startswith("_"):
-                    public.add((s.name, f"{_module_name(f)}.{s.name}"))
+                defined.add((s.name, f"{_module_name(f)}.{s.name}"))
             else:
                 live |= _refs(s)
     todo = [n for n in defs if n in live]
@@ -202,20 +199,22 @@ def _live_and_public(
             new = _refs(s) - live
             live |= new
             todo.extend(n for n in new if n in defs)
-    return live, public
+    return live, defined
 
 
 def test_every_public_function_is_used():
+    """Every top-level def/class: a private helper that only tests reach
+    is as dead as a public one."""
     kept = {k.rsplit(".", 1)[1] for k in TEST_ONLY_KEPT}
-    live, public = _live_and_public(kept)
-    dead = sorted(home for name, home in public if name not in live)
+    live, defined = _live_and_defined(kept)
+    dead = sorted(home for name, home in defined if name not in live)
     assert not dead, f"no production path uses {dead}"
 
     # the allowlist holds only real, otherwise-unused functions
-    bare, _ = _live_and_public(set())
+    bare, _ = _live_and_defined(set())
     stale = sorted(
         k for k in TEST_ONLY_KEPT
-        if (k.rsplit(".", 1)[1], f"{PKG}.{k}") not in public
+        if (k.rsplit(".", 1)[1], f"{PKG}.{k}") not in defined
         or k.rsplit(".", 1)[1] in bare
     )
     assert not stale, f"allowlisted but used or missing: {stale}"

@@ -4,6 +4,7 @@ components correctness. Spark tests share one session (module scope)."""
 import pytest
 from pyspark.sql import functions as F
 
+from gliner_spark.operators import canonicalize
 from gliner_spark.operators.canonicalize import (
     canonical_entities,
     connected_components,
@@ -117,38 +118,6 @@ def test_connected_components_chain(spark):
     assert comp["p"] == comp["q"] == comp["r"] == comp["s"] == "p"
 
 
-def test_cc_auto_matches_distributed_both_sides_of_threshold(spark):
-    """connected_components_auto must equal the distributed hash-min
-    labeling exactly — on the driver union-find path AND past the
-    threshold where it falls back to the iteration."""
-    from gliner_spark.operators.canonicalize import (
-        connected_components,
-        connected_components_auto,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r")],
-        "src string, dst string",
-    )
-    dist = {(r.node, r.component)
-            for r in connected_components(edges).collect()}
-    auto = {(r.node, r.component)
-            for r in connected_components_auto(edges).collect()}
-    assert auto == dist
-    # force the fallback: threshold below the edge count
-    fb = {(r.node, r.component)
-          for r in connected_components_auto(
-              edges, driver_threshold=2).collect()}
-    assert fb == dist
-    # a WRONG (too-small) size_hint must not collect an unbounded edge
-    # set: the limit(threshold+1) guard detects the overflow and falls
-    # back to the distributed path (r5 ADVICE)
-    hinted = {(r.node, r.component)
-              for r in connected_components_auto(
-                  edges, driver_threshold=2, size_hint=1).collect()}
-    assert hinted == dist
-
-
 def test_canonical_entities_singletons_and_merge(spark):
     surfaces = _surfaces(spark, SURF_ROWS)
     links = exact_jaccard_links(surfaces, threshold=0.30)
@@ -165,10 +134,38 @@ def test_canonical_entities_singletons_and_merge(spark):
     assert n[merged].n_surfaces >= 2
 
 
-def test_star_cc_matches_hashmin(spark):
-    import random
+def _bfs_components(edges) -> dict:
+    """Reference labels: node → min node of its component, by BFS over
+    the edges without self-loops."""
+    adj: dict = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    out: dict = {}
+    for n in sorted(adj):  # the first unlabelled node is its comp's min
+        if n in out:
+            continue
+        out[n], todo = n, [n]
+        while todo:
+            for m in adj[todo.pop()]:
+                if m not in out:
+                    out[m] = n
+                    todo.append(m)
+    return out
 
-    from gliner_spark.operators.canonicalize import connected_components_star
+
+@pytest.mark.parametrize("driver_rows", [canonicalize.DRIVER_ROWS, 0],
+                         ids=["union_find", "star"])
+def test_connected_components_matches_bfs(spark, monkeypatch,
+                                          driver_rows):
+    """The one CC operator labels every node with its component minimum
+    on both sides of ``DRIVER_ROWS``: the driver union-find and the
+    large-star/small-star iteration. Graphs: random chains with extra
+    intra-links plus a self-loop-only node (in no component on either
+    side), one chain of 31 hops (past the 20 rounds the default
+    ``max_iters`` allows a diameter-bound propagation), and no edges."""
+    import random
 
     rng = random.Random(3)
     nodes = [f"n{i:03d}" for i in range(200)]
@@ -184,36 +181,19 @@ def test_star_cc_matches_hashmin(spark):
         a, b = rng.sample(range(len(nodes)), 2)
         if abs(a - b) < 5:
             edges.append((nodes[min(a, b)], nodes[max(a, b)]))
-    df = spark.createDataFrame(edges, "src string, dst string")
-    hashmin = {
-        r.node: r.component for r in connected_components(df).collect()
-    }
-    # driver_threshold=0 pins the star ITERATION itself (the
-    # size-adaptive shortcut would route this toy graph to the
-    # shared union-find, which the auto tests already cover)
-    star = {
-        r.node: r.component
-        for r in connected_components_star(
-            df, driver_threshold=0).collect()
-    }
-    assert star == hashmin and len(star) > 0
-    # the adaptive default must agree with the pinned iteration
-    adaptive = {
-        r.node: r.component
-        for r in connected_components_star(df).collect()
-    }
-    assert adaptive == hashmin
-    # star semantics are size-INDEPENDENT for self-loops too: the
-    # iteration's symmetrize drops (n, n), so the driver shortcut must
-    # as well — the output node universe must not change with
-    # driver_threshold (r6 review finding)
-    looped = spark.createDataFrame(
-        edges + [("solo", "solo")], "src string, dst string")
-    small_path = {r.node for r in
-                  connected_components_star(looped).collect()}
-    iter_path = {r.node for r in connected_components_star(
-        looped, driver_threshold=0).collect()}
-    assert small_path == iter_path and "solo" not in small_path
+    chain = [(f"c{j:02d}", f"c{j + 1:02d}") for j in range(31)]
+    rng.shuffle(chain)
+
+    monkeypatch.setattr(canonicalize, "DRIVER_ROWS", driver_rows)
+    for graph in (edges + [("solo", "solo")], chain, []):
+        df = spark.createDataFrame(graph, "src string, dst string")
+        comp = connected_components(df)
+        got = {r.node: r.component for r in comp.collect()}
+        assert got == _bfs_components(graph)
+        if graph:
+            plan = comp._jdf.queryExecution().executedPlan().toString()
+            assert ("LocalTableScan" in plan) == (driver_rows > 0)
+    assert got == {}
 
 
 def minhash_signature_agg(hashed_exploded, id_cols, n_perms: int,

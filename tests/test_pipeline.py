@@ -654,20 +654,23 @@ def test_write_table_keeps_session_overwrite_mode(spark, tmp_path):
         spark.conf.set(key, saved)
 
 
-def test_connected_components_warns_when_unconverged():
+def test_connected_components_warns_when_unconverged(monkeypatch):
     import warnings
 
-    from gliner_spark.operators.canonicalize import connected_components
+    from gliner_spark.operators import canonicalize
     from gliner_spark.session import build_session
 
     spark = build_session(app_name="gliner-tests", cores=4)
-    # a 6-node chain needs >1 hash-min round; max_iters=1 must warn
+    # past DRIVER_ROWS (here 0) the star iteration runs; a 6-hop chain
+    # needs more than one round to reach its fixpoint, so max_iters=1
+    # must warn
+    monkeypatch.setattr(canonicalize, "DRIVER_ROWS", 0)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "src long, dst long"
     )
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components(chain, max_iters=1)
+        canonicalize.connected_components(chain, max_iters=1)
         assert any("not converged" in str(x.message) for x in w)
 
 
@@ -857,12 +860,14 @@ def test_admit_three_batches_pinned_verdicts_and_store(spark, tmp_path,
                                                        monkeypatch,
                                                        driver_rows):
     """Admission gives three batches the pinned verdicts on the driver
-    pass and on the distributed one (DRIVER_ROWS=0), chosen by the one
-    ``incremental.DRIVER_ROWS`` bound; re-admitting the last batch
+    pass and on the distributed one (DRIVER_ROWS=0, which also sends
+    the verdict's components through the star iteration), chosen by
+    the one ``DRIVER_ROWS`` bound; re-admitting the last batch
     changes neither its verdicts nor the store, and the store holds
     each keeper's own signature. The driver pass collects store ∪ batch
     signatures once per batch and leaves no pinned RDD behind; past the
     bound no signature reaches the driver."""
+    from gliner_spark.operators import canonicalize
     from gliner_spark.plans import incremental
     from gliner_spark.plans.incremental import (
         batch_minhash_signatures,
@@ -870,6 +875,7 @@ def test_admit_three_batches_pinned_verdicts_and_store(spark, tmp_path,
     )
 
     monkeypatch.setattr(incremental, "DRIVER_ROWS", driver_rows)
+    monkeypatch.setattr(canonicalize, "DRIVER_ROWS", driver_rows)
     store = str(tmp_path / "sig_store")
     batches = _admit_batches()
     texts = {}
@@ -945,10 +951,12 @@ def test_admit_null_id_same_on_both_paths(spark, tmp_path, monkeypatch,
     """A batch doc with a NULL id pairs with nothing and is kept, on the
     driver pass (which hands such a batch to the distributed plan) as
     on the distributed one."""
+    from gliner_spark.operators import canonicalize
     from gliner_spark.plans import incremental
     from gliner_spark.plans.incremental import dedup_admit_batch
 
     monkeypatch.setattr(incremental, "DRIVER_ROWS", driver_rows)
+    monkeypatch.setattr(canonicalize, "DRIVER_ROWS", driver_rows)
     doc = " ".join(f"w{j}" for j in range(40))
     got = sorted(
         (r.doc_id is None, r.doc_id, r.dup_of, r.keep)

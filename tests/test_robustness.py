@@ -8,7 +8,6 @@ from gliner_spark.kernels.scorer import ALL_LABELS
 from gliner_spark.operators.canonicalize import (
     canonical_entities,
     connected_components,
-    connected_components_star,
     nodes_table,
 )
 from gliner_spark.operators.dedup import (
@@ -77,7 +76,6 @@ def test_empty_dataframe_through_pipeline(spark):
 def test_empty_edges_connected_components(spark):
     empty = spark.createDataFrame([], "src string, dst string")
     assert connected_components(empty).count() == 0
-    assert connected_components_star(empty).count() == 0
 
 
 def test_dedup_ops_on_nullish(spark, nullish_docs):
