@@ -243,6 +243,16 @@ VERDICT_DDL = "doc_id long, dup_of long, keep boolean"
 _VERIFY_BLOCK = 1 << 14
 
 
+def _suppressors(vs_new, vs_old) -> dict:
+    """doc → the doc that suppresses it at first sight (step 4): its
+    smallest admitted match (``vs_old`` holds one (doc, match) pair per
+    doc), else the minimum of its new-vs-new duplicate component
+    (``vs_new``, a list of pairs) when that is another doc."""
+    first = {n: c for n, c in union_find(vs_new).items() if c != n}
+    first.update(vs_old)
+    return first
+
+
 def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
                  n_perms: int, threshold: float, max_bucket: int):
     """(verdicts, keepers) of steps 2-4 of ``dedup_admit_batch`` as
@@ -257,9 +267,8 @@ def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
     their values: ``bands.band_pairs_local`` over the exact signature
     slices with the same guard (a bucket counts store and batch rows),
     the same pair predicate, Ĵ with Spark's ``round(…, 6)``, each doc's
-    smallest new-vs-old match and the new-vs-new union-find.
-    ``keepers`` holds the kept docs' (doc_id, sig) not already
-    stored."""
+    smallest new-vs-old match and ``_suppressors``. ``keepers`` holds
+    the kept docs' (doc_id, sig) not already stored."""
     import pyarrow.compute as pc
 
     from ..operators.linking import _spark_round
@@ -307,15 +316,13 @@ def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
     src, dst = src[passes[matches]], dst[passes[matches]]
     old = ~new[dst]
     a, b = ids[src[old]], ids[dst[old]]
-    # doc → the doc that suppresses it at first sight (step 4): its
-    # smallest admitted match (the first of its sorted pairs), else the
-    # minimum of its new-vs-new component when that is another doc
+    # each doc's smallest admitted match: the first of its sorted pairs
     srt = np.lexsort((b, a))
     a, at = np.unique(a[srt], return_index=True)
-    first = {n: c for n, c in union_find(list(zip(
-        ids[src[~old]].tolist(), ids[dst[~old]].tolist()))).items()
-        if c != n}
-    first.update(zip(a.tolist(), b[srt][at].tolist()))
+    first = _suppressors(
+        list(zip(ids[src[~old]].tolist(), ids[dst[~old]].tolist())),
+        zip(a.tolist(), b[srt][at].tolist()),
+    )
 
     # the one-hop rewrite to a keeper, as the distributed verdict's
     # second lookup
