@@ -193,7 +193,6 @@ def test_connected_components_matches_bfs(spark, monkeypatch,
         if graph:
             plan = comp._jdf.queryExecution().executedPlan().toString()
             assert ("LocalTableScan" in plan) == (driver_rows > 0)
-    assert got == {}
 
 
 def minhash_signature_agg(hashed_exploded, id_cols, n_perms: int,
