@@ -8,7 +8,7 @@ One operator, ``connected_components``, with one bound,
 ``util.DRIVER_ROWS``. The graphs this pipeline canonicalizes are
 vocabulary-bounded (distinct-surface link pairs, near-dup doc pairs),
 orders of magnitude smaller than the corpus: up to the bound the edges
-come to the driver in ONE ``limit(DRIVER_ROWS + 1)`` collect and a
+come to the driver in ONE ``limit(DRIVER_ROWS + 1)`` Arrow collect and a
 path-compressed union-find labels them. Past it runs the
 large-star/small-star iteration of Kiveris et al., "Connected
 Components in MapReduce and Beyond" (SoCC 2014), as DataFrame joins —
@@ -46,7 +46,7 @@ def connected_components(
     their node universe and keep unlabelled nodes as singletons.
 
     Up to ``util.DRIVER_ROWS`` edges: ``union_find`` over one bounded
-    collect, returned as a ``local_table`` — none of the iteration's
+    Arrow collect, returned as a ``local_table`` — none of the iteration's
     ~10 tiny shuffle stages plus a ``localCheckpoint`` per round. Past
     it: the star iteration, at most ``max_iters`` rounds; a loop that
     ends without a confirmed fixpoint warns, because unconverged labels
@@ -59,11 +59,13 @@ def connected_components(
     try:
         probe = pinned.where(F.col(src) != F.col(dst)).select(
             F.col(src).alias("a"), F.col(dst).alias("b")
-        ).limit(DRIVER_ROWS + 1).collect()
-        if len(probe) <= DRIVER_ROWS:
+        ).limit(DRIVER_ROWS + 1).toArrow()
+        if probe.num_rows <= DRIVER_ROWS:
+            pairs = list(zip(probe.column("a").to_pylist(),
+                             probe.column("b").to_pylist()))
             t = pinned.schema[src].dataType.simpleString()
             return local_table(pinned.sparkSession,
-                               sorted(union_find(probe).items()),
+                               sorted(union_find(pairs).items()),
                                f"node {t}, component {t}")
         entry = _symmetric(pinned, src, dst).localCheckpoint()  # eager
     finally:

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .bands import band_pairs, dropped_buckets, minhash_bands
-from .linking import _exact_jaccard, hash_shingles, minhash_signature_map
+from .linking import _exact_jaccard
 from .util import drop_zip_importers, ensure_parallelism
 
 
@@ -98,6 +98,170 @@ def word_shingles(text_col, k: int = 3):
     return F.element_at(
         F.transform(F.array(F.split(text_col, " ")), grams), 1
     )
+
+
+# XXH64 primes, and the seed of Spark's ``xxhash64``
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+_XXH_SEED = 42
+_ZERO = np.uint64(0)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxh64_round(acc: np.ndarray, word: np.ndarray) -> np.ndarray:
+    return _rotl(acc + word * _P2, 31) * _P1
+
+
+def _xxh64_spans(buf: np.ndarray, pos: np.ndarray,
+                 n: np.ndarray) -> np.ndarray:
+    """int64 XXH64 (seed 42, signed) of each byte span
+    ``buf[pos[i] : pos[i] + n[i]]`` — bit for bit Spark's ``xxhash64``
+    of a string with those UTF-8 bytes (``XXH64.hashUnsafeBytes``).
+
+    Vectorized over the spans: the 32-byte stripe rounds, then up to
+    three 8-byte words, one 4-byte word and three tail bytes, each a
+    numpy pass over the spans that still have such a step. Words are
+    read through unaligned little-endian views of the zero-padded
+    buffer; no read passes a span's end. Stripe rounds run on the
+    spans ordered by stripe count, so round r touches only its prefix
+    of still-active spans."""
+    pad = np.zeros(len(buf) + 8, np.uint8)
+    pad[:len(buf)] = buf
+    u64 = np.ndarray((len(buf) + 1,), "<u8", pad, 0, (1,))
+    u32 = np.ndarray((len(buf) + 1,), "<u4", pad, 0, (1,))
+    off = pos.astype(np.int64)  # a copy: advanced in place below
+    n = n.astype(np.int64)
+    m64 = (1 << 64) - 1
+    h = np.full(len(n), (_XXH_SEED + int(_P5)) & m64, np.uint64)
+
+    big = np.flatnonzero(n >= 32)
+    if len(big):
+        stripes = n[big] // 32
+        order = np.argsort(-stripes, kind="stable")
+        big, stripes = big[order], stripes[order]
+        o = off[big]
+        v = [np.full(len(big), (_XXH_SEED + s) & m64, np.uint64)
+             for s in (int(_P1) + int(_P2), int(_P2), 0, -int(_P1))]
+        for r in range(int(stripes[0])):
+            c = int(np.searchsorted(-stripes, -r, "left"))  # stripes > r
+            for i in range(4):
+                v[i][:c] = _xxh64_round(v[i][:c], u64[o[:c] + 8 * i])
+            o[:c] += 32
+        acc = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+               + _rotl(v[3], 18))
+        for vi in v:
+            acc = (acc ^ _xxh64_round(_ZERO, vi)) * _P1 + _P4
+        h[big] = acc
+        off[big] = o
+    h += n.astype(np.uint64)
+
+    for w in range(3):  # the 8-byte words after the stripes
+        i = np.flatnonzero(n % 32 // 8 > w)
+        h[i] = _rotl(h[i] ^ _xxh64_round(_ZERO, u64[off[i]]), 27) * _P1 + _P4
+        off[i] += 8
+    i = np.flatnonzero(n % 8 >= 4)
+    h[i] = _rotl(h[i] ^ u32[off[i]].astype(np.uint64) * _P1, 23) * _P2 + _P3
+    off[i] += 4
+    for t in range(3):  # the tail bytes
+        i = np.flatnonzero(n % 4 > t)
+        h[i] = _rotl(h[i] ^ pad[off[i]].astype(np.uint64) * _P5, 11) * _P1
+        off[i] += 1
+
+    h ^= h >> np.uint64(33)
+    h *= _P2
+    h ^= h >> np.uint64(29)
+    h *= _P3
+    h ^= h >> np.uint64(32)
+    return h.view(np.int64)
+
+
+def word_minhash_kernel(text, k: int, n_perms: int,
+                        seed: int) -> np.ndarray:
+    """(len(text), n_perms) int64 MinHash signatures of the documents of
+    one Arrow string array: bit-identical to ``minhash_signature_map``
+    over ``hash_shingles(word_shingles(text, k))``, computed from the
+    array's buffers with no per-row or per-shingle Python.
+
+    ``split(text, " ")`` keeps empty words, so each word k-gram is one
+    byte span of the text's UTF-8 buffer: from the start of its first
+    word to the end of its k-th, found from the positions of byte 0x20
+    (which no multi-byte UTF-8 character contains). A document of fewer
+    than k words is one span, its whole text; NULL text signs as ""
+    (as the JVM chain does). Each span is hashed by ``_xxh64_spans``,
+    taken ``pmod MERSENNE`` and fed to ``linking.minhash_kernel``.
+    Duplicate grams change no minimum, so no distinct step is needed.
+    Invalid UTF-8 is hashed as its raw bytes; the JVM chain re-encodes
+    it through ``java.lang.String`` first, so the two differ there."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .linking import MERSENNE, minhash_kernel
+
+    if not len(text):
+        return np.empty((0, n_perms), np.int64)
+    if text.null_count:
+        text = pc.fill_null(text, "")
+    _, offs, data = text.buffers()
+    width = np.int64 if pa.types.is_large_string(text.type) else np.int32
+    offs = np.frombuffer(offs, width)[
+        text.offset:text.offset + len(text) + 1].astype(np.int64)
+    buf = (np.frombuffer(data, np.uint8)[offs[0]:offs[-1]]
+           if data is not None else np.empty(0, np.uint8))
+    starts, ends = offs[:-1] - offs[0], offs[1:] - offs[0]
+    sp = np.flatnonzero(buf == 0x20)
+    before = np.searchsorted(sp, starts)  # spaces in earlier documents
+    n_w = np.searchsorted(sp, ends) - before + 1
+    first = np.arange(len(starts)) + before  # each doc's first word
+    # word i of the flat word list: starts at its doc's start or one
+    # past a space, ends at the next space or its doc's end
+    is_first = np.zeros(len(sp) + len(starts), bool)
+    is_first[first] = True
+    ws = np.empty(len(is_first), np.int64)
+    ws[is_first], ws[~is_first] = starts, sp + 1
+    is_last = np.zeros_like(is_first)
+    is_last[first + n_w - 1] = True
+    we = np.empty_like(ws)
+    we[is_last], we[~is_last] = ends, sp
+
+    n_g = np.maximum(n_w - (k - 1), 1)
+    g_first = np.repeat(first, n_g)
+    i = np.arange(int(n_g.sum())) - np.repeat(np.cumsum(n_g) - n_g, n_g)
+    pos = ws[g_first + i]
+    end = we[g_first + np.minimum(i + k - 1, np.repeat(n_w, n_g) - 1)]
+    hx = _xxh64_spans(buf, pos, end - pos) % MERSENNE
+    return minhash_kernel(hx, n_g, n_perms, seed)
+
+
+def word_minhash_signatures(docs: DataFrame, k: int, n_perms: int,
+                            seed: int, id_col: str = "doc_id",
+                            text_col: str = "text") -> DataFrame:
+    """(doc_id, sig array<long>): each document's MinHash signature over
+    its word k-grams, one row per document — ONE row-local
+    ``mapInArrow`` stage running ``word_minhash_kernel`` per Arrow
+    batch. The word-gram signature of admission
+    (``incremental.batch_minhash_signatures``) and of ``minhash_dups``."""
+    import pyarrow as pa
+
+    def run(batches):
+        drop_zip_importers()
+        for b in batches:
+            sig = word_minhash_kernel(b.column(1), k, n_perms, seed)
+            offsets = np.arange(len(sig) + 1, dtype=np.int32) * n_perms
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), pa.ListArray.from_arrays(
+                    pa.array(offsets), pa.array(sig.ravel()))],
+                ["doc_id", "sig"])
+
+    return docs.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(text_col).cast("string").alias("text"),
+    ).mapInArrow(run, "doc_id long, sig array<bigint>")
 
 
 def _doc_shingles(docs: DataFrame, k: int, id_col: str,
@@ -480,12 +644,12 @@ def minhash_dups(
     from the shared guarded band self-join (``bands.band_pairs``) on
     exact signature slices; ``dropped_buckets`` over
     ``_minhash_bands`` audits its guard."""
-    # materialized ONCE (guide §2.4): the shingle table feeds the
-    # signature stage AND both sides of the final exact verify
-    sh = _doc_shingles(
-        ensure_parallelism(docs), k, id_col, text_col
-    ).localCheckpoint()
-    banded, keys = _minhash_bands(sh, n_perms, bands, seed)
+    docs = ensure_parallelism(docs)
+    # materialized ONCE (guide §2.4): the shingle table feeds both sides
+    # of the final exact verify; the signatures come from the text
+    sh = _doc_shingles(docs, k, id_col, text_col).localCheckpoint()
+    banded, keys = _minhash_bands(docs, k, n_perms, bands, seed, id_col,
+                                  text_col)
     cand = band_pairs(
         banded, keys, max_bucket, F.col("a.sid") < F.col("b.sid"),
     ).select(F.col("a.sid").alias("src"), F.col("b.sid").alias("dst"))
@@ -493,19 +657,19 @@ def minhash_dups(
                            threshold)
 
 
-def _minhash_bands(sh: DataFrame, n_perms: int, bands: int,
-                   seed: int) -> tuple[DataFrame, tuple[str, ...]]:
+def _minhash_bands(docs: DataFrame, k: int, n_perms: int, bands: int,
+                   seed: int, id_col: str = "doc_id",
+                   text_col: str = "text",
+                   ) -> tuple[DataFrame, tuple[str, ...]]:
     """(sid, band_idx, band_key…) and its bucket keys: the banded
-    signature table ``minhash_dups`` joins, of a ``_doc_shingles``
-    table. Band keys only — the candidate join must not drag the
-    shingle arrays through its shuffle (they rejoin in the verify,
-    candidate set ≪ docs)."""
-    # row-local numpy signature stage (guide §4.2): no explode and no
-    # aggregation shuffle
-    hashed = sh.select("sid", hash_shingles(F.col("sh")).alias("hx"))
+    signature table ``minhash_dups`` joins, of the documents' word
+    k-gram signatures (``word_minhash_signatures``). Band keys only —
+    the candidate join must not drag the shingle arrays through its
+    shuffle (they rejoin in the verify, candidate set ≪ docs)."""
     banded, keys = minhash_bands(n_perms, bands)
-    return minhash_signature_map(hashed, n_perms, seed).select(
-        "sid", banded), keys
+    return word_minhash_signatures(
+        docs, k, n_perms, seed, id_col, text_col,
+    ).select(F.col("doc_id").alias("sid"), banded), keys
 
 
 _SIMHASH_SCHEMA = T.StructType(

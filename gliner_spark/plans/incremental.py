@@ -153,21 +153,20 @@ def batch_minhash_signatures(
     each document — the only state ``dedup_admit_batch`` ever persists
     per admitted doc. Band keys are DERIVED from the signature (its
     exact slices, ``bands.minhash_bands``), so the store needs no
-    shingles, no text, no band columns."""
-    from ..operators.dedup import word_shingles
-    from ..operators.linking import hash_shingles, minhash_signature_map
+    shingles, no text, no band columns.
+
+    One row-local ``mapInArrow`` stage (``dedup.word_minhash_signatures``):
+    word k-gram spans, their XXH64 and the 128-permutation min all run
+    in numpy per Arrow batch — no explode, no aggregation shuffle, and
+    none of the interpreted per-row ``transform`` lambdas the JVM
+    shingle chain needs. Value-identical to ``minhash_signature_map``
+    over ``hash_shingles(word_shingles(...))``, the reference kept in
+    tests (equality pinned)."""
+    from ..operators.dedup import word_minhash_signatures
     from ..operators.util import ensure_parallelism
 
-    # row-local form (guide §4.2): shingle-hash arrays stay JVM-side
-    # (xxhash64 + pmod, codegen), the 128-permutation min runs as ONE
-    # vectorized Arrow stage — no explode, no aggregation shuffle.
-    # Value-identical to the explode + min-aggregation form kept in
-    # tests as the reference (shared perm_params; equality pinned).
-    hashed = ensure_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        hash_shingles(word_shingles(F.col(text_col), k)).alias("hx"),
-    )
-    return minhash_signature_map(hashed, n_perms, seed)
+    return word_minhash_signatures(ensure_parallelism(docs), k, n_perms,
+                                   seed, id_col, text_col)
 
 
 STORE_DDL = "doc_id long, sig array<bigint>"

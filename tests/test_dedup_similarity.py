@@ -682,8 +682,7 @@ def _case_minhash_dups(spark):
     got = [tuple(r) for r in minhash_dups(docs, max_bucket=BAND_MAX)
            .collect()]
     got_dropped = dropped_buckets(
-        *_minhash_bands(_doc_shingles(docs, 3, "doc_id", "text"), 128, 32,
-                        11), BAND_MAX)
+        *_minhash_bands(docs, 3, 128, 32, 11), BAND_MAX)
     return (got, want, got_dropped, want_dropped,
             {(1, 2), (1, 3), (2, 3)}, {(11, 12), (12, 13), (13, 14)})
 
@@ -792,7 +791,6 @@ def test_dedup_band_audits_zero_at_gate_scale(spark):
     lsh_dropped_buckets does for kg_links_lsh)."""
     from gliner_spark.operators.bands import dropped_buckets
     from gliner_spark.operators.dedup import (
-        _doc_shingles,
         _minhash_bands,
         _simhash_bands,
         simhash_signatures,
@@ -800,8 +798,7 @@ def test_dedup_band_audits_zero_at_gate_scale(spark):
 
     gate = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     assert dropped_buckets(
-        *_minhash_bands(_doc_shingles(gate, 3, "doc_id", "text"), 128, 32,
-                        11), 2000) == 0
+        *_minhash_bands(gate, 3, 128, 32, 11), 2000) == 0
     for family in ("xxhash64", "md5_60"):
         assert dropped_buckets(
             *_simhash_bands(simhash_signatures(gate, hash_family=family), 8),

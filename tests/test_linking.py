@@ -220,7 +220,9 @@ def test_minhash_signature_map_equals_agg(spark):
     """The row-local numpy signature stage must be value-identical to
     the explode + n_perms-min aggregation it replaced (shared
     perm_params; int64 no-overflow + numpy %% == pmod argument in the
-    docstring) — pinned over the gate corpus with both id types."""
+    docstring) — pinned over the gate corpus with both id types. The
+    Arrow text stage (``word_minhash_signatures``) gives the same
+    signatures from the text alone."""
     from pyspark.sql import functions as F
 
     from gliner_spark.operators.dedup import word_shingles
@@ -243,6 +245,7 @@ def test_minhash_signature_map_equals_agg(spark):
         ).collect()
     }
     assert got == want and len(got) == docs.count()
+    assert _text_signatures(docs, 3) == got
 
 
 def _py_word_shingles(text, k):
@@ -274,6 +277,125 @@ def test_word_shingles_matches_python_reference(spark):
         "doc_id", word_shingles(F.col("text"), k).alias("sh")).collect()}
     assert got == {i: _py_word_shingles(t, k) for i, t in texts.items()}
     assert len(got[5]) == 50 and got[6] == [""]
+
+
+def _random_utf8(rng, n_bytes):
+    """A random valid UTF-8 string of exactly ``n_bytes`` bytes, mixing
+    1-, 2-, 3- and 4-byte characters (space and tab included)."""
+    chars = ["a", "Z", " ", "\t", "é", "ß", "€", "語", "😀", "𝄞"]
+    out, left = [], n_bytes
+    while left:
+        c = rng.choice([c for c in chars if len(c.encode()) <= left])
+        out.append(c)
+        left -= len(c.encode())
+    return "".join(out)
+
+
+def test_xxh64_spans_matches_spark_xxhash64(spark):
+    """The numpy XXH64 equals Spark's ``xxhash64`` bit for bit on random
+    valid UTF-8 strings of every byte length 0–100 (five each), which
+    crosses the tail-byte, 4-byte, 8-byte and 32-byte-stripe branches
+    and their combinations."""
+    import random
+
+    import numpy as np
+
+    from gliner_spark.operators.dedup import _xxh64_spans
+
+    rng = random.Random(16)
+    texts = [_random_utf8(rng, n) for n in range(101) for _ in range(5)]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, s string")
+    want = [r.h for r in df.select("i", F.xxhash64("s").alias("h"))
+            .orderBy("i").collect()]
+    raw = [t.encode() for t in texts]
+    n = np.array([len(b) for b in raw], np.int64)
+    buf = np.frombuffer(b"".join(raw), np.uint8)
+    assert _xxh64_spans(buf, np.cumsum(n) - n, n).tolist() == want
+
+
+def _jvm_word_signatures(docs, k, n_perms=128, seed=11):
+    """{doc_id: sig} from the JVM shingle chain — ``word_shingles`` →
+    ``hash_shingles`` → ``minhash_signature_map`` — the reference the
+    text kernel must reproduce bit for bit."""
+    from gliner_spark.operators.dedup import word_shingles
+    from gliner_spark.operators.linking import (
+        hash_shingles,
+        minhash_signature_map,
+    )
+
+    hx = docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        hash_shingles(word_shingles(F.col("text"), k)).alias("hx"),
+    )
+    return {r.doc_id: list(r.sig)
+            for r in minhash_signature_map(hx, n_perms, seed).collect()}
+
+
+def _text_signatures(docs, k, n_perms=128, seed=11):
+    from gliner_spark.operators.dedup import word_minhash_signatures
+
+    return {r.doc_id: list(r.sig) for r in
+            word_minhash_signatures(docs, k, n_perms, seed).collect()}
+
+
+EDGE_TEXTS = [
+    None, "", " ", "   ", "one", "one two", "one two three",
+    "one two three four", " leading space", "trailing space ",
+    "double  space  here x", "  both  ends  ", "tab\tinside a word",
+    "new\nline inside words", "emoji 😀 🎉 words 👍🏽 here",
+    "accented café naïve résumé über straße", "日本語 の テキスト です",
+    "x y x y x y x y",  # repeated grams: duplicates change no minimum
+]
+
+
+@pytest.mark.parametrize("k", [1, 3])
+def test_word_minhash_signatures_match_jvm_chain_on_edge_texts(spark, k):
+    """The text kernel signs NULL, empty, 1-, 2-, 3- and 4-word texts,
+    leading/trailing/double spaces, tab and newline inside a word,
+    emoji and accented text exactly as the JVM chain does, for k = 1
+    (as the Ĵ test uses it) and k = 3."""
+    docs = spark.createDataFrame(list(enumerate(EDGE_TEXTS)),
+                                 "doc_id long, text string").coalesce(1)
+    want = _jvm_word_signatures(docs, k)
+    assert _text_signatures(docs, k) == want
+    assert len(want) == len(EDGE_TEXTS)
+
+
+def test_word_minhash_signatures_long_document(spark):
+    """A document with more than 65,536 grams gets a workspace chunk of
+    its own in ``minhash_kernel``; short documents on both sides of it
+    in the same Arrow batch keep their own signatures."""
+    import random
+
+    rng = random.Random(7)
+    words = [f"w{rng.randrange(5000)}" for _ in range(70_000)]
+    texts = ["a b c d", " ".join(words), "é è ê", None, "x y z w v"]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string").coalesce(1)
+    assert _text_signatures(docs, 3, 64, 5) == _jvm_word_signatures(
+        docs, 3, 64, 5)
+
+
+def test_word_minhash_kernel_respects_array_offset(spark):
+    """An Arrow text array that is a slice (non-zero array offset, and
+    value offsets that do not start at 0, with a NULL inside the slice)
+    signs as the same texts in a fresh array, in a large_string array
+    (64-bit offsets) and as the JVM chain."""
+    import numpy as np
+    import pyarrow as pa
+
+    from gliner_spark.operators.dedup import word_minhash_kernel
+
+    texts = EDGE_TEXTS
+    part = pa.array(["pad one", None, "pad two"] + texts).slice(3)
+    assert part.offset == 3 and part.null_count == 1
+    got = word_minhash_kernel(part, 3, 128, 11)
+    for fresh in (pa.array(texts), pa.array(texts, pa.large_string())):
+        assert np.array_equal(got, word_minhash_kernel(fresh, 3, 128, 11))
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    want = _jvm_word_signatures(docs, 3)
+    assert {i: list(s) for i, s in enumerate(got.tolist())} == want
 
 
 def test_minhash_signature_map_chunk_boundary_and_empty_rows(spark):

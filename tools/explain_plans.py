@@ -284,11 +284,11 @@ def main() -> int:
     )
 
     # 8b. incremental admission scale shape, structurally: (a) the
-    # signature pass is row-local — shingle hashing stays JVM-side and
-    # the 128-permutation min runs in ONE vectorized Arrow stage
-    # (r7: replaced the explode + map-side-combined min agg; zero
-    # shuffle now, and the Arrow stage is the guide-§4.2 batch-numpy
-    # pattern, not a row-at-a-time UDF), (b) the persisted store schema
+    # signature pass is row-local — word-gram spans, their xxhash64 and
+    # the 128-permutation min run in ONE vectorized mapInArrow stage
+    # (zero shuffle, the guide-§4.2 batch-numpy pattern, not a
+    # row-at-a-time UDF), with no interpreted higher-order function
+    # (``transform`` lambda) left in the plan, (b) the persisted store schema
     # is exactly (doc_id, sig): the state a 10^12-doc admission
     # re-reads carries no text by CONSTRUCTION, not by pruning
     import tempfile
@@ -305,7 +305,8 @@ def main() -> int:
         "batch_minhash_signatures (row-local Arrow stage, no shuffle, "
         "no row-at-a-time Python)",
         p,
-        {"BatchEvalPython": False, "MapInPandas": True,
+        {"BatchEvalPython": False, "MapInArrow": True,
+         "lambdafunction": False, "transform(": False,
          "Exchange hashpartitioning": False},
     )
     import shutil
