@@ -15,7 +15,7 @@ Parity targets:
   — start/end/inside scan with running-mean prob.
 
 Everything is numpy over one document (the decode unit); the Spark
-operator applies it inside the same ``mapInPandas`` pass as scoring, so
+operator applies it inside the same ``mapInArrow`` pass as scoring, so
 NER needs **no shuffle** (SURVEY.md §3.1).
 """
 

@@ -27,7 +27,7 @@ Two extensions beyond the reference, both opt-in:
   merged keeping max prob and re-sorted to generation order before
   greedy. A single-window document keeps its decoder's order untouched.
 
-Because the Spark ``mapInPandas`` stage calls exactly this function, the
+Because the Spark ``mapInArrow`` stage calls exactly this function, the
 cluster output and the straight-line single-process output are the same
 code path — the P/R-vs-reference gate (BASELINE.json:metric) is then a
 structural identity, measured (not assumed) by bench's parity check.

@@ -18,7 +18,7 @@ Two deltas vs a naive Python ``re`` port, both load-bearing:
    across matches so conversion is O(len(text)) total, not O(n·matches).
 
 The kernel is a pure function over one string so the same code path
-runs in pytest (no Spark) and inside ``mapInPandas`` on the cluster.
+runs in pytest (no Spark) and inside ``mapInArrow`` on the cluster.
 """
 
 from __future__ import annotations
@@ -44,10 +44,6 @@ def _mark_class() -> str:
 _W = f"[\\w{_mark_class()}]"
 # pattern parity: /root/reference/src/tokenizer_utils.cpp:102
 WORD_PATTERN = re.compile(f"{_W}+(?:[-_]{_W}+)*|\\S")
-
-# ASCII-safe version of the same pattern for SQL oracles (Java/RE2 \w is
-# ASCII; fine for the all-ASCII synthetic corpora).
-SQL_WORD_PATTERN = r"\w+(?:[-_]\w+)*|\S"
 
 Token = Tuple[int, int, str]  # (byte_start, byte_end, text)
 

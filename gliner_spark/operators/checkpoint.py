@@ -116,7 +116,7 @@ def checkpoint_write(
 
     ``todo`` is persisted across the two actions (parquet write +
     manifest count) so the upstream stage — for mentions, a full NER
-    ``mapInPandas`` pass — executes ONCE, not twice.
+    ``mapInArrow`` pass — executes ONCE, not twice.
 
     ``expected_part_keys`` (iterable of keys, or a 1-column DataFrame of
     part_key): input partitions that produced ZERO output rows are

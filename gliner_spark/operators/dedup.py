@@ -8,7 +8,7 @@ seeds near-duplicate docs at word-shingle Jaccard ≈ 0.99):
 - fingerprint: bag-normalized hash (order/multiplicity-insensitive)
 - ngram:       exact word-k-gram Jaccard via AllPairs prefix index
 - minhash:     MinHash-LSH blocked candidates + exact verification
-- simhash:     64-bit SimHash (pandas UDF) + banded Hamming join
+- simhash:     64-bit SimHash (Arrow stage) + banded Hamming join
 
 Scale notes: exact/fingerprint are one shuffle on a 16-byte key. The
 prefix index's bucket-size guard bounds quadratic blowup; at 100 TB the
@@ -26,17 +26,14 @@ exact-Jaccard verify (``_jaccard_verify``).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .bands import band_pairs, dropped_buckets, minhash_bands
 from .linking import _exact_jaccard
-from .util import drop_zip_importers, ensure_parallelism
+from .util import _list_rows, drop_zip_importers, ensure_parallelism
 
 
 def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id",
@@ -252,11 +249,8 @@ def word_minhash_signatures(docs: DataFrame, k: int, n_perms: int,
         drop_zip_importers()
         for b in batches:
             sig = word_minhash_kernel(b.column(1), k, n_perms, seed)
-            offsets = np.arange(len(sig) + 1, dtype=np.int32) * n_perms
             yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array(sig.ravel()))],
-                ["doc_id", "sig"])
+                [b.column(0), _list_rows(sig)], ["doc_id", "sig"])
 
     return docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
@@ -355,7 +349,7 @@ def _bucket_jaccard_candidates(
 
     Input: (shingle, sid, n_sh, hx) — one row per (prefix shingle,
     member doc), carrying the doc's xxhash64-hashed shingle array. One
-    applyInPandas group per prefix shingle: a binary membership matrix
+    applyInArrow group per prefix shingle: a binary membership matrix
     over the group's distinct hash values gives ALL pairwise
     intersection counts in one BLAS matmul; pairs whose hash-Jaccard
     clears ``threshold − margin`` are emitted. Groups larger than
@@ -370,35 +364,35 @@ def _bucket_jaccard_candidates(
     ~n²/2⁶⁵; a corpus-wide zero-collision check is asserted at gate
     scale in tests), and even a collision moves Ĵ by ~1/|A| ≪ margin.
     """
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     cut = threshold - margin
-    empty = pd.DataFrame({"src": np.empty(0, dtype=np.int64),
-                          "dst": np.empty(0, dtype=np.int64)})
+    empty = pa.table({"src": pa.array([], pa.int64()),
+                      "dst": pa.array([], pa.int64())})
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(tbl):
         drop_zip_importers()
-        m = len(pdf)
+        m = tbl.num_rows
         if m < 2 or m > max_bucket:
             return empty
-        ids = pdf["sid"].to_numpy(dtype=np.int64)
+        ids = tbl.column("sid").to_numpy()
         order = np.argsort(ids)
-        ids = ids[order]
-        n = pdf["n_sh"].to_numpy(dtype=np.int64)[order]
-        arrs = [np.asarray(a, dtype=np.int64)
-                for a in pdf["hx"].iloc[order]]
-        lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=m)
-        flat = np.concatenate(arrs)
-        _, inv = np.unique(flat, return_inverse=True)
+        tbl, ids = tbl.take(order), ids[order]
+        n = tbl.column("n_sh").to_numpy().astype(np.int64)
+        hx = tbl.column("hx")
+        lens = pc.list_value_length(hx).to_numpy()
+        _, inv = np.unique(pc.list_flatten(hx).to_numpy(),
+                           return_inverse=True)
         mat = np.zeros((m, int(inv.max()) + 1), dtype=np.float32)
         mat[np.repeat(np.arange(m), lens), inv] = 1.0
         inter = mat @ mat.T
         est = inter / (n[:, None] + n[None, :] - inter)
         ii, jj = np.nonzero(est >= cut)
         keep = ii < jj  # ids ascending → src < dst
-        return pd.DataFrame({"src": ids[ii[keep]], "dst": ids[jj[keep]]})
+        return pa.table({"src": ids[ii[keep]], "dst": ids[jj[keep]]})
 
-    return bucketed.groupBy("shingle").applyInPandas(
+    return bucketed.groupBy("shingle").applyInArrow(
         score, schema="src long, dst long"
     )
 
@@ -573,7 +567,6 @@ def near_dup_clusters(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pairs_fn=None,
 ) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, keep): the curation DECISION
     layer over pairwise near-dup detection — transitive closure of the
@@ -586,14 +579,9 @@ def near_dup_clusters(
     (≪ corpus); connected components runs on that subgraph, and docs
     without pairs short-circuit to singleton clusters via a left join —
     the CC iterations never see the clean majority of a 10^12-doc
-    corpus. ``pairs_fn`` swaps the pair source (e.g. ``minhash_dups``,
-    the blocked production path — default here is the exact
-    ``ngram_jaccard_dups`` that shares the DuckDB oracle)."""
-    pairs = (
-        pairs_fn(docs) if pairs_fn is not None
-        else ngram_jaccard_dups(docs, k=k, threshold=threshold,
-                                id_col=id_col, text_col=text_col)
-    )
+    corpus."""
+    pairs = ngram_jaccard_dups(docs, k=k, threshold=threshold,
+                               id_col=id_col, text_col=text_col)
 
     # zero-padded node ids: CC's lexicographic min == numeric min
     def pad(c):
@@ -697,9 +685,9 @@ def simhash_signatures(
 ) -> DataFrame:
     """(doc_id, simhash): token hashing runs JVM-side (``xxhash64`` over
     the split-token array, whole-stage codegen); only the bit-vote
-    accumulation — which has no efficient SQL form — crosses into an
-    Arrow-batched pandas stage, fully numpy-vectorized over the
-    concatenated int64 hash arrays (no per-token Python). Zero shuffle:
+    accumulation — which has no efficient SQL form — crosses into a
+    ``mapInArrow`` stage, fully numpy-vectorized over each batch's
+    flattened int64 hash arrays (no per-row or per-token Python). Zero shuffle:
     both stages are row-local.
 
     ``hash_family`` picks the token hash: ``xxhash64`` (default — the
@@ -708,6 +696,9 @@ def simhash_signatures(
     vote → signature → band → Hamming chain — a DuckDB oracle
     recomputes exactly. Same algorithm either way; only the hash family
     differs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     if hash_family == "xxhash64":
         def token_hash(w):
             return F.xxhash64(w)
@@ -732,43 +723,36 @@ def simhash_signatures(
         )
     )
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def compute(batches):
         drop_zip_importers()
-        for pdf in batches:
-            sig = simhash_vote_batch(
-                [np.asarray(a, dtype=np.int64) for a in pdf["hs"]]
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"),
-                 "simhash": pd.Series(sig)}
-            )
+        for b in batches:
+            hs = b.column(1)
+            sig = simhash_vote_batch(pc.list_flatten(hs).to_numpy(),
+                                     pc.list_value_length(hs).to_numpy())
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), pa.array(sig)], ["doc_id", "simhash"])
 
-    return src.mapInPandas(compute, schema=_SIMHASH_SCHEMA)
+    return src.mapInArrow(compute, _SIMHASH_SCHEMA)
 
 
-def simhash_vote_batch(arrs: list) -> np.ndarray:
-    """Majority bit-vote over a batch of per-doc int64 hash arrays →
-    int64 signatures (empty array → 0). One vectorized ``reduceat``
-    over the concatenated batch — the kernel both the Spark stage and
-    the property tests call."""
+def simhash_vote_batch(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Majority bit-vote → int64 signatures of ``len(lens)`` runs of
+    int64 hashes laid end to end in ``flat`` (empty run → 0). One
+    vectorized ``reduceat`` over the whole batch — the kernel both the
+    Spark stage and the property tests call."""
     bit_idx = np.arange(64, dtype=np.uint64)
-    n_docs = len(arrs)
-    lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=n_docs)
-    sig = np.zeros(n_docs, dtype=np.uint64)
+    lens = np.asarray(lens, np.int64)
+    sig = np.zeros(len(lens), dtype=np.uint64)
     nz = lens > 0  # empty docs keep signature 0
     if nz.any():
-        nz_arrs = [a for a in arrs if len(a)]
         nz_lens = lens[nz]
-        flat = np.concatenate(nz_arrs).view(np.uint64)
+        flat = np.asarray(flat, np.int64).view(np.uint64)
         bits = (flat[:, None] >> bit_idx) & np.uint64(1)  # (N, 64)
-        starts = np.zeros(len(nz_arrs), dtype=np.int64)
-        np.cumsum(nz_lens[:-1], out=starts[1:])
+        starts = np.cumsum(nz_lens) - nz_lens
         votes = np.add.reduceat(bits.view(np.int64), starts, axis=0)
         keep = (2 * votes) > nz_lens[:, None]  # majority-positive bit
-        s = np.zeros(len(nz_arrs), dtype=np.uint64)
-        for i in range(64):
-            s |= keep[:, i].astype(np.uint64) << np.uint64(i)
-        sig[nz] = s
+        sig[nz] = (keep.astype(np.uint64) << bit_idx).sum(
+            axis=1, dtype=np.uint64)
     return sig.view(np.int64)
 
 
@@ -789,7 +773,7 @@ def simhash_dups(
     one.
 
     r7 note (measured and kept AS the join): a per-bucket vectorized
-    applyInPandas Hamming (the rework pattern that won for the
+    grouped-Python Hamming (the rework pattern that won for the
     embedding/ngram candidates) was implemented and benchmarked at
     8.7 s vs this join's 7.8 s on a 50k-doc convergent-signature
     corpus (598M same-bucket pairs). Unlike those operators, the band

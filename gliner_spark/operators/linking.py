@@ -41,7 +41,7 @@ from .bands import (
     dropped_buckets,
     minhash_bands,
 )
-from .util import drop_zip_importers
+from .util import _list_rows, drop_zip_importers
 
 # deterministic MinHash permutation modulus: Mersenne prime 2^31-1, small
 # enough that (a*x + b) stays under 2^62 — Spark 4 runs ANSI mode, where
@@ -243,6 +243,8 @@ def minhash_signature_map(hashed: DataFrame, n_perms: int,
     stays in tests as the reference). Every other input column is
     carried through, so ``(id, hx)`` rows give ``(id, sig)``. Rows
     with NULL or empty hash arrays are dropped, as an explode would."""
+    import pyarrow.compute as pc
+
     out = T.StructType(
         [f for f in hashed.schema.fields if f.name != "hx"]
         + [T.StructField("sig", T.ArrayType(T.LongType()))]
@@ -250,16 +252,17 @@ def minhash_signature_map(hashed: DataFrame, n_perms: int,
 
     def run(batches):
         drop_zip_importers()
-        for pdf in batches:
-            keep = np.fromiter((x is not None and len(x) > 0
-                                for x in pdf["hx"]), bool, len(pdf))
-            arrs = [np.asarray(x, dtype=np.int64) for x in pdf["hx"][keep]]
-            lens = np.fromiter(map(len, arrs), np.int64, len(arrs))
-            flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
-            sig = minhash_kernel(flat, lens, n_perms, seed)
-            yield pdf[keep].drop(columns="hx").assign(sig=list(sig))
+        for b in batches:
+            b = b.filter(pc.greater(pc.fill_null(
+                pc.list_value_length(b.column("hx")), 0), 0))
+            hx = b.column("hx")
+            sig = minhash_kernel(pc.list_flatten(hx).to_numpy(),
+                                 pc.list_value_length(hx).to_numpy(),
+                                 n_perms, seed)
+            yield b.drop_columns("hx").append_column(
+                "sig", _list_rows(sig))
 
-    return hashed.mapInPandas(run, out)
+    return hashed.mapInArrow(run, out)
 
 
 def surface_shingles(surfaces: DataFrame, k: int) -> DataFrame:

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
 A 100 TB training-data pipeline carries image/audio/video as ``binary``
-columns with typed metadata, processed by Arrow-batched pandas stages.
+columns with typed metadata, processed by Arrow-batched Python stages.
 
 - ``attach_media``: deterministic synthetic media bytes derived from
   the text column. IMAGE rows carry a REAL image format — binary PPM
@@ -11,7 +11,7 @@ columns with typed metadata, processed by Arrow-batched pandas stages.
   opaque tagged payloads (no compact real format exists for them that
   plain SQL could mirror).
 - ``media_metadata``: pure-Catalyst metadata projection (no Python).
-- ``extract_features``: ``mapInPandas`` stage with a REAL pure-numpy
+- ``extract_features``: ``mapInArrow`` stage with a REAL pure-numpy
   PPM decoder for images (header parse incl. comments, pixel plane
   split) emitting integer moment features (dims, per-channel sums,
   sum-of-squares — integers, so the DuckDB oracle matches bit-for-bit);
@@ -23,15 +23,12 @@ columns with typed metadata, processed by Arrow-batched pandas stages.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .util import drop_zip_importers, ensure_parallelism
+from .util import _arrow_rows, drop_zip_importers, ensure_parallelism
 
 MEDIA_KINDS = ["image", "audio", "video"]
 
@@ -134,20 +131,21 @@ def extract_features(media: DataFrame) -> DataFrame:
     the oracle, which is the proof of real decoding); audio/video get
     raw byte moments. All-integer output ⇒ bit-exact SQL oracle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         drop_zip_importers()
-        for pdf in batches:
+        for batch in batches:
             rows = []
             for doc_id, kind, blob in zip(
-                pdf["doc_id"], pdf["kind"], pdf["media"]
+                *(batch.column(c).to_pylist()
+                  for c in ("doc_id", "kind", "media"))
             ):
-                b = bytes(blob) if blob is not None else b""
+                b = blob if blob is not None else b""
                 if kind == "image":
                     w, h, px = decode_ppm(b)
                     p = px.astype(np.int64)
                     ch = p.reshape(-1, 3).sum(axis=0)
                     rows.append(
-                        (int(doc_id), kind, w, h,
+                        (doc_id, kind, w, h,
                          int(ch[0]), int(ch[1]), int(ch[2]),
                          p.size, int(p.sum()), int((p * p).sum()))
                     )
@@ -159,12 +157,12 @@ def extract_features(media: DataFrame) -> DataFrame:
                     # semantics out of the oracle hash comparison
                     a = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
                     rows.append(
-                        (int(doc_id), kind, 0, 0, 0, 0, 0,
+                        (doc_id, kind, 0, 0, 0, 0, 0,
                          a.size, int(a.sum()), int((a * a).sum()))
                     )
-            yield pd.DataFrame(rows, columns=[f.name for f in MOMENTS_SCHEMA])
+            yield _arrow_rows(rows, MOMENTS_SCHEMA)
 
-    return ensure_parallelism(media).mapInPandas(run, schema=MOMENTS_SCHEMA)
+    return ensure_parallelism(media).mapInArrow(run, MOMENTS_SCHEMA)
 
 
 def sample_frames(media: DataFrame, frame_bytes: int = 32,

@@ -1,4 +1,4 @@
-"""Distributed NER: pages → mentions in ONE ``mapInPandas`` pass.
+"""Distributed NER: pages → mentions in ONE ``mapInArrow`` pass.
 
 Spark translation of the reference lifecycle (SURVEY.md §3.1): tokenize →
 score → decode → greedy all happen inside a single Arrow-batched Python
@@ -25,9 +25,8 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, List, Sequence
+from typing import Callable, List, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,22 +36,10 @@ from ..kernels.decode import Span
 from ..kernels.pipeline import ner_documents
 from ..kernels.scorer import make_scorer
 from ..schemas import MENTIONS
-from .util import drop_zip_importers, ensure_parallelism
+from .util import _arrow_rows, drop_zip_importers, ensure_parallelism
 
 # (doc_ids, per-document selected spans) → one Arrow batch's output rows
 Emitter = Callable[[List[str], List[List[Span]]], List[tuple]]
-
-
-def _frame(rows: List[tuple], schema: T.StructType) -> pd.DataFrame:
-    """Rows → a pandas batch whose integer/double columns keep their
-    dtype even when ``rows`` is empty."""
-    out = pd.DataFrame(rows, columns=schema.fieldNames())
-    for f in schema.fields:
-        if isinstance(f.dataType, T.LongType):
-            out[f.name] = out[f.name].astype("int64")
-        elif isinstance(f.dataType, T.DoubleType):
-            out[f.name] = out[f.name].astype("float64")
-    return out
 
 
 def _ner_stage(
@@ -83,16 +70,17 @@ def _ner_stage(
     if length_sort:
         src = src.sortWithinPartitions(F.length("text"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         drop_zip_importers()
         scorer = factory()  # once per task; sessions cache per process
-        for pdf in batches:
+        for b in batches:
             spans_batch = ner_documents(
-                pdf["text"].tolist(), labels, scorer, config
+                b.column(1).to_pylist(), labels, scorer, config
             )
-            yield _frame(emit(pdf["doc_id"].tolist(), spans_batch), schema)
+            yield _arrow_rows(emit(b.column(0).to_pylist(), spans_batch),
+                             schema)
 
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run, schema)
 
 
 def _mention_rows(doc_ids: List[str], spans_batch: List[List[Span]]):

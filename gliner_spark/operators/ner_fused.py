@@ -9,7 +9,7 @@ the key (document index, start). This removes BOTH costs the join
 formulation has:
 
 - no second computation of the NER stage (the self-join's two branches
-  each re-run ``mapInPandas`` unless the mentions table is pinned);
+  each re-run ``mapInArrow`` unless the mentions table is pinned);
 - no mentions shuffle at all — pages → triples becomes scan → one
   Python stage → sink, embarrassingly parallel.
 
@@ -164,7 +164,7 @@ def extract_triples_fused(
     config: GlinerConfig = GlinerConfig(),
     scorer_factory=None,
 ) -> DataFrame:
-    """pages → triples, single mapInPandas stage (no shuffle)."""
+    """pages → triples, single mapInArrow stage (no shuffle)."""
     rule_map = {(s, o): p for s, o, p in rules}
 
     def triple_rows(doc_ids, spans_batch):

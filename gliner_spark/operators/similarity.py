@@ -21,11 +21,10 @@ orders.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import drop_zip_importers, local_table
+from .util import _list_rows, drop_zip_importers, local_table
 
 
 def _as_double(col):
@@ -105,11 +104,11 @@ def _bucket_keys_udf(dim: int, n_bits: int, n_tables: int, seed: int):
     py4j plan construction per invocation** (the dominant cost of
     dedup_embedding at sf0.1), before any execution. The matmul
     computes identical keys with a constant-size plan and one
-    vectorized kernel per batch — the legitimate use of a Pandas UDF:
+    vectorized kernel per batch — the legitimate use of an Arrow UDF:
     the built-in expression exists but degenerates at this operand
-    count. (pandas_udf creation needs a live session, hence the
-    factory.)"""
-    from pyspark.sql.functions import pandas_udf
+    count. The vectors are read through the batch's list offsets; float32
+    input widens to float64 exactly."""
+    import pyarrow.compute as pc
 
     planes = np.stack(
         [_planes(dim, n_bits, t, seed) for t in range(n_tables)]
@@ -117,17 +116,15 @@ def _bucket_keys_udf(dim: int, n_bits: int, n_tables: int, seed: int):
     mat = planes.reshape(n_tables * n_bits, dim).T.copy()
     weights = 1 << np.arange(n_bits, dtype=np.int64)
 
-    @pandas_udf("array<int>")
-    def keys(v: pd.Series) -> pd.Series:
+    def keys(v):
         drop_zip_importers()
-        if not len(v):
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(e, dtype=np.float64) for e in v])
+        x = pc.list_flatten(v).to_numpy().astype(np.float64).reshape(
+            len(v), dim)
         bits = (x @ mat) > 0  # (n, T·bits)
         k = (bits.reshape(len(x), n_tables, n_bits) * weights).sum(axis=2)
-        return pd.Series(list(k.astype(np.int32)))
+        return _list_rows(k.astype(np.int32))
 
-    return keys
+    return F.arrow_udf(keys, "array<int>")
 
 
 def hyperplane_lsh_topk(
@@ -212,7 +209,8 @@ def _ivf_assign(corpus: DataFrame, centroids: np.ndarray,
     """(… , cell): nearest-centroid assignment via one Arrow-batched
     numpy matmul per batch (centroids are model-sized — broadcast into
     the closure, never a join)."""
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
     cnorm = np.linalg.norm(centroids, axis=1, keepdims=True)
@@ -224,18 +222,16 @@ def _ivf_assign(corpus: DataFrame, centroids: np.ndarray,
 
     def assign(batches):
         drop_zip_importers()
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf.assign(cell=pd.Series([], dtype="int32"))
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
+        for b in batches:
+            mat = pc.list_flatten(b.column(vec_col)).to_numpy().astype(
+                np.float64).reshape(b.num_rows, cent.shape[1])
             norms = np.linalg.norm(mat, axis=1)
             norms[norms == 0] = 1.0
             sims = (mat / norms[:, None]) @ cent.T
-            yield pdf.assign(cell=sims.argmax(axis=1).astype("int32"))
+            yield b.append_column(
+                "cell", pa.array(sims.argmax(axis=1).astype(np.int32)))
 
-    return corpus.mapInPandas(assign, schema=out_schema)
+    return corpus.mapInArrow(assign, out_schema)
 
 
 def ivf_topk(
@@ -263,7 +259,7 @@ def ivf_topk(
     scale."""
     from .util import ensure_parallelism
 
-    # single-split local parquet → the assignment mapInPandas and the
+    # single-split local parquet → the assignment mapInArrow and the
     # per-iteration centroid aggregation would run on ONE core
     # (guide §2.5)
     embeddings = ensure_parallelism(embeddings)
@@ -371,7 +367,7 @@ def _bucket_pair_candidates(
     """(src, dst) candidate pairs from per-bucket vectorized scoring.
 
     Input: (tbl, bucket, nid, vraw float32[dim]) — every member of every
-    kept bucket. One applyInPandas group per (tbl, bucket): the group's
+    kept bucket. One applyInArrow group per (tbl, bucket): the group's
     vectors are stacked into one float64 matrix and scored by BLAS
     matmul against the group's suffix (upper triangle in id order only),
     emitting every pair whose numpy cosine clears ``threshold − margin``.
@@ -391,18 +387,18 @@ def _bucket_pair_candidates(
     Group size is bounded by the caller's ``max_bucket`` guard, so the
     in-memory matrix is (max_bucket × dim) floats at worst; the matmul
     runs in id-sorted row chunks to bound the similarity block."""
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     cut = threshold - margin
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(tbl):
         drop_zip_importers()
-        ids = pdf["nid"].to_numpy(dtype=np.int64)
+        ids = tbl.column("nid").to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        x = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["vraw"]]
-        )[order]
+        x = pc.list_flatten(tbl.column("vraw")).to_numpy().astype(
+            np.float64).reshape(len(ids), -1)[order]
         norms = np.linalg.norm(x, axis=1)
         zero = norms == 0
         norms[zero] = 1.0
@@ -421,14 +417,10 @@ def _bucket_pair_candidates(
             keep = ii < jj  # global i < j (both offset by s)
             srcs.append(ids[s + ii[keep]])
             dsts.append(ids[s + jj[keep]])
-        return pd.DataFrame({
-            "src": np.concatenate(srcs) if srcs else
-            np.empty(0, dtype=np.int64),
-            "dst": np.concatenate(dsts) if dsts else
-            np.empty(0, dtype=np.int64),
-        })
+        return pa.table({"src": np.concatenate(srcs),
+                         "dst": np.concatenate(dsts)})
 
-    return bucketed.groupBy("tbl", "bucket").applyInPandas(
+    return bucketed.groupBy("tbl", "bucket").applyInArrow(
         score, schema="src long, dst long"
     )
 

@@ -3,7 +3,7 @@
 The north star calls for skewed domains to be salted before the
 link-scoring shuffle (BASELINE.json). AQE's skew-join splitting covers
 sort-merge joins it can see, but not aggregations feeding
-``applyInPandas`` groups or joins hidden behind round-trips — there an
+``applyInArrow`` groups or joins hidden behind round-trips — there an
 explicit salt is the answer (SURVEY.md §4):
 
 - ``hot_keys``: one cheap aggregation pass returning keys whose row

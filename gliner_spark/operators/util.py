@@ -5,7 +5,9 @@ from __future__ import annotations
 import sys
 import zipimport
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # rows a plan may hold on the driver in place of distributed work: the
 # bound of every size-adaptive driver path (the KG linking tail's
@@ -16,18 +18,43 @@ from pyspark.sql import DataFrame, SparkSession
 DRIVER_ROWS = 1_000_000
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition iff the input has fewer partitions than the session's
     parallelism — small local files arrive as one split, which would run
-    a following ``mapInPandas`` stage single-threaded. At cluster scale
-    the scan has ≫ cores splits and this is a no-op (no shuffle added).
+    a following Python stage single-threaded. At cluster scale the scan
+    has ≫ cores splits and this is a no-op (no shuffle added).
     """
     if df.isStreaming:  # partitioning is the source's business there
         return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _arrow_rows(rows, schema: StructType):
+    """Tuples in ``schema`` column order as one ``pyarrow.RecordBatch``
+    of ``schema``'s Arrow types — what a Python stage yields, and the
+    body of every driver-side ``local_table``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+
+
+def _list_rows(mat: np.ndarray):
+    """The rows of an (n, width) numpy matrix as one
+    ``pyarrow.ListArray`` of n lists — an ``array<…>`` column a Python
+    stage yields."""
+    import pyarrow as pa
+
+    offsets = np.arange(len(mat) + 1, dtype=np.int32) * mat.shape[1]
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(mat.ravel()))
 
 
 def local_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
@@ -41,18 +68,13 @@ def local_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
     to the JVM once, whether or not Arrow is enabled on the session."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     schema = StructType.fromDDL(ddl)
-    arrow = to_arrow_schema(schema)
     if isinstance(rows, pa.Table):
-        table = rows.select(arrow.names).cast(arrow)
+        table = rows.select(schema.fieldNames()).cast(
+            to_arrow_schema(schema))
     else:
-        cols = list(zip(*rows)) or [()] * len(arrow)
-        table = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
-            schema=arrow,
-        )
+        table = pa.Table.from_batches([_arrow_rows(rows, schema)])
     return spark.createDataFrame(table, schema)
 
 

@@ -3,7 +3,7 @@
 Composition of every stage (BASELINE.json:north_star), structured for
 the 100 TB plan shape:
 
-  pages ──mapInPandas(NER + in-batch pairing)──► mention rows + rels
+  pages ──mapInArrow(NER + in-batch pairing)───► mention rows + rels
                                                 [no shuffle; pinned once]
         ├─ drop(rels) ──► mentions
         ├─ explode(rels) ──► triples            [no shuffle, no join]

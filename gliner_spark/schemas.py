@@ -67,40 +67,3 @@ MENTION_RELATIONS = T.StructType(
         )
     ]
 )
-
-LINK_EDGES = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("sim", T.DoubleType(), False),
-    ]
-)
-
-NODES = T.StructType(
-    [
-        T.StructField("entity_id", T.StringType(), False),
-        T.StructField("canonical", T.StringType(), False),
-        T.StructField("label", T.StringType(), False),
-        T.StructField("n_mentions", T.LongType(), False),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src_entity", T.StringType(), False),
-        T.StructField("dst_entity", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("weight", T.DoubleType(), False),
-    ]
-)
-
-CHECKPOINTS = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("part_key", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("lineage", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-    ]
-)

@@ -62,7 +62,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # scorer batch inside mapInPandas: 2048 measured fastest for the
+        # scorer batch inside mapInArrow: 2048 measured fastest for the
         # surrogate (amortizes per-batch overhead); drop toward 256-512
         # for ONNX where padded-batch memory matters
         .config(

@@ -14,7 +14,7 @@ A Common-Crawl user has REAL markup; this module is the general path:
   input is what the north rule's per-url checksum verification needs —
   asserted in tests against hand-written goldens.
 
-Spark side: an Arrow-batched pandas UDF (``html_text_udf``). Parsing
+Spark side: an Arrow UDF (``html_text_udf``). Parsing
 real HTML is inherently per-document work; the batch boundary is Arrow
 (zero-copy columnar transfer), there is no per-row Python *dispatch*
 overhead beyond the parse itself, and the stage is row-local (no
@@ -27,7 +27,6 @@ from __future__ import annotations
 from html.parser import HTMLParser
 from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.util import drop_zip_importers
@@ -102,15 +101,17 @@ def html_to_text(html: bytes | str | None) -> str:
     return p.text()
 
 
-def _html_text_batch(html: pd.Series) -> pd.Series:
+def _html_text_batch(html):
+    import pyarrow as pa
+
     drop_zip_importers()
-    return html.map(html_to_text)
+    return pa.array([html_to_text(h) for h in html.to_pylist()], pa.string())
 
 
 def html_text_udf(col):
     """Arrow-batched extraction column (UDF registered lazily — creating
-    a pandas_udf requires an active session)."""
-    return F.pandas_udf(_html_text_batch, "string")(col)
+    an arrow_udf requires an active session)."""
+    return F.arrow_udf(_html_text_batch, "string")(col)
 
 
 def pages_from_raw_html(

@@ -107,11 +107,13 @@ def test_simhash_deterministic_and_catches_dups(docs):
 def test_simhash_vectorized_vote_semantics(spark):
     """The distributed signature = majority bit-vote over JVM xxhash64
     token hashes: a 1-token doc's simhash IS its token hash; a 3-token
-    doc's bits are the per-bit majority of the three hashes."""
+    doc's bits are the per-bit majority of the three hashes; empty and
+    NULL text sign as 0."""
     from gliner_spark.operators.dedup import simhash_signatures
 
     df = spark.createDataFrame(
-        [(1, "spark"), (2, "join"), (3, "spark join table")],
+        [(1, "spark"), (2, "join"), (3, "spark join table"), (4, ""),
+         (5, None)],
         "doc_id long, text string",
     )
     got = {r.doc_id: r.simhash for r in simhash_signatures(df).collect()}
@@ -131,6 +133,7 @@ def test_simhash_vectorized_vote_semantics(spark):
     if expect >= 1 << 63:
         expect -= 1 << 64
     assert got[3] == expect
+    assert got[4] == got[5] == 0
 
 
 def test_prefix_filtered_ngram_equals_bruteforce(spark):
@@ -417,15 +420,18 @@ def test_bucket_jaccard_candidates_internals(spark):
     """r7 internals: the per-bucket Jaccard prefilter must (a) honor the
     max_bucket cap group-locally (oversized group → no pairs, matching
     the old bucket-aggregation guard), (b) emit src<dst only, (c) keep
-    near-threshold pairs via the margin."""
+    near-threshold pairs via the margin, (d) emit nothing for a
+    one-row group."""
     from gliner_spark.operators.dedup import _bucket_jaccard_candidates
 
     # group "g": docs 1,2 share 4 of 5 shingles (J = 4/6 ≈ 0.667);
-    # docs 1,3 identical (J = 1.0); hashes stand in for shingles
+    # docs 1,3 identical (J = 1.0); hashes stand in for shingles.
+    # group "h" holds doc 4 alone, with doc 1's shingles
     rows = [
         ("g", 1, 5, [10, 20, 30, 40, 50]),
         ("g", 2, 5, [10, 20, 30, 40, 99]),
         ("g", 3, 5, [10, 20, 30, 40, 50]),
+        ("h", 4, 5, [10, 20, 30, 40, 50]),
     ]
     df = spark.createDataFrame(
         rows, "shingle string, sid long, n_sh int, hx array<long>"
@@ -448,7 +454,7 @@ def test_bucket_pair_candidates_prefilter_semantics(spark):
     (b) force-pair zero-norm vectors with their whole bucket (the old
     Catalyst plan emits their NaN cosine, which Spark orders ABOVE any
     threshold, so dropping them would change output), (c) emit src<dst
-    only."""
+    only, (d) emit nothing for a one-row bucket."""
     import numpy as np
 
     from gliner_spark.operators.similarity import _bucket_pair_candidates
@@ -458,6 +464,8 @@ def test_bucket_pair_candidates_prefilter_semantics(spark):
         (0, 0, 3, [1.0, 0.001, 0.0, 0.0]),   # ~1.0 cosine with 7
         (0, 0, 11, [0.0, 1.0, 0.0, 0.0]),    # orthogonal
         (0, 0, 5, [0.0, 0.0, 0.0, 0.0]),     # zero vector → NaN pairs
+        (0, 1, 9, [1.0, 0.0, 0.0, 0.0]),     # alone in its bucket
+        (1, 0, 13, [0.0, 0.0, 0.0, 0.0]),    # alone, zero vector
     ]
     df = spark.createDataFrame(
         rows, "tbl int, bucket int, nid long, vraw array<float>"
@@ -480,6 +488,43 @@ def test_bucket_pair_candidates_prefilter_semantics(spark):
     got2 = _bucket_pair_candidates(df2, 0.9).collect()
     assert len(got2) == 40 * 39 // 2
     assert np.all([r.src < r.dst for r in got2])
+
+
+@pytest.mark.parametrize("n_rows", [3, 0])
+def test_vector_stages_with_empty_partitions(spark, n_rows):
+    """The two Arrow vector stages — the hyperplane bucket keys
+    (``_bucket_keys_udf``) and the IVF cell assignment
+    (``_ivf_assign``) — over 6 partitions of which at least 3 are empty
+    give, row for row, what numpy gives over the vectors directly."""
+    import numpy as np
+
+    from gliner_spark.operators.similarity import (
+        _bucket_keys_udf,
+        _ivf_assign,
+        _planes,
+    )
+
+    dim, n_bits, n_tables, seed = 4, 3, 5, 11
+    vec = F.array(F.col("id") + 1.0, 2.0 - F.col("id"),
+                  F.col("id") * 0.5, F.lit(-1.0))
+    df = spark.range(0, n_rows, 1, 6).select("id", vec.alias("v"))
+    x = np.array([[i + 1.0, 2.0 - i, i * 0.5, -1.0] for i in range(n_rows)]
+                 ).reshape(n_rows, dim)
+
+    keys = _bucket_keys_udf(dim, n_bits, n_tables, seed)
+    got = {r.id: list(r.k) for r in df.select(
+        "id", keys(F.col("v")).alias("k")).collect()}
+    planes = np.concatenate(
+        [_planes(dim, n_bits, t, seed) for t in range(n_tables)])
+    bits = ((x @ planes.T) > 0).reshape(n_rows, n_tables, n_bits)
+    want = (bits * (1 << np.arange(n_bits))).sum(axis=2)
+    assert got == {i: want[i].tolist() for i in range(n_rows)}
+
+    cents = np.array([[1.0, 0, 0, 0], [0, 1.0, 0, 0], [0, 0, 0, -1.0]])
+    got = {r.id: r.cell for r in _ivf_assign(df, cents).collect()}
+    norms = np.linalg.norm(x, axis=1, keepdims=True)
+    want = ((x / norms) @ cents.T).argmax(axis=1)
+    assert got == {i: int(want[i]) for i in range(n_rows)}
 
 
 def test_multimodal_plumbing(docs):

@@ -66,7 +66,7 @@ def test_fused_token_level_equals_modular(spark):
 
 def test_persisted_mentions_score_each_doc_once(spark, tmp_path):
     """The modular relation self-join must NOT re-run the scoring
-    mapInPandas per join branch: with mentions persisted, the scorer
+    mapInArrow per join branch: with mentions persisted, the scorer
     factory runs once per input task; unpersisted it runs twice (one
     per branch). Counted via marker files the factory drops (local mode
     shares the filesystem with Python workers)."""
@@ -112,7 +112,7 @@ def test_persisted_mentions_score_each_doc_once(spark, tmp_path):
 def test_fused_no_shuffle_plan(spark):
     pages = synthesize_pages(spark, 50)
     # pre-execution formatted plan: a single Python stage, no Exchange
-    # above the mapInPandas (the synthesis union below it is irrelevant)
+    # above the mapInArrow (the synthesis union below it is irrelevant)
     import io
     from contextlib import redirect_stdout
 
@@ -120,7 +120,8 @@ def test_fused_no_shuffle_plan(spark):
     with redirect_stdout(buf):
         extract_triples_fused(pages, ALL_LABELS).explain("formatted")
     txt = buf.getvalue()
-    above_map = txt.split("MapInPandas")[0]
+    assert "MapInArrow" in txt
+    above_map = txt.split("MapInArrow")[0]
     assert "Exchange" not in above_map
 
 
@@ -350,14 +351,14 @@ def test_build_kg_scores_each_doc_once(spark, tmp_path, monkeypatch,
 
 
 def test_build_kg_triples_no_shuffle_plan(spark):
-    """build_kg's triples are the NER pin exploded: one MapInPandas and
+    """build_kg's triples are the NER pin exploded: one MapInArrow and
     no Exchange above it (no mentions shuffle, no self-join)."""
     from gliner_spark.plans.kg import build_kg
 
     kg = build_kg(synthesize_pages(spark, 50), ALL_LABELS)
     txt = kg.triples._jdf.queryExecution().executedPlan().toString().split(
         "== Initial Plan ==")[0]
-    assert txt.count("MapInPandas") == 1
-    assert "Exchange" not in txt.split("MapInPandas")[0]
+    assert txt.count("MapInArrow") == 1
+    assert "Exchange" not in txt.split("MapInArrow")[0]
     assert "Join" not in txt
     spark.catalog.clearCache()

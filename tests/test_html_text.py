@@ -117,6 +117,21 @@ def test_template_pages_roundtrip_via_udf(spark):
     assert mismatches.count() == 0
 
 
+def test_html_text_udf_null_and_empty(spark):
+    """NULL html extracts as "", like empty html; bytes and strings
+    extract alike."""
+    df = spark.createDataFrame(
+        [(1, None), (2, b""), (3, b"<p>a</p><p>caf\xc3\xa9</p>")],
+        "id long, html binary",
+    )
+    got = {r.id: r.text for r in df.select(
+        "id", html_text_udf(F.col("html")).alias("text")).collect()}
+    assert got == {1: "", 2: "", 3: "a\ncafé"}
+    s = df.select("id", F.col("html").cast("string").alias("html"))
+    assert {r.id: r.text for r in s.select(
+        "id", html_text_udf(F.col("html")).alias("text")).collect()} == got
+
+
 def test_raw_html_to_kg_end_to_end(spark):
     """The Common-Crawl user's path: a raw crawl table with REAL markup
     (entities, script noise, nested tags) → pages_from_raw_html →

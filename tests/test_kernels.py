@@ -347,7 +347,8 @@ def test_simhash_vote_property(hash_lists):
     from gliner_spark.operators.dedup import simhash_vote_batch
 
     got = simhash_vote_batch(
-        [np.asarray(a, dtype=np.int64) for a in hash_lists]
+        np.asarray([x for a in hash_lists for x in a], dtype=np.int64),
+        np.asarray([len(a) for a in hash_lists], dtype=np.int64),
     )
 
     for a, g in zip(hash_lists, got):

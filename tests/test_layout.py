@@ -1,9 +1,10 @@
 """Layout guards, on the AST alone (no Spark, no package import): every
 module under ``gliner_spark/`` is reachable from a production entry
 point, every top-level function or class, private ones included, is
-used by one (or allowlisted below), every config field is read somewhere outside
-``config.py``, and every package import in the scripts names something
-that exists.
+used by one (or allowlisted below), every module-level UPPER_CASE
+constant is read by one, every config field is read somewhere outside
+``config.py``, no package module uses pandas, and every package import
+in the scripts names something that exists.
 
 Production roots are the 50-query driver entry, the jobs, the two bench
 scripts, the benchmark package and the public API. ``tests/`` and
@@ -14,6 +15,7 @@ benchmark.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -165,19 +167,35 @@ def _refs(node: ast.AST) -> set[str]:
 
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+# a module-level UPPER_CASE name, private or not
+_CONST = re.compile(r"_?[A-Z][A-Z0-9_]*")
+
+
+def _defined_name(s: ast.stmt) -> str | None:
+    """The name a top-level statement defines, if it is a def, a class
+    or a constant: a single UPPER_CASE assignment target."""
+    if isinstance(s, _DEFS):
+        return s.name
+    target = (s.targets[0] if isinstance(s, ast.Assign) and len(s.targets) == 1
+              else s.target if isinstance(s, ast.AnnAssign) and s.value
+              else None)
+    if isinstance(target, ast.Name) and _CONST.fullmatch(target.id):
+        return target.id
+    return None
 
 
 def _live_and_defined(
     kept: set[str],
 ) -> tuple[set[str], set[tuple[str, str]]]:
     """Names live from the production roots, with ``kept`` counted as
-    live, and every top-level def/class of the non-root package
-    modules, private or not, as (name, dotted home).
+    live, and every top-level def/class/constant of the non-root
+    package modules, private or not, as (name, dotted home).
 
     Roots count whole; a package module's top-level statements other
-    than defs run on import, so they count too. A def is live once its
-    name is, and then its body's names are. Names are bare, so a name
-    shared by two modules keeps both: the scan errs on the live side."""
+    than defs and constants run on import, so they count too. A def or
+    constant is live once its name is, and then its body's or value's
+    names are. Names are bare, so a name shared by two modules keeps
+    both: the scan errs on the live side."""
     roots = set(_roots())
     live = set(kept)
     defs: dict[str, list[ast.AST]] = {}
@@ -188,9 +206,10 @@ def _live_and_defined(
             live |= _refs(tree)
             continue
         for s in tree.body:
-            if isinstance(s, _DEFS):
-                defs.setdefault(s.name, []).append(s)
-                defined.add((s.name, f"{_module_name(f)}.{s.name}"))
+            name = _defined_name(s)
+            if name:
+                defs.setdefault(name, []).append(s)
+                defined.add((name, f"{_module_name(f)}.{name}"))
             else:
                 live |= _refs(s)
     todo = [n for n in defs if n in live]
@@ -207,7 +226,8 @@ def test_every_public_function_is_used():
     is as dead as a public one."""
     kept = {k.rsplit(".", 1)[1] for k in TEST_ONLY_KEPT}
     live, defined = _live_and_defined(kept)
-    dead = sorted(home for name, home in defined if name not in live)
+    dead = sorted(home for name, home in defined
+                  if name not in live and not _CONST.fullmatch(name))
     assert not dead, f"no production path uses {dead}"
 
     # the allowlist holds only real, otherwise-unused functions
@@ -218,6 +238,51 @@ def test_every_public_function_is_used():
         or k.rsplit(".", 1)[1] in bare
     )
     assert not stale, f"allowlisted but used or missing: {stale}"
+
+
+# Module-level UPPER_CASE constants no production root reads, kept on
+# purpose, each with its reason (none at present).
+UNREAD_CONSTANTS_KEPT: dict[str, str] = {}
+
+
+def test_every_constant_is_read():
+    """Every module-level UPPER_CASE constant of the package is read in
+    the production closure: one only tests read documents nothing that
+    runs (a schema no table is written with, a pattern no code
+    applies)."""
+    live, defined = _live_and_defined(
+        {k.rsplit(".", 1)[1] for k in UNREAD_CONSTANTS_KEPT})
+    unread = sorted(
+        home for name, home in defined
+        if _CONST.fullmatch(name) and name not in live
+        and home.removeprefix(f"{PKG}.") not in UNREAD_CONSTANTS_KEPT)
+    assert not unread, f"constants no production path reads: {unread}"
+
+
+_PANDAS_APIS = {"mapInPandas", "applyInPandas", "pandas_udf"}
+
+
+def test_package_does_not_use_pandas():
+    """Every Python stage of the package reads and writes Arrow batches
+    (``mapInArrow``, ``applyInArrow``, ``arrow_udf``): no module under
+    ``gliner_spark/`` imports pandas or names a pandas stage API."""
+    found = []
+    for f in sorted((REPO / PKG).rglob("*.py")):
+        for n in ast.walk(ast.parse(f.read_text(), str(f))):
+            if isinstance(n, ast.Import):
+                mods = [a.name for a in n.names]
+            elif isinstance(n, ast.ImportFrom) and not n.level:
+                mods = [n.module or ""]
+            else:
+                mods = []
+            names = ({n.attr} if isinstance(n, ast.Attribute)
+                     else {n.id} if isinstance(n, ast.Name)
+                     else {n.name} if isinstance(n, ast.alias) else set())
+            found += [f"{f.relative_to(REPO)}: import {m}" for m in mods
+                      if m.split(".")[0] == "pandas"]
+            found += [f"{f.relative_to(REPO)}: {x}"
+                      for x in names & _PANDAS_APIS]
+    assert not found, f"pandas in the package: {found}"
 
 
 def _bound_names(f: Path) -> set[str]:

@@ -423,6 +423,9 @@ def test_minhash_signature_map_chunk_boundary_and_empty_rows(spark):
         hx.select("sid", F.explode("hx").alias("h")), ["sid"], 64, 5
     ).collect()}
     assert got == want and set(got) == set(sizes)
+    # a batch of only NULL and empty arrays signs nothing
+    empty = local_table(spark, rows[-2:], "sid long, hx array<bigint>")
+    assert minhash_signature_map(empty, 64, 5).count() == 0
 
 
 def test_spark_round_matches_spark_round(spark):

@@ -119,20 +119,21 @@ def main() -> int:
     # local-file parallelism guard, absent on real multi-split scans)
     m = extract_mentions(docs, SOUP_LABELS, id_col="doc_id")
     p = plan_of(m)
-    above_map = p.split("MapInPandas")[0]
+    above_map = p.split("MapInArrow")[0]
     bad += not check(
         "ner_mentions (column pruning, shuffle-free above Python stage)",
         p,
         {"ReadSchema: struct<doc_id:bigint,text:string>": True,
-         "ArrowEvalPython": False},  # mapInPandas, not per-row python
+         "MapInArrow": True,  # one batch stage, not a per-row UDF
+         "ArrowEvalPython": False, "BatchEvalPython": False},
     )
     bad += not check(
-        "ner_mentions (no shuffle above mapInPandas)",
+        "ner_mentions (no shuffle above mapInArrow)",
         above_map,
         {"Exchange": False},
     )
 
-    # 2. filter pushdown reaches the scan through mapInPandas inputs
+    # 2. filter pushdown reaches the scan through mapInArrow inputs
     flt = docs.where(F.col("lang") == "en").select("doc_id", "text")
     p = plan_of(flt)
     bad += not check(
@@ -152,16 +153,16 @@ def main() -> int:
     )
 
     # 4. linking LSH: shingles and their hashes JVM-side, the MinHash in
-    # ONE row-local Arrow stage (mapInPandas, never a row-at-a-time
+    # ONE row-local Arrow stage (mapInArrow, never a row-at-a-time
     # Python UDF); the band join itself codegen'd. The surfaces are
-    # pinned so the NER stage's own mapInPandas is not counted.
+    # pinned so the NER stage's own mapInArrow is not counted.
     surf = entity_surfaces(m).localCheckpoint()
     p = executed_plan_of(_surface_signatures(surf, 3, 64, 7)).split(
         "== Initial Plan ==")[0]
-    n_map = p.count("MapInPandas")
+    n_map = p.count("MapInArrow")
     ok4 = n_map == 1
     print(f"\n=== kg_links_lsh (numpy minhash stage) ===\n"
-          f"  [{'OK ' if ok4 else 'BAD'}] one MapInPandas -> {n_map}")
+          f"  [{'OK ' if ok4 else 'BAD'}] one MapInArrow -> {n_map}")
     bad += not ok4
     bad += not check(
         "kg_links_lsh (no row-at-a-time Python)",
@@ -195,7 +196,7 @@ def main() -> int:
     bad += not check(
         "build_kg nodes (driver tail)",
         plan_of(kg.nodes),
-        {"LocalTableScan": True, "Exchange": False, "MapInPandas": False},
+        {"LocalTableScan": True, "Exchange": False, "MapInArrow": False},
     )
     p = kg.edges._jdf.queryExecution().executedPlan().toString()
     n_map_joins = len(re.findall(
@@ -208,15 +209,15 @@ def main() -> int:
         print(p)
     bad += not ok4b
     # build_kg's triples are its pinned NER pass exploded: the pairing
-    # ran inside the one MapInPandas, so no Exchange (mentions shuffle)
+    # ran inside the one MapInArrow, so no Exchange (mentions shuffle)
     # and no join sit above it
     p = kg.triples._jdf.queryExecution().executedPlan().toString().split(
         "== Initial Plan ==")[0]
-    n_map = p.count("MapInPandas")
-    above = p.split("MapInPandas")[0]
+    n_map = p.count("MapInArrow")
+    above = p.split("MapInArrow")[0]
     ok4c = n_map == 1 and "Exchange" not in above and "Join" not in above
     print(f"  [{'OK ' if ok4c else 'BAD'}] build_kg triples: {n_map} "
-          f"MapInPandas, Exchange above it {'Exchange' in above}, "
+          f"MapInArrow, Exchange above it {'Exchange' in above}, "
           f"join above it {'Join' in above}")
     if not ok4c:
         print(p)
@@ -236,7 +237,7 @@ def main() -> int:
         "bpe_token_stats (JVM-side regex, codegen)",
         p,
         {"ArrowEvalPython": False, "BatchEvalPython": False,
-         "MapInPandas": False, "*(": True},
+         "MapInArrow": False, "*(": True},
     )
 
     # 6. salted surface aggregation: exactly ONE exchange more than the
@@ -268,7 +269,7 @@ def main() -> int:
         "cosine_links_md5 (pure Catalyst, codegen)",
         p,
         {"ArrowEvalPython": False, "BatchEvalPython": False,
-         "MapInPandas": False, "*(": True},
+         "MapInArrow": False, "*(": True},
     )
 
     # 8. paragraph dedup: pure Catalyst (segmentation, first-occurrence
@@ -280,7 +281,7 @@ def main() -> int:
         "paragraph_dedup (pure Catalyst, codegen)",
         p,
         {"ArrowEvalPython": False, "BatchEvalPython": False,
-         "MapInPandas": False, "*(": True},
+         "MapInArrow": False, "*(": True},
     )
 
     # 8b. incremental admission scale shape, structurally: (a) the
