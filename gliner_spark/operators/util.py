@@ -60,12 +60,21 @@ def _list_rows(mat: np.ndarray):
 def local_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """Driver-side rows — tuples in ``ddl`` column order, or a
     ``pyarrow.Table`` holding (at least) ``ddl``'s columns — as a
-    DataFrame that plans as ``LocalTableScan``.
+    DataFrame that plans as ``LocalTableScan``, split like a file of
+    the same size.
 
     ``createDataFrame(<python list>)`` plans as ``Scan ExistingRDD``: a
     Python RDD whose every evaluation starts Python workers (~1 CPU-s
     each on 4 cores). Going through a ``pyarrow.Table`` ships the rows
-    to the JVM once, whether or not Arrow is enabled on the session."""
+    to the JVM once, whether or not Arrow is enabled on the session.
+
+    The scan alone splits into min(rows, cores) partitions, whatever
+    the size, and every task that reads or writes a file deserializes
+    the whole Hadoop ``Configuration``: a 250-row store append would
+    run 4 write tasks and leave 4 files. So the table is coalesced to
+    ceil(Arrow bytes / ``spark.sql.files.maxPartitionBytes``)
+    partitions, as a file scan would split it: one up to 128 MiB, and
+    never more than the scan's own (a coalesce cannot add any)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -75,7 +84,9 @@ def local_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
             to_arrow_schema(schema))
     else:
         table = pa.Table.from_batches([_arrow_rows(rows, schema)])
-    return spark.createDataFrame(table, schema)
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return spark.createDataFrame(table, schema).coalesce(
+        max(1, -(-table.nbytes // split)))
 
 
 def read_parquet_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:

@@ -14,8 +14,9 @@ the 100 TB plan shape:
                │    driver: MinHash kernel → bands (≤ DRIVER_ROWS
                │            candidate pairs) → exact Jaccard
                │            → union-find → nodes + entity map
-               │            (two LocalTableScans; the nodes one
-               │            partition, so one file per label)
+               │            (two LocalTableScans split by size:
+               │            one partition up to 128 MiB, so the
+               │            nodes write one file per label)
                │
                └─ more: surfaces pinned, distributed tail
                     MinHash stage → band join ──► links
@@ -116,9 +117,7 @@ def _linking_tail_local(surfaces: DataFrame, k: int, n_perms: int,
     ent_map = pa.table({"e_label": ents["label"],
                         "e_surface": ents["surface"], "entity_id": eid})
     spark = surfaces.sparkSession
-    # the nodes in one partition: at most DRIVER_ROWS driver-resident
-    # rows, written as one file per label instead of one per task
-    return (local_table(spark, nodes, NODES_DDL).coalesce(1),
+    return (local_table(spark, nodes, NODES_DDL),
             local_table(spark, ent_map, ENTITY_MAP_DDL))
 
 

@@ -3,8 +3,9 @@ module under ``gliner_spark/`` is reachable from a production entry
 point, every top-level function or class, private ones included, is
 used by one (or allowlisted below), every module-level UPPER_CASE
 constant is read by one, every config field is read somewhere outside
-``config.py``, no package module uses pandas, and every package import
-in the scripts names something that exists.
+``config.py``, no package module uses pandas, only ``local_table``
+builds and splits driver tables, and every package import in the
+scripts names something that exists.
 
 Production roots are the 50-query driver entry, the jobs, the two bench
 scripts, the benchmark package and the public API. ``tests/`` and
@@ -283,6 +284,27 @@ def test_package_does_not_use_pandas():
             found += [f"{f.relative_to(REPO)}: {x}"
                       for x in names & _PANDAS_APIS]
     assert not found, f"pandas in the package: {found}"
+
+
+def test_local_tables_are_built_and_split_in_one_place():
+    """``operators/util.local_table`` is the one place driver rows
+    become a DataFrame and the one place their partitions are decided:
+    no other package module calls ``createDataFrame``, and no module
+    coalesces a ``local_table(...)`` result itself."""
+    util = REPO / PKG / "operators" / "util.py"
+    found = []
+    for f in sorted((REPO / PKG).rglob("*.py")):
+        for n in ast.walk(ast.parse(f.read_text(), str(f))):
+            if not isinstance(n, ast.Attribute):
+                continue
+            where = f"{f.relative_to(REPO)}:{n.lineno}"
+            if n.attr == "createDataFrame" and f != util:
+                found.append(f"{where}: createDataFrame")
+            called = getattr(n.value, "func", None)
+            if n.attr == "coalesce" and "local_table" in (
+                    getattr(called, "id", None), getattr(called, "attr", None)):
+                found.append(f"{where}: local_table(...).coalesce")
+    assert not found, f"driver tables outside local_table: {found}"
 
 
 def _bound_names(f: Path) -> set[str]:

@@ -910,6 +910,27 @@ def test_admit_three_batches_pinned_verdicts_and_store(spark, tmp_path,
                       batch_minhash_signatures(kept).collect()}
 
 
+def test_admit_driver_pass_appends_one_file_per_batch(spark, tmp_path):
+    """Below ``DRIVER_ROWS`` the keepers and the verdicts are local
+    tables of one partition each (``local_table`` splits by size, not
+    by core count): every batch appends exactly one parquet file to the
+    store and returns a one-partition verdict table, with the pinned
+    verdicts."""
+    from gliner_spark.plans.incremental import dedup_admit_batch
+
+    store = tmp_path / "sig_store"
+    for k, (rows, want) in enumerate(zip(_admit_batches()[:2],
+                                         _ADMIT_VERDICTS)):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        with _admission_spies() as seen:
+            verdicts = dedup_admit_batch(df, str(store), threshold=0.78)
+        assert seen["distributed"] == 0
+        assert len(list(store.glob("*.parquet"))) == k + 1
+        assert verdicts.rdd.getNumPartitions() == 1
+        got = {r.doc_id: (r.dup_of, r.keep) for r in verdicts.collect()}
+        assert got == {d: (o, o is None) for d, o in want.items()}
+
+
 def test_admit_candidate_pair_bound_falls_back(spark, tmp_path,
                                                monkeypatch):
     """Store ∪ batch within ``DRIVER_ROWS`` rows but past it in

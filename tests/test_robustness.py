@@ -128,18 +128,48 @@ def _truncate_one_parquet(root):
 
 def test_local_table_plans_as_local_table_scan_without_arrow(spark):
     """local_table never becomes a Python RDD: empty and non-empty
-    tables plan as LocalTableScan even with Arrow off on the session."""
-    from gliner_spark.operators.util import local_table
+    tables plan as LocalTableScan even with Arrow off on the session.
+    Its partitions are those of a file of the same size: one up to
+    ``spark.sql.files.maxPartitionBytes`` (an empty table too), then
+    ceil(Arrow bytes / split), never more than the scan's own
+    min(rows, cores)."""
+    import math
 
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from gliner_spark.operators.util import _arrow_rows, local_table
+
+    ddl = "a long, b array<bigint>, c string"
     key = "spark.sql.execution.arrow.pyspark.enabled"
     prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
         for rows in ([], [(1, [2, 3], "x"), (4, None, None)]):
-            df = local_table(spark, rows, "a long, b array<bigint>, c string")
+            df = local_table(spark, rows, ddl)
             plan = df._jdf.queryExecution().executedPlan().toString()
             assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+            assert df.rdd.getNumPartitions() == 1
             assert [tuple(r) for r in df.collect()] == rows
+    finally:
+        spark.conf.set(key, prev)
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4k")
+    try:
+        cores = spark.sparkContext.defaultParallelism
+        want = []
+        for n in (80, 400):
+            rows = [(i, list(range(8)), "x" * 40) for i in range(n)]
+            table = pa.Table.from_batches(
+                [_arrow_rows(rows, StructType.fromDDL(ddl))])
+            want.append(min(math.ceil(table.nbytes / 4096), cores))
+            df = local_table(spark, table, ddl)
+            assert df.rdd.getNumPartitions() == want[-1]
+            assert sorted(tuple(r) for r in df.collect()) == rows
+        # one table split by its size, one capped by the core count
+        assert 1 < want[0] < cores == want[1]
     finally:
         spark.conf.set(key, prev)
 

@@ -14,8 +14,14 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-# the checkout this script belongs to
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# this script's checkout, for the driver and (through PYTHONPATH) its
+# Python workers; PYTHONSAFEPATH keeps the workers' working directory,
+# maybe another checkout, off the front of their sys.path
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
+os.environ["PYTHONSAFEPATH"] = "1"
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -12,8 +12,14 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-# the checkout this script belongs to
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# this script's checkout, for the driver and (through PYTHONPATH) its
+# Python workers; PYTHONSAFEPATH keeps the workers' working directory,
+# maybe another checkout, off the front of their sys.path
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
+os.environ["PYTHONSAFEPATH"] = "1"
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -188,8 +194,9 @@ def main() -> int:
 
     # 4b. build_kg below the driver-row bound: the linking tail is one
     # driver pass, so the nodes are a LocalTableScan, and the edges
-    # broadcast-join the LocalTableScan entity map (once per side) with
-    # no band self-join anywhere in their plan
+    # broadcast-join the LocalTableScan entity map (once per side, under
+    # the Coalesce that sizes its partitions) with no band self-join
+    # anywhere in their plan
     from gliner_spark.plans.kg import build_kg
 
     kg = build_kg(docs, SOUP_LABELS, id_col="doc_id")
@@ -200,7 +207,8 @@ def main() -> int:
     )
     p = kg.edges._jdf.queryExecution().executedPlan().toString()
     n_map_joins = len(re.findall(
-        r"BroadcastExchange[^\n]*\n[\s:|]*\+- LocalTableScan \[e_label", p))
+        r"BroadcastExchange[^\n]*\n(?:[\s:|]*\+- Coalesce \d+\n)?"
+        r"[\s:|]*\+- LocalTableScan \[e_label", p))
     ok4b = n_map_joins == 2 and "band_" not in p
     print(f"  [{'OK ' if ok4b else 'BAD'}] build_kg edges: {n_map_joins} "
           f"broadcast LocalTableScan entity map(s), band join "
@@ -313,7 +321,11 @@ def main() -> int:
     import shutil
 
     from gliner_spark.operators.util import read_parquet_or_empty
-    from gliner_spark.plans.incremental import STORE_DDL, _verified_pairs
+    from gliner_spark.plans.incremental import (
+        STORE_DDL,
+        _admit_local,
+        _verified_pairs,
+    )
 
     # (c) steps 2-3 of admission are ONE band self-join over the tagged
     # store ∪ batch band keys plus one verify, on the first batch (no
@@ -334,6 +346,22 @@ def main() -> int:
             ok = "ExistingRDD" not in p
             print(f"  [{'OK ' if ok else 'BAD'}] admission pairs, {when}: "
                   f"ExistingRDD scan {not ok}")
+            bad += not ok
+            # (d) below the bound the driver pass returns its verdicts
+            # and keepers as one-partition local tables (``local_table``
+            # splits by size): the verdict write and the store append
+            # are one task and one file each
+            local = _admit_local(
+                batch_minhash_signatures(batch),
+                read_parquet_or_empty(spark, adm_store, STORE_DDL),
+                32, 128, 0.8, 2000,
+            ) or ()
+            ok = len(local) == 2 and all(
+                re.match(r"Coalesce 1\n\+- LocalTableScan ",
+                         df._jdf.queryExecution().executedPlan().toString())
+                for df in local)
+            print(f"  [{'OK ' if ok else 'BAD'}] admission verdicts and "
+                  f"keepers, {when}: Coalesce 1 over LocalTableScan -> {ok}")
             bad += not ok
             dedup_admit_batch(batch, adm_store)
         store_cols = spark.read.parquet(adm_store).columns

@@ -26,8 +26,14 @@ import os
 import sys
 import time
 
+# this script's checkout, for the driver and (through PYTHONPATH) its
+# Python workers; PYTHONSAFEPATH keeps the workers' working directory,
+# maybe another checkout, off the front of their sys.path
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
+os.environ["PYTHONSAFEPATH"] = "1"
 sys.path.insert(0, os.path.join(REPO, "tests"))  # tiny_onnx fixture
 
 from pyspark.sql import functions as F  # noqa: E402

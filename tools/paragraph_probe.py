@@ -43,11 +43,19 @@ standing probe.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+# this script's checkout, for the driver and (through PYTHONPATH) its
+# Python workers; PYTHONSAFEPATH keeps the workers' working directory,
+# maybe another checkout, off the front of their sys.path
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
+os.environ["PYTHONSAFEPATH"] = "1"
 
 
 def _rest(base: str, app_id: str, path: str):
