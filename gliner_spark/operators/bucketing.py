@@ -24,9 +24,9 @@ Constraints (asserted in tests):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from .fsio import fs_for
 
 
 def write_bucketed(
@@ -57,27 +57,25 @@ def write_bucketed(
     fingerprint over partial data.
     """
     spark = df.sparkSession
-    fp_file = os.path.join(path, "_FINGERPRINT") if path else None
-    if fingerprint is not None and fp_file is not None:
+    fs = fs_for(spark, path) if fingerprint is not None and path else None
+    if fs is not None:
+        fp_file = fs.join(path, "_FINGERPRINT")
         try:
-            if spark.catalog.tableExists(table) and \
-                    os.path.exists(fp_file) and \
-                    open(fp_file).read() == fingerprint:
+            if spark.catalog.tableExists(table) and fs.exists(fp_file) \
+                    and fs.read_text(fp_file) == fingerprint:
                 return False
         except Exception:
             pass  # unreadable stamp → rewrite
         # stale stamp must not survive a crash mid-rewrite
-        if os.path.exists(fp_file):
-            os.remove(fp_file)
+        fs.delete(fp_file)
     writer = df.write.mode("overwrite").bucketBy(n_buckets, key)
     if sort:
         writer = writer.sortBy(key)
     if path:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
-    if fingerprint is not None and fp_file is not None:
-        with open(fp_file, "w") as f:
-            f.write(fingerprint)
+    if fs is not None:
+        fs.write_text(fp_file, fingerprint, overwrite=True)
     return True
 
 

@@ -59,37 +59,22 @@ def _manifest_path(root: str) -> str:
     return os.path.join(root, "_checkpoints")
 
 
-def _posix_root(root: str) -> str | None:
-    """The POSIX path for a plain or ``file://`` root, None for
-    genuinely remote schemes — the fsio dispatch rule, not a second
-    copy of it. Used where local-only maintenance (compaction
-    recovery) must engage for every root the POSIX ops can reach — a
-    ``file://`` root that crashed mid-compaction would otherwise read
-    back as an EMPTY manifest (silent full recompute instead of
-    resume, r5 ADVICE)."""
-    from .fsio import PosixFs, backend_for
+def _healed_manifest(spark: SparkSession, root: str):
+    """(fs, manifest path) of ``root``, after healing an interrupted
+    compaction where the filesystem renames atomically. Object stores
+    never ran the rename-based compaction, so there is nothing to heal
+    there."""
+    from .fsio import fs_for
 
-    if backend_for(root) != "posix":
-        return None
-    return PosixFs().normalize(root)
+    fs = fs_for(spark, root)
+    path = _manifest_path(root)
+    if fs.atomic_rename:
+        _recover_manifest_fs(fs, path)
+    return fs, path
 
 
 def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    path = _manifest_path(root)
-    local = _posix_root(root)
-    if local is not None:  # heal an interrupted compaction
-        _recover_manifest(_manifest_path(local))
-    else:
-        from urllib.parse import urlparse
-
-        from .fsio import _ATOMIC_RENAME_SCHEMES, fs_for
-
-        if urlparse(root).scheme in _ATOMIC_RENAME_SCHEMES:
-            # hdfs-like roots get the same recovery through the Hadoop
-            # client; object stores never ran the rename-based
-            # compaction, so there is nothing to heal there
-            fs, r = fs_for(spark, root, "hadoop")
-            _recover_manifest_fs(fs, _manifest_path(r))
+    _, path = _healed_manifest(spark, root)
     m = read_parquet_or_empty(spark, path, MANIFEST_DDL)
     return m.where(F.col("stage") == stage)
 
@@ -171,17 +156,10 @@ def checkpoint_write(
     return spark.read.parquet(out_path)
 
 
-def _recover_manifest(path: str) -> None:
-    from .fsio import PosixFs
-
-    _recover_manifest_fs(PosixFs(), path)
-
-
 def _recover_manifest_fs(fs, path: str) -> None:
     """Heal the crash windows of ``compact_manifest``'s two-rename swap
-    (called on entry by every manifest-touching op), expressed over the
-    fsio backend so file:// and hdfs:// roots heal identically to plain
-    paths. States:
+    (called on entry by every manifest-touching op) through the root's
+    Hadoop filesystem handle. States:
     - manifest present + ``.compact`` leftover → stale tmp, drop it;
     - manifest present + ``.old`` leftover → crash after the second
       rename, finish by dropping the trash;
@@ -204,42 +182,33 @@ def _recover_manifest_fs(fs, path: str) -> None:
         fs.rename(trash, path)
 
 
-def _local_manifest_path(root: str, op: str) -> str:
-    """POSIX manifest path for ops that stay local-only (os.walk
-    gauges). Fails fast instead of renaming a literal './hdfs:/...'
-    local path (r4 ADVICE)."""
-    from gliner_spark.operators.sinks import _local_path
-
-    return _manifest_path(_local_path(root, op))
-
-
-def _maintenance_fs(spark, root: str, op: str, backend: str | None):
-    """(fs, manifest_path) for the compaction family. The swap is two
-    RENAMES, so the backend must rename atomically: POSIX and
-    hdfs-like schemes qualify; object stores (s3a/gs/abfs — rename is
+def _maintenance_fs(spark, root: str):
+    """(fs, manifest_path) for the compaction swap, healed. The swap is
+    two RENAMES, so the filesystem must rename atomically: local and
+    hdfs-like ones qualify; object stores (s3a/gs/abfs — rename is
     copy+delete) fail fast with the Iceberg pointer, because a crash
-    mid-copy there leaves a state the recovery walk cannot
-    distinguish from a committed one."""
+    mid-copy there leaves a state the recovery walk cannot distinguish
+    from a committed one. An object-store URI fails before a handle is
+    built for it."""
     from urllib.parse import urlparse
 
-    from .fsio import _ATOMIC_RENAME_SCHEMES, backend_for, fs_for
+    from .fsio import _ATOMIC_RENAME_SCHEMES
 
-    b = backend or backend_for(root)
-    if b != "posix":
-        scheme = urlparse(root).scheme
-        if scheme and scheme not in _ATOMIC_RENAME_SCHEMES:
-            raise ValueError(
-                f"{op} needs an atomic rename; {scheme}:// renames are "
-                "copy+delete. For object-store manifests use the "
-                "catalog path (write_table fmt='iceberg'|'delta') — a "
-                "table-format snapshot commit is the equivalent."
-            )
-    fs, r = fs_for(spark, root, b)
-    return fs, _manifest_path(r)
+    scheme = urlparse(root).scheme
+    if not scheme or scheme in _ATOMIC_RENAME_SCHEMES:
+        fs, path = _healed_manifest(spark, root)
+        if fs.atomic_rename:
+            return fs, path
+        scheme = fs.scheme
+    raise ValueError(
+        f"compact_manifest needs an atomic rename; {scheme}:// renames "
+        "are copy+delete. For object-store manifests use the catalog "
+        "path (write_table fmt='iceberg'|'delta') — a table-format "
+        "snapshot commit is the equivalent."
+    )
 
 
-def compact_manifest(spark: SparkSession, root: str,
-                     backend: str | None = None) -> int:
+def compact_manifest(spark: SparkSession, root: str) -> int:
     """Rewrite the append-only manifest to a single parquet file.
 
     ``checkpoint_write`` appends one small parquet per call; a
@@ -256,16 +225,16 @@ def compact_manifest(spark: SparkSession, root: str,
     is two renames, not one atomic commit (the same caveat as Hive
     compaction without a lock service; the Iceberg catalog path gets
     this atomically via snapshot commit). A crash between the renames
-    is healed by ``_recover_manifest`` on the next manifest op (the
+    is healed by ``_recover_manifest_fs`` on the next manifest op (the
     committed tmp is promoted, else ``.old`` rolls back). Runs on any
-    filesystem with atomic rename — POSIX paths, ``file://`` and
-    ``hdfs://`` roots (via the fsio Hadoop backend, r5 verdict #5);
-    object stores fail fast with the Iceberg pointer (see
-    ``_maintenance_fs``). Returns rows retained."""
+    filesystem with atomic rename — local paths, ``file://``,
+    ``hdfs://`` and ``viewfs://`` roots, all through Hadoop's
+    FileSystem (operators/fsio.py); object stores fail fast with the
+    Iceberg pointer (see ``_maintenance_fs``). Returns rows
+    retained."""
     from pyspark.sql import Window
 
-    fs, path = _maintenance_fs(spark, root, "compact_manifest", backend)
-    _recover_manifest_fs(fs, path)
+    fs, path = _maintenance_fs(spark, root)
     if not fs.exists(path):  # nothing written yet; unreadable raises
         return 0
     m = spark.read.parquet(path)
@@ -291,16 +260,14 @@ def compact_manifest(spark: SparkSession, root: str,
     return n
 
 
-def manifest_file_count(root: str) -> int:
-    """Data files currently under the manifest dir (compaction gauge).
-    Local roots only (os.walk) — see ``_local_manifest_path``."""
-    path = _local_manifest_path(root, "manifest_file_count")
-    _recover_manifest(path)
-    if not os.path.isdir(path):
+def manifest_file_count(spark: SparkSession, root: str) -> int:
+    """Data files currently in the (flat) manifest dir — the
+    compaction gauge — listed through the root's filesystem."""
+    fs, path = _healed_manifest(spark, root)
+    if not fs.exists(path):
         return 0
     return sum(
-        1 for _, _, files in os.walk(path)
-        for f in files
+        1 for f in fs.listdir(path)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     )
 

@@ -1,126 +1,54 @@
-"""Filesystem backends for the publish/manifest maintenance ops.
+"""One filesystem route for the files beside Spark-written tables.
 
-The versioned-publish family (``sinks.publish_atomic`` /
-``read_published``) and the checkpoint-manifest maintenance ops manage
-tiny marker files next to Spark-written data. Spark itself reads and
-writes the DATA through Hadoop everywhere; only the marker/maintenance
-ops need a filesystem handle of their own. Two backends:
+Spark reads and writes table DATA through Hadoop's ``FileSystem`` API.
+The small files next to it — the publish markers of
+``sinks.publish_atomic``, the checkpoint manifest's compaction swap,
+the existence probe of ``util.read_parquet_or_empty`` and the
+``_FINGERPRINT`` stamp of ``bucketing.write_bucketed`` — go through the
+same API, via ``fs_for``. So they land where Spark's own read or write
+of the same path lands: a plain path resolves against ``fs.defaultFS``
+(Hadoop's LocalFileSystem on one box, HDFS or viewfs on a cluster),
+never against the driver's local disk while the data went elsewhere.
 
-- ``PosixFs``: plain ``os``/``shutil`` calls for local paths — keeps
-  the hardlink-pinning reader protection that needs real POSIX inode
-  semantics (sinks.py docstrings).
-- ``HadoopFs``: ``org.apache.hadoop.fs.FileSystem`` via the session's
-  JVM gateway — the same client Spark uses for ``s3a://``/``hdfs://``
-  data, so the markers land on the SAME filesystem as the data instead
-  of a literal local ``./s3:/...`` directory (the silent split-brain
-  the old fail-fast guarded against, r4 ADVICE; the r5 verdict asks
-  for the real route).
+``atomic_rename`` is True for local and HDFS-like filesystems and
+False for object stores (S3A renames are copy+delete). Ops that need
+an atomic swap (manifest compaction) check it; the create-only marker
+publish runs on every filesystem.
 
-Capability note recorded per backend: ``atomic_rename`` is True for
-POSIX and HDFS-like filesystems and False for object stores (S3A
-renames are copy+delete) — ops that NEED an atomic swap (manifest
-compaction) check it and fail fast with the Iceberg pointer on object
-stores, while ops designed around create-only markers
-(``publish_atomic``) run on every backend.
+Hardlink reader pins (``HadoopFs.pin``) are the one part that needs
+POSIX inode semantics, so they engage only when the handle's scheme is
+``file`` and are the only ``os`` file calls of the package's table
+code. Hadoop's LocalFileSystem is a ``ChecksumFileSystem``: every file
+it writes gets a ``.<name>.crc`` sidecar, so listings select by name.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-from urllib.parse import urlparse
+import time
+import uuid
 
 # schemes whose Hadoop FileSystem implements atomic directory rename;
 # object stores (s3a/s3/gs/abfs/oss/wasb) emulate rename as copy+delete
 _ATOMIC_RENAME_SCHEMES = {"hdfs", "file", "viewfs", "o3fs", "ofs"}
-
-
-def backend_for(path: str) -> str:
-    """'posix' for plain paths and netloc-less file:// URIs (the
-    historical behavior), 'hadoop' for everything else."""
-    if "://" not in path:
-        return "posix"
-    u = urlparse(path)
-    if u.scheme in ("", "file") and not u.netloc:
-        return "posix"
-    return "hadoop"
-
-
-class PosixFs:
-    atomic_rename = True
-    pins_supported = True
-
-    def normalize(self, path: str) -> str:
-        if "://" not in path:
-            return path
-        u = urlparse(path)
-        if u.scheme in ("", "file") and not u.netloc:
-            return u.path
-        # refuse to strip a REAL scheme down to its bare path: callers
-        # forcing backend="posix" on s3a://bucket/x would otherwise
-        # silently operate on local /x — the exact local/remote
-        # split-brain the scheme guard exists to prevent
-        raise ValueError(
-            f"PosixFs cannot handle {path!r}; use the hadoop backend"
-        )
-
-    def exists(self, p: str) -> bool:
-        return os.path.exists(p)
-
-    def mkdirs(self, p: str) -> None:
-        os.makedirs(p, exist_ok=True)
-
-    def listdir(self, p: str) -> list[str]:
-        return os.listdir(p)
-
-    def delete(self, p: str) -> None:
-        if os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-        elif os.path.exists(p):
-            os.remove(p)
-
-    def rename(self, src: str, dst: str) -> None:
-        os.rename(src, dst)
-
-    def read_text(self, p: str) -> str:
-        with open(p) as f:
-            return f.read()
-
-    def write_text(self, p: str, s: str, overwrite: bool = False) -> None:
-        if not overwrite and os.path.exists(p):
-            raise FileExistsError(p)
-        mode = "w" if overwrite else "x"
-        with open(p, mode) as f:
-            f.write(s)
-
-    def join(self, *parts: str) -> str:
-        return os.path.join(*parts)
+_PINS = "_pins"
 
 
 class HadoopFs:
-    """Marker ops through ``org.apache.hadoop.fs.FileSystem`` — the
-    bytes go wherever Spark's own writes for the same URI go. Pins are
-    not supported (no hardlinks on hdfs/s3a); readers rely on the
-    ``keep_versions`` retention window instead, exactly like Iceberg
-    snapshot expiry."""
-
-    pins_supported = False
+    """Marker and maintenance ops through
+    ``org.apache.hadoop.fs.FileSystem`` — the bytes go wherever Spark's
+    own writes for the same path go."""
 
     def __init__(self, spark, path: str):
         jvm = spark._jvm
         self._jvm = jvm
-        self._conf = spark._jsc.hadoopConfiguration()
-        self._fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI(path), self._conf
-        )
-        scheme = urlparse(path).scheme or self._fs.getScheme()
-        self.atomic_rename = scheme in _ATOMIC_RENAME_SCHEMES
+        self._fs = self._p(path).getFileSystem(
+            spark._jsc.hadoopConfiguration())
+        self.scheme = str(self._fs.getScheme())
+        self.atomic_rename = self.scheme in _ATOMIC_RENAME_SCHEMES
 
     def _p(self, p: str):
         return self._jvm.org.apache.hadoop.fs.Path(p)
-
-    def normalize(self, path: str) -> str:
-        return path
 
     def exists(self, p: str) -> bool:
         return bool(self._fs.exists(self._p(p)))
@@ -129,8 +57,8 @@ class HadoopFs:
         self._fs.mkdirs(self._p(p))
 
     def listdir(self, p: str) -> list[str]:
-        it = self._fs.listStatus(self._p(p))
-        return [st.getPath().getName() for st in it]
+        return [st.getPath().getName()
+                for st in self._fs.listStatus(self._p(p))]
 
     def delete(self, p: str) -> None:
         self._fs.delete(self._p(p), True)
@@ -162,13 +90,53 @@ class HadoopFs:
     def join(self, *parts: str) -> str:
         return "/".join(x.rstrip("/") for x in parts[:-1]) + "/" + parts[-1]
 
+    def _local(self, p: str) -> str:
+        """The local path of ``p`` on a ``file`` handle."""
+        return str(self._fs.makeQualified(self._p(p)).toUri().getPath())
 
-def fs_for(spark, path: str, backend: str | None = None):
-    """(fs, normalized_path) for ``path``. ``backend`` overrides the
-    scheme-based dispatch — tests drive the Hadoop code path against
-    local paths (Hadoop's LocalFileSystem) this way."""
-    b = backend or backend_for(path)
-    if b == "posix":
-        fs = PosixFs()
-        return fs, fs.normalize(path)
-    return HadoopFs(spark, path), path
+    def pin(self, root: str, resolve) -> tuple[str, str | None]:
+        """(read path, pin dir) of the version directory
+        ``resolve(self, root)`` returns. On a ``file`` handle its files
+        are hardlinked into a private ``root/_pins/<version>-<token>/``
+        and the pin is read: a publish that prunes the version drops
+        its names, not the bytes the pin references. A version pruned
+        mid-link is resolved again, so the reader pins the newer one.
+        Elsewhere (no hardlinks) the version is read directly and pin
+        dir is None, as it is when the filesystem refuses the link."""
+        if self.scheme != "file":
+            return resolve(self, root), None
+        for _ in range(16):
+            vdir = resolve(self, root)
+            token = uuid.uuid4().hex[:8]
+            pin = self.join(root, _PINS, f"{vdir.rsplit('/', 1)[-1]}-{token}")
+            src, dst = self._local(vdir), self._local(pin)
+            try:
+                os.makedirs(dst)
+                for name in os.listdir(src):
+                    os.link(os.path.join(src, name), os.path.join(dst, name))
+                return pin, pin
+            except FileNotFoundError:
+                self.delete(pin)  # pruned mid-pin: re-resolve
+            except OSError:
+                self.delete(pin)
+                return vdir, None
+        raise RuntimeError(
+            f"could not pin a published version under {root} after 16 "
+            "attempts — publishes are outpacing the marker resolution"
+        )
+
+    def sweep_pins(self, root: str, ttl_s: float) -> None:
+        """Delete the pins under ``root`` older than ``ttl_s``."""
+        pins = self.join(root, _PINS)
+        if not self.exists(pins):
+            return
+        cutoff_ms = (time.time() - ttl_s) * 1000
+        for st in self._fs.listStatus(self._p(pins)):
+            if st.getModificationTime() < cutoff_ms:
+                # False when another sweeper removed it first
+                self._fs.delete(st.getPath(), True)
+
+
+def fs_for(spark, path: str) -> HadoopFs:
+    """The filesystem handle Spark itself uses for ``path``."""
+    return HadoopFs(spark, path)

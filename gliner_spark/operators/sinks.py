@@ -26,11 +26,7 @@ from __future__ import annotations
 
 import contextlib
 import os
-import shutil
-import time
-import uuid
 from typing import Sequence
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
@@ -80,115 +76,50 @@ def write_table(
     w.save(target)
 
 
-def _local_path(path: str, op: str) -> str:
-    """The versioned-publish family manages its ``_CURRENT`` marker,
-    version listing, retention, and reader pins through the LOCAL
-    filesystem (os.replace / os.link give the atomicity guarantees).
-    An ``s3://``/``hdfs://`` path would silently write the marker to a
-    literal local ``./s3:/...`` directory while Spark lands the data on
-    the object store — readers on other hosts could never resolve a
-    published version. Fail fast instead; on a cluster the atomic
-    publish IS a catalog commit (``write_table(fmt="iceberg")``)."""
-    if "://" not in path:
-        return path
-    u = urlparse(path)
-    if u.scheme in ("", "file") and not u.netloc:
-        return u.path
-    raise ValueError(
-        f"{op} supports local filesystem paths only (got {path!r}): its "
-        "_CURRENT marker / retention / pins use POSIX rename+link. For "
-        f"{u.scheme}:// targets use write_table(fmt='iceberg'|'delta') — "
-        "a table-format snapshot commit is the cluster-scale equivalent."
-    )
-
-
-_PINS = "_pins"
-
-
 def publish_atomic(
     df: DataFrame, table_dir: str, keep_versions: int = 3,
-    pin_ttl_s: float = 3600.0, backend: str | None = None,
+    pin_ttl_s: float = 3600.0,
 ) -> str:
     """Publish ``df`` under ``table_dir`` so a concurrent reader NEVER
     observes a half-written table: write into a fresh versioned
-    subdirectory, then atomically repoint the ``_CURRENT`` marker
-    (POSIX ``os.replace`` — readers resolve the marker via
-    ``read_published``). The pointer flips only after the parquet write
-    (including its ``_SUCCESS`` commit) finished, so every resolvable
-    version is complete; a crash mid-write leaves an orphan version dir
-    and the old pointer intact.
+    subdirectory ``v=<version>``, then create the marker
+    ``_markers/m-<version>`` naming it. Readers (``read_published``)
+    resolve the highest VALID marker. The marker is created only after
+    the parquet write (including its ``_SUCCESS`` commit) finished, so
+    every resolvable version is complete; a crash mid-write leaves an
+    orphan version dir and the old markers intact. The protocol needs
+    no rename anywhere on the read or write path: ``FileSystem.create``
+    without overwrite is atomic on HDFS and a single PUT on S3A, and
+    markers and data go through Hadoop's FileSystem (operators/fsio.py)
+    on every path, plain local ones included.
 
-    ``keep_versions`` old versions are retained so an in-flight reader
-    that resolved the previous pointer can still finish its scan
-    (snapshot isolation with a bounded retention window — the
-    filesystem stand-in for an Iceberg snapshot commit, which the
-    ``write_table`` catalog branch provides natively at cluster scale).
-    Retention can be as aggressive as ``keep_versions=1`` without
-    racing readers: ``read_published`` hardlink-PINS the version it
-    resolved (see below), so pruning a version's directory only drops
-    names, never the bytes an active pin still references. Pins are
-    swept here once older than ``pin_ttl_s`` (Iceberg's snapshot-
-    reference expiry analog — a reader must consume its DataFrame
-    within the TTL). Returns the version directory written.
+    ``keep_versions`` old versions are retained (marker first, then
+    the directory) so an in-flight reader that resolved an older
+    marker can still finish its scan (snapshot isolation with a bounded
+    retention window — the filesystem stand-in for an Iceberg snapshot
+    commit, which the ``write_table`` catalog branch provides natively
+    at cluster scale). On a local filesystem retention can be as
+    aggressive as ``keep_versions=1`` without racing readers:
+    ``read_published`` hardlink-PINS the version it resolved, so
+    pruning a version's directory only drops names, never the bytes
+    an active pin still references. Pins are swept here once older
+    than ``pin_ttl_s`` (Iceberg's snapshot-reference expiry analog — a
+    reader must consume its DataFrame within the TTL). Elsewhere there
+    are no hardlinks and retention is the only reader protection: size
+    ``keep_versions`` to the longest reader. Returns the version
+    directory written."""
+    from .fsio import fs_for
 
-    Remote roots (``hdfs://``/``s3a://``…) route through the Hadoop
-    FileSystem client (operators/fsio.py, r5 verdict #5) with a
-    create-only marker protocol instead of the POSIX pointer swap:
-    each publish writes ``_markers/m-<version>`` (atomic visibility on
-    HDFS, a single PUT on S3A — no rename anywhere on the read or
-    write path), readers resolve the highest VALID marker. Hardlink
-    pins don't exist there, so retention is the only reader
-    protection: run remote stores with ``keep_versions`` sized to the
-    longest reader, exactly like Iceberg snapshot expiry."""
-    from .fsio import PosixFs, fs_for
-
-    fs, root = fs_for(df.sparkSession, table_dir, backend)
-    if not isinstance(fs, PosixFs):
-        return _publish_atomic_fs(df, fs, root, keep_versions)
-    table_dir = root
-    os.makedirs(table_dir, exist_ok=True)
+    fs = fs_for(df.sparkSession, table_dir)
+    fs.mkdirs(table_dir)
     versions = sorted(
-        int(d[2:]) for d in os.listdir(table_dir)
+        int(d[2:]) for d in fs.listdir(table_dir)
         if d.startswith("v=") and d[2:].isdigit()
     )
     v = versions[-1] + 1 if versions else 0
-    vdir = os.path.join(table_dir, f"v={v:08d}")
+    vdir = fs.join(table_dir, f"v={v:08d}")
     df.write.mode("errorifexists").parquet(vdir)
-    tmp = os.path.join(table_dir, "_CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(f"v={v:08d}")
-    os.replace(tmp, os.path.join(table_dir, "_CURRENT"))
-    for old in versions[:-(keep_versions - 1)] if keep_versions > 1 \
-            else versions:
-        shutil.rmtree(
-            os.path.join(table_dir, f"v={old:08d}"), ignore_errors=True
-        )
-    pins_root = os.path.join(table_dir, _PINS)
-    if os.path.isdir(pins_root):
-        cutoff = time.time() - pin_ttl_s
-        for pin in os.listdir(pins_root):
-            p = os.path.join(pins_root, pin)
-            try:
-                if os.path.getmtime(p) < cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass  # another sweeper removed it first
-    return vdir
-
-
-def _publish_atomic_fs(df: DataFrame, fs, root: str,
-                       keep_versions: int) -> str:
-    """Hadoop-FileSystem publish: versioned dir + create-only marker
-    file. See publish_atomic's docstring for the protocol contract."""
-    fs.mkdirs(root)
-    versions = sorted(
-        int(d[2:]) for d in fs.listdir(root)
-        if d.startswith("v=") and d[2:].isdigit()
-    )
-    v = versions[-1] + 1 if versions else 0
-    vdir = fs.join(root, f"v={v:08d}")
-    df.write.mode("errorifexists").parquet(vdir)
-    markers = fs.join(root, "_markers")
+    markers = fs.join(table_dir, "_markers")
     fs.mkdirs(markers)
     fs.write_text(fs.join(markers, f"m-{v:08d}"), f"v={v:08d}")
     for old in versions[:-(keep_versions - 1)] if keep_versions > 1 \
@@ -197,107 +128,76 @@ def _publish_atomic_fs(df: DataFrame, fs, root: str,
         # skips the now-invalid marker instead of resolving a missing
         # version directory
         fs.delete(fs.join(markers, f"m-{old:08d}"))
-        fs.delete(fs.join(root, f"v={old:08d}"))
+        fs.delete(fs.join(table_dir, f"v={old:08d}"))
+    fs.sweep_pins(table_dir, pin_ttl_s)
     return vdir
 
 
 def _resolve_published_fs(fs, root: str) -> str:
     """Highest VALID marker wins: a marker whose content doesn't parse
     or whose version directory is gone (retention race, or a crash
-    between create and close on HDFS leaving an empty marker) is
-    skipped — the protocol needs no rename and no recovery walk."""
+    between create and close leaving an empty marker) is skipped — the
+    protocol needs no rename and no recovery walk. A listing with no
+    valid marker is taken again until two listings agree, so a reader
+    that listed just before a publish pruned every marker it saw finds
+    the new one instead of failing."""
     markers = fs.join(root, "_markers")
-    names = sorted(
-        (n for n in fs.listdir(markers) if n.startswith("m-")),
-        reverse=True,
-    ) if fs.exists(markers) else []
-    for name in names:
-        try:
-            v = fs.read_text(fs.join(markers, name)).strip()
-        except Exception:
-            continue
-        if v.startswith("v=") and v[2:].isdigit() \
-                and fs.exists(fs.join(root, v)):
-            return fs.join(root, v)
-    raise FileNotFoundError(f"no published version under {root}")
+    listed = None
+    while True:
+        names = sorted(
+            (n for n in fs.listdir(markers) if n.startswith("m-")),
+            reverse=True,
+        ) if fs.exists(markers) else []
+        if names == listed:
+            raise FileNotFoundError(f"no published version under {root}")
+        listed = names
+        for name in names:
+            try:
+                v = fs.read_text(fs.join(markers, name)).strip()
+            except Exception:
+                continue
+            if v.startswith("v=") and v[2:].isdigit() \
+                    and fs.exists(fs.join(root, v)):
+                return fs.join(root, v)
 
 
-def _pin_version(table_dir: str) -> tuple[str, str | None]:
-    """Resolve ``_CURRENT`` and hardlink its files into a private pin
-    directory. Retries when a concurrent publish prunes the resolved
-    version mid-link (the reader then simply pins the NEWER version —
-    exactly the Iceberg re-resolve-snapshot behavior). Returns
-    (read_path, pin_dir); pin_dir is None when pinning fell back to a
-    direct read (cross-device link refusal — can't happen when pins
-    live inside table_dir, kept as a belt-and-braces fallback)."""
-    for _ in range(16):
-        with open(os.path.join(table_dir, "_CURRENT")) as f:
-            v = f.read().strip()
-        vdir = os.path.join(table_dir, v)
-        pin = os.path.join(table_dir, _PINS, f"{v}-{uuid.uuid4().hex[:8]}")
-        try:
-            os.makedirs(pin)
-            for name in os.listdir(vdir):
-                os.link(os.path.join(vdir, name), os.path.join(pin, name))
-            return pin, pin
-        except FileNotFoundError:
-            shutil.rmtree(pin, ignore_errors=True)  # pruned mid-pin: retry
-        except OSError:
-            shutil.rmtree(pin, ignore_errors=True)
-            return vdir, None
-    raise RuntimeError(
-        f"could not pin a published version under {table_dir} after 16 "
-        "attempts — publishes are outpacing the marker resolution"
-    )
+def read_published(spark, table_dir: str, pin: bool = True) -> DataFrame:
+    """Resolve the highest valid marker and read that (complete)
+    version.
 
+    On a local filesystem with ``pin=True`` (default) the resolved
+    version's files are hardlinked into
+    ``table_dir/_pins/<version>-<token>/`` and the DataFrame scans the
+    PIN — a concurrent ``publish_atomic`` with ``keep_versions=1`` can
+    delete the version directory's names without invalidating the
+    bytes mid-scan (POSIX inode semantics). The pin is swept by later
+    publishes after their ``pin_ttl_s``; use ``published_snapshot`` to
+    release it deterministically. Other filesystems have no hardlinks:
+    the version is read directly and the ``keep_versions`` retention
+    window is the reader protection — see publish_atomic."""
+    from .fsio import fs_for
 
-def read_published(spark, table_dir: str, pin: bool = True,
-                   backend: str | None = None) -> DataFrame:
-    """Resolve the current marker and read that (complete) version.
-
-    Local roots: with ``pin=True`` (default) the resolved version's
-    files are hardlinked into ``table_dir/_pins/<version>-<token>/``
-    and the DataFrame scans the PIN — a concurrent ``publish_atomic``
-    with ``keep_versions=1`` can delete the version directory's names
-    without invalidating the bytes mid-scan (POSIX inode semantics).
-    The pin is swept by later publishes after their ``pin_ttl_s``;
-    use ``published_snapshot`` to release it deterministically.
-
-    Remote roots read the highest valid ``_markers/`` entry directly
-    (no hardlinks there); the ``keep_versions`` retention window is
-    the reader protection — see publish_atomic."""
-    from .fsio import PosixFs, fs_for
-
-    fs, root = fs_for(spark, table_dir, backend)
-    if not isinstance(fs, PosixFs):
-        return spark.read.parquet(_resolve_published_fs(fs, root))
-    table_dir = root
+    fs = fs_for(spark, table_dir)
     if not pin:
-        with open(os.path.join(table_dir, "_CURRENT")) as f:
-            v = f.read().strip()
-        return spark.read.parquet(os.path.join(table_dir, v))
-    path, _ = _pin_version(table_dir)
-    return spark.read.parquet(path)
+        return spark.read.parquet(_resolve_published_fs(fs, table_dir))
+    return spark.read.parquet(fs.pin(table_dir, _resolve_published_fs)[0])
 
 
 @contextlib.contextmanager
-def published_snapshot(spark, table_dir: str, backend: str | None = None):
+def published_snapshot(spark, table_dir: str):
     """Context-managed pinned read: yields the DataFrame of the current
     published version and releases its pin on exit (no TTL wait).
-    Remote roots yield a direct (unpinned) read — retention-window
+    Without hardlinks it yields a direct read — retention-window
     protection, like read_published."""
-    from .fsio import PosixFs, fs_for
+    from .fsio import fs_for
 
-    fs, root = fs_for(spark, table_dir, backend)
-    if not isinstance(fs, PosixFs):
-        yield spark.read.parquet(_resolve_published_fs(fs, root))
-        return
-    path, pin_dir = _pin_version(root)
+    fs = fs_for(spark, table_dir)
+    path, pin_dir = fs.pin(table_dir, _resolve_published_fs)
     try:
         yield spark.read.parquet(path)
     finally:
         if pin_dir is not None:
-            shutil.rmtree(pin_dir, ignore_errors=True)
+            fs.delete(pin_dir)
 
 
 def materialize_kg(kg, root: str, fmt: str = "parquet") -> dict:

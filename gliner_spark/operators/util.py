@@ -12,9 +12,9 @@ from pyspark.sql.types import StructType
 # rows a plan may hold on the driver in place of distributed work: the
 # bound of every size-adaptive driver path (the KG linking tail's
 # surfaces and LSH candidate pairs, connected components, admission's
-# store ∪ batch signatures and verdicts). Each path probes its size
-# with a ``limit(DRIVER_ROWS + 1)``, so an oversized input is detected
-# without materializing it on the driver.
+# store ∪ batch signatures and verdicts). Each path collects its rows
+# through a ``limit(DRIVER_ROWS + 1)`` in one job, so an oversized input
+# is detected with at most DRIVER_ROWS + 1 rows on the driver.
 DRIVER_ROWS = 1_000_000
 
 
@@ -93,18 +93,18 @@ def read_parquet_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame
     """The parquet table at ``path`` read with schema ``ddl``, or an
     empty table of that schema when ``path`` does not exist.
 
-    Existence is asked of the path's own filesystem (``fsio.fs_for``)
-    before Spark reads it, so a missing path costs no Spark read and no
-    logged ``FileNotFoundException``. Only a missing path reads as
-    empty: any other failure (permissions, a truncated or corrupt file)
-    raises, at once or when the rows are read. Reading an unreadable
-    table as empty would pass for "nothing stored yet". The explicit
-    schema also spares the footer-reading job that schema inference
-    costs."""
+    Existence is asked of the Hadoop filesystem Spark reads ``path``
+    through (``fsio.fs_for``; a plain path resolves against
+    ``fs.defaultFS``, as Spark's read of it does), before Spark reads
+    it, so a missing path costs no Spark read and no logged
+    ``FileNotFoundException``. Only a missing path reads as empty: any
+    other failure (permissions, a truncated or corrupt file) raises, at
+    once or when the rows are read. Reading an unreadable table as
+    empty would pass for "nothing stored yet". The explicit schema also
+    spares the footer-reading job that schema inference costs."""
     from .fsio import fs_for
 
-    fs, p = fs_for(spark, path)
-    if not fs.exists(p):
+    if not fs_for(spark, path).exists(path):
         return local_table(spark, [], ddl)
     return spark.read.schema(ddl).parquet(path)
 

@@ -257,29 +257,30 @@ def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
     """(verdicts, keepers) of steps 2-4 of ``dedup_admit_batch`` as
     local tables, computed in one driver pass — or None when store ∪
     batch holds more than ``DRIVER_ROWS`` rows or more than
-    ``DRIVER_ROWS`` candidate pairs, before either is held.
+    ``DRIVER_ROWS`` candidate pairs.
 
-    A doc_id-only count probes the size, then the tagged
-    (doc_id, new, sig) rows come to the driver in ONE Arrow collect —
+    The tagged (doc_id, new, sig) rows come to the driver in ONE
+    bounded Arrow collect (``limit(DRIVER_ROWS + 1)``, one Spark job):
     up to ``DRIVER_ROWS`` signatures of n_perms × 8 B, ~1 GiB at the
-    bound for 128 permutations. The steps of ``_verified_pairs`` run on
+    bound for 128 permutations. Past the bound at most
+    ``DRIVER_ROWS + 1`` of them reach the driver, as in the other two
+    driver paths (``kg._linking_tail_local``,
+    ``connected_components``). The steps of ``_verified_pairs`` run on
     their values: ``bands.band_pairs_local`` over the exact signature
     slices with the same guard (a bucket counts store and batch rows),
     the same pair predicate, Ĵ with Spark's ``round(…, 6)``, each doc's
-    smallest new-vs-old match and ``_suppressors``. ``keepers`` holds
-    the kept docs' (doc_id, sig) not already stored."""
+    smallest new-vs-old match and ``_suppressors``. The candidate
+    pairs are bounded before they are built. ``keepers`` holds the
+    kept docs' (doc_id, sig) not already stored."""
     import pyarrow.compute as pc
 
     from ..operators.linking import _spark_round
 
-    tagged = _tagged(sig_new, sig_old)
-    if tagged.select("doc_id").limit(DRIVER_ROWS + 1).count() > DRIVER_ROWS:
-        return None
-    tbl = tagged.toArrow()
+    tbl = _tagged(sig_new, sig_old).limit(DRIVER_ROWS + 1).toArrow()
     sigs = tbl.column("sig").combine_chunks()
     # rows with a NULL id or a signature of another width are left to
     # the distributed plan and its NULL semantics
-    if (tbl.column("doc_id").null_count
+    if (tbl.num_rows > DRIVER_ROWS or tbl.column("doc_id").null_count
             or (pc.list_value_length(sigs).fill_null(0).to_numpy()
                 != n_perms).any()):
         return None
@@ -394,11 +395,12 @@ def dedup_admit_batch(
     Steps 2-5 are size-adaptive, with ``util.DRIVER_ROWS`` as the one
     bound. While store ∪ batch holds at most that many rows and
     candidate pairs, they run as one driver pass (``_admit_local``):
-    one doc_id-only count, one Arrow collect of the tagged signatures
-    (~1 GiB on the driver at the bound, one 128 × 8 B signature per
-    row), numpy banding and verify, and local tables for the verdicts
-    and the appended keepers. Past either bound the band join and the
-    verify run distributed (``_verified_pairs``), and step 4 takes the
+    one bounded Arrow collect of the tagged signatures (~1 GiB on the
+    driver at the bound, one 128 × 8 B signature per row; past it at
+    most ``DRIVER_ROWS + 1`` rows reach the driver), numpy banding and
+    verify, and local tables for the verdicts and the appended
+    keepers. Past either bound the band join and the verify run
+    distributed (``_verified_pairs``), and step 4 takes the
     new-vs-new components from ``canonicalize.connected_components``
     (a driver union-find up to ``DRIVER_ROWS`` pairs, the star
     iteration past it). Both paths give the same verdicts and store
@@ -421,9 +423,9 @@ def dedup_admit_batch(
     components read)."""
     from ..operators.util import read_parquet_or_empty
 
-    # referenced by the size probe and the collect, or by the band
-    # keys, both verify sides, the verdict and the store append —
-    # materialized once. A caller-provided ``sig`` slice is re-pinned
+    # referenced by the bounded collect, or by the band keys, both
+    # verify sides, the verdict and the store append — materialized
+    # once. A caller-provided ``sig`` slice is re-pinned
     # too: skipping its checkpoint was measured ~1 s SLOWER per
     # admission (filter-rescans of the full-corpus signature
     # checkpoint beat one slice materialization).

@@ -68,7 +68,7 @@ def stream_kg_updates(
             batch_df, labels, checkpoint_root, cfg=cfg,
             batch_id=f"epoch{batch_id}",
         )
-        # versioned-dir + pointer-swap publish: a reader resolving
+        # versioned-dir + create-only marker publish: a reader resolving
         # nodes/edges between (or during) micro-batches always sees one
         # COMPLETE epoch's table, never an in-place half-overwrite
         from ..operators.sinks import publish_atomic

@@ -26,7 +26,7 @@ formats):
     shards/     (doc_id[, part], n_tokens, shard_id) for keep=true
 
 Both writes go through operators.sinks.write_table, so any
-Hadoop-supported URI works (no POSIX-marker sinks in this job).
+Hadoop-supported URI works.
 """
 
 from __future__ import annotations

@@ -4,8 +4,8 @@
         --py-files dist/gliner_spark.zip \\
         jobs/run_kg_stream.py \\
         --input  /path/or/s3/pages_parquet_dir \\
-        --output /local/path/kg_out \\
-        --checkpoint-root /local/path/kg_ckpt \\
+        --output /path/or/hdfs/kg_out \\
+        --checkpoint-root /path/or/hdfs/kg_ckpt \\
         [--labels city,country,person] \\
         [--max-files-per-trigger 64] \\
         [--continuous]     # keep running; default drains what exists
@@ -19,12 +19,12 @@ nodes/edges republish through publish_atomic so a concurrent reader
 never observes a half-written table; resolve them with
 gliner_spark.operators.sinks.read_published).
 
---input may be any Hadoop-supported URI (s3a://, hdfs://, local) —
-it only flows through Spark readers. --output and --checkpoint-root
-must be driver-local filesystem paths: publish_atomic's _CURRENT
-marker and manifest compaction use POSIX rename semantics, and the
-sinks VALIDATE the scheme and fail fast on object-store URIs. For an
-object-store/warehouse sink, fold into Iceberg/Delta tables instead
+--input, --output and --checkpoint-root may be any Hadoop-supported
+URI (s3a://, hdfs://, local). publish_atomic writes its create-only
+markers through the same Hadoop FileSystem as the data, so it needs no
+rename anywhere. Manifest compaction (checkpoint.compact_manifest, not
+run by this job) needs an atomic rename and refuses object-store
+roots. For a warehouse sink, fold into Iceberg/Delta tables instead
 (operators.sinks.write_table(fmt="iceberg") inside foreachBatch) —
 a catalog snapshot commit is the cluster-scale atomic publish.
 """
@@ -45,17 +45,6 @@ def main() -> None:
                     help="run until terminated instead of draining the "
                          "currently-available files and exiting")
     args = ap.parse_args()
-
-    # fail BEFORE the stream starts: these two paths go through POSIX
-    # rename/link (publish_atomic marker, manifest compaction), so an
-    # object-store URI would split the marker from the data (see module
-    # docstring).
-    from gliner_spark.operators.sinks import _local_path
-
-    args.output = _local_path(args.output, "run_kg_stream --output")
-    args.checkpoint_root = _local_path(
-        args.checkpoint_root, "run_kg_stream --checkpoint-root"
-    )
 
     from pyspark.sql import SparkSession
 

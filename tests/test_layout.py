@@ -4,7 +4,8 @@ point, every top-level function or class, private ones included, is
 used by one (or allowlisted below), every module-level UPPER_CASE
 constant is read by one, every config field is read somewhere outside
 ``config.py``, no package module uses pandas, only ``local_table``
-builds and splits driver tables, and every package import in the
+builds and splits driver tables, only ``operators/fsio.py`` touches
+files beside the tables directly, and every package import in the
 scripts names something that exists.
 
 Production roots are the 50-query driver entry, the jobs, the two bench
@@ -355,3 +356,42 @@ def test_script_package_imports_resolve():
                     and _module_file(f"{n.module}.{a.name}") is None
                 ]
     assert not broken, f"imports of names that do not exist: {broken}"
+
+
+_FILE_CALLS = {
+    "open", "shutil.rmtree",
+    *(f"os.{f}" for f in ("listdir", "walk", "replace", "rename", "remove",
+                          "link", "makedirs")),
+    *(f"os.path.{f}" for f in ("exists", "isdir", "getmtime")),
+}
+
+
+def _dotted(node: ast.AST) -> str | None:
+    """``a.b.c`` for a Name/Attribute chain, else None."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    return ".".join([node.id, *reversed(parts)])
+
+
+def test_table_files_go_through_fsio():
+    """Markers, manifests and probes beside Spark-written tables go
+    through the one Hadoop FileSystem handle (``operators/fsio.py``),
+    so they resolve a path as Spark does: no module under
+    ``operators``, ``plans`` or ``streaming`` other than ``fsio.py``
+    calls ``open``, ``shutil.rmtree`` or the ``os`` file functions
+    directly."""
+    fsio = REPO / PKG / "operators" / "fsio.py"
+    found = []
+    for sub in ("operators", "plans", "streaming"):
+        for f in sorted((REPO / PKG / sub).rglob("*.py")):
+            if f == fsio:
+                continue
+            for n in ast.walk(ast.parse(f.read_text(), str(f))):
+                name = isinstance(n, ast.Call) and _dotted(n.func)
+                if name in _FILE_CALLS:
+                    found.append(f"{f.relative_to(REPO)}:{n.lineno}: {name}")
+    assert not found, f"file calls outside fsio.py: {found}"
