@@ -8,8 +8,9 @@ One operator, ``connected_components``, with one bound,
 ``util.DRIVER_ROWS``. The graphs this pipeline canonicalizes are
 vocabulary-bounded (distinct-surface link pairs, near-dup doc pairs),
 orders of magnitude smaller than the corpus: up to the bound the edges
-come to the driver in ONE ``limit(DRIVER_ROWS + 1)`` Arrow collect and a
-path-compressed union-find labels them. Past it runs the
+come to the driver in ONE bounded Arrow collect
+(``util.collect_bounded``) and a path-compressed union-find labels
+them. Past it runs the
 large-star/small-star iteration of Kiveris et al., "Connected
 Components in MapReduce and Beyond" (SoCC 2014), as DataFrame joins —
 the 10^12-node path: its round count grows with the log of the
@@ -29,7 +30,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import DRIVER_ROWS, local_table, unpin
+from .util import DRIVER_ROWS, collect_bounded, local_table, unpin
 
 
 def connected_components(
@@ -57,10 +58,11 @@ def connected_components(
     entry checkpoint reads that cache before it is released."""
     pinned = edges.persist()
     try:
-        probe = pinned.where(F.col(src) != F.col(dst)).select(
-            F.col(src).alias("a"), F.col(dst).alias("b")
-        ).limit(DRIVER_ROWS + 1).toArrow()
-        if probe.num_rows <= DRIVER_ROWS:
+        probe = collect_bounded(pinned.where(F.col(src) != F.col(dst))
+                                .select(F.col(src).alias("a"),
+                                        F.col(dst).alias("b")),
+                                DRIVER_ROWS)
+        if probe is not None:
             pairs = list(zip(probe.column("a").to_pylist(),
                              probe.column("b").to_pylist()))
             t = pinned.schema[src].dataType.simpleString()

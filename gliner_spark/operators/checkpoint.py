@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+from datetime import datetime, timezone
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -100,8 +101,8 @@ def checkpoint_write(
     stage output (reading back what exists on disk).
 
     ``todo`` is persisted across the two actions (parquet write +
-    manifest count) so the upstream stage — for mentions, a full NER
-    ``mapInArrow`` pass — executes ONCE, not twice.
+    manifest count) so the upstream stage — for ``build_kg``'s NER
+    rows, a full ``mapInArrow`` pass — executes ONCE, not twice.
 
     ``expected_part_keys`` (iterable of keys, or a 1-column DataFrame of
     part_key): input partitions that produced ZERO output rows are
@@ -120,37 +121,32 @@ def checkpoint_write(
         ).partitionBy(PART_COL).parquet(out_path)
 
         # manifest rows: per-partition row counts = the metrics the north
-        # rule asks to track (triples per partition etc.)
+        # rule asks to track (NER rows per partition etc.)
         counts = todo.groupBy(PART_COL).agg(
             F.count(F.lit(1)).alias("n_rows")
         )
-        if expected_part_keys is not None:
-            if isinstance(expected_part_keys, DataFrame):
-                exp = expected_part_keys.select(
-                    F.col(expected_part_keys.columns[0])
-                    .cast("string")
-                    .alias(PART_COL)
-                ).distinct()
-            else:
-                exp = local_table(
-                    spark, [(str(k),) for k in expected_part_keys],
-                    f"{PART_COL} string",
-                ).distinct()
+        exp = expected_part_keys
+        if exp is not None:
+            if not isinstance(exp, DataFrame):
+                exp = local_table(spark, [(str(k),) for k in exp],
+                                  f"{PART_COL} string")
             empty = (
-                exp.join(F.broadcast(done), PART_COL, "left_anti")
+                exp.select(F.col(exp.columns[0]).cast("string")
+                           .alias(PART_COL)).distinct()
+                .join(F.broadcast(done), PART_COL, "left_anti")
                 .join(counts.select(PART_COL), PART_COL, "left_anti")
                 .select(PART_COL, F.lit(0).cast("long").alias("n_rows"))
             )
             counts = counts.unionByName(empty)
-        manifest = counts.select(
-            F.lit(stage).alias("stage"),
-            F.col(PART_COL),
-            F.lit(DONE).alias("status"),
-            F.col("n_rows"),
-            F.lit(json.dumps(lineage or {}, sort_keys=True)).alias("lineage"),
-            F.current_timestamp().alias("ts"),
-        )
-        manifest.write.mode("append").parquet(_manifest_path(root))
+        # one row per part key this call records (with_part_key makes
+        # ≤ n_buckets): collected, so a fully resumed write appends none
+        ts = datetime.now(timezone.utc)
+        lin = json.dumps(lineage or {}, sort_keys=True)
+        rows = [(stage, r[PART_COL], DONE, r.n_rows, lin, ts)
+                for r in counts.collect()]
+        if rows:
+            local_table(spark, rows, MANIFEST_DDL).write.mode(
+                "append").parquet(_manifest_path(root))
     finally:
         todo.unpersist()
     return spark.read.parquet(out_path)

@@ -7,9 +7,10 @@ input row — so **no shuffle is needed for NER**. The first shuffle in the
 whole pipeline is the relation/linking join downstream.
 
 ``_ner_stage`` is the one Spark NER stage; ``extract_mentions``, the
-fused ``extract_triples_fused`` and ``plans/kg.build_kg``'s mention rows
-with their relations (operators/ner_fused.py) differ only in the emitter
-that turns a batch's spans into output rows, and its schema.
+fused ``extract_triples_fused`` and the mention rows with their
+relations of ``plans/kg.build_kg`` and ``incremental.merge_kg_batch``
+(operators/ner_fused.py) differ only in the emitter that turns a
+batch's spans into output rows, and its schema.
 
 Scale notes (100 TB / 1000 executors):
 - the stage is embarrassingly parallel over input splits; throughput

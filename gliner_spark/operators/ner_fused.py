@@ -19,13 +19,13 @@ Who pairs with which implementation:
   (``operators/ner._ner_stage``, only the emitter differs):
   ``extract_triples_fused`` (the ``ner_triples_fused`` query and the
   ``entry()`` flagship);
-  ``plans/kg.build_kg`` through ``mention_relations``, whose mention
-  rows carry the relations they are the subject of (schema
-  ``MENTION_RELATIONS``); and ``relations_for_doc`` for one document.
+  ``plans/kg.build_kg`` and ``incremental.merge_kg_batch`` through
+  ``mention_relations``, whose mention rows carry the relations they
+  are the subject of (schema ``MENTION_RELATIONS``); and
+  ``relations_for_doc`` for one document.
 - ``relations.extract_relations`` (a Spark band self-join) where the
-  mentions already are a table: ``incremental.merge_kg_batch`` over the
-  checkpointed batches, the ``ner_triples``/``kg_edges`` queries and
-  bench.py.
+  mentions already are a table: the ``ner_triples``/``kg_edges``
+  queries and bench.py. It is also the tests' oracle for this module.
 
 Both give the same triples for span- and token-level configs, ``prob``
 included: Spark's ``round(s.prob * o.prob, 4)`` is HALF_UP on the

@@ -13,10 +13,10 @@ fully declarative, so AQE handles skew (one hot page with thousands of
 mentions) and the rule table is broadcast. Wall-clock at scale is
 dominated by the single shuffle of mentions by doc_id.
 
-It is the pairing for mentions that already are a table:
-``incremental.merge_kg_batch`` (the checkpointed mentions of every
-batch), the ``ner_triples``/``kg_edges`` queries and bench.py. Where the
-spans come straight out of NER — ``plans/kg.build_kg``,
+It is the pairing for mentions that already are a table: the
+``ner_triples``/``kg_edges`` queries and bench.py, and the tests'
+oracle for the in-stage pairing. Where the spans come straight out of
+NER — ``plans/kg.build_kg``, ``incremental.merge_kg_batch``,
 ``ner_fused.extract_triples_fused`` — the NER stage pairs each Arrow
 batch's spans itself (``ner_fused.pair_spans``), with no shuffle and
 the same triples.

@@ -13,9 +13,17 @@ from pyspark.sql.types import StructType
 # bound of every size-adaptive driver path (the KG linking tail's
 # surfaces and LSH candidate pairs, connected components, admission's
 # store ∪ batch signatures and verdicts). Each path collects its rows
-# through a ``limit(DRIVER_ROWS + 1)`` in one job, so an oversized input
-# is detected with at most DRIVER_ROWS + 1 rows on the driver.
+# through ``collect_bounded``, so an oversized input is detected with at
+# most DRIVER_ROWS + 1 rows on the driver.
 DRIVER_ROWS = 1_000_000
+
+
+def collect_bounded(df: DataFrame, bound: int):
+    """The rows of ``df`` as one ``pyarrow.Table``, or None past
+    ``bound`` rows: one ``limit(bound + 1)`` Arrow collect. Callers pass
+    their module's ``DRIVER_ROWS``, which tests lower to go distributed."""
+    tbl = df.limit(bound + 1).toArrow()
+    return tbl if tbl.num_rows <= bound else None
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -6,8 +6,8 @@ The update decomposes cleanly because of how the pipeline is shaped
 
 - mentions and triples are PER-DOCUMENT (the NER stage is row-local and
   relations are intra-document) → strictly append-only. Only the new
-  batch is scored; the checkpoint manifests already make the append
-  idempotent and resumable.
+  batch is scored, and its manifest makes the append idempotent and
+  resumable; old batches' triples are read back, never re-paired.
 - nodes/edges derive from the DISTINCT-SURFACE universe, which is
   vocabulary-bounded, not corpus-bounded (SURVEY.md §2.3) → re-running
   linking + connected components over the merged surface table is cheap
@@ -30,12 +30,9 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..operators.bands import band_pairs, band_pairs_local, minhash_bands
 from ..operators.canonicalize import connected_components, union_find
-from ..operators.checkpoint import checkpoint_write, with_part_key
 from ..operators.linking import entity_surfaces
-from ..operators.ner import extract_mentions
-from ..operators.relations import extract_relations
-from ..operators.util import DRIVER_ROWS, local_table, unpin
-from .kg import KgResult, _nodes_and_edges
+from ..operators.util import DRIVER_ROWS, collect_bounded, local_table, unpin
+from .kg import KgResult, _ner_tables, _nodes_and_edges
 
 
 def _batch_fingerprint(
@@ -56,12 +53,6 @@ def _batch_fingerprint(
     return f"{(row.x or 0) & 0xFFFFFFFFFFFFFFFF:016x}-{row.n}"
 
 
-def _prefix_keys(df: DataFrame, fp: str) -> DataFrame:
-    return df.withColumn(
-        "part_key", F.concat(F.lit(f"{fp}-"), F.col("part_key"))
-    )
-
-
 def merge_kg_batch(
     new_pages: DataFrame,
     labels: Sequence[str],
@@ -72,69 +63,36 @@ def merge_kg_batch(
     batch_id: str | int | None = None,
 ) -> KgResult:
     """Score ONLY ``new_pages``, append their mentions/triples under
-    ``checkpoint_root`` (manifest-idempotent: re-runs skip DONE
-    partitions), then rebuild nodes/edges from the merged mention
+    ``checkpoint_root`` (manifest-idempotent: re-runs score no DONE
+    partition), then rebuild nodes/edges from the merged mention
     corpus. Returns the merged KG tables.
 
-    Mention partitions are BATCH-SCOPED: part_key =
+    NER partitions are BATCH-SCOPED: part_key =
     ``{batch}-{hash bucket}``. With a shared bucket space, a later
     batch whose doc ids hash into buckets an earlier batch already
     marked DONE would be silently left-anti'd away — batches routinely
     share hash buckets, so the manifest key must carry batch identity.
     ``batch_id`` (e.g. Structured Streaming's foreachBatch epoch id,
     stable across replays) is used when given; otherwise a
-    content-derived fingerprint of the batch's ids stands in — both
-    make a replay of the same batch a no-op while distinct batches
-    never collide.
+    content-derived fingerprint of the batch's (id, text) pairs stands
+    in — both make a replay of the same batch a no-op while distinct
+    batches never collide.
 
-    Nodes and edges come from the linking tail ``build_kg`` runs
+    The NER pass is ``build_kg``'s (``kg._ner_tables``), which pairs
+    the relations in the stage, and so is the linking tail
     (``kg._nodes_and_edges``: the driver pass below
     ``util.DRIVER_ROWS``, the distributed LSH plan past it), so
     incremental merging is bit-equivalent to a from-scratch build
     (pytest-pinned)."""
-    spark = new_pages.sparkSession
-
     fp = (
         str(batch_id)
         if batch_id is not None
         else _batch_fingerprint(new_pages, id_col, text_col)
     )
-    new_mentions = extract_mentions(
-        new_pages, labels, id_col=id_col, text_col=text_col,
-        config=cfg.gliner,
+    mentions, triples = _ner_tables(
+        new_pages, labels, cfg, id_col, text_col, checkpoint_root,
+        key_prefix=f"{fp}-", lineage={"labels": list(labels), "batch": fp},
     )
-    # append-only stages: the manifest left-anti skips anything already
-    # processed, so calling merge twice with the same batch is a no-op.
-    # expected_part_keys = the batch's full part-key universe (derived
-    # from the INPUT ids, not the mention output): partitions whose docs
-    # yield zero mentions are invisible in new_mentions and would be
-    # re-scored on every subsequent merge unless recorded DONE/0 here.
-    # The id is cast to STRING before hashing because extract_mentions
-    # emits doc_id as string (ner.py) — xxhash64(long) != xxhash64(string
-    # of the same value), so hashing the raw column would record DONE/0
-    # under phantom keys while real zero-mention buckets stay unrecorded.
-    batch_keys = _prefix_keys(
-        with_part_key(
-            new_pages.select(
-                F.col(id_col).cast("string").alias("doc_id")
-            ),
-            "doc_id",
-        ),
-        fp,
-    ).select("part_key")
-    checkpoint_write(
-        _prefix_keys(with_part_key(new_mentions, "doc_id"), fp),
-        checkpoint_root, "mentions",
-        lineage={"labels": list(labels), "batch": fp},
-        expected_part_keys=batch_keys,
-    )
-    mentions = spark.read.parquet(f"{checkpoint_root}/mentions")
-
-    triples = extract_relations(
-        mentions.repartition("doc_id"),
-        window_bytes=cfg.relation_window * 4,
-    )
-
     # global closure over the merged (vocabulary-bounded) surface set:
     # new surfaces may bridge previously separate components
     nodes, edges = _nodes_and_edges(entity_surfaces(mentions), triples, cfg)
@@ -260,7 +218,7 @@ def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
     ``DRIVER_ROWS`` candidate pairs.
 
     The tagged (doc_id, new, sig) rows come to the driver in ONE
-    bounded Arrow collect (``limit(DRIVER_ROWS + 1)``, one Spark job):
+    bounded Arrow collect (``util.collect_bounded``, one Spark job):
     up to ``DRIVER_ROWS`` signatures of n_perms × 8 B, ~1 GiB at the
     bound for 128 permutations. Past the bound at most
     ``DRIVER_ROWS + 1`` of them reach the driver, as in the other two
@@ -276,11 +234,13 @@ def _admit_local(sig_new: DataFrame, sig_old: DataFrame, bands: int,
 
     from ..operators.linking import _spark_round
 
-    tbl = _tagged(sig_new, sig_old).limit(DRIVER_ROWS + 1).toArrow()
+    tbl = collect_bounded(_tagged(sig_new, sig_old), DRIVER_ROWS)
+    if tbl is None:
+        return None
     sigs = tbl.column("sig").combine_chunks()
     # rows with a NULL id or a signature of another width are left to
     # the distributed plan and its NULL semantics
-    if (tbl.num_rows > DRIVER_ROWS or tbl.column("doc_id").null_count
+    if (tbl.column("doc_id").null_count
             or (pc.list_value_length(sigs).fill_null(0).to_numpy()
                 != n_perms).any()):
         return None
@@ -413,7 +373,7 @@ def dedup_admit_batch(
     plain parquet append and NOT atomic: a crash inside it can leave
     part of the batch's keepers stored. Wrap calls in the checkpoint
     manifest (``checkpoint_write``) when retries must be idempotent,
-    exactly like merge_batch above.
+    as ``merge_kg_batch`` above does.
 
     Pins: the driver pass releases the batch-signature checkpoint
     before it returns. The distributed path leaves two checkpoints

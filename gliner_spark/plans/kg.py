@@ -38,12 +38,11 @@ bound the distributed plan runs (measurements: docs/SCALE.md). The
 surface count aggregation is not salted: map-side partial aggregation
 already ships one row per hot surface per map task
 (``tools/salt_probe.py``), and the band join's skew is bounded by
-``band_pairs``' ``max_bucket`` guard. The tail
-— surfaces → nodes + edges — is ``_nodes_and_edges``, shared with
-``incremental.merge_kg_batch`` (which pairs its checkpointed mentions
-with the ``relations.extract_relations`` self-join). Checkpointing
-writes the mentions and the triples from the one NER pin, then nodes
-and edges, each with per-partition manifests for resume.
+``band_pairs``' ``max_bucket`` guard. ``incremental.merge_kg_batch``
+runs the same NER pass (``_ner_tables``) and tail (``_nodes_and_edges``).
+Checkpointing writes the NER rows, relations included, as one stage
+that the mentions and the triples read back, then nodes and edges, each
+with per-partition manifests for resume.
 """
 
 from __future__ import annotations
@@ -61,7 +60,8 @@ from ..operators.canonicalize import (
     nodes_table,
     union_find,
 )
-from ..operators.checkpoint import checkpoint_write, with_part_key
+from ..operators.checkpoint import (PART_COL, checkpoint_write,
+                                   completed_partitions, with_part_key)
 from ..operators.linking import (
     entity_surfaces,
     lsh_links,
@@ -70,10 +70,12 @@ from ..operators.linking import (
 )
 from ..operators.ner import _ner_stage
 from ..operators.ner_fused import mention_relations
-from ..operators.util import DRIVER_ROWS, local_table
+from ..operators.util import DRIVER_ROWS, collect_bounded, local_table
 from ..schemas import MENTION_RELATIONS
 
 ENTITY_MAP_DDL = "e_label string, e_surface string, entity_id string"
+# the checkpoint stage of the NER rows, relations included
+NER_STAGE = "ner"
 
 
 @dataclass
@@ -91,7 +93,7 @@ def _linking_tail_local(surfaces: DataFrame, k: int, n_perms: int,
     LSH candidate pairs.
 
     One bounded Arrow collect of ``surface_shingles``
-    (``limit(DRIVER_ROWS + 1)``), then the distributed tail's steps on
+    (``util.collect_bounded``), then the distributed tail's steps on
     its values: ``lsh_links_local`` with ``lsh_links``' parameters,
     ``union_find`` (entity_id = min sid of the component, whose surface
     is the canonical one) and the ``nodes_table`` aggregation. Both
@@ -99,9 +101,9 @@ def _linking_tail_local(surfaces: DataFrame, k: int, n_perms: int,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tbl = surface_shingles(surfaces, k).limit(DRIVER_ROWS + 1).toArrow()
+    tbl = collect_bounded(surface_shingles(surfaces, k), DRIVER_ROWS)
     links = (lsh_links_local(tbl, n_perms, bands, DRIVER_ROWS)
-             if tbl.num_rows <= DRIVER_ROWS else None)
+             if tbl is not None else None)
     if links is None:
         return None
     comp = union_find(links)
@@ -179,16 +181,65 @@ def _nodes_and_edges(surfaces: DataFrame, triples: DataFrame,
 
 def _explode_rels(ner: DataFrame) -> DataFrame:
     """``TRIPLES`` rows of ``MENTION_RELATIONS`` rows: each mention as
-    the subject of every relation in its ``rels``."""
+    the subject of every relation in its ``rels``, with the mention's
+    ``part_key`` when it has one."""
     r = F.explode("rels").alias("r")
+    key = [PART_COL] if PART_COL in ner.columns else []
     return ner.select(
         "doc_id",
         F.col("m_text").alias("subj"),
         F.col("label").alias("subj_label"),
         F.col("m_start").alias("subj_start"),
-        r,
+        r, *key,
     ).select("doc_id", "subj", "subj_label", "subj_start", "r.pred",
-             "r.obj", "r.obj_label", "r.obj_start", "r.prob")
+             "r.obj", "r.obj_label", "r.obj_start", "r.prob", *key)
+
+
+def _ner_tables(
+    pages: DataFrame,
+    labels: Sequence[str],
+    cfg: PipelineConfig,
+    id_col: str,
+    text_col: str,
+    checkpoint_root: str | None = None,
+    key_prefix: str = "",
+    lineage: dict | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(mentions, triples) of ``pages`` from one NER pass whose mention
+    rows carry the relations they are the subject of, paired inside
+    each Arrow batch: no mentions shuffle, no self-join. The rows are
+    pinned, or with ``checkpoint_root`` written as the one stage
+    ``NER_STAGE`` (keys ``key_prefix`` + ``with_part_key(doc_id)``) and
+    read back whole. Pages whose key is DONE never reach the scorer;
+    the keys of the others are the ``expected_part_keys``, so a
+    partition without mentions is recorded DONE/0."""
+    def keyed(df: DataFrame) -> DataFrame:
+        return with_part_key(df, "doc_id").withColumn(
+            PART_COL, F.concat(F.lit(key_prefix), PART_COL))
+
+    src = pages
+    if checkpoint_root:
+        done = completed_partitions(pages.sparkSession, checkpoint_root,
+                                    NER_STAGE)
+        # the id as the NER stage emits it (a long id hashes unlike its
+        # string)
+        src = keyed(pages.select(F.col(id_col).cast("string").alias("doc_id"),
+                                 F.col(text_col).alias("text"))
+                    ).join(F.broadcast(done), PART_COL, "left_anti")
+        id_col, text_col = "doc_id", "text"
+    rows = _ner_stage(
+        src, labels, id_col, text_col, cfg.gliner, None,
+        mention_relations(window_bytes=cfg.relation_window * 4),
+        MENTION_RELATIONS,
+    )
+    if checkpoint_root:
+        rows = checkpoint_write(
+            keyed(rows), checkpoint_root, NER_STAGE, lineage=lineage,
+            expected_part_keys=src.select(PART_COL))
+    else:
+        # read by every table after it: the scorer runs once per task
+        rows = rows.persist()
+    return rows.drop("rels"), _explode_rels(rows)
 
 
 def build_kg(
@@ -199,31 +250,10 @@ def build_kg(
     id_col: str = "url",
     text_col: str = "text",
 ) -> KgResult:
-    # one NER pass whose mention rows carry the relations they are the
-    # subject of, paired inside each Arrow batch: no mentions shuffle,
-    # no self-join. Pinned once: the mentions, the triples and (with
-    # checkpoints) both writes read it, so the scorer runs once per
-    # input task
-    ner = _ner_stage(
-        pages, labels, id_col, text_col, cfg.gliner, None,
-        mention_relations(window_bytes=cfg.relation_window * 4),
-        MENTION_RELATIONS,
-    ).persist()
-    mentions, triples = ner.drop("rels"), _explode_rels(ner)
-    if checkpoint_root:
-        try:
-            mentions = checkpoint_write(
-                with_part_key(mentions, "doc_id"),
-                checkpoint_root,
-                "mentions",
-                lineage={"labels": list(labels)},
-            )
-            triples = checkpoint_write(
-                with_part_key(triples, "doc_id"), checkpoint_root, "triples"
-            )
-        finally:
-            # both stages now read back from their checkpoints
-            ner.unpersist()
+    mentions, triples = _ner_tables(
+        pages, labels, cfg, id_col, text_col, checkpoint_root,
+        lineage={"labels": list(labels)},
+    )
 
     # the surface aggregation runs unsalted whatever the skew: a hot
     # surface's partial count leaves each map task as one row

@@ -46,9 +46,9 @@ TRIPLES = T.StructType(
     ]
 )
 
-# build_kg's one NER pass (operators/ner_fused.mention_relations): each
-# mention row plus the relations it is the subject of, so the mentions
-# and the triples (``explode(rels)``) come from one pin
+# the NER pass of build_kg and merge_kg_batch: each mention row plus
+# the relations it is the subject of, so the mentions and the triples
+# (``explode(rels)``) come from one pin or checkpoint stage
 MENTION_RELATIONS = T.StructType(
     MENTIONS.fields
     + [

@@ -7,8 +7,9 @@ This composes the two resumability mechanisms the repo already has:
   each micro-batch (exactly-once file accounting across restarts);
 - ``merge_kg_batch``'s per-partition manifests make the fold ITSELF
   idempotent — if a micro-batch is replayed after a crash mid-fold
-  (foreachBatch is at-least-once by contract), every already-scored
-  partition left-anti-joins away against the DONE manifest rows, so
+  (foreachBatch is at-least-once by contract), the pages of every
+  already-scored partition left-anti-join away against the DONE
+  manifest rows before the NER stage, so nothing is scored twice,
   mentions are never double-appended and the rebuilt node/edge tables
   are identical. At-least-once delivery + idempotent fold =
   effectively-once end to end.

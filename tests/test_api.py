@@ -49,15 +49,6 @@ def test_token_level_model():
     ]
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
-
-
 def test_inference_df_matches_local(spark):
     model = GlinerModel()
     texts = [

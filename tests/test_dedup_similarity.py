@@ -26,15 +26,6 @@ from gliner_spark.operators.similarity import (
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
-
-
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()

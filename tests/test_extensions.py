@@ -15,15 +15,6 @@ from gliner_spark.operators.ner import extract_mentions
 from gliner_spark.operators.skew import hot_keys, salted_equi_join
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
-
-
 # --- token-level decode path (reference TokenProcessor/TokenDecoder) ---
 def test_token_level_kyiv_golden():
     cfg = GlinerConfig(model_type=TOKEN_LEVEL)

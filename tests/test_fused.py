@@ -20,15 +20,6 @@ from gliner_spark.schemas import MENTIONS, TRIPLES
 from gliner_spark.sources.pages import synthesize_pages
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
-
-
 def _key(r):
     return (
         r.doc_id, r.subj, r.subj_label, r.subj_start, r.pred,
@@ -309,8 +300,8 @@ def test_build_kg_null_and_empty_text(spark):
 @pytest.mark.parametrize("checkpointed", [False, True])
 def test_build_kg_scores_each_doc_once(spark, tmp_path, monkeypatch,
                                        checkpointed):
-    """Across the mentions write, the triples write, the surfaces and
-    the edges, build_kg runs the scorer factory once per input task:
+    """Across the NER checkpoint write, the surfaces and the edges,
+    build_kg runs the scorer factory once per input task:
     as often as one ``extract_mentions`` pass does. Counted via marker
     files, as in test_persisted_mentions_score_each_doc_once."""
     import os

@@ -4,7 +4,6 @@ pages loader."""
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from gliner_spark.sources.html_text import (
@@ -13,15 +12,6 @@ from gliner_spark.sources.html_text import (
     pages_from_raw_html,
 )
 from gliner_spark.sources.pages import synthesize_pages, wrap_html
-
-
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
 
 
 REAL_PAGE = b"""<!DOCTYPE html>

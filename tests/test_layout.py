@@ -291,7 +291,8 @@ def test_local_tables_are_built_and_split_in_one_place():
     """``operators/util.local_table`` is the one place driver rows
     become a DataFrame and the one place their partitions are decided:
     no other package module calls ``createDataFrame``, and no module
-    coalesces a ``local_table(...)`` result itself."""
+    coalesces a ``local_table(...)`` result itself. The way back is
+    one place too: only ``util.collect_bounded`` calls ``toArrow``."""
     util = REPO / PKG / "operators" / "util.py"
     found = []
     for f in sorted((REPO / PKG).rglob("*.py")):
@@ -299,13 +300,13 @@ def test_local_tables_are_built_and_split_in_one_place():
             if not isinstance(n, ast.Attribute):
                 continue
             where = f"{f.relative_to(REPO)}:{n.lineno}"
-            if n.attr == "createDataFrame" and f != util:
-                found.append(f"{where}: createDataFrame")
+            if n.attr in ("createDataFrame", "toArrow") and f != util:
+                found.append(f"{where}: {n.attr}")
             called = getattr(n.value, "func", None)
             if n.attr == "coalesce" and "local_table" in (
                     getattr(called, "id", None), getattr(called, "attr", None)):
                 found.append(f"{where}: local_table(...).coalesce")
-    assert not found, f"driver tables outside local_table: {found}"
+    assert not found, f"driver tables outside util: {found}"
 
 
 def _bound_names(f: Path) -> set[str]:

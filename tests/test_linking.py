@@ -18,15 +18,6 @@ from gliner_spark.operators.linking import (
 )
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
-
-
 def _surfaces(spark, rows):
     return spark.createDataFrame(
         [(f"{lab}:{surf}", lab, surf, n) for lab, surf, n in rows],

@@ -1,16 +1,5 @@
 """Operator-level invariants that fit no other suite."""
 
-import pytest
-
-
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
-
 
 def test_length_sorted_mentions_equal_unsorted(spark):
     """length_sort=True must be output-invariant (it only reorders rows

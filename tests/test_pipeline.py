@@ -1,5 +1,6 @@
 """End-to-end pipeline + checkpoint/resume tests (SURVEY.md §5)."""
 
+import os
 from contextlib import contextmanager
 
 import pytest
@@ -8,24 +9,17 @@ from pyspark.sql import functions as F
 from gliner_spark.kernels.scorer import ALL_LABELS
 from gliner_spark.operators.checkpoint import (
     checkpoint_write,
+    manifest_file_count,
     stage_metrics,
     with_part_key,
 )
 from gliner_spark.plans.kg import build_kg
+from gliner_spark.schemas import MENTIONS, TRIPLES
 from gliner_spark.sources.pages import (
     pages_from_documents,
     synthesize_pages,
     verify_extraction,
 )
-
-
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
 
 
 def test_html_extraction_byte_identical(spark):
@@ -57,20 +51,27 @@ def test_checkpoint_resume(spark, tmp_path):
     kg1 = build_kg(pages, ALL_LABELS, checkpoint_root=root)
     n_mentions = kg1.mentions.count()
     n_triples = kg1.triples.count()
-    metrics1 = stage_metrics(spark, root).where(F.col("stage") == "mentions")
+    metrics1 = stage_metrics(spark, root).where(F.col("stage") == "ner")
     n_parts = metrics1.count()
     assert n_parts > 0
     assert (
         metrics1.agg(F.sum("n_rows")).collect()[0][0] == n_mentions
     )  # per-partition counts sum to the total
 
-    # resume: second run must skip all DONE partitions (manifest count
-    # unchanged) and produce identical outputs
+    # resume: second run must skip all DONE partitions (manifest rows
+    # and files unchanged) and produce identical outputs
+    n_files = manifest_file_count(spark, root)
     kg2 = build_kg(pages, ALL_LABELS, checkpoint_root=root)
     assert kg2.mentions.count() == n_mentions
     assert kg2.triples.count() == n_triples
-    metrics2 = stage_metrics(spark, root).where(F.col("stage") == "mentions")
+    metrics2 = stage_metrics(spark, root).where(F.col("stage") == "ner")
     assert metrics2.count() == n_parts  # no new manifest rows appended
+    assert manifest_file_count(spark, root) == n_files
+    # the triples keep the NER rows' part key as their partitioning
+    from gliner_spark.operators.sinks import materialize_kg
+
+    triples_dir = materialize_kg(kg2, str(tmp_path / "kg"))["triples"]
+    assert any(p.startswith("part_key=") for p in os.listdir(triples_dir))
 
 
 def test_compact_manifest_resume_and_bounded_files(spark, tmp_path):
@@ -91,8 +92,14 @@ def test_compact_manifest_resume_and_bounded_files(spark, tmp_path):
         F.col("id").alias("doc_id"), F.lit("x").alias("payload")
     )
     staged = with_part_key(docs, "doc_id", n_buckets=8)
-    for i in range(6):  # 6 appended manifest files (2 stages × 3 calls)
-        checkpoint_write(staged, root, f"stage{i % 2}")
+    # 6 appended manifest files: 2 stages × 3 calls, each call a third
+    # of the buckets (a fully resumed call appends no file)
+    for i in range(6):
+        third = F.col("part_key").cast("int") % 3 == i // 2
+        checkpoint_write(staged.where(third), root, f"stage{i % 2}")
+    # replayed DONE rows, as concurrent writers can leave them
+    stage_metrics(spark, root).localCheckpoint().write.mode("append").parquet(
+        f"{root}/_checkpoints")
     assert manifest_file_count(spark, root) >= 6
 
     done_before = {
@@ -373,6 +380,8 @@ def test_incremental_merge_equals_from_scratch(spark, tmp_path):
     edge_cols = ["src_entity", "dst_entity", "pred", "support", "weight"]
     assert rows(kg_inc.nodes, node_cols) == rows(full.nodes, node_cols)
     assert rows(kg_inc.edges, edge_cols) == rows(full.edges, edge_cols)
+    assert rows(kg_inc.triples, TRIPLES.fieldNames()) == rows(
+        full.triples, TRIPLES.fieldNames())
     assert kg_inc.mentions.count() == full.mentions.count()
 
     # idempotence: re-merging batch_b adds no manifest rows, no mentions
@@ -412,7 +421,7 @@ def test_incremental_merge_records_zero_mention_partitions(spark, tmp_path):
             pages.select(F.col("url").alias("doc_id")), "doc_id"
         ).select("part_key").distinct().collect()
     }
-    manifest = stage_metrics(spark, root).where(F.col("stage") == "mentions")
+    manifest = stage_metrics(spark, root).where(F.col("stage") == "ner")
     got = {r.part_key for r in manifest.collect()}
     assert got == expected
     assert manifest.where(F.col("n_rows") == 0).count() > 0
@@ -427,6 +436,130 @@ def test_incremental_merge_records_zero_mention_partitions(spark, tmp_path):
         "text", F.concat(F.col("text"), F.lit(" updated"))
     )
     assert _batch_fingerprint(recrawl, "url", "text") != fp
+
+
+def _halves(pages):
+    """Two batches of ``pages`` split by a hash decorrelated from
+    ``with_part_key``'s buckets, so they share buckets."""
+    odd = F.xxhash64("url", F.lit(1)) % 2 != 0
+    return pages.where(~odd), pages.where(odd)
+
+
+def test_merge_triples_plan_has_no_join(spark, tmp_path):
+    """A merge's triples are the checkpointed NER rows of every batch
+    exploded: the second merge's plan holds no Join and no Exchange,
+    so no merge re-pairs the mentions of the batches before it."""
+    from gliner_spark.plans.incremental import merge_kg_batch
+
+    root = str(tmp_path / "ikg")
+    batch_a, batch_b = _halves(synthesize_pages(spark, 60))
+    merge_kg_batch(batch_a, ALL_LABELS, root)
+    kg = merge_kg_batch(batch_b, ALL_LABELS, root)
+    txt = kg.triples._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in txt and "Exchange" not in txt
+    assert kg.triples.count() > 0
+
+
+def test_replay_and_resume_score_nothing(spark, tmp_path, monkeypatch):
+    """A replayed merge (same ``batch_id``) and a resumed checkpointed
+    ``build_kg`` drop their DONE pages before the NER stage: the scorer
+    sees no window of any document, the manifest gains no file and
+    the tables are unchanged."""
+    from gliner_spark.plans import kg as kg_mod
+    from gliner_spark.plans.incremental import merge_kg_batch
+
+    marker = tmp_path / "scored"
+    os.makedirs(marker)
+
+    def factory(path=str(marker)):
+        import os as _os
+        import uuid as _uuid
+
+        from gliner_spark.kernels.scorer import SurrogateScorer
+
+        class Counting(SurrogateScorer):
+            def score_spans(self, batch_tokens, labels):
+                open(_os.path.join(path, f"{len(batch_tokens)}-"
+                                   f"{_uuid.uuid4().hex}"), "w").close()
+                return super().score_spans(batch_tokens, labels)
+
+        return Counting(12)
+
+    def windows_scored():
+        files = os.listdir(marker)
+        for f in files:
+            os.remove(marker / f)
+        return sum(int(f.split("-")[0]) for f in files)
+
+    stage = kg_mod._ner_stage
+    monkeypatch.setattr(kg_mod, "_ner_stage", lambda *a: stage(
+        *a[:5], factory, *a[6:]))
+    pages = synthesize_pages(spark, 60)
+    edge_cols = ["src_entity", "dst_entity", "pred", "support", "weight"]
+
+    def edges(kg):
+        return sorted(tuple(r) for r in kg.edges.select(*edge_cols).collect())
+
+    for run in ("merge", "build"):
+        root = str(tmp_path / run)
+
+        def call():
+            if run == "merge":
+                return merge_kg_batch(pages, ALL_LABELS, root, batch_id=7)
+            return kg_mod.build_kg(pages, ALL_LABELS, checkpoint_root=root)
+
+        first = edges(call())
+        assert windows_scored() > 0
+        n_files = manifest_file_count(spark, root)
+        again = edges(call())
+        assert windows_scored() == 0, run
+        assert manifest_file_count(spark, root) == n_files
+        assert again == first
+    spark.catalog.clearCache()
+
+
+def test_merge_crash_in_manifest_append_then_retry(spark, tmp_path,
+                                                   monkeypatch):
+    """Batch B's merge dies in the NER stage's manifest append: its
+    rows are written, its partitions not yet DONE. The retry re-scores
+    them, and the KG equals a clean A-then-B run's."""
+    from gliner_spark.operators import checkpoint as ckpt
+    from gliner_spark.plans.incremental import merge_kg_batch
+
+    pages = synthesize_pages(spark, 120).persist()
+    batch_a, batch_b = _halves(pages)
+    tables = {
+        "nodes": ["entity_id", "canonical", "label", "n_mentions",
+                  "n_surfaces"],
+        "edges": ["src_entity", "dst_entity", "pred", "support", "weight"],
+        "triples": TRIPLES.fieldNames() + ["part_key"],
+        "mentions": MENTIONS.fieldNames() + ["part_key"],
+    }
+
+    def rows(kg):
+        return {t: sorted(tuple(r) for r in getattr(kg, t).select(*c)
+                          .collect()) for t, c in tables.items()}
+
+    clean_root = str(tmp_path / "clean")
+    merge_kg_batch(batch_a, ALL_LABELS, clean_root)
+    clean = rows(merge_kg_batch(batch_b, ALL_LABELS, clean_root))
+
+    root = str(tmp_path / "crashed")
+    merge_kg_batch(batch_a, ALL_LABELS, root)
+    local_table = ckpt.local_table
+
+    def crash_once(spark, rows, ddl):
+        if ddl == ckpt.MANIFEST_DDL and rows[0][0] == "ner":
+            monkeypatch.setattr(ckpt, "local_table", local_table)
+            raise RuntimeError("crash in the manifest append")
+        return local_table(spark, rows, ddl)
+
+    monkeypatch.setattr(ckpt, "local_table", crash_once)
+    with pytest.raises(RuntimeError, match="manifest append"):
+        merge_kg_batch(batch_b, ALL_LABELS, root)
+    assert rows(merge_kg_batch(batch_b, ALL_LABELS, root)) == clean
+    assert clean["triples"] and clean["edges"]
+    pages.unpersist()
 
 
 def test_checkpoint_zero_row_partitions_marked_done(spark, tmp_path):

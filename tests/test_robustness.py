@@ -23,15 +23,6 @@ from gliner_spark.operators.relations import extract_relations
 from gliner_spark.operators.textstats import quality_score, token_stats
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
-
-
 @pytest.fixture()
 def nullish_docs(spark):
     return spark.createDataFrame(

@@ -1,20 +1,9 @@
 """Streaming KG maintenance and admission: parity with batch runs over
 the same files, and the streaming job entrypoint."""
 
-import pytest
-
 from gliner_spark.kernels.scorer import ALL_LABELS
 from gliner_spark.sources.pages import synthesize_pages
 from gliner_spark.streaming.kg_stream import read_page_stream
-
-
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
 
 
 def test_stream_kg_updates_matches_batch_build(spark, tmp_path):
@@ -56,12 +45,12 @@ def test_stream_kg_updates_matches_batch_build(spark, tmp_path):
 
     # restart over the same source: no new files -> no re-fold, and the
     # published tables are unchanged
-    n_mentions = spark.read.parquet(f"{root}/mentions").count()
+    n_mentions = spark.read.parquet(f"{root}/ner").count()
     q2 = stream_kg_updates(
         read_page_stream(spark, src), ALL_LABELS, root, out
     ).start()
     q2.awaitTermination()
-    assert spark.read.parquet(f"{root}/mentions").count() == n_mentions
+    assert spark.read.parquet(f"{root}/ner").count() == n_mentions
     assert rows(read_published(spark, f"{out}/nodes"), node_cols) \
         == got_nodes
     pages.unpersist()
@@ -102,7 +91,7 @@ def test_run_kg_stream_job_entrypoint(spark, tmp_path, monkeypatch):
     nodes = read_published(spark, f"{out}/nodes")
     edges = read_published(spark, f"{out}/edges")
     assert nodes.count() > 0 and edges.count() > 0
-    assert spark.read.parquet(f"{root}/mentions").count() > 0
+    assert spark.read.parquet(f"{root}/ner").count() > 0
 
 
 def test_stream_admissions_matches_batch_admission(spark, tmp_path):

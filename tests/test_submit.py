@@ -7,20 +7,10 @@ import os
 import subprocess
 import sys
 
-import pytest
 from pyspark.sql import functions as F
 
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-@pytest.fixture(scope="session")
-def spark():
-    from gliner_spark.session import build_session
-
-    s = build_session(app_name="gliner-tests", cores=4)
-    yield s
-    s.stop()
 
 
 def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
