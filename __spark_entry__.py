@@ -87,7 +87,7 @@ _MENTIONS_CACHE: dict[tuple[str, str], DataFrame] = {}
 def _mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the relation/link/nodes queries consume mentions through
     # SEVERAL plan branches (self-joins, surface agg + canonical map);
-    # without materialization Spark re-runs the scoring mapInPandas once
+    # without materialization Spark re-runs the scoring mapInArrow once
     # per branch — with the real ONNX scorer that doubles the dominant
     # cost. One cache write instead (plans/kg.py does the same).
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -101,7 +101,7 @@ def _mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (re-)mark for caching: an external clearCache()/unpersist
         # (bench does this between queries) must not leave the memoized
         # DF unpersisted — its multi-branch consumers would re-run the
-        # scoring mapInPandas once per branch
+        # scoring mapInArrow once per branch
         df.persist()
     return df
 

@@ -13,8 +13,11 @@ missing partitions — idempotent because each partition's output path is
 deterministic and overwritten atomically (dynamic partition overwrite).
 
 At cluster scale this is the standard Iceberg/Hive pattern; parquet is
-used here because the sandbox has no Iceberg runtime, but the writer goes
-through one function (``_write``) so swapping the format is one line.
+used here because no Iceberg runtime ships with Spark, but every stage
+write goes through one function (``checkpoint_write``) so swapping the
+format is one line. Every manifest write commits by an append — the
+rows of a call, or the fold of ``compact_manifest`` — never by a
+rename.
 """
 
 from __future__ import annotations
@@ -60,24 +63,8 @@ def _manifest_path(root: str) -> str:
     return os.path.join(root, "_checkpoints")
 
 
-def _healed_manifest(spark: SparkSession, root: str):
-    """(fs, manifest path) of ``root``, after healing an interrupted
-    compaction where the filesystem renames atomically. Object stores
-    never ran the rename-based compaction, so there is nothing to heal
-    there."""
-    from .fsio import fs_for
-
-    fs = fs_for(spark, root)
-    path = _manifest_path(root)
-    if fs.atomic_rename:
-        _recover_manifest_fs(fs, path)
-    return fs, path
-
-
 def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    _, path = _healed_manifest(spark, root)
-    m = read_parquet_or_empty(spark, path, MANIFEST_DDL)
-    return m.where(F.col("stage") == stage)
+    return stage_metrics(spark, root).where(F.col("stage") == stage)
 
 
 def completed_partitions(spark: SparkSession, root: str, stage: str) -> DataFrame:
@@ -149,123 +136,76 @@ def checkpoint_write(
                 "append").parquet(_manifest_path(root))
     finally:
         todo.unpersist()
-    return spark.read.parquet(out_path)
+    # the written schema, not inference: ``part_key`` reads back a
+    # string whatever its values look like
+    return spark.read.schema(df.schema).parquet(out_path)
 
 
-def _recover_manifest_fs(fs, path: str) -> None:
-    """Heal the crash windows of ``compact_manifest``'s two-rename swap
-    (called on entry by every manifest-touching op) through the root's
-    Hadoop filesystem handle. States:
-    - manifest present + ``.compact`` leftover → stale tmp, drop it;
-    - manifest present + ``.old`` leftover → crash after the second
-      rename, finish by dropping the trash;
-    - manifest MISSING + complete ``.compact`` → crash between the two
-      renames; the tmp was fully committed (``_SUCCESS``) before any
-      rename, so promoting it FINISHES the compaction;
-    - manifest missing + ``.old`` only (or incomplete tmp) → roll back
-      to the pre-compaction manifest."""
-    tmp, trash = path + ".compact", path + ".old"
-    if fs.exists(path):
-        fs.delete(tmp)
-        fs.delete(trash)
-        return
-    if fs.exists(tmp) and fs.exists(fs.join(tmp, "_SUCCESS")):
-        fs.rename(tmp, path)
-        fs.delete(trash)
-        return
-    if fs.exists(trash):
-        fs.delete(tmp)
-        fs.rename(trash, path)
-
-
-def _maintenance_fs(spark, root: str):
-    """(fs, manifest_path) for the compaction swap, healed. The swap is
-    two RENAMES, so the filesystem must rename atomically: local and
-    hdfs-like ones qualify; object stores (s3a/gs/abfs — rename is
-    copy+delete) fail fast with the Iceberg pointer, because a crash
-    mid-copy there leaves a state the recovery walk cannot distinguish
-    from a committed one. An object-store URI fails before a handle is
-    built for it."""
-    from urllib.parse import urlparse
-
-    from .fsio import _ATOMIC_RENAME_SCHEMES
-
-    scheme = urlparse(root).scheme
-    if not scheme or scheme in _ATOMIC_RENAME_SCHEMES:
-        fs, path = _healed_manifest(spark, root)
-        if fs.atomic_rename:
-            return fs, path
-        scheme = fs.scheme
-    raise ValueError(
-        f"compact_manifest needs an atomic rename; {scheme}:// renames "
-        "are copy+delete. For object-store manifests use the catalog "
-        "path (write_table fmt='iceberg'|'delta') — a table-format "
-        "snapshot commit is the equivalent."
-    )
+def _manifest_parts(fs, path: str) -> list[str]:
+    """Names of the manifest's data files: Spark's ``_SUCCESS`` and
+    ``_temporary``, and Hadoop's ``.crc`` sidecars, are skipped."""
+    if not fs.exists(path):
+        return []
+    return [f for f in fs.listdir(path)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))]
 
 
 def compact_manifest(spark: SparkSession, root: str) -> int:
-    """Rewrite the append-only manifest to a single parquet file.
+    """Fold the append-only manifest into one parquet file.
 
     ``checkpoint_write`` appends one small parquet per call; a
     long-lived incremental root accumulates unbounded small files.
-    This opt-in maintenance op collapses them, keeping the LATEST row
-    per (stage, part_key, status) — replays of an idempotent write can
-    append duplicate DONE rows, and the newest carries the freshest
-    lineage/ts while n_rows is identical by idempotence. DONE semantics
-    are unchanged: ``completed_partitions`` sees exactly the same key
-    set before and after (pytest-pinned across a resume boundary).
+    This opt-in maintenance op lists the manifest's files, keeps the
+    LATEST row per (stage, part_key, status) among exactly those —
+    replays of an idempotent write can append duplicate DONE rows, and
+    the newest carries the freshest lineage/ts while n_rows is
+    identical by idempotence — appends the folded rows as one more
+    file, and then deletes the listed files. DONE semantics are
+    unchanged: ``completed_partitions`` sees exactly the same key set
+    before and after (pytest-pinned across a resume boundary).
 
-    Single-maintainer op: run it from the process that owns the root
-    with no concurrent ``checkpoint_write`` on the same root — the swap
-    is two renames, not one atomic commit (the same caveat as Hive
-    compaction without a lock service; the Iceberg catalog path gets
-    this atomically via snapshot commit). A crash between the renames
-    is healed by ``_recover_manifest_fs`` on the next manifest op (the
-    committed tmp is promoted, else ``.old`` rolls back). Runs on any
-    filesystem with atomic rename — local paths, ``file://``,
-    ``hdfs://`` and ``viewfs://`` roots, all through Hadoop's
-    FileSystem (operators/fsio.py); object stores fail fast with the
-    Iceberg pointer (see ``_maintenance_fs``). Returns rows
-    retained."""
-    from pyspark.sql import Window
+    The fold commits as every manifest write does, by an append, never
+    by a rename, so it runs on any filesystem Spark writes to (object
+    stores included) and beside concurrent ``checkpoint_write`` calls:
+    a file appended after the listing is not deleted. A crash before
+    the deletes finish leaves the folded rows beside (some of) the old
+    files — duplicate rows, the same DONE set — until the next fold
+    collapses them. A concurrent reader may fail loudly on a file
+    deleted under it, but never reads an empty manifest: the folded
+    file lands before any delete. Returns rows retained."""
+    from pyspark.sql import Observation, Window
 
-    fs, path = _maintenance_fs(spark, root)
-    if not fs.exists(path):  # nothing written yet; unreadable raises
+    from .fsio import fs_for
+
+    fs = fs_for(spark, root)
+    path = _manifest_path(root)
+    parts = [fs.join(path, f) for f in _manifest_parts(fs, path)]
+    if not parts:
         return 0
-    m = spark.read.parquet(path)
     w = (
         Window.partitionBy("stage", PART_COL, "status")
         .orderBy(F.col("ts").desc())
     )
-    # materialize off the source files before overwriting them
-    compacted = (
-        m.withColumn("_rn", F.row_number().over(w))
+    folded = (
+        spark.read.schema(MANIFEST_DDL).parquet(*parts)
+        .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
-        .localCheckpoint()
     )
-    n = compacted.count()
-    tmp = path + ".compact"
-    compacted.coalesce(1).write.mode("overwrite").parquet(tmp)
-    trash = path + ".old"
-    fs.delete(trash)
-    fs.rename(path, trash)
-    fs.rename(tmp, path)
-    fs.delete(trash)
-    return n
+    kept = Observation()
+    folded.observe(kept, F.count(F.lit(1)).alias("n")).coalesce(1) \
+        .write.mode("append").parquet(path)
+    for p in parts:
+        fs.delete(p)
+    return kept.get["n"]
 
 
 def manifest_file_count(spark: SparkSession, root: str) -> int:
     """Data files currently in the (flat) manifest dir — the
     compaction gauge — listed through the root's filesystem."""
-    fs, path = _healed_manifest(spark, root)
-    if not fs.exists(path):
-        return 0
-    return sum(
-        1 for f in fs.listdir(path)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
+    from .fsio import fs_for
+
+    return len(_manifest_parts(fs_for(spark, root), _manifest_path(root)))
 
 
 def stage_metrics(spark: SparkSession, root: str) -> DataFrame:

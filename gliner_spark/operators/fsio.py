@@ -2,18 +2,20 @@
 
 Spark reads and writes table DATA through Hadoop's ``FileSystem`` API.
 The small files next to it — the publish markers of
-``sinks.publish_atomic``, the checkpoint manifest's compaction swap,
-the existence probe of ``util.read_parquet_or_empty`` and the
-``_FINGERPRINT`` stamp of ``bucketing.write_bucketed`` — go through the
-same API, via ``fs_for``. So they land where Spark's own read or write
-of the same path lands: a plain path resolves against ``fs.defaultFS``
-(Hadoop's LocalFileSystem on one box, HDFS or viewfs on a cluster),
-never against the driver's local disk while the data went elsewhere.
+``sinks.publish_atomic``, the listing and deletes of the checkpoint
+manifest's fold, the existence probe of ``util.read_parquet_or_empty``
+and the ``_FINGERPRINT`` stamp of ``bucketing.write_bucketed`` — go
+through the same API, via ``fs_for``. So they land where Spark's own
+read or write of the same path lands: a plain path resolves against
+``fs.defaultFS`` (Hadoop's LocalFileSystem on one box, HDFS or viewfs
+on a cluster), never against the driver's local disk while the data
+went elsewhere.
 
-``atomic_rename`` is True for local and HDFS-like filesystems and
-False for object stores (S3A renames are copy+delete). Ops that need
-an atomic swap (manifest compaction) check it; the create-only marker
-publish runs on every filesystem.
+Every file beside a table commits create-only (``_markers/``,
+``_FINGERPRINT``) or append-only (manifest parts), never by a rename:
+object stores emulate a rename as copy+delete, and a crash mid-copy
+leaves a state no reader can tell from a committed one. So every op
+here runs on every filesystem Spark writes to.
 
 Hardlink reader pins (``HadoopFs.pin``) are the one part that needs
 POSIX inode semantics, so they engage only when the handle's scheme is
@@ -28,9 +30,6 @@ import os
 import time
 import uuid
 
-# schemes whose Hadoop FileSystem implements atomic directory rename;
-# object stores (s3a/s3/gs/abfs/oss/wasb) emulate rename as copy+delete
-_ATOMIC_RENAME_SCHEMES = {"hdfs", "file", "viewfs", "o3fs", "ofs"}
 _PINS = "_pins"
 
 
@@ -45,7 +44,6 @@ class HadoopFs:
         self._fs = self._p(path).getFileSystem(
             spark._jsc.hadoopConfiguration())
         self.scheme = str(self._fs.getScheme())
-        self.atomic_rename = self.scheme in _ATOMIC_RENAME_SCHEMES
 
     def _p(self, p: str):
         return self._jvm.org.apache.hadoop.fs.Path(p)
@@ -62,10 +60,6 @@ class HadoopFs:
 
     def delete(self, p: str) -> None:
         self._fs.delete(self._p(p), True)
-
-    def rename(self, src: str, dst: str) -> None:
-        if not self._fs.rename(self._p(src), self._p(dst)):
-            raise OSError(f"rename {src} -> {dst} failed")
 
     def read_text(self, p: str) -> str:
         stream = self._fs.open(self._p(p))

@@ -22,9 +22,10 @@ gliner_spark.operators.sinks.read_published).
 --input, --output and --checkpoint-root may be any Hadoop-supported
 URI (s3a://, hdfs://, local). publish_atomic writes its create-only
 markers through the same Hadoop FileSystem as the data, so it needs no
-rename anywhere. Manifest compaction (checkpoint.compact_manifest, not
-run by this job) needs an atomic rename and refuses object-store
-roots. For a warehouse sink, fold into Iceberg/Delta tables instead
+rename anywhere; neither does manifest compaction
+(checkpoint.compact_manifest, not run by this job), which appends the
+folded rows and deletes the files it listed. For a warehouse sink,
+fold into Iceberg/Delta tables instead
 (operators.sinks.write_table(fmt="iceberg") inside foreachBatch) —
 a catalog snapshot commit is the cluster-scale atomic publish.
 """

@@ -5,8 +5,8 @@ used by one (or allowlisted below), every module-level UPPER_CASE
 constant is read by one, every config field is read somewhere outside
 ``config.py``, no package module uses pandas, only ``local_table``
 builds and splits driver tables, only ``operators/fsio.py`` touches
-files beside the tables directly, and every package import in the
-scripts names something that exists.
+files beside the tables directly, no module renames a file, and every
+package import in the scripts names something that exists.
 
 Production roots are the 50-query driver entry, the jobs, the two bench
 scripts, the benchmark package and the public API. ``tests/`` and
@@ -396,3 +396,24 @@ def test_table_files_go_through_fsio():
                 if name in _FILE_CALLS:
                     found.append(f"{f.relative_to(REPO)}:{n.lineno}: {name}")
     assert not found, f"file calls outside fsio.py: {found}"
+
+
+def test_no_filesystem_rename():
+    """One commit rule for the files beside tables: every one commits
+    create-only (``_markers/``, ``_FINGERPRINT``) or append-only
+    (manifest parts), never by a rename, which object stores emulate
+    as copy+delete. No module under ``gliner_spark/`` calls a
+    ``.rename(`` method (a Hadoop ``FileSystem`` or ``HadoopFs``
+    handle's, a ``Path``'s), ``os.rename``, ``os.replace`` or
+    ``shutil.move``."""
+    found = []
+    for f in sorted((REPO / PKG).rglob("*.py")):
+        for n in ast.walk(ast.parse(f.read_text(), str(f))):
+            if not isinstance(n, ast.Call):
+                continue
+            name = _dotted(n.func)
+            if (isinstance(n.func, ast.Attribute) and n.func.attr == "rename"
+                    or name in ("os.replace", "shutil.move")):
+                found.append(f"{f.relative_to(REPO)}:{n.lineno}: "
+                             f"{name or n.func.attr}")
+    assert not found, f"filesystem renames: {found}"

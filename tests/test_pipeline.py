@@ -74,6 +74,23 @@ def test_checkpoint_resume(spark, tmp_path):
     assert any(p.startswith("part_key=") for p in os.listdir(triples_dir))
 
 
+def test_checkpointed_part_key_reads_back_as_string(spark, tmp_path):
+    """A checkpointed stage reads back with the schema it was written
+    with: ``part_key`` is a string on every table of a checkpointed
+    ``build_kg`` (whose keys look like numbers) and of a
+    ``merge_kg_batch``, as the manifest stores it."""
+    from pyspark.sql.types import StringType
+
+    from gliner_spark.plans.incremental import merge_kg_batch
+
+    pages = synthesize_pages(spark, 40)
+    kg = build_kg(pages, ALL_LABELS, checkpoint_root=str(tmp_path / "b"))
+    merged = merge_kg_batch(pages, ALL_LABELS, str(tmp_path / "m"))
+    for df in (kg.mentions, kg.triples, kg.nodes, kg.edges,
+               merged.mentions, merged.triples):
+        assert df.schema["part_key"].dataType == StringType()
+
+
 def test_compact_manifest_resume_and_bounded_files(spark, tmp_path):
     """Long-lived incremental roots: checkpoint_write appends one small
     parquet per call; compact_manifest must collapse them to ONE file
@@ -165,77 +182,140 @@ def test_write_table_v2_catalog_branch(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tgt}")
 
 
-def test_compact_manifest_crash_recovery_and_scheme_guard(spark, tmp_path):
-    """The two-rename swap's crash windows heal on the next manifest op
-    (r4 ADVICE): a committed .compact tmp is PROMOTED (finishing the
-    compaction), an incomplete tmp rolls back to .old; object-store
-    roots fail fast, and remote roots reach their own filesystem
-    rather than a literal local './hdfs:/...' path."""
-    import os
-    import shutil
+def _manifest_fixture(spark, root, n_buckets=8):
+    """A manifest of 7 files: 2 stages × 3 checkpointed calls, each a
+    third of the buckets, plus one file of replayed DONE rows, as
+    concurrent writers can leave them. A clean fold keeps 2 × n_buckets
+    rows."""
+    from gliner_spark.operators.checkpoint import checkpoint_write
 
-    import pytest
+    docs = spark.range(200).select(
+        F.col("id").alias("doc_id"), F.lit("x").alias("payload")
+    )
+    staged = with_part_key(docs, "doc_id", n_buckets=n_buckets)
+    for i in range(6):
+        third = F.col("part_key").cast("int") % 3 == i // 2
+        checkpoint_write(staged.where(third), root, f"stage{i % 2}")
+    stage_metrics(spark, root).localCheckpoint().write.mode("append").parquet(
+        f"{root}/_checkpoints")
+    return staged
 
+
+def _done_set(spark, root, stages=("stage0", "stage1")):
+    from gliner_spark.operators.checkpoint import completed_partitions
+
+    return {
+        (s, r.part_key)
+        for s in stages
+        for r in completed_partitions(spark, root, s).collect()
+    }
+
+
+def test_compact_manifest_crash_before_deletes(spark, tmp_path,
+                                               monkeypatch):
+    """A fold that dies after appending its folded file, before it
+    deleted the listed ones, leaves every old row beside the folded
+    rows: the DONE set is the one before the fold, and the next fold
+    leaves one file with the rows of a clean fold."""
+    from gliner_spark.operators.checkpoint import compact_manifest
+    from gliner_spark.operators.fsio import HadoopFs
+
+    root = str(tmp_path / "root")
+    _manifest_fixture(spark, root)
+    n_files = manifest_file_count(spark, root)
+    n_rows = stage_metrics(spark, root).count()
+    done_before = _done_set(spark, root)
+
+    delete = HadoopFs.delete
+    calls = []
+
+    def crash_once(self, p):
+        calls.append(p)
+        if len(calls) == 1:
+            raise OSError("injected crash before the deletes")
+        return delete(self, p)
+
+    monkeypatch.setattr(HadoopFs, "delete", crash_once)
+    with pytest.raises(OSError, match="injected"):
+        compact_manifest(spark, root)
+    # the folded file landed; nothing was deleted
+    assert manifest_file_count(spark, root) == n_files + 1
+    assert stage_metrics(spark, root).count() == n_rows + 16
+    assert _done_set(spark, root) == done_before
+
+    assert compact_manifest(spark, root) == 16
+    assert manifest_file_count(spark, root) == 1
+    assert stage_metrics(spark, root).count() == 16
+    assert _done_set(spark, root) == done_before
+    # the listed files went with their checksum sidecars
+    names = os.listdir(os.path.join(root, "_checkpoints"))
+    assert sorted(n for n in names if n.endswith(".parquet.crc")) == [
+        f".{n}.crc" for n in names if n.startswith("part-")]
+
+
+def test_compact_manifest_keeps_a_part_appended_mid_fold(
+        spark, tmp_path, monkeypatch):
+    """A ``checkpoint_write`` that appends after the fold listed the
+    manifest keeps its file: the fold deletes exactly what it listed."""
     from gliner_spark.operators.checkpoint import (
         checkpoint_write,
         compact_manifest,
-        completed_partitions,
-        manifest_file_count,
-        with_part_key,
     )
+    from gliner_spark.operators.fsio import HadoopFs
 
     root = str(tmp_path / "root")
-    docs = spark.range(100).select(
-        F.col("id").alias("doc_id"), F.lit("x").alias("payload")
-    )
-    staged = with_part_key(docs, "doc_id", n_buckets=4)
-    for _ in range(2):
-        checkpoint_write(staged, root, "s")
-    path = os.path.join(root, "_checkpoints")
+    staged = _manifest_fixture(spark, root)
+    done_before = _done_set(spark, root)
 
-    # crash BETWEEN the renames, tmp fully committed: manifest gone,
-    # .old + .compact(_SUCCESS) left behind
-    compact_manifest(spark, root)  # produces the single-file layout
-    shutil.copytree(path, path + ".compact")
-    os.rename(path, path + ".old")
-    assert not os.path.isdir(path)
-    assert completed_partitions(spark, root, "s").count() == 4  # healed
-    assert os.path.isdir(path)
-    assert not os.path.isdir(path + ".old")
+    delete = HadoopFs.delete
+    appended = []
 
-    # crash with an INCOMPLETE tmp (no _SUCCESS): roll back to .old
-    os.rename(path, path + ".old")
-    os.makedirs(path + ".compact")
-    with open(os.path.join(path + ".compact", "part-0.parquet"), "wb") as f:
-        f.write(b"junk")
-    assert manifest_file_count(spark, root) == 1  # healed from .old
-    assert not os.path.isdir(path + ".compact")
+    def append_then_delete(self, p):
+        if not appended:
+            appended.append(True)
+            checkpoint_write(staged, root, "late")
+        return delete(self, p)
 
-    # object-store compaction still fails fast (rename is copy+delete
-    # there — the recovery walk cannot heal a crash mid-copy); remote
-    # roots go to their own Hadoop filesystem, which in this sandbox
-    # has no namenode or s3a jar: its own error surfaces, never a
-    # count of a local './hdfs:/...' directory
-    with pytest.raises(ValueError, match="atomic rename"):
-        compact_manifest(spark, "s3a://bucket/ckpt")
+    monkeypatch.setattr(HadoopFs, "delete", append_then_delete)
+    assert compact_manifest(spark, root) == 16
+    assert appended
+    assert manifest_file_count(spark, root) == 2
+    assert _done_set(spark, root) == done_before
+    assert _done_set(spark, root, ("late",)) == {
+        ("late", str(k)) for k in range(8)}
+
+
+def test_compact_manifest_on_uri_and_default_fs_roots(spark, tmp_path):
+    """The fold runs on a ``file://`` root and on a plain root of a
+    non-local default filesystem; remote roots reach their own Hadoop
+    filesystem, which here has no namenode or s3a jar: its own error
+    surfaces, never a count of a local './hdfs:/...' directory."""
+    from gliner_spark.operators.checkpoint import compact_manifest
+
+    root = str(tmp_path / "root")
+    _manifest_fixture(spark, root, n_buckets=4)
+    furi = "file://" + root
+    done_before = _done_set(spark, furi)
+    assert compact_manifest(spark, furi) == 8
+    assert manifest_file_count(spark, furi) == 1
+    assert _done_set(spark, root) == done_before
+
+    with _viewfs_default(spark, tmp_path) as v:
+        vroot = f"{v}/vroot"
+        _manifest_fixture(spark, vroot, n_buckets=4)
+        assert manifest_file_count(spark, vroot) >= 6
+        done_before = _done_set(spark, vroot)
+        assert compact_manifest(spark, vroot) == 8
+        assert manifest_file_count(spark, vroot) == 1
+        assert _done_set(spark, vroot) == done_before
+    assert not os.path.exists("/vdata")  # nothing on the driver's disk
+    assert len([n for n in os.listdir(tmp_path / "vroot" / "_checkpoints")
+                if n.endswith(".parquet") and not n.startswith(".")]) == 1
+
     for bad in ("hdfs://nn:8020/ckpt", "s3a://bucket/ckpt"):
         with pytest.raises(Exception) as ei:
             manifest_file_count(spark, bad)
         assert "local filesystem" not in str(ei.value)
-
-    # compact again, then simulate a crash between the renames and
-    # confirm the recovery walk heals it
-    n = compact_manifest(spark, root)
-    assert n == 4
-    assert manifest_file_count(spark, root) == 1
-    shutil.copytree(path, path + ".compact")
-    os.rename(path, path + ".old")
-    from gliner_spark.operators.checkpoint import _recover_manifest_fs
-    from gliner_spark.operators.fsio import fs_for
-
-    _recover_manifest_fs(fs_for(spark, root), path)
-    assert os.path.isdir(path) and not os.path.isdir(path + ".old")
-    assert completed_partitions(spark, root, "s").count() == 4
 
 
 def test_publish_atomic_reader_never_sees_partial(spark, tmp_path):
@@ -1213,39 +1293,6 @@ def test_admit_dup_of_always_points_at_a_keeper(spark, tmp_path):
     assert stored == {1}
 
 
-def test_read_manifest_heals_file_scheme_roots(spark, tmp_path):
-    """A crash between compact_manifest's two renames must heal for
-    file:// roots exactly as for plain paths — before the r5 ADVICE fix
-    read_manifest skipped recovery for any '://' root, saw no manifest
-    dir, and silently returned an EMPTY manifest (full recompute
-    instead of resume)."""
-    import os
-    import shutil
-
-    from gliner_spark.operators.checkpoint import (
-        checkpoint_write,
-        compact_manifest,
-        completed_partitions,
-        with_part_key,
-    )
-
-    root = str(tmp_path / "root")
-    furi = "file://" + root
-    docs = spark.range(40).select(
-        F.col("id").alias("doc_id"), F.lit("x").alias("payload")
-    )
-    checkpoint_write(with_part_key(docs, "doc_id", n_buckets=4), root, "s")
-    compact_manifest(spark, furi)
-
-    # crash BETWEEN the renames: manifest gone, committed tmp behind
-    path = os.path.join(root, "_checkpoints")
-    shutil.copytree(path, path + ".compact")
-    os.rename(path, path + ".old")
-    assert completed_partitions(spark, furi, "s").count() == 4  # healed
-    assert os.path.isdir(path)
-    assert not os.path.isdir(path + ".old")
-
-
 def test_publish_atomic_skips_invalid_markers(spark, tmp_path):
     """The create-only ``_markers/`` protocol: the latest complete
     version is readable, retention prunes versions and their markers
@@ -1288,12 +1335,18 @@ def _viewfs_default(spark, tmp_path):
     """``fs.defaultFS`` set to a ``viewfs://`` mount table whose one
     link, ``/vdata``, points at ``tmp_path``: plain paths under
     ``/vdata`` then resolve on a non-local default filesystem, as they
-    do on a cluster with an HDFS default, without a cluster."""
+    do on a cluster with an HDFS default, without a cluster. Each use
+    names its own mount table: Hadoop caches a ``FileSystem`` per
+    scheme and authority, so a reused name would resolve ``/vdata``
+    through the link of the first use."""
+    import uuid
+
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    link = "fs.viewfs.mounttable.gstest.link./vdata"
+    table = f"gstest{uuid.uuid4().hex[:8]}"
+    link = f"fs.viewfs.mounttable.{table}.link./vdata"
     prev = conf.get("fs.defaultFS")
     conf.set(link, f"file://{tmp_path}")
-    conf.set("fs.defaultFS", "viewfs://gstest/")
+    conf.set("fs.defaultFS", f"viewfs://{table}/")
     try:
         yield "/vdata"
     finally:
